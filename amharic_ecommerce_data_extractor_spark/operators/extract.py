@@ -1,8 +1,9 @@
 """Entity-extraction operator: the engine's single Python stage.
 
 Replaces the reference's per-row driver loop (``model_evaluator.py:130-142``,
-batch size 1 per model call) with ONE fused, Arrow-batched ``mapInPandas``
-pass per partition:
+batch size 1 per model call) with ONE fused, Arrow-batched pass per
+partition — a Spark 4.1 ``arrow_udf`` for the default rules backend (a
+``pandas_udf`` for the model backends):
 
     content → preprocess (kernels.textprep, exact reference chain)
             → message tokenizer → BIO rule labeling (kernels.labeler)
@@ -95,6 +96,37 @@ def _preprocess_unique(uniques) -> list[str]:
             if isinstance(t, str):
                 cache[t] = c
     return out
+
+
+def _extract_arrow_batch(texts, names: list[str], with_contact_rule: bool):
+    """One arrow_udf batch of raw texts → the entity StructArray with the
+    ``names`` fields (a subset of ENTITY_FIELDS, in that order).
+
+    Factorize in C (null_encoding='encode' keeps None a dictionary entry,
+    matching the Python-dict factorize this replaced), run the kernels on
+    the uniques only, and expand per-row with pc.take — so the
+    Python→Arrow conversion of the result lists also happens once per
+    DISTINCT text, not once per row. A ChunkedArray input is combined
+    first: its dictionary_encode result has no single ``indices`` array."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    enc = pc.dictionary_encode(texts, null_encoding="encode")
+    codes = enc.indices
+    clean_u = _preprocess_unique(enc.dictionary.to_pylist())
+    recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
+              for c in clean_u]
+    arrays = []
+    for field in names:
+        if field == "preprocessed_text":
+            u_arr = pa.array(clean_u, type=pa.string())
+        else:
+            elem = pa.float64() if field == "price_values" else pa.string()
+            u_arr = pa.array([r[field] for r in recs_u], type=pa.list_(elem))
+        arrays.append(pc.take(u_arr, codes))
+    return pa.StructArray.from_arrays(arrays, names=names)
 
 
 def _hf_pipeline(model_dir: str):
@@ -382,32 +414,11 @@ def extract_entities(
         # _RECORD_CACHE memos) and expand per-row by code — element-wise
         # identical to running the chain on every row, since both kernels
         # are pure in the text.
+        names = [f.name for f in fields]
+
         @F.arrow_udf(entity_struct)
         def extract_arrow_udf(texts):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            # factorize in C (null_encoding='encode' keeps None a dictionary
-            # entry, matching the Python-dict factorize this replaces), run
-            # the kernels on the uniques only, and expand per-row with
-            # pc.take — so the Python→Arrow conversion of the result lists
-            # also happens once per DISTINCT text, not once per row.
-            enc = pc.dictionary_encode(texts, null_encoding="encode")
-            codes = enc.indices
-            uniq = enc.dictionary.to_pylist()
-            clean_u = _preprocess_unique(uniq)
-            recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-                      for c in clean_u]
-            arrays, names = [], []
-            if "preprocessed_text" not in drop:
-                arrays.append(pc.take(pa.array(clean_u, type=pa.string()), codes))
-                names.append("preprocessed_text")
-            for field in array_fields:
-                elem = pa.float64() if field == "price_values" else pa.string()
-                u_arr = pa.array([r[field] for r in recs_u], type=pa.list_(elem))
-                arrays.append(pc.take(u_arr, codes))
-                names.append(field)
-            return pa.StructArray.from_arrays(arrays, names=names)
+            return _extract_arrow_batch(texts, names, with_contact_rule)
 
         ent = F.col("_entities")
         return (df.withColumn("_entities", extract_arrow_udf(F.col(text_col)))

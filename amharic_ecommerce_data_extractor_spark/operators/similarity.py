@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (graft-added capability).
 
 * ``knn_bruteforce`` — exact cosine top-k: broadcast the (small) query set
-  against the corpus, dot products as JVM higher-order functions
-  (``zip_with`` + ``aggregate``, no Python), rank with a per-query window.
+  against the corpus, dot products as numpy ``mapInArrow`` kernels (one
+  float64 BLAS matmul per Arrow batch), rank with a per-query window.
   This is the correctness baseline; cost O(|Q|·|corpus|) — fine when |Q| is
   small and broadcast-able.
 * ``knn_lsh`` — the scale path: random-hyperplane (SimHash) bucketing; only
@@ -10,7 +10,8 @@
   equi join on (band, signature). Probabilistic recall, tunable via
   n_planes/n_bands; falls back to exact scoring inside each bucket.
 
-All arithmetic in float64 on the JVM side for cross-engine comparability.
+All arithmetic in float64, on the JVM and in the numpy kernels alike, for
+cross-engine comparability.
 """
 
 from __future__ import annotations
@@ -145,6 +146,10 @@ def _signed_arrow(df: DataFrame, id_col: str, vec_col: str, idn: str,
       length ≠ dim nulls only the zip_with dot ('0' bits) while the norm
       still sums the row's own squares (``_norm`` never references dim —
       an empty list has norm 0.0).
+    * an all-zero vector gets the JVM result too (norm 0.0, every dot 0.0
+      so every bit '1') — no division happens here. The divergence from
+      ANSI lies downstream: the JVM cosine ``_dot / (_norm * _norm)`` raises
+      DIVIDE_BY_ZERO on a zero norm, while the Arrow reranks score it NaN.
     """
     import numpy as np
     import pyarrow as pa
@@ -598,72 +603,83 @@ def ivf_assign(df: DataFrame, centroids, id_col: str = "vec_id",
     larger cell field) with NaN sims ordered greatest (Spark float
     ordering); degenerate rows (null vector / null element / length ≠ dim)
     null every sim, and the max of all-(null sim) structs is the last cell.
+
+    Zero-norm divergence: for an all-zero vector the JVM fold's ``/ norm``
+    raises DIVIDE_BY_ZERO under ANSI mode, so there is no legacy result to
+    match. Here the division runs under ``np.errstate`` (no
+    RuntimeWarning): every sim is 0/0 = NaN and the row lands in the last
+    cell, the NaN-greatest rule above.
     """
     import numpy as np
-    import pyarrow as pa
 
     from .linking import spread
 
-    n_cells = len(centroids)
-    dim = len(centroids[0])
     cmat = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
     base = spread(df, id_col).select(F.col(id_col), F.col(vec_col))
     in_schema = base.schema
     id_t, vec_t = (in_schema[0].dataType.simpleString(),
                    in_schema[1].dataType.simpleString())
     out_ddl = f"{id_col} {id_t}, {vec_col} {vec_t}, cell int"
+    return base.mapInArrow(
+        lambda batches: _assign_batches(batches, cmat, id_col, vec_col), out_ddl)
 
-    def assign(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids, vecs = b.column(0), b.column(1)
-            row_valid = np.asarray(vecs.is_valid(), dtype=bool)
-            len_np = pa.compute.list_value_length(vecs) \
-                .fill_null(-1).to_numpy(zero_copy_only=False)
-            flat = vecs.flatten()
-            ok = row_valid & (len_np == dim)
-            if not np.asarray(flat.is_valid(), dtype=bool).all():
-                counts = np.where(len_np > 0, len_np, 0)
-                offs = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(counts, out=offs[1:])
-                fv = np.asarray(flat.is_valid(), dtype=bool)
-                nonnull = np.array([fv[offs[i]:offs[i + 1]].sum()
-                                    for i in range(n)], dtype=np.int64)
-                ok &= nonnull == dim
-            best = np.full(n, n_cells - 1, dtype=np.int32)
-            if ok.any():
-                if ok.all():
-                    mat = np.asarray(flat.to_numpy(zero_copy_only=False),
-                                     dtype=np.float64).reshape(n, dim)
-                    sel = slice(None)
-                else:
-                    sel = np.flatnonzero(ok)
-                    vl = vecs.to_pylist()
-                    mat = np.asarray([vl[i] for i in sel], dtype=np.float64)
-                m = mat.shape[0]
-                acc = np.zeros((m, n_cells), dtype=np.float64)
-                nacc = np.zeros(m, dtype=np.float64)
-                for d in range(dim):
-                    xd = mat[:, d]
-                    acc += xd[:, None] * cmat[:, d][None, :]
-                    nacc += xd * xd
+
+def _assign_batches(batches, cmat, id_col: str, vec_col: str):
+    """The ``mapInArrow`` body of :func:`ivf_assign` over Arrow batches of
+    (id, vec); cmat is the (n_cells, dim) float64 centroid matrix."""
+    import numpy as np
+    import pyarrow as pa
+
+    n_cells, dim = cmat.shape
+    for b in batches:
+        n = b.num_rows
+        if n == 0:
+            continue
+        ids, vecs = b.column(0), b.column(1)
+        row_valid = np.asarray(vecs.is_valid(), dtype=bool)
+        len_np = pa.compute.list_value_length(vecs) \
+            .fill_null(-1).to_numpy(zero_copy_only=False)
+        flat = vecs.flatten()
+        ok = row_valid & (len_np == dim)
+        if not np.asarray(flat.is_valid(), dtype=bool).all():
+            counts = np.where(len_np > 0, len_np, 0)
+            offs = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(counts, out=offs[1:])
+            fv = np.asarray(flat.is_valid(), dtype=bool)
+            nonnull = np.array([fv[offs[i]:offs[i + 1]].sum()
+                                for i in range(n)], dtype=np.int64)
+            ok &= nonnull == dim
+        best = np.full(n, n_cells - 1, dtype=np.int32)
+        if ok.any():
+            if ok.all():
+                mat = np.asarray(flat.to_numpy(zero_copy_only=False),
+                                 dtype=np.float64).reshape(n, dim)
+                sel = slice(None)
+            else:
+                sel = np.flatnonzero(ok)
+                vl = vecs.to_pylist()
+                mat = np.asarray([vl[i] for i in sel], dtype=np.float64)
+            m = mat.shape[0]
+            acc = np.zeros((m, n_cells), dtype=np.float64)
+            nacc = np.zeros(m, dtype=np.float64)
+            for d in range(dim):
+                xd = mat[:, d]
+                acc += xd[:, None] * cmat[:, d][None, :]
+                nacc += xd * xd
+            with np.errstate(divide="ignore", invalid="ignore"):
                 sims = acc / np.sqrt(nacc)[:, None]
-                nanm = np.isnan(sims)
-                k1 = np.where(nanm, -np.inf, sims)
-                # last argmax = struct-ordering tie-break (larger cell)
-                b_sel = (n_cells - 1) - np.argmax(k1[:, ::-1], axis=1)
-                any_nan = nanm.any(axis=1)
-                if any_nan.any():
-                    for i in np.flatnonzero(any_nan):
-                        b_sel[i] = np.flatnonzero(nanm[i]).max()
-                best[sel] = b_sel.astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [ids, vecs, pa.array(best, type=pa.int32())],
-                names=[id_col, vec_col, "cell"])
-
-    return base.mapInArrow(assign, out_ddl)
+            nanm = np.isnan(sims)
+            k1 = np.where(nanm, -np.inf, sims)
+            # last argmax = struct-ordering tie-break (larger cell)
+            b_sel = (n_cells - 1) - np.argmax(k1[:, ::-1], axis=1)
+            any_nan = nanm.any(axis=1)
+            if any_nan.any():
+                for i in np.flatnonzero(any_nan):
+                    b_sel[i] = np.flatnonzero(nanm[i]).max()
+            best[sel] = b_sel.astype(np.int32)
+        yield pa.RecordBatch.from_arrays(
+            [ids, vecs, pa.array(best, type=pa.int32())],
+            names=[id_col, vec_col, "cell"])
 
 
 def ivf_index_write(corpus: DataFrame, centroids, path: str,

@@ -1,55 +1,31 @@
-"""Per-stage checkpointing with per-partition lineage and resume (graft
+"""Per-stage checkpointing with marker-held lineage and resume (graft
 operator G5).
 
-Every pipeline stage writes:
-* its data as parquet under ``<workdir>/<stage>/data`` (the checkpoint —
-  doubles as the cache between stages and the resume point);
-* a ``_lineage`` parquet: one row per output partition with row count and an
-  order-insensitive content signature (bit_xor of xxhash64 over all columns),
-  plus the per-row ``content_sha256`` invariant aggregate when present;
-* a ``_STAGE_DONE`` JSON marker (stage name, rows, wall time) written LAST —
-  its presence is the commit point of the stage.
+Every stage is committed by ONE write of its data to ``<workdir>/<stage>/
+data`` (the checkpoint — the cache between stages and the resume point),
+then a ``_STAGE_DONE`` JSON marker written LAST (its presence is the
+commit). The marker holds stage name, ``rows``, format, wall time and the
+lineage: row count, an order-insensitive content signature (bit_xor of
+xxhash64 over all columns in read-back order), the ``content_sha256``
+invariant signature when that column exists, and the read-back schema as
+DDL (a fraction of the JSON form's size). The lineage is observed on the
+write itself (``DataFrame.observe``), and reads use the committed schema,
+so neither a run nor a resume pays a lineage or schema-inference job.
+Markers from before marker-held lineage (no ``lineage`` key) resume by
+inference and verify against their ``_lineage`` parquet dir.
 
-Resume = skip stages whose marker exists. For long Python-heavy stages,
-``chunked_stage`` hash-splits the input on a key into N chunks and commits
-each chunk independently — a mid-run restart recomputes only unfinished
-chunks (per-partition resume within a stage).
+Resume = skip stages whose marker exists. ``chunked_stage`` hash-splits a
+long Python-heavy stage into N chunks committed independently — a mid-run
+restart recomputes only unfinished chunks. The reference has no counterpart
+(every stage re-reads CSV and recomputes, ``run_pipeline.py:89,217``).
 
-The reference has no counterpart (every stage re-reads CSV and recomputes,
-``run_pipeline.py:89,217``); this is the distributed-reliability layer the
-north rule mandates.
-
-The format a stage was WRITTEN with is committed in its ``_STAGE_DONE``
-marker (and in ``_CHUNK_MANIFEST`` for chunked stages); resume reads hard-
-fail on a mismatch with the requested/ambient format, so flipping
-``SPARK_GRAFT_CHECKPOINT_FORMAT`` mid-run can never read a parquet
-checkpoint with the Iceberg reader or vice versa.
-
-Iceberg production recipe (the north rule's table format; the sandbox has no
-runtime jar, so 'parquet' is the tested default — the dispatch seam is
-``fmt``/``SPARK_GRAFT_CHECKPOINT_FORMAT``):
-
-* jars: add ``org.apache.iceberg:iceberg-spark-runtime-<spark_ver>_<scala_ver>``
-  (e.g. ``iceberg-spark-runtime-3.5_2.12``) via ``--packages`` or the
-  cluster image.
-* session confs (catalog named ``kg`` here)::
-
-      spark.sql.extensions=org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions
-      spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog
-      spark.sql.catalog.kg.type=hadoop          # or hive / rest / glue
-      spark.sql.catalog.kg.warehouse=s3a://<bucket>/<warehouse-path>
-
-* run with ``SPARK_GRAFT_CHECKPOINT_FORMAT=iceberg``; ``write_stage`` then
-  issues ``df.write.format('iceberg')...save(<path>)``. With a catalog,
-  prefer table identifiers (``kg.db.stage_extract``) over raw paths by
-  passing ``fmt='iceberg'`` and a catalog-qualified ``workdir`` naming
-  convention.
-* partition spec: ``partition_by=['_chunk']`` flows through unchanged —
-  Iceberg turns it into an identity partition field; add hidden partitioning
-  (``days(ts)``, ``bucket(N, key)``) with ALTER TABLE after first write.
-* Iceberg's snapshot commit replaces the marker's atomicity role (readers
-  never see partial data), but the ``_STAGE_DONE`` marker remains the
-  RESUME signal and records rows/wall-time/format either way.
+Formats: ``fmt`` / ``SPARK_GRAFT_CHECKPOINT_FORMAT`` dispatch the sink —
+'parquet' (the tested default) or 'iceberg' on a cluster with the
+``iceberg-spark-runtime`` jar and an Iceberg catalog configured;
+``partition_by`` becomes an identity partition field, and the marker stays
+the resume signal. The written format is committed in the marker (and in
+``_CHUNK_MANIFEST``); resume hard-fails on a mismatch, so flipping the env
+var mid-run never reads parquet with the Iceberg reader or vice versa.
 """
 
 from __future__ import annotations
@@ -58,7 +34,8 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
 
 MARKER = "_STAGE_DONE"
 CHUNK_COL = "_chunk"
@@ -82,16 +59,50 @@ def stage_done(stage_dir: str) -> bool:
     return os.path.exists(_marker_path(stage_dir))
 
 
-def lineage_frame(df: DataFrame) -> DataFrame:
-    """Per-partition lineage: row count + order-insensitive signature over all
-    columns; carries the sha256 invariant aggregate when the column exists."""
-    cols = df.columns
-    sig = F.expr(f"bit_xor(xxhash64({', '.join(cols)}))")
-    aggs = [F.count("*").alias("n_rows"), sig.alias("content_sig")]
+def _marker(stage_dir: str) -> dict:
+    with open(_marker_path(stage_dir), encoding="utf-8") as f:
+        return json.load(f)
+
+
+def committed_rows(stage_dir: str) -> int:
+    """Row count a completed stage committed (from its marker; no scan)."""
+    return _marker(stage_dir)["rows"]
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """The type as a parquet read-back reports it: all of it nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True,
+                                           f.metadata) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _lineage_aggs(cols: list[str]) -> list:
+    """Row count + order-insensitive signature over ``cols`` (in that order),
+    plus the sha256 invariant signature when the column exists."""
+    aggs = [F.count(F.lit(1)).alias("n_rows"),
+            F.bit_xor(F.xxhash64(*cols)).alias("content_sig")]
     if "content_sha256" in cols:
-        aggs.append(F.expr("bit_xor(xxhash64(content_sha256))").alias("sha256_sig"))
-    return (df.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id").agg(*aggs))
+        aggs.append(F.bit_xor(F.xxhash64("content_sha256")).alias("sha256_sig"))
+    return aggs
+
+
+def _committed_schema(stage_dir: str) -> str | None:
+    return (_marker(stage_dir).get("lineage") or {}).get("schema")
+
+
+def _read(spark: SparkSession, fmt: str, path: str,
+          schema: str | None) -> DataFrame:
+    """Read a checkpoint; file formats take the committed schema DDL instead
+    of inferring one with a job (table formats carry their own)."""
+    reader = spark.read.format(fmt)
+    if schema is not None and fmt in ("parquet", "orc"):
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def _bucket_table_name(stage_dir: str) -> str:
@@ -105,7 +116,8 @@ def _bucket_table_name(stage_dir: str) -> str:
 
 
 def _register_bucketed_table(spark: SparkSession, stage_dir: str,
-                             bucket_by: tuple[str, int]) -> str:
+                             bucket_by: tuple[str, int],
+                             schema: str | None) -> str:
     """Ensure the catalog knows the bucketed stage table (a resume in a new
     session loses the in-memory catalog entry but not the files): recreate
     the EXTERNAL table over the existing bucketed parquet files. Spark
@@ -115,7 +127,7 @@ def _register_bucketed_table(spark: SparkSession, stage_dir: str,
     if not spark.catalog.tableExists(table):
         data_path = os.path.join(stage_dir, "data")
         col, n = bucket_by
-        ddl = spark.read.parquet(data_path)._jdf.schema().toDDL()
+        ddl = schema or spark.read.parquet(data_path)._jdf.schema().toDDL()
         spark.sql(
             f"CREATE TABLE {table} ({ddl}) USING parquet "
             f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO {n} BUCKETS "
@@ -127,12 +139,8 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
                 partition_by: list[str] | None = None,
                 fmt: str = "parquet",
                 bucket_by: tuple[str, int] | None = None) -> None:
-    """Checkpoint one stage. fmt dispatches the sink format: 'parquet'
-    (sandbox default) or any registered table format — the north rule names
-    Iceberg, so production runs pass fmt='iceberg' and the partition spec
-    flows through partition_by unchanged (Iceberg's committer replaces the
-    _STAGE_DONE marker's atomicity role, but the marker stays as the
-    resume signal either way).
+    """Checkpoint one stage: one write, then the marker (formats and lineage:
+    see the module docstring).
 
     bucket_by=(col, n_buckets): write the checkpoint as an EXTERNAL bucketed
     catalog table whose files live at the stage's own data path — the
@@ -141,10 +149,21 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     bucket key off this checkpoint plans with no exchange. Parquet-only in
     the sandbox (mutually exclusive with partition_by here); on Iceberg the
     equivalent is the `bucket(n, col)` partition transform. The spec is
-    committed in the marker so a resume re-registers the table by DDL."""
+    committed in the marker so a resume re-registers the table by DDL.
+
+    The lineage is observed in the write's result stage (observe is the
+    outermost operator), hashing the columns in read-back order: a
+    hive-partitioned read moves the partition columns last."""
     t0 = time.perf_counter()
     data_path = os.path.join(stage_dir, "data")
     spark = df.sparkSession
+    part = list(partition_by or [])
+    schema = _nullable(T.StructType(
+        [f for f in df.schema.fields if f.name not in part]
+        + [df.schema[c] for c in part]))
+    ddl = spark.createDataFrame([], schema)._jdf.schema().toDDL()
+    obs = Observation()
+    observed = df.observe(obs, *_lineage_aggs(schema.names))
     if bucket_by is not None:
         if fmt != "parquet":
             raise ValueError(
@@ -156,24 +175,20 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
         col, n = bucket_by
         table = _bucket_table_name(stage_dir)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (df.write.mode("overwrite").format(fmt).option("path", data_path)
+        (observed.write.mode("overwrite").format(fmt).option("path", data_path)
          .bucketBy(n, col).sortBy(col).saveAsTable(table))
-        out = spark.table(table)
     else:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
+        w = observed.write.mode("overwrite")
+        if part:
+            w = w.partitionBy(*part)
         w.format(fmt).save(data_path)
-        out = spark.read.format(fmt).load(data_path)
 
-    lin = lineage_frame(out)
-    lin.write.mode("overwrite").parquet(os.path.join(stage_dir, "_lineage"))
-    n_rows = int(spark.read.parquet(os.path.join(stage_dir, "_lineage"))
-                 .agg(F.sum("n_rows")).collect()[0][0] or 0)
-    marker = {"stage": stage, "rows": n_rows, "fmt": fmt,
-              "seconds": round(time.perf_counter() - t0, 3)}
+    lineage = obs.get
+    marker = {"stage": stage, "rows": lineage["n_rows"], "fmt": fmt,
+              "seconds": round(time.perf_counter() - t0, 3),
+              "lineage": {**lineage, "schema": ddl}}
     if bucket_by is not None:
-        marker["bucket_by"] = [bucket_by[0], bucket_by[1]]
+        marker["bucket_by"] = list(bucket_by)
     with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
         json.dump(marker, f)
 
@@ -188,10 +203,7 @@ def committed_format(stage_dir: str) -> str | None:
     """The format a completed stage was actually written with (from its
     _STAGE_DONE marker); None if the stage is incomplete or the marker
     predates format recording."""
-    if not stage_done(stage_dir):
-        return None
-    with open(_marker_path(stage_dir), encoding="utf-8") as f:
-        return json.load(f).get("fmt")
+    return _marker(stage_dir).get("fmt") if stage_done(stage_dir) else None
 
 
 def _resolve_resume_format(stage_dir: str, fmt: str) -> str:
@@ -221,7 +233,8 @@ def run_stage(spark: SparkSession, workdir: str, stage: str, build,
     bucket_by=(col, n) lays it out as a bucketed table — downstream
     joins/groupBys on the key plan with no exchange (see write_stage); the
     returned frame is the catalog-table read, which is what carries the
-    bucket spec (a bare path read silently drops it)."""
+    bucket spec (a bare path read silently drops it). The read uses the
+    marker's schema: a resumed stage runs no Spark job."""
     fmt = fmt or checkpoint_format()
     stage_dir = os.path.join(workdir, stage)
     data_path = os.path.join(stage_dir, "data")
@@ -231,18 +244,17 @@ def run_stage(spark: SparkSession, workdir: str, stage: str, build,
                     fmt=fmt, bucket_by=bucket_by)
     else:
         fmt = _resolve_resume_format(stage_dir, fmt)
-        with open(_marker_path(stage_dir), encoding="utf-8") as f:
-            committed_bucket = json.load(f).get("bucket_by")
-        if bucket_by is not None and (
-                committed_bucket is None or list(bucket_by) != committed_bucket):
+        committed_bucket = _marker(stage_dir).get("bucket_by")
+        if bucket_by is not None and list(bucket_by) != committed_bucket:
             raise ValueError(
                 f"bucketed-checkpoint resume mismatch at {stage_dir}: "
                 f"committed bucket_by={committed_bucket} vs requested "
                 f"{list(bucket_by)}; delete the stage dir to rewrite it")
         bucket_by = tuple(committed_bucket) if committed_bucket else None
+    schema = _committed_schema(stage_dir)
     if bucket_by is not None:
-        return spark.table(_register_bucketed_table(spark, stage_dir, bucket_by))
-    return spark.read.format(fmt).load(data_path)
+        return spark.table(_register_bucketed_table(spark, stage_dir, bucket_by, schema))
+    return _read(spark, fmt, data_path, schema)
 
 
 def chunked_stage(
@@ -273,25 +285,20 @@ def chunked_stage(
     stage_dir = os.path.join(workdir, stage)
     os.makedirs(stage_dir, exist_ok=True)
     fmt = fmt or checkpoint_format()
-    if stage_done(stage_dir):
-        with open(_marker_path(stage_dir), encoding="utf-8") as f:
-            if json.load(f).get("gc_chunks"):
-                raise ValueError(
-                    f"chunked_stage: chunk dirs at {stage_dir} were "
-                    f"garbage-collected after finalization (gc_chunk_dirs) "
-                    f"— read the finalized stage instead, or delete the "
-                    f"stage dir to recompute from scratch")
+    if stage_done(stage_dir) and _marker(stage_dir).get("gc_chunks"):
+        raise ValueError(
+            f"chunked_stage: chunk dirs at {stage_dir} were "
+            f"garbage-collected after finalization (gc_chunk_dirs) "
+            f"— read the finalized stage instead, or delete the "
+            f"stage dir to recompute from scratch")
     manifest_path = os.path.join(stage_dir, "_CHUNK_MANIFEST")
     manifest = {"key_col": key_col, "n_chunks": n_chunks, "fmt": fmt}
     if os.path.exists(manifest_path):
         with open(manifest_path, encoding="utf-8") as f:
             committed = json.load(f)
-        # manifests written before format recording carry no 'fmt' key —
-        # tolerate them (like committed_format's None), compare the rest
-        compare = dict(manifest)
-        if "fmt" not in committed:
-            compare.pop("fmt")
-        if committed != compare:
+        # a manifest written before format recording has no 'fmt' key —
+        # tolerate it (like committed_format's None), compare the rest
+        if {**committed, "fmt": committed.get("fmt", fmt)} != manifest:
             raise ValueError(
                 f"chunked_stage resume mismatch at {stage_dir}: committed "
                 f"{committed} vs requested {manifest}; restart the stage "
@@ -322,15 +329,15 @@ def chunked_stage(
         write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
     with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
         json.dump({"stage": stage, "chunks": n_chunks}, f)
-    return spark.read.format(fmt).load(os.path.join(stage_dir, "chunk=*", "data"))
+    return _read(spark, fmt, os.path.join(stage_dir, "chunk=*", "data"),
+                 _committed_schema(os.path.join(stage_dir, "chunk=0")))
 
 
 def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
     """Reclaim a chunked stage's per-chunk resume dirs once a finalize stage
-    over the same rows has committed (e.g. the pipeline's
-    extract → extract_bucketed rewrite: the chunk union and the bucketed
-    copy hold the same data twice; the chunk dirs are resume points only
-    and are never read again once the finalize marker exists).
+    over the same rows has committed (e.g. the pipeline's extract →
+    extract_bucketed rewrite: the chunk dirs are resume points only, never
+    read again once the finalize marker exists).
 
     Refuses to delete anything unless (a) the finalize stage's marker
     exists AND (b) the finalize marker's committed row count equals the sum
@@ -348,8 +355,7 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
         raise ValueError(
             f"gc_chunk_dirs: finalize stage {fin_dir} has no marker — the "
             f"chunk dirs are still the only committed copy")
-    with open(_marker_path(fin_dir), encoding="utf-8") as f:
-        fin_rows = json.load(f)["rows"]
+    fin_rows = committed_rows(fin_dir)
     chunk_dirs = sorted(
         os.path.join(stage_dir, d) for d in os.listdir(stage_dir)
         if d.startswith("chunk=")) if os.path.isdir(stage_dir) else []
@@ -360,8 +366,7 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
         if not stage_done(cdir):
             raise ValueError(f"gc_chunk_dirs: incomplete chunk {cdir} — "
                              f"the chunked stage never finished")
-        with open(_marker_path(cdir), encoding="utf-8") as f:
-            chunk_rows += json.load(f)["rows"]
+        chunk_rows += committed_rows(cdir)
     if chunk_rows != fin_rows:
         raise ValueError(
             f"gc_chunk_dirs: finalize stage {fin_dir} committed {fin_rows} "
@@ -370,8 +375,7 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
     for cdir in chunk_dirs:
         shutil.rmtree(cdir)
     if stage_done(stage_dir):
-        with open(_marker_path(stage_dir), encoding="utf-8") as f:
-            marker = json.load(f)
+        marker = _marker(stage_dir)
         marker["gc_chunks"] = True
         with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
             json.dump(marker, f)
@@ -380,45 +384,36 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
 
 def verify_stage_lineage(spark: SparkSession, stage_dir: str,
                          fmt: str | None = None) -> dict:
-    """Re-verify a checkpointed stage against its _lineage manifest.
+    """Re-verify a checkpointed stage against the lineage in its marker.
 
-    Per-partition signatures are not comparable across reads (split
-    boundaries move), but their XOR-fold is: bit_xor is associative and
-    commutative, so XOR of the stored per-partition content signatures ==
-    the global bit_xor over all rows, however the data is partitioned on
-    re-read. Compares global row count + global content signature (+ the
-    sha256 signature when present). Returns {'ok': bool, ...evidence}.
+    bit_xor is associative and commutative, so the content signature of a
+    fresh scan equals the one observed at write time however the data is
+    partitioned on re-read. Compares row count + content signature (+ the
+    sha256 signature when present). Returns {'ok': bool, ...evidence}. A
+    marker written before marker-held lineage is checked against the
+    XOR-fold of its per-partition ``_lineage`` parquet rows.
 
-    The reader format comes from the stage's own _STAGE_DONE marker when
-    recorded (a verify must read with the format the stage was written in,
-    whatever the ambient env says); an EXPLICITLY passed fmt that
-    contradicts the marker hard-fails, same contract as run_stage."""
+    The reader format is the one the marker committed, whatever the ambient
+    env says; an EXPLICITLY passed fmt that contradicts it hard-fails, same
+    contract as run_stage."""
     if fmt is not None:
         fmt = _resolve_resume_format(stage_dir, fmt)
     else:
         fmt = committed_format(stage_dir) or checkpoint_format()
-    data = spark.read.format(fmt).load(os.path.join(stage_dir, "data"))
-    lin = spark.read.parquet(os.path.join(stage_dir, "_lineage"))
-
-    stored_aggs = [F.sum("n_rows").alias("n_rows"),
-                   F.expr("bit_xor(content_sig)").alias("content_sig")]
-    has_sha = "sha256_sig" in lin.columns
-    if has_sha:
-        stored_aggs.append(F.expr("bit_xor(sha256_sig)").alias("sha256_sig"))
-    stored = lin.agg(*stored_aggs).collect()[0]
-
-    cols = data.columns
-    fresh_aggs = [F.count("*").alias("n_rows"),
-                  F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("content_sig")]
-    if has_sha:
-        fresh_aggs.append(F.expr("bit_xor(xxhash64(content_sha256))").alias("sha256_sig"))
-    fresh = data.agg(*fresh_aggs).collect()[0]
-
-    checks = {k: (stored[k] or 0) == (fresh[k] or 0)
-              for k in (["n_rows", "content_sig"] + (["sha256_sig"] if has_sha else []))}
+    data = _read(spark, fmt, os.path.join(stage_dir, "data"),
+                 _committed_schema(stage_dir))
+    fresh = data.agg(*_lineage_aggs(data.columns)).collect()[0].asDict()
+    stored = dict(_marker(stage_dir).get("lineage") or {})
+    if stored:
+        stored.pop("schema")
+    else:
+        lin = spark.read.parquet(os.path.join(stage_dir, "_lineage"))
+        stored = lin.agg(F.sum("n_rows").alias("n_rows"), *[
+            F.bit_xor(k).alias(k) for k in ("content_sig", "sha256_sig")
+            if k in lin.columns]).collect()[0].asDict()
+    checks = {k: (stored[k] or 0) == (fresh.get(k) or 0) for k in stored}
     return {"ok": all(checks.values()), "checks": checks,
-            "stored": {k: stored[k] for k in checks},
-            "fresh": {k: fresh[k] for k in checks}}
+            "stored": stored, "fresh": {k: fresh.get(k) for k in checks}}
 
 
 def verify_sha256_invariant(df: DataFrame, text_col: str = "content") -> int:

@@ -21,6 +21,7 @@ Pins, on one run:
   through a broken localCheckpoint).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from amharic_ecommerce_data_extractor_spark.operators.linking import (
@@ -38,6 +39,7 @@ JOBS_PER_ROUND_BOUND = 16
 SETUP_SLACK = 12  # initial eager checkpoint + small-branch probe + stats agg
 
 
+@pytest.mark.slow  # ~130 s on 4 cores; `pytest -m "not slow"` skips it
 def test_path_graph_million_edges_converges_one_action_per_round(spark):
     edges = spark.range(N_EDGES).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))

@@ -1,6 +1,6 @@
-"""Checkpoint/lineage/resume: stage markers, per-partition lineage rows,
-sha256 invariant, and mid-run restart that does NOT recompute finished
-chunks."""
+"""Checkpoint/lineage/resume: stage markers carrying the lineage observed
+on the write, sha256 invariant, and mid-run restart that does NOT recompute
+finished chunks."""
 
 import json
 import os
@@ -25,9 +25,10 @@ def test_run_stage_resumes(spark, tmp_path):
     assert d1.count() == 100 and calls["n"] == 1
     d2 = ckpt.run_stage(spark, str(tmp_path), "s1", build)
     assert d2.count() == 100 and calls["n"] == 1  # resumed, not recomputed
-    lin = spark.read.parquet(str(tmp_path / "s1" / "_lineage"))
-    assert lin.agg(F.sum("n_rows")).collect()[0][0] == 100
-    assert {"partition_id", "n_rows", "content_sig"} <= set(lin.columns)
+    lineage = json.loads((tmp_path / "s1" / ckpt.MARKER).read_text())["lineage"]
+    assert lineage["n_rows"] == 100
+    assert {"n_rows", "content_sig", "schema"} <= set(lineage)
+    assert not (tmp_path / "s1" / "_lineage").exists()
 
 
 def test_chunked_stage_mid_run_restart(spark, tmp_path):
@@ -230,9 +231,9 @@ def test_chunk_marker_chaos_recomputes_only_that_chunk(spark, tmp_path):
 
 
 def test_verify_stage_lineage_detects_tampering(spark, tmp_path):
-    """The _lineage manifest is re-verifiable after any repartitioning:
-    XOR-fold of per-partition signatures is partition-invariant. Appending
-    rows behind the checkpoint's back must be detected."""
+    """The marker lineage is re-verifiable after any repartitioning: the
+    bit_xor signature fold is partition-invariant. Appending rows behind
+    the checkpoint's back must be detected."""
     from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
 
     df = spark.range(500).select(

@@ -98,3 +98,41 @@ def test_ivf_assign_matches_array_max_expression(spark, vecs, sf_dir):
     got = {r["vec_id"]: r["cell"]
            for r in sim.ivf_assign(vecs, cents).select("vec_id", "cell").collect()}
     assert got == ref
+
+
+def test_zero_vector_no_runtime_warning(spark):
+    """All-zero vectors: ``ivf_assign``'s norm division runs under
+    np.errstate, so no RuntimeWarning escapes (its batch kernel checked
+    in-process with warnings raised as errors), and the row lands in the
+    last cell (every sim 0/0 = NaN, ordered greatest) — the same on the
+    Spark path. ``_signed_arrow`` divides nothing and matches the JVM fold
+    (norm 0.0, every bit '1')."""
+    import warnings
+
+    import numpy as np
+    import pyarrow as pa
+
+    dim, n_cells = 8, 3
+    cents = [[1.0 if d == c else 0.0 for d in range(dim)] for c in range(n_cells)]
+    planes = sim._planes(16, dim, 7, "gauss")
+    rows = [(1, [0.0] * dim), (2, [1.0] + [0.0] * (dim - 1))]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int64()),
+         pa.array([r[1] for r in rows], pa.list_(pa.float32()))],
+        names=["vec_id", "embedding"])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        (assigned,) = sim._assign_batches(
+            iter([batch]), np.asarray(cents), "vec_id", "embedding")
+    assert assigned.column(2).to_pylist() == [n_cells - 1, 0]
+
+    df = spark.createDataFrame(rows, _SCHEMA)
+    got = {r["vec_id"]: r["cell"] for r in sim.ivf_assign(df, cents).collect()}
+    assert got == {1: n_cells - 1, 2: 0}
+    jvm = {r["id"]: (r["norm"], r["sig"]) for r in df.select(
+        F.col("vec_id").alias("id"), sim._norm(F.col("embedding")).alias("norm"),
+        sim.simhash_signature(F.col("embedding"), planes).alias("sig")).collect()}
+    arrow = {r["id"]: (r["id_norm"], r["_sig"]) for r in
+             sim._signed_arrow(df, "vec_id", "embedding", "id", planes).collect()}
+    assert arrow == jvm
+    assert arrow[1] == (0.0, "1" * 16)

@@ -2,19 +2,18 @@
 
 Replaces the reference's per-row driver loop (``model_evaluator.py:130-142``,
 batch size 1 per model call) with ONE fused, Arrow-batched pass per
-partition — a Spark 4.1 ``arrow_udf`` for the default rules backend (a
-``pandas_udf`` for the model backends):
+partition — a Spark 4.1 ``arrow_udf`` shared by every backend:
 
     content → preprocess (kernels.textprep, exact reference chain)
-            → message tokenizer → BIO rule labeling (kernels.labeler)
-            → entity grouping + price parsing
+            → per-backend records (tokens, BIO labels, entity lists,
+              parsed prices) for each DISTINCT preprocessed text
 
 Everything downstream (triples, joins, aggregations) is pure JVM column work;
 this operator is the only Python/Arrow boundary in the pipeline. The plan is
 narrow — no shuffle — so it scales linearly with partitions at any input
 size; the per-executor cost is one Arrow round-trip per batch.
 
-Backends:
+Backends (the record function the shell runs over the distinct texts):
 * ``rules`` (default): deterministic kernel — the parity-testable "model".
 * ``hf``: HuggingFace token-classification (reference ``model_evaluator.py:81``
   semantics). Loaded lazily ONCE PER EXECUTOR PROCESS via a module-level
@@ -25,12 +24,13 @@ Backends:
   checkpoint (tests/fixtures/tiny_ner_model.npz) with HF-compatible span
   output — executes the exact model-backend plumbing (per-executor
   singleton load, Arrow batch inference, char-span emission, N2 alignment)
-  end-to-end with zero external dependencies. All three backends share the
-  Spark-side plumbing (schema, batching, fusion) and the span→record
-  postprocessing.
+  end-to-end with zero external dependencies. Both model backends share
+  the span→record postprocessing.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import pandas as pd
 
@@ -98,16 +98,19 @@ def _preprocess_unique(uniques) -> list[str]:
     return out
 
 
-def _extract_arrow_batch(texts, names: list[str], with_contact_rule: bool):
+def _extract_arrow_batch(texts, names: list[str], records):
     """One arrow_udf batch of raw texts → the entity StructArray with the
     ``names`` fields (a subset of ENTITY_FIELDS, in that order).
 
-    Factorize in C (null_encoding='encode' keeps None a dictionary entry,
-    matching the Python-dict factorize this replaced), run the kernels on
-    the uniques only, and expand per-row with pc.take — so the
-    Python→Arrow conversion of the result lists also happens once per
-    DISTINCT text, not once per row. A ChunkedArray input is combined
-    first: its dictionary_encode result has no single ``indices`` array."""
+    ``records`` is the backend's record function: list of preprocessed
+    texts → one record dict per text. Factorize in C (null_encoding='encode'
+    keeps None a dictionary entry, preprocessed to ""), preprocess and run
+    ``records`` on the uniques only, and expand per-row with pc.take — so
+    the Python→Arrow conversion of the result lists also happens once per
+    DISTINCT text, not once per row. Element-wise identical to running the
+    chain on every row, since every backend is pure per text. A
+    ChunkedArray input is combined first: its dictionary_encode result has
+    no single ``indices`` array."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -116,8 +119,7 @@ def _extract_arrow_batch(texts, names: list[str], with_contact_rule: bool):
     enc = pc.dictionary_encode(texts, null_encoding="encode")
     codes = enc.indices
     clean_u = _preprocess_unique(enc.dictionary.to_pylist())
-    recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-              for c in clean_u]
+    recs_u = records(clean_u)
     arrays = []
     for field in names:
         if field == "preprocessed_text":
@@ -127,6 +129,12 @@ def _extract_arrow_batch(texts, names: list[str], with_contact_rule: bool):
             u_arr = pa.array([r[field] for r in recs_u], type=pa.list_(elem))
         arrays.append(pc.take(u_arr, codes))
     return pa.StructArray.from_arrays(arrays, names=names)
+
+
+def _extract_batch_rules(clean: list[str], with_contact_rule: bool = True) -> list[dict]:
+    """Rules backend: the memoized per-text kernel chain."""
+    return [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
+            for c in clean]
 
 
 def _hf_pipeline(model_dir: str):
@@ -173,13 +181,12 @@ def _records_from_spans(texts: list[str], results: list[list[dict]]) -> list[dic
     return out
 
 
-def _extract_batch_hf(clean: pd.Series, model_dir: str) -> list[dict]:
+def _extract_batch_hf(clean: list[str], model_dir: str) -> list[dict]:
     """HF batch path: one pipeline call per Arrow batch (amortizes the
     Python↔native boundary the reference crossed per single sentence)."""
     pipe = _hf_pipeline(model_dir)
-    texts = clean.fillna("").tolist()
-    results = pipe([t if t.strip() else "-" for t in texts], batch_size=64)
-    return _records_from_spans(texts, results)
+    results = pipe([t if t.strip() else "-" for t in clean], batch_size=64)
+    return _records_from_spans(clean, results)
 
 
 def _numpy_model(model_path: str) -> dict:
@@ -216,7 +223,7 @@ def _token_offsets(text: str, tokens: list[str]) -> list[tuple[int, int]]:
     return offs
 
 
-def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
+def _extract_batch_numpy(clean: list[str], model_path: str) -> list[dict]:
     """Numpy token-classification backend: REAL tensor inference (hashed
     char-trigram bag → embedding mean → linear → softmax → argmax BIO) from a
     committed random-weight checkpoint, emitting char-offset spans with HF
@@ -232,9 +239,8 @@ def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
     m = _numpy_model(model_path)
     emb, w, b, labels = m["emb"], m["w"], m["b"], m["labels"]
     v = emb.shape[0]
-    texts = clean.fillna("").tolist()
     results: list[list[dict]] = []
-    for text in texts:
+    for text in clean:
         tokens = tp.tokenize_text(text)
         if not tokens:
             results.append([])
@@ -279,7 +285,7 @@ def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
             s.pop("_score_sum")
             s.pop("_n")
         results.append(spans)
-    return _records_from_spans(texts, results)
+    return _records_from_spans(clean, results)
 
 
 def extract_entities(
@@ -291,20 +297,13 @@ def extract_entities(
     target_partitions: int | None = None,
     include_tokens: bool = True,
     include_clean_text: bool = True,
-    jvm_barrier: bool = True,
-    colocate_duplicates: bool = False,
 ) -> DataFrame:
     """messages → messages + entity columns. Narrow plan, zero shuffles.
 
-    jvm_barrier (rules_jvm backend only): the returned plan ends in a
-    localCheckpoint(eager=False) optimizer barrier that stops CollapseProject
-    re-inlining the automaton into every downstream reference. The barrier's
-    MEMORY_AND_DISK blocks live until the returned DataFrame is GC'd — in a
-    long-lived session making many rules_jvm calls, either unpersist with
-    df.rdd.unpersist() when done, or pass jvm_barrier=False and place your
-    own barrier/checkpoint downstream (an un-barriered plan consumed by
-    multi-reference consumers re-expands multiplicatively; plan-size pinned
-    by tests/test_plan_quality.py).
+    backend: ``rules``, ``hf`` or ``numpy``; anything else raises ValueError
+    here, before any Spark job. The model backends load on the executors at
+    the first batch, so a driver without ``transformers`` still builds an
+    ``hf`` plan.
 
     target_partitions: optionally repartition the input first. With exactly
     one task per core a single straggler idles the whole stage tail; 2-4×
@@ -317,83 +316,29 @@ def extract_entities(
     read them — pass False in throughput-critical pipelines (≈half the
     Arrow traffic); keep True where predictions_table / NER metrics are
     needed.
-
-    colocate_duplicates (requires target_partitions): hash-partition the
-    repartition on text_col instead of round-robin. Identical output; the
-    difference is WHERE duplicate texts land. The rules backend memoizes
-    finished records per worker (kernels/labeler.py:_RECORD_CACHE), but a
-    round-robin shuffle scatters a text's copies across all workers, so the
-    per-worker hit rate is only the WITHIN-PARTITION duplicate rate (~8% on
-    the bench corpus vs 36% global). Hash-partitioning makes every copy of
-    a text land in one partition, lifting the memo hit rate to the global
-    duplicate rate for the same shuffle cost. Tradeoff: copies of one text
-    become one shuffle key, so a mega-duplicated corpus (one text = a
-    partition's worth of rows) skews the stage — leave this off there, or
-    better, run exact dedup first (operators/dedup.py; curate() already
-    dedups before heavy stages). For moderately-duplicated corpora (the
-    web-crawl norm) the 2-4× cores partition count leaves stragglers slack.
-    Measured (36%-duplicate bench corpus, 2M msgs, local[16]): the hit-rate
-    lift is real (8% → 36% by partition-level dup accounting) but the
-    wall-clock delta sits below the sandbox's ±10% noise floor — the win
-    case is corpora whose duplicate mass, not just rate, is large.
     """
+    if backend == "rules":
+        records = partial(_extract_batch_rules, with_contact_rule=with_contact_rule)
+    elif backend == "hf":
+        records = partial(_extract_batch_hf, model_dir=model_dir or "")
+    elif backend == "numpy":
+        records = partial(_extract_batch_numpy, model_path=model_dir or "")
+    else:
+        raise ValueError(f"unknown backend {backend!r}; "
+                         "expected one of ('rules', 'hf', 'numpy')")
+
     if target_partitions:
-        if colocate_duplicates:
-            df = df.repartition(target_partitions, F.col(text_col))
-        else:
-            # skip the round-robin shuffle (and its sort-before-repartition
-            # pass over every column) when the input is a narrow plan over a
-            # scan that already splits at least target_partitions ways — the
-            # load-balancing the repartition exists to buy (docstring below)
-            # is already provided by the many scan splits. Statically gated,
-            # same discipline as linking.spread: shuffle-bearing or
-            # unprobeable plans keep the explicit repartition.
-            from .linking import narrow_scan_splits
+        # skip the round-robin shuffle (and its sort-before-repartition pass
+        # over every column) when the input is a narrow plan over a scan that
+        # already splits at least target_partitions ways — the load-balancing
+        # the repartition exists to buy is already provided by the many scan
+        # splits. Statically gated, same discipline as linking.spread:
+        # shuffle-bearing or unprobeable plans keep the explicit repartition.
+        from .linking import narrow_scan_splits
 
-            splits = narrow_scan_splits(df, stop_at=target_partitions)
-            if splits is None or splits < target_partitions:
-                df = df.repartition(target_partitions)
-
-    if backend == "rules_jvm":
-        # pure-JVM path: expression-chain preprocess + fold-based BIO
-        # automaton — zero Python (interpreted HOF lambdas, outside codegen:
-        # the SEMANTICS TWIN / no-Python-worker fallback, measured ~4× slower
-        # than the pandas 'rules' backend — see functions/extract_expr.py).
-        # Assumes NFC input (functions/textnorm.py caveat).
-        from ..functions.extract_expr import with_entities_expr
-        from ..functions.textnorm import preprocess_expr
-
-        out = df.withColumn("preprocessed_text", preprocess_expr(F.col(text_col)))
-        out = with_entities_expr(out, clean_col="preprocessed_text",
-                                 with_contact_rule=with_contact_rule)
-        if not include_tokens:
-            out = out.drop("tokens", "labels")
-        if not include_clean_text:
-            out = out.drop("preprocessed_text")
-        if out.isStreaming:
-            # checkpoint is unsupported on streaming plans, so the barrier
-            # below cannot apply. Consequence (measured): a consumer that
-            # references an entity column more than once in one projection —
-            # emit_triples touches products 3× and price_values 2× — inlines
-            # the automaton per reference, ~11× plan text at toy scale
-            # (bounded LINEAR in reference count, not the exponential union
-            # re-expansion the barrier exists for; plan-size pinned by
-            # tests/test_streaming.py). For throughput-critical streaming
-            # triples prefer backend='rules' (pandas) — this path is the
-            # no-Python-worker fallback.
-            return out
-        # optimizer barrier (same discipline as similarity.knn_lsh): without
-        # it CollapseProject inlines the single-use automaton columns into
-        # every downstream consumer branch — a fused extract→triples plan
-        # re-expands 180× (measured: 48 KB analyzed → 8.8 MB optimized,
-        # 69 MiB task binary, executor OOM in task DEserialization at 32-way
-        # parallelism). eager=False: materializes per-partition at first
-        # action, MEMORY_AND_DISK, no extra job while building the plan.
-        # Lifetime note: the checkpoint blocks live until the returned
-        # DataFrame is GC'd — in a long-lived session, unpersist via
-        # df.rdd.unpersist() or scope the result, as with any persist
-        # (jvm_barrier=False opts out; see docstring).
-        return out.localCheckpoint(eager=False) if jvm_barrier else out
+        splits = narrow_scan_splits(df, stop_at=target_partitions)
+        if splits is None or splits < target_partitions:
+            df = df.repartition(target_partitions)
 
     drop = set()
     if not include_tokens:
@@ -402,71 +347,19 @@ def extract_entities(
         # content-sized string crossing Arrow back; the KG stages never read it
         drop.add("preprocessed_text")
     fields = [f for f in ENTITY_FIELDS if f.name not in drop]
-    array_fields = [f.name for f in fields if f.name != "preprocessed_text"]
-    entity_struct = T.StructType(fields)
+    names = [f.name for f in fields]
 
-    if backend == "rules" and hasattr(F, "arrow_udf"):
-        # Arrow-native scalar UDF (Spark 4.1+): the batch arrives as a
-        # pyarrow Array and the struct result is built as pyarrow arrays
-        # directly — no pandas Series/DataFrame construction on either side
-        # of the boundary. Factorize: preprocess + label each DISTINCT raw
-        # text once per batch (plus the cross-batch _CLEAN_CACHE /
-        # _RECORD_CACHE memos) and expand per-row by code — element-wise
-        # identical to running the chain on every row, since both kernels
-        # are pure in the text.
-        names = [f.name for f in fields]
+    # Arrow-native scalar UDF: the batch arrives as a pyarrow Array and the
+    # struct result is built as pyarrow arrays directly — no pandas on either
+    # side of the boundary. ONLY text_col crosses it; all other columns stay
+    # JVM-side.
+    @F.arrow_udf(T.StructType(fields))
+    def extract_arrow_udf(texts):
+        return _extract_arrow_batch(texts, names, records)
 
-        @F.arrow_udf(entity_struct)
-        def extract_arrow_udf(texts):
-            return _extract_arrow_batch(texts, names, with_contact_rule)
-
-        ent = F.col("_entities")
-        return (df.withColumn("_entities", extract_arrow_udf(F.col(text_col)))
-                .select("*", *[ent[f.name].alias(f.name) for f in fields])
-                .drop("_entities"))
-
-    @F.pandas_udf(entity_struct)
-    def extract_udf(texts: pd.Series) -> pd.DataFrame:
-        if backend == "rules":
-            # pandas twin of the arrow_udf path above (pre-4.1 fallback) —
-            # same factorize + memo discipline, same element-wise output
-            import numpy as np
-
-            codes, uniques = texts.factorize(use_na_sentinel=False)
-            uvals = np.asarray(uniques, dtype=object)
-            clean_u = _preprocess_unique(uvals)
-            recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-                      for c in clean_u]
-            out = pd.DataFrame(index=pd.RangeIndex(len(texts)))
-            if "preprocessed_text" not in drop:
-                cvals = np.empty(len(clean_u), dtype=object)
-                cvals[:] = clean_u
-                out["preprocessed_text"] = cvals[codes]
-            for field in array_fields:
-                fvals = np.empty(len(recs_u), dtype=object)
-                fvals[:] = [r[field] for r in recs_u]
-                out[field] = fvals[codes]
-            return out
-        clean = tp.preprocess_series(texts)
-        if backend == "hf":
-            recs = _extract_batch_hf(clean, model_dir or "")
-        elif backend == "numpy":
-            recs = _extract_batch_numpy(clean, model_dir or "")
-        else:
-            raise ValueError(f"unknown backend {backend!r}")
-        out = pd.DataFrame(index=clean.reset_index(drop=True).index)
-        if "preprocessed_text" not in drop:
-            out["preprocessed_text"] = clean.reset_index(drop=True)
-        for field in array_fields:
-            out[field] = [r[field] for r in recs]
-        return out
-
-    # struct-returning pandas UDF: ONLY text_col crosses the Arrow boundary;
-    # all other columns stay JVM-side (vs mapInPandas, which would round-trip
-    # the full row through Python for nothing)
     ent = F.col("_entities")
-    return (df.withColumn("_entities", extract_udf(F.col(text_col)))
-            .select("*", *[ent[f.name].alias(f.name) for f in fields])
+    return (df.withColumn("_entities", extract_arrow_udf(F.col(text_col)))
+            .select("*", *[ent[n].alias(n) for n in names])
             .drop("_entities"))
 
 
@@ -475,8 +368,6 @@ def predictions_table(extracted: DataFrame) -> DataFrame:
     (``model_evaluator.py:199-207``) minus the cosmetic blank separator rows:
     ``(message_id, repo, pos, token, predicted_label, preprocessed_text)``.
     Pure JVM explode; keeps partitioning."""
-    from pyspark.sql import functions as F
-
     return extracted.select(
         "message_id",
         "repo",

@@ -149,7 +149,7 @@ def _signed_arrow(df: DataFrame, id_col: str, vec_col: str, idn: str,
     * an all-zero vector gets the JVM result too (norm 0.0, every dot 0.0
       so every bit '1') — no division happens here. The divergence from
       ANSI lies downstream: the JVM cosine ``_dot / (_norm * _norm)`` raises
-      DIVIDE_BY_ZERO on a zero norm, while the Arrow reranks score it NaN.
+      DIVIDE_BY_ZERO on a zero norm, while the Arrow reranks score it null.
     """
     import numpy as np
     import pyarrow as pa
@@ -168,40 +168,19 @@ def _signed_arrow(df: DataFrame, id_col: str, vec_col: str, idn: str,
             if n == 0:
                 continue
             ids, vecs = b.column(0), b.column(1)
-            row_valid = np.asarray(vecs.is_valid(), dtype=bool)
-            len_np = pa.compute.list_value_length(vecs) \
-                .fill_null(-1).to_numpy(zero_copy_only=False)
-            flat = vecs.flatten()
-            # no_null_elems: the row itself and all its elements are
-            # non-null (a null anywhere nulls both JVM folds)
-            no_null_elems = row_valid.copy()
-            if not np.asarray(flat.is_valid(), dtype=bool).all():
-                counts = np.where(len_np > 0, len_np, 0)
-                offs = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(counts, out=offs[1:])
-                fv = np.asarray(flat.is_valid(), dtype=bool)
-                nonnull = np.array([fv[offs[i]:offs[i + 1]].sum()
-                                    for i in range(n)], dtype=np.int64)
-                no_null_elems &= nonnull == np.maximum(counts, 0)
+            off, vals, n_null, lens = _list_parts(vecs)
+            # norm-eligible: the row itself and all its elements are
+            # non-null (a null anywhere nulls both JVM folds), regardless of
+            # length (the JVM _norm sums the row's own squares)
+            norm_ok = (lens >= 0) & (n_null == 0)
             # vectorized set: clean rows of exactly dim elements
-            ok = no_null_elems & (len_np == dim)
-            # norm-eligible: any clean row, regardless of length (the JVM
-            # _norm sums the row's own squares; only nulls null it)
-            norm_ok = no_null_elems
+            ok = norm_ok & (lens == dim)
 
             sig_bytes = np.full((n, n_planes), ord("0"), dtype=np.uint8)
             norms = np.full(n, np.nan, dtype=np.float64)
-            ragged = np.flatnonzero(norm_ok & ~ok)
-            vl = vecs.to_pylist() if (ragged.size or
-                                      (ok.any() and not ok.all())) else None
             if ok.any():
-                if ok.all():
-                    mat = np.asarray(flat.to_numpy(zero_copy_only=False),
-                                     dtype=np.float64).reshape(n, dim)
-                    sel = slice(None)
-                else:
-                    sel = np.flatnonzero(ok)
-                    mat = np.asarray([vl[i] for i in sel], dtype=np.float64)
+                sel = np.flatnonzero(ok)
+                mat = _gather_rows(off, vals, sel, dim)
                 m = mat.shape[0]
                 acc = np.zeros((m, n_planes), dtype=np.float64)
                 nacc = np.zeros(m, dtype=np.float64)
@@ -212,9 +191,9 @@ def _signed_arrow(df: DataFrame, id_col: str, vec_col: str, idn: str,
                 bits = (acc >= 0.0) | np.isnan(acc)
                 sig_bytes[sel] = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
                 norms[sel] = np.sqrt(nacc)
-            for i in ragged:  # rare: clean row, len != dim — norm only
+            for i in np.flatnonzero(norm_ok & ~ok):  # rare: len != dim — norm only
                 a = 0.0
-                for x in vl[i]:
+                for x in vals[off[i]:off[i] + lens[i]]:
                     a += x * x
                 norms[i] = np.sqrt(a)
             sigs = pa.array(
@@ -374,65 +353,27 @@ def _cosine_rerank_broadcast(cand: DataFrame, q_rows, c_rows,
                              partial_topk: int | None = None) -> DataFrame:
     """Broadcast-lookup twin of :func:`_cosine_rerank_arrow`: candidates
     cross the Arrow boundary as bare id pairs; vectors and norms come from
-    a broadcast of the (already materialized) signature tables. The dot is
-    the same per-dimension left-to-right float64 accumulation — bit-exact
-    against the join-shaped rerank and the original JVM fold. The collected
-    vectors are float32 widened exactly to float64, the same widening the
-    JVM cast performs."""
-    import numpy as np
+    a broadcast of the (already materialized) signature tables, decoded
+    once on the driver, and each pair is scored by the same
+    :func:`_pair_sims`, so every sim — degenerate pairs included — equals
+    the join-shaped rerank's. The collected vectors are float32 widened
+    exactly to float64, the same widening the JVM cast performs."""
+    import pyarrow as pa
 
     def pack(rows):
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        norms = np.array([r[2] for r in rows], dtype=np.float64)
-        lookup = {int(i): j for j, i in enumerate(ids)}
-        return lookup, mat, norms
+        lookup = {int(r[0]): j for j, r in enumerate(rows)}
+        vecs = pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
+        norms = pa.array([r[2] for r in rows], type=pa.float64())
+        return lookup, _list_parts(vecs), norms.to_numpy(zero_copy_only=False)
 
     spark = cand.sparkSession
     bq = spark.sparkContext.broadcast(pack(q_rows))
     bc = spark.sparkContext.broadcast(pack(c_rows) if c_rows is not q_rows
                                       else None)
-
-    def score(batches):
-        import numpy as _np
-        import pyarrow as pa
-
-        q_lookup, q_mat, q_norms = bq.value
-        cval = bc.value
-        c_lookup, c_mat, c_norms = cval if cval is not None else bq.value
-        out_schema = pa.schema([("query_id", pa.int64()),
-                                ("neighbor_id", pa.int64()),
-                                ("sim", pa.float64())])
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            qid = b.column(0).to_numpy(zero_copy_only=False).astype(_np.int64)
-            nid = b.column(1).to_numpy(zero_copy_only=False).astype(_np.int64)
-            qi = _np.fromiter((q_lookup[int(x)] for x in qid), dtype=_np.int64,
-                              count=n)
-            ci = _np.fromiter((c_lookup[int(x)] for x in nid), dtype=_np.int64,
-                              count=n)
-            qv = q_mat[qi]
-            nv = c_mat[ci]
-            acc = _np.zeros(n, dtype=_np.float64)
-            for d in range(qv.shape[1]):
-                acc = acc + qv[:, d] * nv[:, d]
-            sim = acc / (q_norms[qi] * c_norms[ci])
-            if partial_topk is not None and n > partial_topk:
-                key = _np.where(_np.isnan(sim), _np.inf, sim)
-                order = _np.lexsort((nid, -key, qid))
-                qs = qid[order]
-                starts = _np.r_[0, _np.nonzero(_np.diff(qs))[0] + 1]
-                sizes = _np.diff(_np.r_[starts, len(order)])
-                rank = _np.arange(len(order)) - _np.repeat(starts, sizes)
-                keep = _np.sort(order[rank < partial_topk])
-                qid, nid, sim = qid[keep], nid[keep], sim[keep]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(nid), pa.array(sim)],
-                schema=out_schema)
-
-    return cand.mapInArrow(score, "query_id long, neighbor_id long, sim double")
+    return cand.mapInArrow(
+        lambda batches: _rerank_batches(batches, partial_topk,
+                                        (bq.value, bc.value or bq.value)),
+        "query_id long, neighbor_id long, sim double")
 
 
 def _cosine_rerank_arrow(joined: DataFrame, partial_topk: int | None = None) -> DataFrame:
@@ -452,54 +393,144 @@ def _cosine_rerank_arrow(joined: DataFrame, partial_topk: int | None = None) -> 
     ride through untouched (JVM-computed once in the checkpointed
     signature pass).
 
+    Degenerate pairs score as the fold does: each pair is scored at its own
+    length, and a pair the fold scores null — a null vector, a null
+    element, mismatched lengths — gets a null sim, which the downstream
+    ``F.desc("sim")`` window ranks last. A zero denominator (a zero-norm
+    vector) also gives null: that is the fold's value without ANSI mode,
+    and under ANSI the fold raises DIVIDE_BY_ZERO, so there is no other
+    value to match. NaN vectors give a NaN sim, as in the fold.
+
     partial_topk=k additionally drops, per batch, every row ranked below k
     for its query under the EXACT total order the downstream window uses
-    (sim desc with NaN greatest — Spark's double ordering — then
-    neighbor_id asc). A row beaten by k same-query rows inside one batch is
-    beaten by k rows globally, so the global top-k the window computes is
-    unchanged while its input shrinks from every candidate to roughly
-    (queries-per-batch) × k rows — the same partial-top-k discipline as
-    knn_bruteforce."""
-    def score(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        out_schema = pa.schema([("query_id", pa.int64()),
-                                ("neighbor_id", pa.int64()),
-                                ("sim", pa.float64())])
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            qid = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            nid = b.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            qflat = np.asarray(b.column(2).flatten(), dtype=np.float64)
-            nflat = np.asarray(b.column(3).flatten(), dtype=np.float64)
-            dim = len(qflat) // n
-            qv = qflat.reshape(n, dim)
-            nv = nflat.reshape(n, dim)
-            qn = b.column(4).to_numpy(zero_copy_only=False)
-            nn = b.column(5).to_numpy(zero_copy_only=False)
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(dim):
-                acc = acc + qv[:, d] * nv[:, d]
-            sim = acc / (qn * nn)
-            if partial_topk is not None and n > partial_topk:
-                # Spark orders doubles with NaN as the greatest value
-                key = np.where(np.isnan(sim), np.inf, sim)
-                order = np.lexsort((nid, -key, qid))
-                qs = qid[order]
-                starts = np.r_[0, np.nonzero(np.diff(qs))[0] + 1]
-                sizes = np.diff(np.r_[starts, len(order)])
-                rank = np.arange(len(order)) - np.repeat(starts, sizes)
-                keep = np.sort(order[rank < partial_topk])
-                qid, nid, sim = qid[keep], nid[keep], sim[keep]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(nid), pa.array(sim)],
-                schema=out_schema)
-
+    (sim desc with NaN greatest — Spark's double ordering — and null last,
+    then neighbor_id asc). A row beaten by k same-query rows inside one
+    batch is beaten by k rows globally, so the global top-k the window
+    computes is unchanged while its input shrinks from every candidate to
+    roughly (queries-per-batch) × k rows — the same partial-top-k
+    discipline as knn_bruteforce."""
     return joined.mapInArrow(
-        score, "query_id long, neighbor_id long, sim double")
+        lambda batches: _rerank_batches(batches, partial_topk),
+        "query_id long, neighbor_id long, sim double")
+
+
+def _list_parts(vecs):
+    """(offsets, float64 values, per-row null-element count, per-row length
+    with -1 for a null vector) of an Arrow list<float> column."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    off = np.asarray(vecs.offsets.to_numpy(zero_copy_only=False), dtype=np.int64)
+    values = vecs.values
+    vals = np.asarray(values.to_numpy(zero_copy_only=False), dtype=np.float64)
+    if values.null_count:
+        null_cum = np.r_[0, np.cumsum(~np.asarray(values.is_valid(), dtype=bool))]
+        n_null = null_cum[off[1:]] - null_cum[off[:-1]]
+    else:
+        n_null = np.zeros(len(vecs), dtype=np.int64)
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy(zero_copy_only=False)
+    return off, vals, n_null, lens
+
+
+def _gather_rows(off, vals, rows, dim: int):
+    """(len(rows), dim) matrix of the non-empty index set ``rows`` of a
+    :func:`_list_parts` column, each row of length dim — a reshaped slice
+    when those rows lie back to back in ``vals``, a row gather when every
+    row of the column has length dim."""
+    import numpy as np
+
+    start = off[rows[0]]
+    if np.array_equal(off[rows], start + dim * np.arange(len(rows))):
+        return vals[start:start + len(rows) * dim].reshape(len(rows), dim)
+    if np.array_equal(np.diff(off), np.full(len(off) - 1, dim)):
+        return vals[off[0]:off[-1]].reshape(-1, dim)[rows]
+    return vals[off[rows][:, None] + np.arange(dim)]
+
+
+def _pair_sims(q, qi, c, ci):
+    """(sim, valid) of the pairs (row qi[j] of q, row ci[j] of c), where q
+    and c are ``(_list_parts(vecs), norms)`` of two vector columns; sim is
+    0 where valid is false (see :func:`_cosine_rerank_arrow`)."""
+    import numpy as np
+
+    (q_off, q_vals, q_null, q_len), q_norm = q
+    (c_off, c_vals, c_null, c_len), c_norm = c
+    ql = q_len[qi]
+    den = q_norm[qi] * c_norm[ci]
+    valid = ((ql >= 0) & (ql == c_len[ci]) & (q_null[qi] == 0)
+             & (c_null[ci] == 0) & (den != 0))
+    sim = np.zeros(len(qi), dtype=np.float64)
+    for dim in np.unique(ql[valid]):
+        rows = np.flatnonzero(valid & (ql == dim))
+        qv = _gather_rows(q_off, q_vals, qi[rows], dim)
+        cv = _gather_rows(c_off, c_vals, ci[rows], dim)
+        # IEEE results (inf·0, inf/inf → NaN) as in the fold, unwarned
+        with np.errstate(invalid="ignore", over="ignore"):
+            sim[rows] = _dot_rows(qv, cv) / den[rows]
+    return sim, valid
+
+
+def _dot_rows(a, b):
+    """Row-wise dot of two (n, dim) float64 matrices, summed left to right
+    over dims from 0.0 with one IEEE-754 multiply and add per step — the
+    fold's own order, so the result is bit-identical to it. The products
+    are summed dimension-major over 512-row blocks: each add then reads a
+    contiguous, cache-resident row instead of a strided column."""
+    import numpy as np
+
+    prod = a * b
+    acc = np.zeros(len(prod), dtype=np.float64)
+    for s in range(0, len(prod), 512):
+        out = acc[s:s + 512]
+        for col in prod[s:s + 512].T.copy():
+            out += col
+    return acc
+
+
+def _rerank_batches(batches, partial_topk: int | None, tables=None):
+    """The ``mapInArrow`` body of both reranks. Without ``tables`` the
+    batches are (query_id, neighbor_id, q_vec, n_vec, q_norm, n_norm); with
+    ``tables`` — the query and corpus ``(id → row, _list_parts, norms)`` of
+    :func:`_cosine_rerank_broadcast` — they are (query_id, neighbor_id)."""
+    import numpy as np
+    import pyarrow as pa
+
+    out_schema = pa.schema([("query_id", pa.int64()),
+                            ("neighbor_id", pa.int64()),
+                            ("sim", pa.float64())])
+    for b in batches:
+        n = b.num_rows
+        if n == 0:
+            continue
+        qid = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        nid = b.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        if tables is None:
+            qi = ci = np.arange(n)
+            q = (_list_parts(b.column(2)), np.asarray(
+                b.column(4).to_numpy(zero_copy_only=False), dtype=np.float64))
+            c = (_list_parts(b.column(3)), np.asarray(
+                b.column(5).to_numpy(zero_copy_only=False), dtype=np.float64))
+        else:
+            (q_lookup, *q), (c_lookup, *c) = tables
+            qi = np.fromiter((q_lookup[int(x)] for x in qid), dtype=np.int64,
+                             count=n)
+            ci = np.fromiter((c_lookup[int(x)] for x in nid), dtype=np.int64,
+                             count=n)
+        sim, valid = _pair_sims(q, qi, c, ci)
+        if partial_topk is not None and n > partial_topk:
+            # Spark orders doubles with NaN as the greatest value; null sims
+            # (invalid pairs) sort after every value under F.desc
+            key = np.where(np.isnan(sim), np.inf, sim)
+            order = np.lexsort((nid, -key, ~valid, qid))
+            qs = qid[order]
+            starts = np.r_[0, np.nonzero(np.diff(qs))[0] + 1]
+            sizes = np.diff(np.r_[starts, len(order)])
+            rank = np.arange(len(order)) - np.repeat(starts, sizes)
+            keep = np.sort(order[rank < partial_topk])
+            qid, nid, sim, valid = qid[keep], nid[keep], sim[keep], valid[keep]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(qid), pa.array(nid), pa.array(sim, mask=~valid)],
+            schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -636,29 +667,12 @@ def _assign_batches(batches, cmat, id_col: str, vec_col: str):
         if n == 0:
             continue
         ids, vecs = b.column(0), b.column(1)
-        row_valid = np.asarray(vecs.is_valid(), dtype=bool)
-        len_np = pa.compute.list_value_length(vecs) \
-            .fill_null(-1).to_numpy(zero_copy_only=False)
-        flat = vecs.flatten()
-        ok = row_valid & (len_np == dim)
-        if not np.asarray(flat.is_valid(), dtype=bool).all():
-            counts = np.where(len_np > 0, len_np, 0)
-            offs = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(counts, out=offs[1:])
-            fv = np.asarray(flat.is_valid(), dtype=bool)
-            nonnull = np.array([fv[offs[i]:offs[i + 1]].sum()
-                                for i in range(n)], dtype=np.int64)
-            ok &= nonnull == dim
+        off, vals, n_null, lens = _list_parts(vecs)
+        ok = (lens == dim) & (n_null == 0)
         best = np.full(n, n_cells - 1, dtype=np.int32)
         if ok.any():
-            if ok.all():
-                mat = np.asarray(flat.to_numpy(zero_copy_only=False),
-                                 dtype=np.float64).reshape(n, dim)
-                sel = slice(None)
-            else:
-                sel = np.flatnonzero(ok)
-                vl = vecs.to_pylist()
-                mat = np.asarray([vl[i] for i in sel], dtype=np.float64)
+            sel = np.flatnonzero(ok)
+            mat = _gather_rows(off, vals, sel, dim)
             m = mat.shape[0]
             acc = np.zeros((m, n_cells), dtype=np.float64)
             nacc = np.zeros(m, dtype=np.float64)

@@ -1277,7 +1277,8 @@ def q44(spark, sf_dir):
 # Deterministic synthetic BIO labels over the documents tokens: the label of
 # (doc_id, pos) is a pure function of md5, so Spark and DuckDB derive the
 # SAME corpus and the span P/R/F1 oracle recomputes seqeval-style span
-# extraction independently (window functions vs the mapInPandas kernel).
+# extraction independently (window functions vs the mapInPandas kernel of
+# operators.metrics.spans_table).
 _Q45_LABEL_SQL = """
 CASE WHEN {d} <= 1 THEN 'B-PRODUCT' WHEN {d} = 2 THEN 'I-PRODUCT'
      WHEN {d} = 3 THEN 'B-LOC' WHEN {d} = 4 THEN 'I-LOC' ELSE NULL END"""

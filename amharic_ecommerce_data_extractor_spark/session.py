@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# rows per Arrow batch handed to a Python UDF (arrow.maxRecordsPerBatch)
+ARROW_BATCH_ROWS = 10_000
+
 
 def get_spark(
     app_name: str = "amharic_ecommerce_kg",
@@ -32,7 +35,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")

@@ -1,7 +1,7 @@
 """Structured Streaming variants of the pipeline (the reference is all batch
 — SURVEY.md §2.11; this is the file-arrival incremental mode the engine adds).
 
-The extraction operator is stateless, so the SAME fused mapInPandas kernel
+The extraction operator is stateless, so the SAME fused arrow_udf kernel
 runs unchanged on a streaming DataFrame; triple emission is stateless too.
 Windowed vendor activity uses event-time windows + watermark for late data.
 """

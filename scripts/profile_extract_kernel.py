@@ -1,30 +1,34 @@
 #!/usr/bin/env python
-"""Single-process profile of the extract-stage per-batch work (guide §1:
-know where the core-seconds go before changing anything).
+"""Single-process profile of the extract stage's per-batch work: the
+shipped ``arrow_udf`` body, ``operators.extract._extract_arrow_batch``, with
+the rules record function (know where the core-seconds go before changing
+anything).
 
-Times, over one synthetic Arrow-batch-sized chunk of the bench corpus:
-  gen        — corpus generation (not part of the timed bench window)
-  preprocess — kernels.textprep.preprocess_series
-  extract    — the extract_message_cached loop (cold + warm cache)
-  assemble   — the pandas struct-column assembly the pandas_udf returns
-  to_arrow   — pandas -> Arrow conversion of that struct frame
+Usage: python scripts/profile_extract_kernel.py [n_rows]
+
+The synthetic corpus is cut into ``pa.array`` batches of
+``session.ARROW_BATCH_ROWS`` (the session's ``arrow.maxRecordsPerBatch``) and
+run through the shell twice:
+  cold — the preprocess and record memos cleared first (a fresh worker)
+  warm — the same batches again, memos full (a reused worker)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-import pandas as pd
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from amharic_ecommerce_data_extractor_spark.data.synthetic import (  # noqa: E402
     generate_messages_pandas,
 )
 from amharic_ecommerce_data_extractor_spark.kernels import labeler as lb  # noqa: E402
-from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp  # noqa: E402
+from amharic_ecommerce_data_extractor_spark.operators import extract as ex  # noqa: E402
+from amharic_ecommerce_data_extractor_spark.session import ARROW_BATCH_ROWS  # noqa: E402
 
 
 def t(label, fn, *a, **k):
@@ -38,38 +42,27 @@ def t(label, fn, *a, **k):
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     (pdf, _) = t("gen", generate_messages_pandas, n_rows=n, n_vendors=50)
-    texts = pdf["content"]
-    print(f"rows={len(texts)} distinct={texts.nunique()}")
+    texts = pdf["content"].tolist()
+    batches = [pa.array(texts[i:i + ARROW_BATCH_ROWS], type=pa.string())
+               for i in range(0, n, ARROW_BATCH_ROWS)]
+    n_distinct = len(set(texts))
+    print(f"rows={n} distinct={n_distinct} batches={len(batches)}")
 
-    clean, dt_pre = t("preprocess", tp.preprocess_series, texts)
-    print(f"  distinct clean={clean.nunique()}")
+    names = [f.name for f in ex.ENTITY_FIELDS]
 
-    def run_extract():
-        return [lb.extract_message_cached(c) for c in clean]
+    def run():
+        return [ex._extract_arrow_batch(b, names, ex._extract_batch_rules)
+                for b in batches]
 
+    ex._CLEAN_CACHE.clear()
     lb.extract_message_cached.cache_clear()
-    recs, dt_cold = t("extract (cold cache)", run_extract)
-    recs, dt_warm = t("extract (warm cache)", run_extract)
+    _, dt_cold = t("shell (cold memos)", run)
+    _, dt_warm = t("shell (warm memos)", run)
 
-    fields = ["tokens", "labels", "products", "prices", "locations",
-              "contacts", "price_values"]
-
-    def assemble():
-        out = pd.DataFrame(index=clean.reset_index(drop=True).index)
-        out["preprocessed_text"] = clean.reset_index(drop=True)
-        for f in fields:
-            out[f] = [r[f] for r in recs]
-        return out
-
-    out, dt_asm = t("assemble", assemble)
-    _, dt_arrow = t("to_arrow", pa.Table.from_pandas, out)
-
-    total = dt_pre + dt_cold + dt_asm + dt_arrow
-    print(f"\nper-row total (cold) {1e6*total/n:.1f} us; "
-          f"throughput {n/total:.0f} rows/s/core")
-    for lbl, d in [("preprocess", dt_pre), ("extract", dt_cold),
-                   ("assemble", dt_asm), ("to_arrow", dt_arrow)]:
-        print(f"  {lbl:<12} {100*d/total:5.1f}%")
+    for lbl, d in [("cold", dt_cold), ("warm", dt_warm)]:
+        print(f"  {lbl}: {1e6 * d / n:7.1f} us/row  "
+              f"{1e6 * d / n_distinct:7.1f} us/distinct text  "
+              f"{n / d:9.0f} rows/s/core")
 
 
 if __name__ == "__main__":

@@ -1,8 +1,9 @@
-"""The rules backend's arrow_udf batch kernel (operators/extract.py
-``_extract_arrow_batch``) on both shapes the Arrow runtime can hand it: a
-contiguous ``pa.Array`` and a multi-chunk ``pa.ChunkedArray`` (whose
+"""The arrow_udf batch shell (operators/extract.py ``_extract_arrow_batch``)
+with the rules record function, on both shapes the Arrow runtime can hand
+it: a contiguous ``pa.Array`` and a multi-chunk ``pa.ChunkedArray`` (whose
 ``dictionary_encode`` result has no single ``indices`` array). Both must
-give the same StructArray, equal per row to the per-text kernel chain."""
+give the same StructArray, equal per row to the per-text kernel chain.
+Also: ``extract_entities`` rejects an unknown backend on the driver."""
 
 import pandas as pd
 import pyarrow as pa
@@ -13,6 +14,8 @@ from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp
 from amharic_ecommerce_data_extractor_spark.operators.extract import (
     ENTITY_FIELDS,
     _extract_arrow_batch,
+    _extract_batch_rules,
+    extract_entities,
 )
 
 TEXTS = [
@@ -31,10 +34,11 @@ NAMES = [f.name for f in ENTITY_FIELDS]
 @pytest.mark.parametrize("names", [NAMES, [n for n in NAMES
                                            if n not in ("tokens", "labels")]])
 def test_chunked_input_matches_contiguous(names):
-    flat = _extract_arrow_batch(pa.array(TEXTS, type=pa.string()), names, True)
+    flat = _extract_arrow_batch(pa.array(TEXTS, type=pa.string()), names,
+                                _extract_batch_rules)
     chunked = _extract_arrow_batch(
         pa.chunked_array([TEXTS[:3], TEXTS[3:6], TEXTS[6:]], type=pa.string()),
-        names, True)
+        names, _extract_batch_rules)
     assert isinstance(chunked, pa.StructArray)
     assert chunked.type == flat.type
     assert chunked.to_pylist() == flat.to_pylist()
@@ -45,3 +49,18 @@ def test_chunked_input_matches_contiguous(names):
         for name in names:
             want = clean if name == "preprocessed_text" else rec[name]
             assert row[name] == want, (text, name)
+
+
+@pytest.mark.parametrize("backend", ["rules_jvm", "spacy", ""])
+def test_unknown_backend_rejected_before_any_job(spark, backend):
+    df = spark.createDataFrame([(1, "ዋጋ 500 ብር")], "message_id long, content string")
+    sc = spark.sparkContext
+    group = f"extract-backend-check-{backend}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=r"'rules', 'hf', 'numpy'"):
+            extract_entities(df, backend=backend)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup(group)

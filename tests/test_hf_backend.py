@@ -1,14 +1,15 @@
 """End-to-end coverage for the ``hf`` extraction backend (reference
 ``model_evaluator.py:81-142``): load a tiny local HF token-classification
-checkpoint through ``transformers.pipeline`` inside the Arrow-batched
-extraction UDF and assert the full span→record plumbing.
+checkpoint through ``transformers.pipeline`` inside the extraction
+``arrow_udf`` (the same batch shell every backend runs through) and assert
+the full span→record plumbing.
 
-Skips cleanly where ``transformers``/``torch`` are not installed (this
-sandbox) — the ``numpy`` backend covers the identical plumbing there
-(tests/test_numpy_backend.py); on a real cluster with transformers this
-test executes the literal hf code path (``operators/extract.py``
-``_hf_pipeline``/``_extract_batch_hf``), closing the one residual
-environment gap VERDICT r2 named."""
+Skips cleanly where ``transformers``/``torch`` are not installed — the
+``numpy`` backend covers the identical shell and span→record plumbing there
+(tests/test_numpy_backend.py); where transformers is installed this test
+executes the literal hf code path (``operators/extract.py``
+``_hf_pipeline``/``_extract_batch_hf``, which takes a list of preprocessed
+texts)."""
 
 import os
 import sys
@@ -57,13 +58,11 @@ def test_hf_backend_end_to_end(spark, hf_model_dir):
 def test_hf_singleton_loads_once(hf_model_dir):
     """The per-worker pipeline singleton must be constructed once and reused
     across batches (the reference reloaded per call)."""
-    import pandas as pd
-
     from amharic_ecommerce_data_extractor_spark.operators import extract as ex
 
     ex._HF_SINGLETON.clear()
-    ex._extract_batch_hf(pd.Series(["hello world 10"]), hf_model_dir)
+    ex._extract_batch_hf(["hello world 10"], hf_model_dir)
     pipe = ex._HF_SINGLETON.get("pipe")
     assert pipe is not None
-    ex._extract_batch_hf(pd.Series(["another message 20"]), hf_model_dir)
+    ex._extract_batch_hf(["another message 20"], hf_model_dir)
     assert ex._HF_SINGLETON["pipe"] is pipe

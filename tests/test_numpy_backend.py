@@ -10,7 +10,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp
 from amharic_ecommerce_data_extractor_spark.operators.extract import (
+    _extract_batch_numpy,
     extract_entities,
     predictions_table,
 )
@@ -105,3 +107,24 @@ def test_numpy_backend_composes_with_kg_downstream(spark):
         <= {"sells", "priced_at", "located_in", "contact"}
     sc = vendor_scorecard(ext)
     assert sc.count() == msgs.select("repo").distinct().count()
+
+
+def test_numpy_backend_factorized_batch_matches_per_text(spark):
+    """One Arrow batch with repeated texts, a null, "" and whitespace: the
+    shell runs the model on the distinct texts only, and every row still
+    equals the model run on that row's own preprocessed text."""
+    texts = [TEXTS[0], None, TEXTS[1], "", TEXTS[0], "   ", TEXTS[1], None,
+             TEXTS[2], TEXTS[0]]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "message_id long, content string").coalesce(1)
+    rows = {r.message_id: r.asDict()
+            for r in extract_entities(df, backend="numpy", model_dir=MODEL).collect()}
+    assert len(rows) == len(texts)
+    for i, text in enumerate(texts):
+        clean = tp.preprocess_text(text or "")
+        want = _extract_batch_numpy([clean], MODEL)[0]
+        got = rows[i]
+        assert got["preprocessed_text"] == clean, i
+        for field, value in want.items():
+            assert got[field] == value, (i, field)
+    assert rows[1]["preprocessed_text"] == "" and rows[7]["preprocessed_text"] == ""

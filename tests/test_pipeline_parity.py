@@ -5,7 +5,6 @@ the implementations agree exactly on the deterministic rule backend.
 
 import math
 
-import pandas as pd
 import pytest
 
 from amharic_ecommerce_data_extractor_spark.data.synthetic import (
@@ -105,31 +104,3 @@ def test_predictions_table_shape(spark, corpora):
     want_tokens = lb.extract_message(tp.preprocess_text(
         pdf.loc[pdf.message_id == 3, "content"].iloc[0]))["tokens"]
     assert one["token"].tolist() == want_tokens
-
-
-def test_colocate_duplicates_is_result_invariant(spark, corpora):
-    """colocate_duplicates changes WHERE rows land (hash vs round-robin
-    repartition), never WHAT is computed — same rows either way, including
-    null/empty texts (all nulls hash to one partition), and the colocated
-    plan partitions the exchange on the text column."""
-    from pyspark.sql import functions as F
-
-    sdf, _ = corpora
-    edges = spark.createDataFrame(
-        [(9000001, None), (9000002, ""), (9000003, "ዋጋ 500 ብር quality set")],
-        "message_id long, content string",
-    )
-    inp = sdf.select("message_id", "content").unionByName(edges)
-    cols = ["message_id", "products", "prices", "locations", "contacts"]
-
-    rr = extract_entities(inp, target_partitions=6, include_tokens=False)
-    co = extract_entities(inp, target_partitions=6, include_tokens=False,
-                          colocate_duplicates=True)
-    got_rr = rr.select(cols).toPandas().sort_values("message_id").reset_index(drop=True)
-    got_co = co.select(cols).toPandas().sort_values("message_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got_rr, got_co)
-
-    plan = co._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(content" in plan
-    rr_plan = rr._jdf.queryExecution().executedPlan().toString()
-    assert "roundrobinpartitioning" in rr_plan.lower()

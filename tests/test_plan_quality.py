@@ -201,23 +201,3 @@ def test_winnowing_overlap_join_carries_no_text(spark):
     assert all("text" not in ln for ln in join_lines), join_lines
     agg_lines = [ln for ln in plan.splitlines() if "Aggregate" in ln]
     assert all("text" not in ln for ln in agg_lines), agg_lines
-
-
-def test_rules_jvm_fused_plan_stays_bounded(spark):
-    """The rules_jvm automaton must not re-expand through downstream
-    consumers: without the extraction-side optimizer barrier, CollapseProject
-    inlines the single-use entity columns into every downstream reference —
-    measured 8.8 MB optimized-plan text and a 69 MiB task binary that OOMed
-    task deserialization at 32-way parallelism. (That measurement predates
-    the one-pass emit_triples rewrite, whose 4-way union multiplied the
-    references; the current concat-then-explode form still references each
-    entity column several times, so the barrier remains the guard.)"""
-    from amharic_ecommerce_data_extractor_spark.data.synthetic import generate_messages
-    from amharic_ecommerce_data_extractor_spark.operators.extract import extract_entities
-    from amharic_ecommerce_data_extractor_spark.operators.triples import emit_triples
-
-    m = generate_messages(spark, n_rows=50, n_vendors=5)
-    fused = emit_triples(extract_entities(m, backend="rules_jvm"))
-    plan_len = len(fused._jdf.queryExecution().optimizedPlan().toString())
-    assert plan_len < 200_000, f"fused rules_jvm plan re-expanded: {plan_len} chars"
-    fused.collect()  # and it executes

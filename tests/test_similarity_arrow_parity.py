@@ -6,14 +6,17 @@ EXACTLY — signatures per character, norms per bit, cell choices per row —
 over the embeddings table plus adversarial rows (null vector, null element,
 ragged lengths, NaN, ±inf, denormal-scale values).
 
-All-zero vectors are excluded: under ANSI mode the ORIGINAL expression
-raises DIVIDE_BY_ZERO on them, so there is no legacy result to preserve.
+All-zero vectors are excluded there: under ANSI mode the ORIGINAL
+expression raises DIVIDE_BY_ZERO on them, so there is no legacy result to
+preserve. The rerank tests at the end include them, against the fold
+scored with ANSI off.
 """
 
 import math
 
 import pytest
 from pyspark.sql import functions as F, types as T
+from pyspark.sql.window import Window
 
 from amharic_ecommerce_data_extractor_spark.operators import similarity as sim
 
@@ -136,3 +139,107 @@ def test_zero_vector_no_runtime_warning(spark):
              sim._signed_arrow(df, "vec_id", "embedding", "id", planes).collect()}
     assert arrow == jvm
     assert arrow[1] == (0.0, "1" * 16)
+
+
+def _degenerate_tables(spark):
+    """(queries, corpus) of 8-dim vectors for the rerank tests: clean rows
+    plus null vector, ragged lengths (two short ones score each other at
+    their own length), null element and NaN on both sides, and zero-norm
+    rows in the corpus only (a zero-norm query already raises
+    DIVIDE_BY_ZERO in knn_ivf's probe ``_cell_sims`` under ANSI)."""
+    import random
+
+    dim = 8
+    rnd = random.Random(11)
+    clean = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(dim)]) for i in range(30)]
+    degenerate = [
+        (900001, None),
+        (900003, [0.5] * (dim - 1)),
+        (900013, [0.25] * (dim - 2) + [1.0]),
+        (900004, [1.0] * (dim + 1)),
+        (900005, [1.0] * 3 + [None] + [1.0] * (dim - 4)),
+        (900006, [float("nan")] * dim),
+    ]
+    zero_norm = [(900007, [0.0] * dim), (900008, [-0.0] * dim)]
+    return (spark.createDataFrame(clean[:8] + degenerate, _SCHEMA),
+            spark.createDataFrame(clean + degenerate + zero_norm, _SCHEMA))
+
+
+def _fold_rows(spark, queries, corpus, finish):
+    """``finish`` applied to every (query_id, neighbor_id, sim) pair scored
+    by the ``cosine_expr`` fold with ANSI off, where its division by a zero
+    norm is null. The fold's division mode is fixed when its plan is
+    analyzed, so the plan is built and run inside the ANSI-off window."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        pairs = (queries.select(F.col("vec_id").alias("query_id"),
+                                F.col("embedding").alias("q"))
+                 .crossJoin(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                          F.col("embedding").alias("c")))
+                 .where(F.col("query_id") != F.col("neighbor_id"))
+                 .select("query_id", "neighbor_id",
+                         sim.cosine_expr(F.col("q"), F.col("c")).alias("sim")))
+        return finish(pairs)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def _nan_key(v):
+    return "nan" if v is not None and math.isnan(v) else v
+
+
+@pytest.mark.parametrize("k", [3, 100])
+def test_knn_ivf_rerank_matches_cosine_expr_on_degenerate_rows(spark, k):
+    """knn_ivf's Arrow rerank against the ``cosine_expr`` fold, end to end,
+    with every cell probed so each (query, neighbor) pair is a candidate.
+    Null sims (null vector or element, mismatched lengths, zero norm) must
+    rank last, NaN sims first."""
+    queries, corpus = _degenerate_tables(spark)
+    n_cells = 3
+    cents = [[1.0 if d == c else 0.0 for d in range(8)] for c in range(n_cells)]
+    got = sim.knn_ivf(queries, corpus, cents, k=k, nprobe=n_cells).collect()
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    want = _fold_rows(spark, queries, corpus, lambda pairs: pairs.withColumn(
+        "rnk", F.row_number().over(w)).where(F.col("rnk") <= k).collect())
+
+    def key(rows):
+        return sorted((r["query_id"], r["rnk"], r["neighbor_id"],
+                       _nan_key(r["sim"])) for r in rows)
+
+    assert key(got) == key(want)
+    by_pair = {(r["query_id"], r["neighbor_id"]): r["sim"] for r in got}
+    if k == 100:
+        assert by_pair[(900003, 900013)] is not None
+        assert by_pair[(0, 900001)] is None and by_pair[(0, 900007)] is None
+        assert math.isnan(by_pair[(0, 900006)])
+
+
+def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):
+    """knn_lsh's two rerank shapes — broadcast lookup and join — score every
+    (query, neighbor) pair of the degenerate tables as the fold does."""
+    queries, corpus = _degenerate_tables(spark)
+    want = _fold_rows(spark, queries, corpus, lambda pairs: {
+        (r["query_id"], r["neighbor_id"]): _nan_key(r["sim"])
+        for r in pairs.collect()})
+
+    def side(df, name):
+        return df.select(F.col("vec_id").alias(name),
+                         F.col("embedding").alias(f"{name}_vec"),
+                         sim._norm(F.col("embedding")).alias(f"{name}_norm"))
+
+    q, c = side(queries, "query_id"), side(corpus, "neighbor_id")
+    cand = (q.select("query_id").crossJoin(c.select("neighbor_id"))
+            .where(F.col("query_id") != F.col("neighbor_id")))
+    joined = cand.join(q, "query_id").join(c, "neighbor_id").select(
+        "query_id", "neighbor_id", "query_id_vec", "neighbor_id_vec",
+        "query_id_norm", "neighbor_id_norm")
+    shapes = {
+        "join": sim._cosine_rerank_arrow(joined),
+        "broadcast": sim._cosine_rerank_broadcast(cand, q.collect(), c.collect()),
+    }
+    for name, df in shapes.items():
+        got = {(r["query_id"], r["neighbor_id"]): _nan_key(r["sim"])
+               for r in df.collect()}
+        assert got == want, name

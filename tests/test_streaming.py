@@ -101,29 +101,6 @@ def test_stateful_vendor_totals(spark, tmp_path):
     assert all(got2[v] >= got1[v]["n_posts"] for v in got1)
 
 
-def test_rules_jvm_backend_builds_streaming_plan(spark, tmp_path):
-    # the rules_jvm extraction barrier (localCheckpoint) must be skipped on
-    # streaming inputs — checkpoint is unsupported there and this backend is
-    # the no-Python-worker fallback streaming deployments would pick
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    generate_messages(spark, n_rows=60, n_vendors=5).write.parquet(src)
-
-    stream = extract_entities(read_message_stream(spark, src), backend="rules_jvm")
-    assert stream.isStreaming
-    run_stream_once(stream.select("message_id", "products", "prices"), out, ck)
-    got = spark.read.parquet(out)
-    assert got.count() == 60
-    batch = extract_entities(spark.read.parquet(src), backend="rules_jvm")
-
-    def rows(df):
-        return {(r["message_id"], tuple(r["products"]), tuple(r["prices"]))
-                for r in df.select("message_id", "products", "prices").collect()}
-
-    assert rows(got) == rows(batch)
-
-
 def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
     from amharic_ecommerce_data_extractor_spark.streaming.stream import (
         streaming_exact_dedup,
@@ -152,27 +129,3 @@ def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
     n_distinct_contents = msgs.select("content").distinct().count()
     assert got.count() == n_distinct_contents
     assert got.select("content").distinct().count() == n_distinct_contents
-
-
-def test_rules_jvm_fused_unbarriered_plan_bounded(spark, tmp_path):
-    # no barrier is possible on streaming plans, so the fused emit_triples
-    # composition inlines the automaton once per entity-column reference —
-    # LINEAR in reference count, not the exponential union re-expansion the
-    # barrier guards against. A streaming DF refuses optimizedPlan before
-    # start(), so pin the property on the identical-shape batch plan with
-    # the barrier bypassed (with_entities_expr called directly).
-    from amharic_ecommerce_data_extractor_spark.functions.extract_expr import (
-        with_entities_expr,
-    )
-    from amharic_ecommerce_data_extractor_spark.functions.textnorm import (
-        preprocess_expr,
-    )
-    from amharic_ecommerce_data_extractor_spark.operators.triples import emit_triples
-
-    m = generate_messages(spark, n_rows=20, n_vendors=3)
-    unbarriered = with_entities_expr(
-        m.withColumn("preprocessed_text", preprocess_expr(F.col("content"))),
-        clean_col="preprocessed_text")
-    fused = emit_triples(unbarriered)
-    plan_len = len(fused._jdf.queryExecution().optimizedPlan().toString())
-    assert plan_len < 500_000, f"fused unbarriered rules_jvm plan exploded: {plan_len}"

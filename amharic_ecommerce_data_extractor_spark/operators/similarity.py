@@ -1,17 +1,25 @@
 """Similarity search over embedding columns (graft-added capability).
 
-* ``knn_bruteforce`` — exact cosine top-k: broadcast the (small) query set
-  against the corpus, dot products as numpy ``mapInArrow`` kernels (one
-  float64 BLAS matmul per Arrow batch), rank with a per-query window.
-  This is the correctness baseline; cost O(|Q|·|corpus|) — fine when |Q| is
-  small and broadcast-able.
-* ``knn_lsh`` — the scale path: random-hyperplane (SimHash) bucketing; only
-  candidates sharing a band bucket are scored, turning the cross join into an
-  equi join on (band, signature). Probabilistic recall, tunable via
-  n_planes/n_bands; falls back to exact scoring inside each bucket.
+* ``knn_bruteforce`` — exact cosine top-k: the (small) query set is
+  collected and broadcast, and one ``mapInArrow`` pass scores each corpus
+  Arrow batch against it with a float64 BLAS matmul; a per-query window
+  ranks the candidates. This is the correctness baseline; cost
+  O(|Q|·|corpus|) — fine when |Q| is small and broadcast-able.
+* ``knn_lsh`` — random-hyperplane (SimHash) bucketing: only candidates
+  sharing a band bucket are scored, turning the cross join into an equi
+  join on (band, signature). Probabilistic recall, tunable via
+  n_bands/bits_per_band; exact scoring inside each bucket.
+* ``knn_ivf`` — inverted file: the corpus tagged with its nearest k-means
+  cell (``ivf_assign``, or the index ``ivf_index_write`` writes); each
+  query probes its nprobe nearest cells, an equi join on the cell id.
 
-All arithmetic in float64, on the JVM and in the numpy kernels alike, for
-cross-engine comparability.
+Every path decodes ``list<float>`` batches with :func:`_list_parts` /
+:func:`_gather_rows`. SimHash signatures, cell assignment and query probes
+share one projection kernel (:func:`_project`); LSH and IVF candidates
+share one rerank (:func:`_rerank_batches`). Both accumulate in float64,
+left to right over dims, so their values are bit-identical to the Spark
+fold expressions kept as the executable spec in ``tests/vector_spec.py``
+and to DuckDB's list arithmetic.
 """
 
 from __future__ import annotations
@@ -20,18 +28,19 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def _norm(col):
-    return F.sqrt(F.aggregate(F.transform(col, lambda x: x.cast("double") * x.cast("double")),
-                              F.lit(0.0), lambda a, x: a + x))
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """The top k (query_id, neighbor_id, sim, rnk) rows per query under
+    (sim desc — NaN greatest, null last — then neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= k)
+            .select("query_id", "neighbor_id", "sim", "rnk"))
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def cosine_expr(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _ddl(df: DataFrame, *names: str) -> str:
+    """DDL of df's columns under new names, types kept (ids of any type)."""
+    return ", ".join(f"{n} {f.dataType.simpleString()}"
+                     for n, f in zip(names, df.schema.fields))
 
 
 def knn_bruteforce(
@@ -41,171 +50,147 @@ def knn_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k. queries must be small (is collected + broadcast —
-    the same driver/executor footprint as the broadcast cross join this
-    replaces).
+    """Exact cosine top-k. queries must be small (is collected + broadcast).
 
     Physical shape: one Arrow pass over the corpus (``mapInArrow``) computes
-    each batch's |batch|×|Q| similarity matrix as a single float64 BLAS
-    matmul and emits only each query's per-batch top-k candidate rows
-    (including every row tied with the k-th similarity, so the global top-k
-    under (sim desc, neighbor_id asc) is exactly preserved); a final tiny
-    window over ~|Q|·k·n_batches candidate rows ranks them. The earlier
-    formulation — a broadcast cross join scoring every pair through
-    interpreted ``zip_with``/``aggregate`` lambdas — paid ~12 µs/pair on the
-    JVM (96 s for 400×20k pairs at sf1.0); the matmul pays nanoseconds/pair
-    and shuffles only candidates.
-    """
-    import numpy as np
+    each batch's |batch|×|Q| similarity matrix with one float64 BLAS matmul
+    per distinct query length and emits only each query's per-batch top-k
+    candidate rows (including every row tied with the k-th, so the global
+    top-k under (sim desc, neighbor_id asc) is exactly preserved); a final
+    tiny window over ~|Q|·k·n_batches candidate rows ranks them.
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, q_unit))
-    kk = int(k)
+    Every pair scores as the spec's cosine fold, up to BLAS summation
+    order: each at its own length; null (ranked last) for a null vector or
+    element, mismatched lengths or a zero denominator; NaN (ranked first)
+    for NaN or inf vectors. Self-pairs are excluded, as the join's
+    ``query_id != neighbor_id``."""
+    import numpy as np
+    import pyarrow as pa
+
+    q_tab = queries.select(id_col, vec_col).toArrow()
+    q_ids = q_tab.column(0).combine_chunks()
+    off, vals, n_null, lens = _list_parts(q_tab.column(1).combine_chunks())
+    groups = []  # (length, query indexes, unit rows, norms) per length
+    for dim in np.unique(lens[(lens >= 0) & (n_null == 0)]):
+        qi = np.flatnonzero((lens == dim) & (n_null == 0))
+        mat = _gather_rows(off, vals, qi, dim)
+        norm = np.linalg.norm(mat, axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            groups.append((dim, qi, mat / norm[:, None], norm))
+    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, groups))
 
     def part_topk(batches):
-        import numpy as _np
-        import pyarrow as _pa
-
-        ids_b, qu_b = bq.value
+        ids_b, groups_b = bq.value
         nq = len(ids_b)
-        out_schema = _pa.schema([("query_id", _pa.int64()),
-                                 ("neighbor_id", _pa.int64()),
-                                 ("sim", _pa.float64())])
-        for batch in batches:
-            n = batch.num_rows
+        q_key = ids_b.to_numpy(zero_copy_only=False)
+        for b in batches:
+            n = b.num_rows
             if n == 0 or nq == 0:
                 continue
-            nid = batch.column(0).to_numpy(zero_copy_only=False).astype(_np.int64)
-            flat = _np.asarray(batch.column(1).flatten(), dtype=_np.float64)
-            c = flat.reshape(n, len(flat) // n)
-            with _np.errstate(divide="ignore", invalid="ignore"):
-                c_unit = c / _np.linalg.norm(c, axis=1, keepdims=True)
-                sims = c_unit @ qu_b.T                       # (n, nq)
-            # self-pairs excluded exactly as the join's query_id != neighbor_id
-            sims[nid[:, None] == ids_b[None, :]] = -_np.inf
-            if n > kk:
-                # k-th largest per query column; keep EVERY row >= it so
-                # boundary ties (identical vectors) can never evict the
-                # neighbor the global (sim, id asc) order would keep
-                thresh = _np.partition(sims, n - kk, axis=0)[n - kk]
-            else:
-                thresh = _np.full(nq, -_np.inf)
-            keep_i, keep_j = _np.nonzero((sims >= thresh) & _np.isfinite(sims))
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array(ids_b[keep_j]), _pa.array(nid[keep_i]),
-                 _pa.array(sims[keep_i, keep_j])], schema=out_schema)
+            c_off, c_vals, c_null, c_lens = _list_parts(b.column(1))
+            sims = np.full((n, nq), -np.inf)  # -inf: null (no cosine is -inf)
+            for dim, qi, q_unit, q_norm in groups_b:
+                ci = np.flatnonzero((c_lens == dim) & (c_null == 0))
+                if len(ci) == 0:
+                    continue
+                c = _gather_rows(c_off, c_vals, ci, dim)
+                c_norm = np.linalg.norm(c, axis=1)
+                with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                    block = (c / c_norm[:, None]) @ q_unit.T
+                    if not (c_norm.all() and q_norm.all()):
+                        # the fold's zero denominator; inf·0 and NaN·0 are NaN
+                        block[np.outer(c_norm, q_norm) == 0] = -np.inf
+                if len(ci) == n and len(qi) == nq:
+                    sims = block
+                else:
+                    sims[np.ix_(ci, qi)] = block
+            # self-pairs are dropped; NaN ranks greatest (Spark's double
+            # order). The threshold is each query column's k-th largest key,
+            # and EVERY row reaching it is kept so boundary ties can never
+            # evict the neighbor the global order keeps
+            own = b.column(0).to_numpy(zero_copy_only=False)[:, None] == q_key[None, :]
+            sims[own] = -np.inf
+            nan = np.isnan(sims)
+            key = np.where(nan, np.inf, sims) if nan.any() else sims
+            thresh = np.partition(key, n - k, axis=0)[n - k] if n > k else -np.inf
+            keep_i, keep_j = np.nonzero((key >= thresh) & ~own)
+            kept = sims[keep_i, keep_j]
+            yield pa.RecordBatch.from_arrays(
+                [ids_b.take(keep_j), b.column(0).take(keep_i),
+                 pa.array(kept, mask=kept == -np.inf)],
+                names=["query_id", "neighbor_id", "sim"])
 
     from .linking import spread
 
-    cand = (spread(corpus, id_col).select(F.col(id_col), F.col(vec_col))
-            .mapInArrow(part_topk, "query_id long, neighbor_id long, sim double"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (cand.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "sim", "rnk"))
+    base = spread(corpus, id_col).select(F.col(id_col), F.col(vec_col))
+    ddl = (f"query_id {queries.schema[id_col].dataType.simpleString()}, "
+           f"{_ddl(base, 'neighbor_id')}, sim double")
+    return _rank(base.mapInArrow(part_topk, ddl), k)
 
 
-def simhash_signature(vec_col, planes: list[list[float]]):
-    """Sign pattern of the vector against fixed random hyperplanes as ONE
-    '0'/'1' bit-string. planes: n_planes x dim, shipped as a single literal
-    array-of-arrays and consumed by one transform — one expression subtree
-    instead of n_planes separate fold expressions (smaller plan, one
-    evaluation pass)."""
-    planes_lit = F.array(*[
-        F.array(*[F.lit(float(v)) for v in plane]) for plane in planes
-    ])
-    bits = F.transform(
-        planes_lit,
-        lambda pv: F.when(
-            F.aggregate(F.zip_with(vec_col, pv, lambda x, y: x.cast("double") * y),
-                        F.lit(0.0), lambda a, x: a + x) >= 0,
-            F.lit("1")).otherwise(F.lit("0")),
-    )
-    return F.array_join(bits, "")
+def _project(vecs, mat):
+    """(dots, norms, ok, norm_ok) of an Arrow ``list<float>`` column against
+    the (m, dim) float64 matrix ``mat`` — the planes or the centroids.
+
+    dots[i, j] = row i · mat[j] and norms[i] = |row i| accumulate in
+    float64 from 0.0, left to right over dims, vectorized over rows: the
+    IEEE-754 sequence of the spec's dot and norm folds, so both are
+    bit-identical to them. A null vector or element nulls both folds
+    (norm_ok false); a row of another length than dim nulls only the dot
+    (ok = norm_ok and length == dim) and keeps its own norm — an empty row
+    has norm 0.0. dots is 0.0 where not ok, norms NaN where not norm_ok."""
+    import numpy as np
+
+    off, vals, n_null, lens = _list_parts(vecs)
+    norm_ok = (lens >= 0) & (n_null == 0)
+    ok = norm_ok & (lens == mat.shape[1])
+    dots = np.zeros((len(lens), len(mat)))
+    norms = np.full(len(lens), np.nan)
+    for dim in np.unique(lens[norm_ok]):
+        rows = np.flatnonzero(norm_ok & (lens == dim))
+        x = _gather_rows(off, vals, rows, dim)
+        norms[rows] = np.sqrt(_row_dots(x, x))
+        if dim == mat.shape[1]:
+            acc = np.zeros((len(rows), len(mat)))
+            for d in range(dim):
+                acc += x[:, d][:, None] * mat[:, d][None, :]
+            dots[rows] = acc
+    return dots, norms, ok, norm_ok
 
 
 def _signed_arrow(df: DataFrame, id_col: str, vec_col: str, idn: str,
                   planes: list[list[float]]) -> DataFrame:
-    """Arrow twin of the ``signed()`` projection in :func:`knn_lsh`: one
-    ``mapInArrow`` pass emits (id, vec, norm, signature) with BIT-IDENTICAL
-    values to the interpreted JVM fold it replaces (which paid ~4096
-    interpreted lambda steps per row for the n_planes×dim signature alone):
+    """The signature pass of :func:`knn_lsh`: one ``mapInArrow`` pass emits
+    (id, vec, norm, signature), the signature one '0'/'1' character per
+    plane from :func:`_project`, equal to the spec's signature fold:
 
-    * dots and the squared norm accumulate PER DIMENSION, left-to-right, in
-      float64 — vectorized over rows, same IEEE-754 sequence as
-      ``aggregate(zip_with(...))`` / :func:`_norm` (the discipline
-      established by ``_cosine_rerank_arrow``).
-    * Spark orders NaN greater than any number, so ``NaN >= 0`` is TRUE in
-      the JVM ``when`` — the sign bits OR in ``isnan``.
-    * degenerate rows get the JVM result exactly: a null vector or a null
-      element nulls both folds ('0' for every sign bit, null norm); a
-      length ≠ dim nulls only the zip_with dot ('0' bits) while the norm
-      still sums the row's own squares (``_norm`` never references dim —
-      an empty list has norm 0.0).
-    * an all-zero vector gets the JVM result too (norm 0.0, every dot 0.0
-      so every bit '1') — no division happens here. The divergence from
-      ANSI lies downstream: the JVM cosine ``_dot / (_norm * _norm)`` raises
-      DIVIDE_BY_ZERO on a zero norm, while the Arrow reranks score it null.
+    * Spark orders NaN greater than any number, so ``NaN >= 0`` is true in
+      the fold's ``when`` — a NaN dot gives '1'.
+    * a null dot (null vector or element, length ≠ dim) gives '0'.
+    * an all-zero vector has norm 0.0 and every dot 0.0, so every bit is
+      '1'; nothing divides here.
     """
     import numpy as np
     import pyarrow as pa
 
-    n_planes = len(planes)
-    dim = len(planes[0])
     pmat = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
-    in_schema = df.select(F.col(id_col), F.col(vec_col)).schema
-    id_t, vec_t = in_schema[0].dataType.simpleString(), in_schema[1].dataType.simpleString()
-    out_ddl = (f"{idn} {id_t}, {idn}_vec {vec_t}, "
-               f"{idn}_norm double, _sig string")
+    base = df.select(F.col(id_col), F.col(vec_col))
 
     def compute(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            ids, vecs = b.column(0), b.column(1)
-            off, vals, n_null, lens = _list_parts(vecs)
-            # norm-eligible: the row itself and all its elements are
-            # non-null (a null anywhere nulls both JVM folds), regardless of
-            # length (the JVM _norm sums the row's own squares)
-            norm_ok = (lens >= 0) & (n_null == 0)
-            # vectorized set: clean rows of exactly dim elements
-            ok = norm_ok & (lens == dim)
-
-            sig_bytes = np.full((n, n_planes), ord("0"), dtype=np.uint8)
-            norms = np.full(n, np.nan, dtype=np.float64)
-            if ok.any():
-                sel = np.flatnonzero(ok)
-                mat = _gather_rows(off, vals, sel, dim)
-                m = mat.shape[0]
-                acc = np.zeros((m, n_planes), dtype=np.float64)
-                nacc = np.zeros(m, dtype=np.float64)
-                for d in range(dim):
-                    xd = mat[:, d]
-                    acc += xd[:, None] * pmat[:, d][None, :]
-                    nacc += xd * xd
-                bits = (acc >= 0.0) | np.isnan(acc)
-                sig_bytes[sel] = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
-                norms[sel] = np.sqrt(nacc)
-            for i in np.flatnonzero(norm_ok & ~ok):  # rare: len != dim — norm only
-                a = 0.0
-                for x in vals[off[i]:off[i] + lens[i]]:
-                    a += x * x
-                norms[i] = np.sqrt(a)
-            sigs = pa.array(
-                np.frombuffer(np.ascontiguousarray(sig_bytes).tobytes(),
-                              dtype=f"S{n_planes}").astype("U"),
-                type=pa.string())
-            norm_arr = pa.array(norms, type=pa.float64(), mask=~norm_ok)
+            dots, norms, ok, norm_ok = _project(b.column(1), pmat)
+            bits = ok[:, None] & ((dots >= 0.0) | np.isnan(dots))
+            sig_bytes = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
+            sigs = pa.array(np.frombuffer(sig_bytes.tobytes(), dtype=f"S{len(pmat)}")
+                            .astype("U"), type=pa.string())
             yield pa.RecordBatch.from_arrays(
-                [ids, vecs, norm_arr, sigs],
+                [b.column(0), b.column(1), pa.array(norms, mask=~norm_ok), sigs],
                 names=[idn, f"{idn}_vec", f"{idn}_norm", "_sig"])
 
-    return df.select(F.col(id_col), F.col(vec_col)).mapInArrow(compute, out_ddl)
+    ddl = f"{_ddl(base, idn, f'{idn}_vec')}, {idn}_norm double, _sig string"
+    return base.mapInArrow(compute, ddl)
 
 
 def _planes(n_planes: int, dim: int, seed: int = 42,
@@ -236,6 +221,12 @@ def _planes(n_planes: int, dim: int, seed: int = 42,
     raise ValueError(f"unknown plane_fn {plane_fn!r}")
 
 
+# Per-side byte budget of knn_lsh's broadcast rerank: rows × dim × 8 B of
+# float64 vectors. 200,000 rows at dim 64 — the row gate the shape was
+# measured at.
+_BROADCAST_BYTES = 200_000 * 64 * 8
+
+
 def knn_lsh(
     queries: DataFrame,
     corpus: DataFrame,
@@ -263,12 +254,11 @@ def knn_lsh(
     planes = _planes(n_bands * bits_per_band, dim, seed, plane_fn)
 
     def signed(df: DataFrame, idn: str) -> DataFrame:
-        # full signature + norm computed ONCE per row via the vectorized
-        # Arrow pass (bit-identical to the interpreted JVM fold — see
-        # _signed_arrow), then materialized (localCheckpoint = optimizer
-        # barrier, same discipline as linking.lsh_candidate_pairs) so the
-        # downstream band slicing, rerank rejoin and count consumers reuse
-        # the one Python-stage execution instead of re-running it.
+        # full signature + norm computed ONCE per row by the Arrow pass,
+        # then materialized (localCheckpoint = optimizer barrier, same
+        # discipline as linking.lsh_candidate_pairs) so the downstream band
+        # slicing, rerank rejoin and count consumers reuse the one
+        # Python-stage execution instead of re-running it.
         # eager=False: the barrier materializes at first action, so merely
         # BUILDING the plan stays side-effect free.
         from .linking import spread
@@ -310,20 +300,20 @@ def knn_lsh(
     )
     # rerank: vectors enter AFTER candidate dedup. Two physical shapes,
     # same bit-exact sims:
-    # * broadcast lookup (small corpora): the (id, vec, norm) tables fit in
-    #   a broadcast (they are already materialized by the signature
-    #   checkpoint, so counting them is a metadata-cheap action) — the
-    #   Arrow pass then crosses ONLY the (query_id, neighbor_id) id pairs
-    #   (16 B/row) and gathers vectors from the broadcast, instead of
-    #   attaching two dim-wide vector columns to every candidate row and
-    #   converting ~2·dim·|cand| floats through Arrow (guide §8: move the
-    #   heavy bytes once — here, once per worker instead of once per pair).
+    # * broadcast lookup (both sides within _BROADCAST_BYTES): the (id, vec,
+    #   norm) tables are already materialized by the signature checkpoint,
+    #   so counting them is a metadata-cheap action — the Arrow pass then
+    #   crosses ONLY the (query_id, neighbor_id) id pairs and gathers
+    #   vectors from the broadcast, instead of attaching two dim-wide
+    #   vector columns to every candidate row (guide §8: move the heavy
+    #   bytes once — here, once per worker instead of once per pair).
     # * join + Arrow rerank (the general path): broadcast-hash rejoins of
     #   the id→vector frames, vectors ride the candidate rows into the
     #   scoring pass.
-    n_corpus = cbase.count()
-    small = n_corpus <= 200_000 and (queries is corpus or qbase.count() <= 200_000)
-    if small:
+    def fits(df: DataFrame) -> bool:
+        return df.count() * dim * 8 <= _BROADCAST_BYTES
+
+    if fits(cbase) and (queries is corpus or fits(qbase)):
         c_rows = cbase.select("neighbor_id", "neighbor_id_vec",
                               "neighbor_id_norm").collect()
         if queries is corpus:
@@ -343,10 +333,7 @@ def knn_lsh(
             .select("query_id", "neighbor_id", "query_id_vec",
                     "neighbor_id_vec", "query_id_norm", "neighbor_id_norm"))
         scored = _cosine_rerank_arrow(joined, partial_topk=k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "sim", "rnk"))
+    return _rank(scored, k)
 
 
 def _cosine_rerank_broadcast(cand: DataFrame, q_rows, c_rows,
@@ -361,10 +348,10 @@ def _cosine_rerank_broadcast(cand: DataFrame, q_rows, c_rows,
     import pyarrow as pa
 
     def pack(rows):
-        lookup = {int(r[0]): j for j, r in enumerate(rows)}
         vecs = pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
         norms = pa.array([r[2] for r in rows], type=pa.float64())
-        return lookup, _list_parts(vecs), norms.to_numpy(zero_copy_only=False)
+        return (pa.array([r[0] for r in rows]), _list_parts(vecs),
+                norms.to_numpy(zero_copy_only=False))
 
     spark = cand.sparkSession
     bq = spark.sparkContext.broadcast(pack(q_rows))
@@ -373,25 +360,22 @@ def _cosine_rerank_broadcast(cand: DataFrame, q_rows, c_rows,
     return cand.mapInArrow(
         lambda batches: _rerank_batches(batches, partial_topk,
                                         (bq.value, bc.value or bq.value)),
-        "query_id long, neighbor_id long, sim double")
+        f"{_ddl(cand, 'query_id', 'neighbor_id')}, sim double")
 
 
 def _cosine_rerank_arrow(joined: DataFrame, partial_topk: int | None = None) -> DataFrame:
     """(query_id, neighbor_id, sim) from candidate rows carrying both vectors
     and their precomputed norms — one Arrow pass with the per-dimension
-    accumulation done as vectorized numpy column ops.
+    accumulation done as vectorized numpy column ops. The ids keep their
+    input type.
 
-    BIT-IDENTICAL to the interpreted JVM fold it replaces
-    (``_dot(a, b) / (a_norm * b_norm)``): the accumulator loops over
-    dimensions in the same left-to-right order with one IEEE-754 float64
-    multiply and add per step — vectorized over the pairs, sequential over
-    dims — so every intermediate equals the fold's intermediate and the
-    final sim matches to the last bit (pinned by the DuckDB oracle, whose
-    own list arithmetic is the same sequential order). The fold paid
-    ~12 µs per 64-dim pair in interpreted lambda evaluation over q40's
-    14.6M sf1.0 candidates; numpy pays ~2 ns per multiply-add. The norms
-    ride through untouched (JVM-computed once in the checkpointed
-    signature pass).
+    Bit-identical to the spec's cosine fold, dot / (a_norm * b_norm): the
+    accumulator loops over dimensions in the same left-to-right order with
+    one IEEE-754 float64 multiply and add per step — vectorized over the
+    pairs, sequential over dims — so every intermediate equals the fold's
+    intermediate and the final sim matches to the last bit (pinned by the
+    DuckDB oracle, whose own list arithmetic is the same sequential order).
+    The norms ride through untouched.
 
     Degenerate pairs score as the fold does: each pair is scored at its own
     length, and a pair the fold scores null — a null vector, a null
@@ -411,7 +395,7 @@ def _cosine_rerank_arrow(joined: DataFrame, partial_topk: int | None = None) -> 
     discipline as knn_bruteforce."""
     return joined.mapInArrow(
         lambda batches: _rerank_batches(batches, partial_topk),
-        "query_id long, neighbor_id long, sim double")
+        f"{_ddl(joined, 'query_id', 'neighbor_id')}, sim double")
 
 
 def _list_parts(vecs):
@@ -466,11 +450,11 @@ def _pair_sims(q, qi, c, ci):
         cv = _gather_rows(c_off, c_vals, ci[rows], dim)
         # IEEE results (inf·0, inf/inf → NaN) as in the fold, unwarned
         with np.errstate(invalid="ignore", over="ignore"):
-            sim[rows] = _dot_rows(qv, cv) / den[rows]
+            sim[rows] = _row_dots(qv, cv) / den[rows]
     return sim, valid
 
 
-def _dot_rows(a, b):
+def _row_dots(a, b):
     """Row-wise dot of two (n, dim) float64 matrices, summed left to right
     over dims from 0.0 with one IEEE-754 multiply and add per step — the
     fold's own order, so the result is bit-identical to it. The products
@@ -487,23 +471,33 @@ def _dot_rows(a, b):
     return acc
 
 
+def _order_key(ids):
+    """int64 numpy key that orders an Arrow id column as Spark does: the
+    ids themselves when integral, else their dense rank (pyarrow and Spark
+    both order strings by their UTF-8 bytes)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_integer(ids.type):
+        return ids.to_numpy(zero_copy_only=False).astype(np.int64)
+    return pc.rank(ids, tiebreaker="dense").to_numpy()
+
+
 def _rerank_batches(batches, partial_topk: int | None, tables=None):
     """The ``mapInArrow`` body of both reranks. Without ``tables`` the
     batches are (query_id, neighbor_id, q_vec, n_vec, q_norm, n_norm); with
-    ``tables`` — the query and corpus ``(id → row, _list_parts, norms)`` of
+    ``tables`` — the query and corpus ``(ids, _list_parts, norms)`` of
     :func:`_cosine_rerank_broadcast` — they are (query_id, neighbor_id)."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    out_schema = pa.schema([("query_id", pa.int64()),
-                            ("neighbor_id", pa.int64()),
-                            ("sim", pa.float64())])
     for b in batches:
         n = b.num_rows
         if n == 0:
             continue
-        qid = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-        nid = b.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        qid, nid = b.column(0), b.column(1)
         if tables is None:
             qi = ci = np.arange(n)
             q = (_list_parts(b.column(2)), np.asarray(
@@ -511,32 +505,32 @@ def _rerank_batches(batches, partial_topk: int | None, tables=None):
             c = (_list_parts(b.column(3)), np.asarray(
                 b.column(5).to_numpy(zero_copy_only=False), dtype=np.float64))
         else:
-            (q_lookup, *q), (c_lookup, *c) = tables
-            qi = np.fromiter((q_lookup[int(x)] for x in qid), dtype=np.int64,
-                             count=n)
-            ci = np.fromiter((c_lookup[int(x)] for x in nid), dtype=np.int64,
-                             count=n)
+            (q_ids, *q), (c_ids, *c) = tables
+            qi = pc.index_in(qid, value_set=q_ids).to_numpy()
+            ci = pc.index_in(nid, value_set=c_ids).to_numpy()
         sim, valid = _pair_sims(q, qi, c, ci)
         if partial_topk is not None and n > partial_topk:
             # Spark orders doubles with NaN as the greatest value; null sims
             # (invalid pairs) sort after every value under F.desc
+            qk = _order_key(qid)
             key = np.where(np.isnan(sim), np.inf, sim)
-            order = np.lexsort((nid, -key, ~valid, qid))
-            qs = qid[order]
+            order = np.lexsort((_order_key(nid), -key, ~valid, qk))
+            qs = qk[order]
             starts = np.r_[0, np.nonzero(np.diff(qs))[0] + 1]
             sizes = np.diff(np.r_[starts, len(order)])
             rank = np.arange(len(order)) - np.repeat(starts, sizes)
             keep = np.sort(order[rank < partial_topk])
-            qid, nid, sim, valid = qid[keep], nid[keep], sim[keep], valid[keep]
+            qid, nid, sim, valid = qid.take(keep), nid.take(keep), sim[keep], valid[keep]
         yield pa.RecordBatch.from_arrays(
-            [pa.array(qid), pa.array(nid), pa.array(sim, mask=~valid)],
-            schema=out_schema)
+            [qid, nid, pa.array(sim, mask=~valid)],
+            names=["query_id", "neighbor_id", "sim"])
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: k-means coarse quantizer trained driver-side on a
-# sample, assignment + probing fully JVM-side. The cross join becomes an
-# equi join on cell id; recall is tuned with nprobe.
+# sample; cell assignment and query probes run in the Arrow projection
+# kernel. The cross join becomes an equi join on cell id; recall is tuned
+# with nprobe.
 # ---------------------------------------------------------------------------
 
 def ivf_sizing(n_vectors: int, max_cells: int | None = None) -> tuple[int, int]:
@@ -605,103 +599,95 @@ def ivf_train_centroids(corpus: DataFrame, n_cells: int = 16, dim: int = 64,
     return [[float(v) for v in c] for c in cent]
 
 
-def _cell_sims(vec_col, centroids):
-    """array<struct<sim double, cell int>> of cosine-to-centroid per cell
-    (centroids are unit vectors, so dot/|v| = cosine)."""
-    norm = _norm(vec_col)
-    return F.array(*[
-        F.struct((_dot(vec_col, F.array(*[F.lit(v) for v in c])) / norm).alias("sim"),
-                 F.lit(i).alias("cell"))
-        for i, c in enumerate(centroids)
-    ])
+def _top_cells(vecs, cmat, nprobe: int):
+    """(cells, norms, norm_ok) of an Arrow ``list<float>`` column against
+    the (n_cells, dim) centroid matrix: cells is the (n, min(nprobe,
+    n_cells)) int32 matrix of each row's nearest cells, in the order of
+    ``slice(reverse(array_sort(sims)), 1, nprobe)`` over the spec's array
+    of (sim, cell) structs: cosine (dot / norm; the centroids are unit
+    vectors) descending with NaN greatest, Spark's double order, and ties
+    to the larger cell. A row whose dots are null (null vector or element,
+    length ≠ dim) has every sim null and takes the last cells, largest
+    first."""
+    import numpy as np
+
+    dots, norms, ok, norm_ok = _project(vecs, cmat)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = np.where(ok[:, None], dots / norms[:, None], 0.0)[:, ::-1]
+    nan = np.isnan(sims)
+    # lexsort is stable, so equal keys keep the reversed (larger-cell-first)
+    # order
+    order = np.lexsort((np.where(nan, 0.0, -sims), ~nan), axis=1)[:, :nprobe]
+    return (len(cmat) - 1 - order).astype(np.int32), norms, norm_ok
+
+
+def _ivf_cells(df: DataFrame, centroids, nprobe: int, id_col: str,
+               vec_col: str) -> DataFrame:
+    """(id, vec, norm, cell) rows of df, one per each row's nprobe nearest
+    cells, from one ``mapInArrow`` pass of :func:`_assign_batches`."""
+    import numpy as np
+
+    cmat = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
+    base = df.select(F.col(id_col), F.col(vec_col))
+    return base.mapInArrow(
+        lambda batches: _assign_batches(batches, cmat, id_col, vec_col, nprobe),
+        f"{_ddl(base, id_col, vec_col)}, norm double, cell int")
+
+
+def _assign_batches(batches, cmat, id_col: str, vec_col: str, nprobe: int = 1):
+    """The ``mapInArrow`` body of :func:`_ivf_cells` over Arrow batches of
+    (id, vec); cmat is the (n_cells, dim) float64 centroid matrix. A row
+    repeats once per probed cell, in :func:`_top_cells` order."""
+    import numpy as np
+    import pyarrow as pa
+
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        cells, norms, norm_ok = _top_cells(b.column(1), cmat, nprobe)
+        cols = [b.column(0), b.column(1), pa.array(norms, mask=~norm_ok)]
+        if cells.shape[1] > 1:
+            rep = pa.array(np.repeat(np.arange(b.num_rows), cells.shape[1]))
+            cols = [col.take(rep) for col in cols]
+        yield pa.RecordBatch.from_arrays(
+            cols + [pa.array(cells.ravel())],
+            names=[id_col, vec_col, "norm", "cell"])
 
 
 def ivf_assign(df: DataFrame, centroids, id_col: str = "vec_id",
                vec_col: str = "embedding") -> DataFrame:
-    """One (id, vec, cell) row per input row — cell = nearest centroid.
+    """One (id, vec, norm, cell) row per input row — cell = nearest
+    centroid, norm = |vec| (null for a null vector or element).
 
     spread() first (statically gated, identity on well-partitioned input):
     a small-but-dense corpus arriving as one scan split would otherwise run
     the whole assignment on one core (measured: q39 at sf1.0 drops
     10.8 s → 3.7 s from this change alone).
 
-    The per-row work — |cells| dim-wide cosine dots and the
-    ``array_max``-over-structs argmax — runs as one Arrow pass with
-    BIT-IDENTICAL results to the interpreted ``_cell_sims`` fold it
-    replaces: dots and the norm accumulate per dimension left-to-right in
-    float64 (the ``_cosine_rerank_arrow`` discipline); the winning cell is
-    the LAST index achieving the maximum sim (struct ties break on the
-    larger cell field) with NaN sims ordered greatest (Spark float
-    ordering); degenerate rows (null vector / null element / length ≠ dim)
-    null every sim, and the max of all-(null sim) structs is the last cell.
+    The cell is the first of :func:`_top_cells`, equal to ``array_max``
+    over the spec's (sim, cell) structs: the LAST index achieving the
+    maximum sim (struct ties break on the larger cell field) with NaN sims
+    ordered greatest; degenerate rows (null vector / null element /
+    length ≠ dim) null every sim, and the max of all-(null sim) structs is
+    the last cell.
 
-    Zero-norm divergence: for an all-zero vector the JVM fold's ``/ norm``
-    raises DIVIDE_BY_ZERO under ANSI mode, so there is no legacy result to
-    match. Here the division runs under ``np.errstate`` (no
-    RuntimeWarning): every sim is 0/0 = NaN and the row lands in the last
-    cell, the NaN-greatest rule above.
+    Zero-norm divergence: for an all-zero vector the fold's ``/ norm``
+    raises DIVIDE_BY_ZERO under ANSI mode, so there is no result to match.
+    Here every sim is 0/0 = NaN, computed without a RuntimeWarning, and the
+    row lands in the last cell by the NaN-greatest rule above.
     """
-    import numpy as np
-
     from .linking import spread
 
-    cmat = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
-    base = spread(df, id_col).select(F.col(id_col), F.col(vec_col))
-    in_schema = base.schema
-    id_t, vec_t = (in_schema[0].dataType.simpleString(),
-                   in_schema[1].dataType.simpleString())
-    out_ddl = f"{id_col} {id_t}, {vec_col} {vec_t}, cell int"
-    return base.mapInArrow(
-        lambda batches: _assign_batches(batches, cmat, id_col, vec_col), out_ddl)
-
-
-def _assign_batches(batches, cmat, id_col: str, vec_col: str):
-    """The ``mapInArrow`` body of :func:`ivf_assign` over Arrow batches of
-    (id, vec); cmat is the (n_cells, dim) float64 centroid matrix."""
-    import numpy as np
-    import pyarrow as pa
-
-    n_cells, dim = cmat.shape
-    for b in batches:
-        n = b.num_rows
-        if n == 0:
-            continue
-        ids, vecs = b.column(0), b.column(1)
-        off, vals, n_null, lens = _list_parts(vecs)
-        ok = (lens == dim) & (n_null == 0)
-        best = np.full(n, n_cells - 1, dtype=np.int32)
-        if ok.any():
-            sel = np.flatnonzero(ok)
-            mat = _gather_rows(off, vals, sel, dim)
-            m = mat.shape[0]
-            acc = np.zeros((m, n_cells), dtype=np.float64)
-            nacc = np.zeros(m, dtype=np.float64)
-            for d in range(dim):
-                xd = mat[:, d]
-                acc += xd[:, None] * cmat[:, d][None, :]
-                nacc += xd * xd
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = acc / np.sqrt(nacc)[:, None]
-            nanm = np.isnan(sims)
-            k1 = np.where(nanm, -np.inf, sims)
-            # last argmax = struct-ordering tie-break (larger cell)
-            b_sel = (n_cells - 1) - np.argmax(k1[:, ::-1], axis=1)
-            any_nan = nanm.any(axis=1)
-            if any_nan.any():
-                for i in np.flatnonzero(any_nan):
-                    b_sel[i] = np.flatnonzero(nanm[i]).max()
-            best[sel] = b_sel.astype(np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [ids, vecs, pa.array(best, type=pa.int32())],
-            names=[id_col, vec_col, "cell"])
+    return _ivf_cells(spread(df, id_col), centroids, 1, id_col, vec_col)
 
 
 def ivf_index_write(corpus: DataFrame, centroids, path: str,
                     id_col: str = "vec_id", vec_col: str = "embedding") -> None:
-    """Materialized IVF index: the corpus hive-partitioned by nearest cell.
-    At 100 TB this is the serving layout — a probe touches only its cells'
-    FILES (parquet partition pruning), so query cost follows nprobe/n_cells
-    of the data instead of a full scan.
+    """Materialized IVF index: the ``ivf_assign`` rows hive-partitioned by
+    cell. At 100 TB this is the serving layout — a probe touches only its
+    cells' FILES (parquet partition pruning), so query cost follows
+    nprobe/n_cells of the data instead of a full scan. Read it back with
+    ``spark.read.parquet(path)`` as ``knn_ivf``'s ``cells``.
 
     The write clusters rows by cell first (one hash exchange of the
     assigned rows): without it every scan task writes a sliver of every
@@ -714,72 +700,36 @@ def ivf_index_write(corpus: DataFrame, centroids, path: str,
      .write.mode("overwrite").partitionBy("cell").parquet(path))
 
 
-def knn_ivf_indexed(
-    spark,
-    queries: DataFrame,
-    index_path: str,
-    centroids,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k against a materialized IVF index: each query probes its nprobe
-    nearest cells; the cell equi-join prunes index partitions (only the
-    probed cells' files are read). Exact cosine rerank inside the probed
-    buckets — same semantics as knn_ivf, different (indexed) physical plan."""
-    c = spark.read.parquet(index_path).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        "cell", _norm(F.col(vec_col)).alias("c_norm"))
-    probes = F.slice(F.reverse(F.array_sort(_cell_sims(F.col(vec_col), centroids))),
-                     1, nprobe)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(F.transform(probes, lambda p: p["cell"])).alias("cell"))
-    # in-bucket rerank through the vectorized Arrow scorer (bit-identical
-    # sims + partial top-k; same discipline as knn_lsh) instead of one
-    # interpreted dim-wide fold per candidate pair
-    joined = (q.join(c, "cell")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id", "q_vec", "c_vec",
-                      "q_norm", "c_norm"))
-    scored = _cosine_rerank_arrow(joined, partial_topk=k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "sim", "rnk"))
-
-
 def knn_ivf(
     queries: DataFrame,
-    corpus: DataFrame,
+    cells: DataFrame,
     centroids,
     k: int = 10,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: corpus bucketed by nearest cell; each query probes
-    its nprobe nearest cells; exact cosine inside the probed buckets."""
-    c = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        "cell", _norm(F.col(vec_col)).alias("c_norm"))
-    probes = F.slice(F.reverse(F.array_sort(_cell_sims(F.col(vec_col), centroids))),
-                     1, nprobe)
-    q = queries.select(
+    """Approximate cosine top-k over a cell-tagged corpus: each query probes
+    its nprobe nearest cells and the candidates in them are scored exactly
+    (:func:`_cosine_rerank_arrow`) and ranked per query.
+
+    ``cells`` is ``ivf_assign(corpus, centroids)`` or the index
+    ``ivf_index_write`` wrote, read back with ``spark.read.parquet(path)``;
+    there the cell equi join prunes the index partitions, so only the
+    probed cells' files are read.
+
+    Probes follow ``ivf_assign``'s order (:func:`_top_cells`). A query
+    whose sims are all NaN — a NaN or all-zero vector — probes the last
+    nprobe cells; for an all-zero vector the spec's fold raises
+    DIVIDE_BY_ZERO under ANSI instead."""
+    q = _ivf_cells(queries, centroids, nprobe, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(F.transform(probes, lambda p: p["cell"])).alias("cell"))
-    # in-bucket rerank through the vectorized Arrow scorer (bit-identical
-    # sims + partial top-k; same discipline as knn_lsh) instead of one
-    # interpreted dim-wide fold per candidate pair
+        F.col("norm").alias("q_norm"), "cell")
+    c = cells.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
+        F.col("norm").alias("c_norm"), "cell")
     joined = (q.join(c, "cell")
               .where(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id", "q_vec", "c_vec",
                       "q_norm", "c_norm"))
-    scored = _cosine_rerank_arrow(joined, partial_topk=k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "sim", "rnk"))
+    return _rank(_cosine_rerank_arrow(joined, partial_topk=k), k)

@@ -1034,6 +1034,21 @@ probes AS (  -- nprobe=4 nearest cells per query vector
 """
 
 
+def _ivf_centroids(emb):
+    """q39/q46 centroids: embeddings 0-15, unit-normalized with
+    sequential-sum arithmetic (the order of the DuckDB twin's
+    list_dot_product), so they are bit-identical to ``_IVF_CENT_SQL``'s."""
+    import math
+
+    cents = []
+    for r in sorted(emb.where(F.col("vec_id") < 16).collect(),
+                    key=lambda r: r["vec_id"]):
+        v = [float(x) for x in r["embedding"]]
+        nrm = math.sqrt(sum(x * x for x in v))
+        cents.append([x / nrm for x in v])
+    return cents
+
+
 @_q("q39_knn_ivf", f"""
 WITH {_IVF_CENT_SQL}
 SELECT query_id, neighbor_id, rnk FROM (
@@ -1046,22 +1061,15 @@ SELECT query_id, neighbor_id, rnk FROM (
 WHERE rnk <= 5
 """)
 def q39(spark, sf_dir):
-    import math
-
-    from amharic_ecommerce_data_extractor_spark.operators.similarity import knn_ivf
+    from amharic_ecommerce_data_extractor_spark.operators.similarity import (
+        ivf_assign,
+        knn_ivf,
+    )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cent_rows = sorted(emb.where(F.col("vec_id") < 16).collect(),
-                       key=lambda r: r["vec_id"])
-    # unit-normalize with sequential-sum arithmetic (same order as the
-    # DuckDB twin's list_dot_product) so centroid literals are bit-identical
-    cents = []
-    for r in cent_rows:
-        v = [float(x) for x in r["embedding"]]
-        nrm = math.sqrt(sum(x * x for x in v))
-        cents.append([x / nrm for x in v])
+    cents = _ivf_centroids(emb)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return knn_ivf(queries, emb, cents, k=5, nprobe=4) \
+    return knn_ivf(queries, ivf_assign(emb, cents), cents, k=5, nprobe=4) \
         .select("query_id", "neighbor_id", "rnk")
 
 
@@ -1077,35 +1085,28 @@ SELECT query_id, neighbor_id, rnk FROM (
 WHERE rnk <= 5
 """)
 def q46(spark, sf_dir):
-    # same semantics as q39 through the MATERIALIZED index path: corpus
-    # written hive-partitioned by cell, probes prune index partitions
-    import math
+    # q39 through the MATERIALIZED index: the corpus is written
+    # hive-partitioned by cell, read back as knn_ivf's cells, and the
+    # probes prune index partitions. The index is rebuilt on every run.
     import shutil
-    import tempfile
 
     from amharic_ecommerce_data_extractor_spark.operators.similarity import (
         ivf_index_write,
-        knn_ivf_indexed,
+        knn_ivf,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cent_rows = sorted(emb.where(F.col("vec_id") < 16).collect(),
-                       key=lambda r: r["vec_id"])
-    cents = []
-    for r in cent_rows:
-        v = [float(x) for x in r["embedding"]]
-        nrm = math.sqrt(sum(x * x for x in v))
-        cents.append([x / nrm for x in v])
+    cents = _ivf_centroids(emb)
     idx = _scratch_dir("ivf_q46_")
     try:
         ivf_index_write(emb, cents, idx)
         queries = emb.where(F.col("vec_id") % 100 == 0)
-        out = knn_ivf_indexed(spark, queries, idx, cents, k=5, nprobe=4) \
+        out = knn_ivf(queries, spark.read.parquet(idx), cents, k=5, nprobe=4) \
             .select("query_id", "neighbor_id", "rnk")
         # materialize the k*|Q| result rows before the temp index dir is
         # removed — a HARNESS workaround (the query must outlive its tempdir),
         # NOT the serving pattern: in production the index is a permanent
-        # table and knn_ivf_indexed's DataFrame is consumed lazily
+        # table and knn_ivf's DataFrame is consumed lazily
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
     finally:

@@ -167,13 +167,16 @@ def test_knn_lsh_banded_exchange_is_ids_only(spark):
 def test_knn_ivf_join_is_equi_on_cell(spark):
     """IVF probe join must be an equi join on the cell id — never a cross
     join (that is the whole point of the coarse quantizer)."""
-    from amharic_ecommerce_data_extractor_spark.operators.similarity import knn_ivf
+    from amharic_ecommerce_data_extractor_spark.operators.similarity import (
+        ivf_assign,
+        knn_ivf,
+    )
 
     emb = spark.createDataFrame(
         [(i, [float((i * 7 + d) % 13) for d in range(8)]) for i in range(40)],
         "vec_id long, embedding array<double>")
     cents = [[1.0] + [0.0] * 7, [0.0] * 7 + [1.0]]
-    plan = knn_ivf(emb.limit(4), emb, cents, k=3, nprobe=1) \
+    plan = knn_ivf(emb.limit(4), ivf_assign(emb, cents), cents, k=3, nprobe=1) \
         ._jdf.queryExecution().optimizedPlan().toString()
     import re
 
@@ -181,6 +184,31 @@ def test_knn_ivf_join_is_equi_on_cell(spark):
     assert join_lines and all(re.search(r"\(cell#\d+ = cell#\d+\)", ln)
                               for ln in join_lines), join_lines
     assert "Join Cross" not in plan
+
+
+def test_ann_plans_have_no_interpreted_folds(spark, tmp_path):
+    """knn_ivf's probes and both sides' norms, and knn_lsh's signatures, come
+    from the Arrow projection kernel: no lambda fold over the vectors in
+    their optimized plans, over a freshly assigned corpus or a written
+    index."""
+    from amharic_ecommerce_data_extractor_spark.operators.similarity import (
+        ivf_assign,
+        ivf_index_write,
+        knn_ivf,
+        knn_lsh,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 13) for d in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    cents = [[1.0] + [0.0] * 7, [0.0] * 7 + [1.0]]
+    idx = str(tmp_path / "ivf_index")
+    ivf_index_write(emb, cents, idx)
+    for cells in (ivf_assign(emb, cents), spark.read.parquet(idx)):
+        plan = _optimized(knn_ivf(emb.limit(4), cells, cents, k=3, nprobe=2))
+        assert "lambdafunction" not in plan, plan
+    plan = _optimized(knn_lsh(emb, emb, k=3, dim=8, n_bands=4, bits_per_band=4))
+    assert "zip_with(" not in plan and "aggregate(" not in plan, plan
 
 
 def test_winnowing_overlap_join_carries_no_text(spark):

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amharic_ecommerce_data_extractor_spark.operators.similarity import (
+    ivf_assign,
     ivf_train_centroids,
     knn_bruteforce,
     knn_ivf,
@@ -38,10 +39,10 @@ def test_ivf_recall(spark, emb):
     queries = emb.where(F.col("vec_id") % 25 == 0)
     exact = knn_bruteforce(queries, emb, k=5)
     cent = ivf_train_centroids(emb, n_cells=8)
-    approx = knn_ivf(queries, emb, cent, k=5, nprobe=4)
+    approx = knn_ivf(queries, ivf_assign(emb, cent), cent, k=5, nprobe=4)
     assert _recall(approx, exact) >= 0.7
     # probing every cell = exact
-    full = knn_ivf(queries, emb, cent, k=5, nprobe=8)
+    full = knn_ivf(queries, ivf_assign(emb, cent), cent, k=5, nprobe=8)
     assert _recall(full, exact) >= 0.99
 
 
@@ -79,15 +80,16 @@ def test_ivf_sampling_unbiased_on_partition_clustered_corpus(spark):
 
 
 def test_ivf_materialized_index_matches_and_prunes(spark, tmp_path):
-    """knn_ivf_indexed == knn_ivf result-for-result, and the indexed scan's
-    physical plan prunes to the probed cells' partitions."""
+    """knn_ivf over the written index == knn_ivf over ivf_assign
+    result-for-result, and the indexed scan's physical plan prunes to the
+    probed cells' partitions."""
     import numpy as np
 
     from amharic_ecommerce_data_extractor_spark.operators.similarity import (
+        ivf_assign,
         ivf_index_write,
         ivf_train_centroids,
         knn_ivf,
-        knn_ivf_indexed,
     )
 
     rng = np.random.RandomState(1)
@@ -98,9 +100,10 @@ def test_ivf_materialized_index_matches_and_prunes(spark, tmp_path):
     ivf_index_write(emb, cents, idx)
 
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    direct = sorted(tuple(r) for r in knn_ivf(queries, emb, cents, k=5, nprobe=2)
+    direct = sorted(tuple(r) for r in knn_ivf(queries, ivf_assign(emb, cents), cents,
+                                              k=5, nprobe=2)
                     .select("query_id", "neighbor_id", "rnk").collect())
-    indexed_df = knn_ivf_indexed(spark, queries, idx, cents, k=5, nprobe=2)
+    indexed_df = knn_ivf(queries, spark.read.parquet(idx), cents, k=5, nprobe=2)
     indexed = sorted(tuple(r) for r in indexed_df
                      .select("query_id", "neighbor_id", "rnk").collect())
     assert direct == indexed
@@ -145,3 +148,61 @@ def test_ivf_train_centroids_size_hint(spark):
     # available samples
     cents = ivf_train_centroids(emb, dim=8, seed=5, size_hint=400)
     assert len(cents) == ivf_sizing(400)[0] == 20
+
+
+def test_string_ids_give_the_long_id_results(spark, emb):
+    """Ids keep their input type through every search: a zero-padded
+    string-id copy of the corpus (string order = numeric order) gives the
+    same (query, neighbor, rnk) as the long ids, with string ids out."""
+    from amharic_ecommerce_data_extractor_spark.operators import similarity as sim
+
+    corpus = emb.select("vec_id", "embedding")
+    s_corpus = corpus.select(F.format_string("%06d", "vec_id").alias("vec_id"),
+                             "embedding")
+    cents = ivf_train_centroids(corpus, n_cells=8)
+    searches = {
+        "knn_bruteforce": lambda q, c: knn_bruteforce(q, c, k=5),
+        "knn_lsh": lambda q, c: knn_lsh(q, c, k=5, n_bands=24, bits_per_band=4),
+        "knn_ivf": lambda q, c: knn_ivf(q, ivf_assign(c, cents), cents, k=5, nprobe=2),
+    }
+    for name, search in searches.items():
+        want = sorted((r["query_id"], r["neighbor_id"], r["rnk"]) for r in search(
+            corpus.where(F.col("vec_id") % 25 == 0), corpus).collect())
+        got = search(s_corpus.where(F.col("vec_id").cast("long") % 25 == 0),
+                     s_corpus).collect()
+        assert all(isinstance(r["query_id"], str) and isinstance(r["neighbor_id"], str)
+                   for r in got), name
+        assert sorted((int(r["query_id"]), int(r["neighbor_id"]), r["rnk"])
+                      for r in got) == want, name
+
+    # the join-shaped rerank on string ids, one batch: partial top-1 keeps,
+    # of two tied neighbors, the first in string order ("n10" < "n9")
+    joined = spark.createDataFrame(
+        [("q1", "n9", [1.0, 0.0], [1.0, 0.0], 1.0, 1.0),
+         ("q1", "n10", [1.0, 0.0], [1.0, 0.0], 1.0, 1.0),
+         ("q1", "n2", [1.0, 0.0], [0.0, 1.0], 1.0, 1.0),
+         ("q2", "n9", [0.0, 1.0], [0.0, 1.0], 1.0, 1.0)],
+        "query_id string, neighbor_id string, q_vec array<float>, "
+        "n_vec array<float>, q_norm double, n_norm double").coalesce(1)
+    got = sim._cosine_rerank_arrow(joined, partial_topk=1).collect()
+    assert sorted(tuple(r) for r in got) == [("q1", "n10", 1.0), ("q2", "n9", 1.0)]
+
+
+def test_lsh_rerank_joins_past_the_broadcast_budget(spark, emb, monkeypatch):
+    """Past the per-side byte budget (rows × dim × 8 B) knn_lsh joins the
+    vectors onto the candidates instead of broadcasting them, with the same
+    rows."""
+    from amharic_ecommerce_data_extractor_spark.operators import similarity as sim
+
+    queries = emb.where(F.col("vec_id") % 25 == 0)
+
+    def run():
+        df = knn_lsh(queries, emb, k=5, n_bands=24, bits_per_band=4)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("Join Inner"), sorted(tuple(r) for r in df.collect())
+
+    n_joins, want = run()
+    monkeypatch.setattr(sim, "_BROADCAST_BYTES", emb.count() * 64 * 8 - 1)
+    n_joins_past, got = run()
+    assert (n_joins, n_joins_past) == (1, 3)
+    assert got == want

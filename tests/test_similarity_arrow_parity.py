@@ -1,15 +1,15 @@
-"""Bit-identity pins for the vectorized Arrow signature/assignment passes
-(operators/similarity): the interpreted JVM folds they replaced stay in the
-module as the executable spec (``simhash_signature``, ``_norm``,
-``_cell_sims``), and these tests assert the Arrow twins reproduce them
-EXACTLY — signatures per character, norms per bit, cell choices per row —
-over the embeddings table plus adversarial rows (null vector, null element,
-ragged lengths, NaN, ±inf, denormal-scale values).
+"""Bit-identity pins for the Arrow vector kernels (operators/similarity):
+the interpreted Spark folds in ``tests/vector_spec.py`` are the executable
+spec (``simhash_signature``, ``_norm``, ``_cell_sims``, ``cosine_expr``),
+and these tests assert the kernels reproduce them EXACTLY — signatures per
+character, norms per bit, cell choices and probe order per row — over the
+embeddings table plus adversarial rows (null vector, null element, ragged
+lengths, NaN, ±inf, denormal-scale values).
 
-All-zero vectors are excluded there: under ANSI mode the ORIGINAL
-expression raises DIVIDE_BY_ZERO on them, so there is no legacy result to
-preserve. The rerank tests at the end include them, against the fold
-scored with ANSI off.
+All-zero vectors are excluded there: under ANSI mode the spec's
+``_cell_sims`` raises DIVIDE_BY_ZERO on them, so there is no result to
+match. The rerank tests at the end include them, against the fold scored
+with ANSI off.
 """
 
 import math
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F, types as T
 from pyspark.sql.window import Window
 
 from amharic_ecommerce_data_extractor_spark.operators import similarity as sim
+from tests import vector_spec as spec
 
 _SCHEMA = T.StructType([
     T.StructField("vec_id", T.LongType()),
@@ -55,8 +56,8 @@ def test_signed_arrow_matches_jvm_fold(spark, vecs, plane_fn):
     planes = sim._planes(64, 64, 42, plane_fn)
     ref = {r["id"]: r for r in vecs.select(
         F.col("vec_id").alias("id"),
-        sim._norm(F.col("embedding")).alias("norm"),
-        sim.simhash_signature(F.col("embedding"), planes).alias("sig"),
+        spec._norm(F.col("embedding")).alias("norm"),
+        spec.simhash_signature(F.col("embedding"), planes).alias("sig"),
     ).collect()}
     got = sim._signed_arrow(vecs, "vec_id", "embedding", "id", planes) \
         .select("id", F.col("id_norm").alias("norm"),
@@ -95,11 +96,22 @@ def test_ivf_assign_matches_array_max_expression(spark, vecs, sf_dir):
         v = [float(x) for x in r["embedding"]]
         nrm = math.sqrt(sum(x * x for x in v))
         cents.append([x / nrm for x in v])
-    best = F.array_max(sim._cell_sims(F.col("embedding"), cents))
+    best = F.array_max(spec._cell_sims(F.col("embedding"), cents))
     ref = {r["vec_id"]: r["cell"] for r in vecs.select(
         "vec_id", best["cell"].alias("cell")).collect()}
     got = {r["vec_id"]: r["cell"]
            for r in sim.ivf_assign(vecs, cents).select("vec_id", "cell").collect()}
+    assert got == ref
+
+    # knn_ivf's query probes: the top-nprobe cells in the fold's order
+    nprobe = 4
+    probes = F.slice(F.reverse(F.array_sort(spec._cell_sims(F.col("embedding"), cents))),
+                     1, nprobe)
+    ref = {r["vec_id"]: r["cells"] for r in vecs.select(
+        "vec_id", F.transform(probes, lambda p: p["cell"]).alias("cells")).collect()}
+    got = {}
+    for r in sim._ivf_cells(vecs, cents, nprobe, "vec_id", "embedding").collect():
+        got.setdefault(r["vec_id"], []).append(r["cell"])
     assert got == ref
 
 
@@ -127,14 +139,14 @@ def test_zero_vector_no_runtime_warning(spark):
         warnings.simplefilter("error")
         (assigned,) = sim._assign_batches(
             iter([batch]), np.asarray(cents), "vec_id", "embedding")
-    assert assigned.column(2).to_pylist() == [n_cells - 1, 0]
+    assert assigned.column("cell").to_pylist() == [n_cells - 1, 0]
 
     df = spark.createDataFrame(rows, _SCHEMA)
     got = {r["vec_id"]: r["cell"] for r in sim.ivf_assign(df, cents).collect()}
     assert got == {1: n_cells - 1, 2: 0}
     jvm = {r["id"]: (r["norm"], r["sig"]) for r in df.select(
-        F.col("vec_id").alias("id"), sim._norm(F.col("embedding")).alias("norm"),
-        sim.simhash_signature(F.col("embedding"), planes).alias("sig")).collect()}
+        F.col("vec_id").alias("id"), spec._norm(F.col("embedding")).alias("norm"),
+        spec.simhash_signature(F.col("embedding"), planes).alias("sig")).collect()}
     arrow = {r["id"]: (r["id_norm"], r["_sig"]) for r in
              sim._signed_arrow(df, "vec_id", "embedding", "id", planes).collect()}
     assert arrow == jvm
@@ -144,9 +156,10 @@ def test_zero_vector_no_runtime_warning(spark):
 def _degenerate_tables(spark):
     """(queries, corpus) of 8-dim vectors for the rerank tests: clean rows
     plus null vector, ragged lengths (two short ones score each other at
-    their own length), null element and NaN on both sides, and zero-norm
-    rows in the corpus only (a zero-norm query already raises
-    DIVIDE_BY_ZERO in knn_ivf's probe ``_cell_sims`` under ANSI)."""
+    their own length), null element, NaN and zero-norm rows on both sides.
+    The spec's ``cosine_expr`` scores a zero-norm pair null with ANSI off
+    (see ``_fold_rows``); its ``_cell_sims`` raises DIVIDE_BY_ZERO on a
+    zero-norm query under ANSI, where knn_ivf probes the last cells."""
     import random
 
     dim = 8
@@ -161,7 +174,7 @@ def _degenerate_tables(spark):
         (900006, [float("nan")] * dim),
     ]
     zero_norm = [(900007, [0.0] * dim), (900008, [-0.0] * dim)]
-    return (spark.createDataFrame(clean[:8] + degenerate, _SCHEMA),
+    return (spark.createDataFrame(clean[:8] + degenerate + zero_norm, _SCHEMA),
             spark.createDataFrame(clean + degenerate + zero_norm, _SCHEMA))
 
 
@@ -179,7 +192,7 @@ def _fold_rows(spark, queries, corpus, finish):
                                           F.col("embedding").alias("c")))
                  .where(F.col("query_id") != F.col("neighbor_id"))
                  .select("query_id", "neighbor_id",
-                         sim.cosine_expr(F.col("q"), F.col("c")).alias("sim")))
+                         spec.cosine_expr(F.col("q"), F.col("c")).alias("sim")))
         return finish(pairs)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -189,27 +202,49 @@ def _nan_key(v):
     return "nan" if v is not None and math.isnan(v) else v
 
 
-@pytest.mark.parametrize("k", [3, 100])
-def test_knn_ivf_rerank_matches_cosine_expr_on_degenerate_rows(spark, k):
-    """knn_ivf's Arrow rerank against the ``cosine_expr`` fold, end to end,
-    with every cell probed so each (query, neighbor) pair is a candidate.
-    Null sims (null vector or element, mismatched lengths, zero norm) must
-    rank last, NaN sims first."""
+def _sim_eq(a, b, tol):
+    if a is None or b is None or math.isnan(a) or math.isnan(b):
+        return _nan_key(a) == _nan_key(b)
+    return abs(a - b) <= tol
+
+
+# ids: k alone for knn_ivf, bruteforce-k for knn_bruteforce
+@pytest.mark.parametrize("search, k", [
+    pytest.param("knn_ivf", 3, id="3"),
+    pytest.param("knn_ivf", 100, id="100"),
+    pytest.param("knn_bruteforce", 3, id="bruteforce-3"),
+    pytest.param("knn_bruteforce", 100, id="bruteforce-100"),
+])
+def test_knn_ivf_rerank_matches_cosine_expr_on_degenerate_rows(spark, search, k):
+    """knn_ivf's Arrow rerank (every cell probed, so each (query, neighbor)
+    pair is a candidate) and knn_bruteforce's matmul against the
+    ``cosine_expr`` fold, end to end. Null sims (null vector or element,
+    mismatched lengths, zero norm) must rank last, NaN sims first.
+    knn_bruteforce sums in BLAS order, so its sims match to 1e-12; nulls and
+    NaNs match exactly."""
     queries, corpus = _degenerate_tables(spark)
     n_cells = 3
     cents = [[1.0 if d == c else 0.0 for d in range(8)] for c in range(n_cells)]
-    got = sim.knn_ivf(queries, corpus, cents, k=k, nprobe=n_cells).collect()
+    if search == "knn_ivf":
+        got = sim.knn_ivf(queries, sim.ivf_assign(corpus, cents), cents, k=k,
+                          nprobe=n_cells).collect()
+    else:
+        got = sim.knn_bruteforce(queries, corpus, k=k).collect()
 
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     want = _fold_rows(spark, queries, corpus, lambda pairs: pairs.withColumn(
         "rnk", F.row_number().over(w)).where(F.col("rnk") <= k).collect())
 
     def key(rows):
-        return sorted((r["query_id"], r["rnk"], r["neighbor_id"],
-                       _nan_key(r["sim"])) for r in rows)
+        return sorted((r["query_id"], r["rnk"], r["neighbor_id"]) for r in rows)
 
     assert key(got) == key(want)
     by_pair = {(r["query_id"], r["neighbor_id"]): r["sim"] for r in got}
+    tol = 0.0 if search == "knn_ivf" else 1e-12
+    bad = [(pair, r["sim"], by_pair[pair]) for r in want
+           for pair in [(r["query_id"], r["neighbor_id"])]
+           if not _sim_eq(by_pair[pair], r["sim"], tol)]
+    assert not bad, bad
     if k == 100:
         assert by_pair[(900003, 900013)] is not None
         assert by_pair[(0, 900001)] is None and by_pair[(0, 900007)] is None
@@ -227,7 +262,7 @@ def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):
     def side(df, name):
         return df.select(F.col("vec_id").alias(name),
                          F.col("embedding").alias(f"{name}_vec"),
-                         sim._norm(F.col("embedding")).alias(f"{name}_norm"))
+                         spec._norm(F.col("embedding")).alias(f"{name}_norm"))
 
     q, c = side(queries, "query_id"), side(corpus, "neighbor_id")
     cand = (q.select("query_id").crossJoin(c.select("neighbor_id"))

@@ -7,11 +7,13 @@
 
 Composes the engine's own primitives (operators.dedup, functions.textstats);
 everything is hash-keyed shuffles and narrow column expressions — no Python.
+The audit is observed on the stages themselves (``DataFrame.observe``), so
+one action over the curated frame yields every stage's row count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.window import Window
 
 from ..functions import textstats as ts
@@ -47,79 +49,51 @@ def curate(
     winnowing method is tuned by winnow_min_shared (its edge bar) and
     ignores both — passing them alongside dedup_method='winnowing' has no
     effect."""
-    # each stage is persisted before the audit count — otherwise every
-    # count() action recomputes the whole upstream chain (incl. MinHash+CC).
-    # The raw input is persisted too: the audit's "input" count is the action
-    # that populates the cache, and the dedup stage (which reads the input
-    # several times: exact-hash pass + shingle pass) then reads the cached
-    # copy instead of rescanning the source — one source scan total.
-    # persist/unpersist is not refcounted in Spark: if the CALLER already
-    # persisted docs (for their own reuse), persisting again is a no-op and
-    # unpersisting at the end would silently evict the caller's cache — so
-    # the input cache is only taken (and later released) when we created it.
-    caller_cached = docs.storageLevel.useMemory or docs.storageLevel.useDisk
-    if not caller_cached:
-        # spread BEFORE persisting: the cache freezes the partitioning, and a
-        # one-split scan cached as one partition would run every downstream
-        # CPU-heavy stage (shingle/fingerprint hashing) on one core. spread's
-        # static gate makes this the identity on well-partitioned input
-        # (including everything at 100 TB); a caller-cached frame keeps the
-        # caller's partitioning — repartitioning it would defeat their cache.
-        from .linking import spread
+    # One action fills the whole audit: each stage's output frame carries an
+    # unnamed Observation counting its rows, and every stage feeds the
+    # curated frame, so its persist+count runs every observed node (a node
+    # that never ran would block Observation.get). An observation reports
+    # the first action that runs it; for the input that can be one of
+    # dedup's localCheckpoint barrier jobs. The input is not cached, so it
+    # is read twice: by dedup's barrier job and by the final action.
+    # spread's static gate leaves a caller-cached frame (and a well-split
+    # scan) as it is.
+    from .linking import spread
 
-        docs = spread(docs, id_col).persist()
-    deduped = filtered = curated = None
+    stages: list[tuple[str, Observation]] = []
+
+    def observed(name: str, df: DataFrame) -> DataFrame:
+        obs = Observation()
+        stages.append((name, obs))
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    docs = observed("input", spread(docs, id_col))
+    deduped = observed("dedup", dedup(
+        docs, id_col=id_col, text_col=text_col, threshold=near_dup_threshold,
+        hash_fn=hash_fn, pair_mode=pair_mode, method=dedup_method,
+        winnow_min_shared=winnow_min_shared))
+    scored = deduped.withColumn("quality", ts.quality_score(F.col(text_col))) \
+                    .withColumn("n_tokens", ts.whitespace_token_count(F.col(text_col))) \
+                    .withColumn("script", ts.detect_script(F.col(text_col)))
+    curated = observed("quality_and_length", scored.where(
+        (F.col("quality") >= min_quality)
+        & (F.col("n_tokens") >= min_tokens)
+        & (F.col("n_tokens") <= max_tokens)))
+    if per_source_cap is not None and source_col in docs.columns:
+        w = Window.partitionBy(source_col).orderBy(F.desc("quality"), F.asc(id_col))
+        curated = observed("per_source_cap", curated
+                           .withColumn("_rn", F.row_number().over(w))
+                           .where(F.col("_rn") <= per_source_cap).drop("_rn"))
+
+    curated = curated.persist()
     try:
-        stages: list[tuple[str, DataFrame]] = [("input", docs)]
-
-        deduped = dedup(docs, id_col=id_col, text_col=text_col,
-                        threshold=near_dup_threshold, hash_fn=hash_fn,
-                        pair_mode=pair_mode, method=dedup_method,
-                        winnow_min_shared=winnow_min_shared).persist()
-        stages.append(("dedup", deduped))
-
-        scored = deduped.withColumn("quality", ts.quality_score(F.col(text_col))) \
-                        .withColumn("n_tokens", ts.whitespace_token_count(F.col(text_col))) \
-                        .withColumn("script", ts.detect_script(F.col(text_col)))
-        filtered = scored.where(
-            (F.col("quality") >= min_quality)
-            & (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)).persist()
-        stages.append(("quality_and_length", filtered))
-
-        curated = filtered
-        if per_source_cap is not None and source_col in docs.columns:
-            w = Window.partitionBy(source_col).orderBy(F.desc("quality"), F.asc(id_col))
-            curated = (filtered.withColumn("_rn", F.row_number().over(w))
-                       .where(F.col("_rn") <= per_source_cap).drop("_rn"))
-            stages.append(("per_source_cap", curated))
-
-        spark = docs.sparkSession
-        audit = spark.createDataFrame(
-            [(i, name, df.count()) for i, (name, df) in enumerate(stages)],
-            "stage_idx int, stage string, rows_surviving long")
-        curated = curated.persist()
-        curated.count()  # materialize before releasing the upstream caches
+        curated.count()
     except BaseException:
-        # release every cache this call created; `curated is filtered` when
-        # no per-source cap applied (persist() returns self), so dedupe by
-        # identity to avoid double-unpersist of the same frame
-        created = [] if caller_cached else [docs]
-        for df_ in (deduped, filtered, curated):
-            if df_ is not None and not any(df_ is c for c in created):
-                created.append(df_)
-        for df_ in created:
-            df_.unpersist()
+        curated.unpersist()
         raise
-    if not caller_cached:
-        docs.unpersist()
-    deduped.unpersist()
-    if curated is not filtered:
-        # without a per-source cap, curated IS the filtered frame (persist()
-        # returns self) — unpersisting it here would silently drop the cache
-        # just materialized and make the caller's first action recompute the
-        # whole dedup pipeline
-        filtered.unpersist()
+    audit = docs.sparkSession.createDataFrame(
+        [(i, name, obs.get["n"]) for i, (name, obs) in enumerate(stages)],
+        "stage_idx int, stage string, rows_surviving long")
     return curated, audit
 
 

@@ -313,25 +313,16 @@ def knn_lsh(
     def fits(df: DataFrame) -> bool:
         return df.count() * dim * 8 <= _BROADCAST_BYTES
 
+    q_cols = ["query_id", "query_id_vec", "query_id_norm"]
+    c_cols = ["neighbor_id", "neighbor_id_vec", "neighbor_id_norm"]
     if fits(cbase) and (queries is corpus or fits(qbase)):
-        c_rows = cbase.select("neighbor_id", "neighbor_id_vec",
-                              "neighbor_id_norm").collect()
-        if queries is corpus:
-            q_rows = c_rows
-        else:
-            q_rows = qbase.select("query_id", "query_id_vec",
-                                  "query_id_norm").collect()
-        scored = _cosine_rerank_broadcast(cand, q_rows, c_rows,
-                                          partial_topk=k)
+        c_rows = cbase.select(c_cols).collect()
+        q_rows = c_rows if queries is corpus else qbase.select(q_cols).collect()
+        scored = _cosine_rerank_broadcast(cand, q_rows, c_rows, partial_topk=k)
     else:
-        joined = (
-            cand
-            .join(qbase.select("query_id", "query_id_vec", "query_id_norm"),
-                  "query_id")
-            .join(cbase.select("neighbor_id", "neighbor_id_vec",
-                               "neighbor_id_norm"), "neighbor_id")
-            .select("query_id", "neighbor_id", "query_id_vec",
-                    "neighbor_id_vec", "query_id_norm", "neighbor_id_norm"))
+        joined = (cand.join(qbase.select(q_cols), "query_id")
+                  .join(cbase.select(c_cols), "neighbor_id")
+                  .select(*[n for pair in zip(q_cols, c_cols) for n in pair]))
         scored = _cosine_rerank_arrow(joined, partial_topk=k)
     return _rank(scored, k)
 
@@ -343,15 +334,24 @@ def _cosine_rerank_broadcast(cand: DataFrame, q_rows, c_rows,
     a broadcast of the (already materialized) signature tables, decoded
     once on the driver, and each pair is scored by the same
     :func:`_pair_sims`, so every sim — degenerate pairs included — equals
-    the join-shaped rerank's. The collected vectors are float32 widened
-    exactly to float64, the same widening the JVM cast performs."""
+    the join-shaped rerank's. As in the join, a pair whose id is held by
+    several rows of a table is scored once per row (:func:`_rows_of`). The
+    collected vectors are float32 widened exactly to float64, the same
+    widening the JVM cast performs."""
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     def pack(rows):
+        # rows grouped by id, so the rows of distinct id j are
+        # bounds[j]:bounds[j + 1]
+        ids = pa.array([r[0] for r in rows])
+        uniq = pc.unique(ids)
+        g = pc.index_in(ids, value_set=uniq).to_numpy()
+        rows = [rows[i] for i in np.argsort(g, kind="stable")]
         vecs = pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
-        norms = pa.array([r[2] for r in rows], type=pa.float64())
-        return (pa.array([r[0] for r in rows]), _list_parts(vecs),
-                norms.to_numpy(zero_copy_only=False))
+        norms = np.array([r[2] for r in rows], dtype=np.float64)  # null: NaN
+        return (uniq, np.r_[0, np.cumsum(np.bincount(g))]), _list_parts(vecs), norms
 
     spark = cand.sparkSession
     bq = spark.sparkContext.broadcast(pack(q_rows))
@@ -484,32 +484,44 @@ def _order_key(ids):
     return pc.rank(ids, tiebreaker="dense").to_numpy()
 
 
+def _rows_of(ids, uniq, bounds):
+    """(i, row): every pair of a position i in the Arrow column ``ids`` and
+    a row of a table grouped by id — the rows of ``uniq[j]`` are
+    ``bounds[j]:bounds[j + 1]`` — holding the same id, as an equi join
+    pairs them: a duplicated id gives one pair per row."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    u = pc.index_in(ids, value_set=uniq).to_numpy()
+    n = bounds[u + 1] - bounds[u]
+    i = np.repeat(np.arange(len(u)), n)
+    return i, np.arange(len(i)) + np.repeat(bounds[u] - np.cumsum(n) + n, n)
+
+
 def _rerank_batches(batches, partial_topk: int | None, tables=None):
     """The ``mapInArrow`` body of both reranks. Without ``tables`` the
     batches are (query_id, neighbor_id, q_vec, n_vec, q_norm, n_norm); with
-    ``tables`` — the query and corpus ``(ids, _list_parts, norms)`` of
-    :func:`_cosine_rerank_broadcast` — they are (query_id, neighbor_id)."""
+    ``tables`` — the query and corpus ``(lookup, _list_parts, norms)`` of
+    :func:`_cosine_rerank_broadcast` — they are (query_id, neighbor_id),
+    and a pair yields one row per (query row, corpus row) holding its ids."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     for b in batches:
-        n = b.num_rows
-        if n == 0:
+        if b.num_rows == 0:
             continue
         qid, nid = b.column(0), b.column(1)
         if tables is None:
-            qi = ci = np.arange(n)
-            q = (_list_parts(b.column(2)), np.asarray(
-                b.column(4).to_numpy(zero_copy_only=False), dtype=np.float64))
-            c = (_list_parts(b.column(3)), np.asarray(
-                b.column(5).to_numpy(zero_copy_only=False), dtype=np.float64))
+            qi = ci = np.arange(b.num_rows)
+            q, c = [(_list_parts(b.column(i)), np.asarray(b.column(i + 2).to_numpy(
+                zero_copy_only=False), dtype=np.float64)) for i in (2, 3)]
         else:
-            (q_ids, *q), (c_ids, *c) = tables
-            qi = pc.index_in(qid, value_set=q_ids).to_numpy()
-            ci = pc.index_in(nid, value_set=c_ids).to_numpy()
+            (q_look, *q), (c_look, *c) = tables
+            p, qi = _rows_of(qid, *q_look)
+            j, ci = _rows_of(nid.take(p), *c_look)
+            qid, nid, qi = qid.take(p[j]), nid.take(p[j]), qi[j]
         sim, valid = _pair_sims(q, qi, c, ci)
-        if partial_topk is not None and n > partial_topk:
+        if partial_topk is not None and len(sim) > partial_topk:
             # Spark orders doubles with NaN as the greatest value; null sims
             # (invalid pairs) sort after every value under F.desc
             qk = _order_key(qid)
@@ -577,14 +589,27 @@ def ivf_train_centroids(corpus: DataFrame, n_cells: int = 16, dim: int = 64,
     Sampling is reservoir-style (takeSample) — UNBIASED across partitions.
     limit()-sampling would take the first partitions only, mis-centering the
     quantizer whenever the corpus is clustered in storage order (typical:
-    ingest order correlates with content)."""
+    ingest order correlates with content).
+
+    The sample is decoded with :func:`_list_parts` and only its clean rows
+    train: a null vector, a null or non-finite element, or a length other
+    than ``dim`` drops the row (the assignment kernels still place such
+    rows). A sample with no clean row raises ``ValueError``."""
     import numpy as np
+    import pyarrow as pa
 
     if size_hint is not None:
         n_cells, sample_size = ivf_sizing(size_hint, max_cells=max_cells)
 
     rows = corpus.select(vec_col).rdd.takeSample(False, sample_size, seed)
-    x = np.array([list(r[0]) for r in rows], dtype=np.float64)
+    off, vals, n_null, lens = _list_parts(
+        pa.array([r[0] for r in rows], type=pa.list_(pa.float64())))
+    ok = np.flatnonzero((lens == dim) & (n_null == 0))
+    x = _gather_rows(off, vals, ok, dim) if len(ok) else np.empty((0, dim))
+    x = x[np.isfinite(x).all(axis=1)]
+    if not len(x):
+        raise ValueError(f"ivf_train_centroids: no sampled {vec_col!r} row of "
+                         f"{len(rows)} is a {dim}-dim finite, non-null vector")
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
     cent = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]

@@ -267,11 +267,9 @@ SELECT lang, count(*) AS n_docs,
 FROM documents GROUP BY lang
 """)
 def q11(spark, sf_dir):
-    # spread (statically gated): the per-row split/size work otherwise runs
-    # entirely inside a 1-split scan stage at sandbox table sizes
-    from amharic_ecommerce_data_extractor_spark.operators.linking import spread
-
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    # no spread(): the per-row expressions are cheap and feed a 5-group
+    # aggregate, so the repartition shuffle costs more than it spreads
+    d = _t(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.round(F.avg(F.length("text")), 6).alias("avg_len"),
@@ -1525,9 +1523,9 @@ def q48(spark, sf_dir):
 # drains via Trigger.AvailableNow, the final state per key is reconstructed
 # from the update-mode emissions (n_posts is strictly increasing per key, so
 # max_by(·, n_posts) picks the last emission), and DuckDB recomputes the same
-# totals as a batch aggregate. This makes applyInPandasWithState (q49) and the
-# watermarked windowed aggregation (q50) driver-visible, like q47 did for the
-# stateless triple stream.
+# totals as a batch aggregate. This makes the update-mode streaming
+# aggregation (q49) and the watermarked windowed aggregation (q50)
+# driver-visible, like q47 did for the stateless triple stream.
 # ---------------------------------------------------------------------------
 
 def _events_as_messages(spark, sf_dir):
@@ -1552,8 +1550,8 @@ SELECT CAST(user_id AS VARCHAR) AS vendor,
 FROM events GROUP BY user_id
 """)
 def q49(spark, sf_dir):
-    # applyInPandasWithState vendor totals, drained AvailableNow: the final
-    # emission per vendor must equal the batch aggregate exactly
+    # streaming-aggregate vendor totals (update mode), drained AvailableNow:
+    # the final emission per vendor must equal the batch aggregate exactly
     import shutil
     import tempfile
 

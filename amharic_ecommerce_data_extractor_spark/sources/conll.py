@@ -196,12 +196,11 @@ def write_labeling_file(messages: "DataFrame", path: str, n_messages: int = 50,
     """First-N messages as a token-per-line file with blank separators — the
     reference's manual-labeling prep (``prepare_data_for_labeling.py:12-79``;
     dead code there: it passes a kwarg that doesn't exist — reimplemented
-    working, same intended output shape)."""
-    from ..functions.textnorm import preprocess_expr, tokenize_expr
+    working, same intended output shape). The n_messages texts are
+    collected and run through the ``kernels.textprep`` chain on the driver."""
+    from ..kernels.textprep import preprocess_text, tokenize_text
 
-    body = (messages.orderBy("message_id").limit(n_messages)
-            .select(F.concat(
-                F.array_join(tokenize_expr(preprocess_expr(F.col(text_col))), "\n"),
-                F.lit("\n"),
-            ).alias("value")))
-    body.coalesce(1).write.mode("overwrite").text(path)
+    rows = messages.orderBy("message_id").limit(n_messages).select(text_col).collect()
+    body = [("\n".join(tokenize_text(preprocess_text(r[0]))) + "\n",) for r in rows]
+    (messages.sparkSession.createDataFrame(body, "value string")
+     .coalesce(1).write.mode("overwrite").text(path))

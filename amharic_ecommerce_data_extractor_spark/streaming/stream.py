@@ -3,7 +3,9 @@
 
 The extraction operator is stateless, so the SAME fused arrow_udf kernel
 runs unchanged on a streaming DataFrame; triple emission is stateless too.
-Windowed vendor activity uses event-time windows + watermark for late data.
+Windowed vendor activity uses event-time windows + watermark for late data;
+the running per-vendor totals are a built-in streaming aggregation in update
+mode (no Python state function).
 """
 
 from __future__ import annotations
@@ -56,52 +58,18 @@ def run_stream_once(messages: DataFrame, out_dir: str, checkpoint_dir: str,
 
 
 def stateful_vendor_totals(messages: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): per
-    vendor, a running (n_posts, total_views, last_seen) state maintained
-    across micro-batches — the incremental twin of the scorecard's
-    per-vendor counters. State is one small row per vendor (bounded), emitted
-    on every batch that touches the vendor."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState
-
-    out_schema = T.StructType([
-        T.StructField("vendor", T.StringType(), False),
-        T.StructField("n_posts", T.LongType(), False),
-        T.StructField("total_views", T.LongType(), False),
-        T.StructField("last_seen", T.TimestampType(), True),
-    ])
-    state_schema = T.StructType([
-        T.StructField("n_posts", T.LongType(), False),
-        T.StructField("total_views", T.LongType(), False),
-        T.StructField("last_seen", T.TimestampType(), True),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        n, views, last = (state.get if state.exists else (0, 0, None))
-        for pdf in pdfs:
-            n += len(pdf)
-            views += int(pdf["views"].fillna(0).sum())
-            # pandas .max() over an all-null batch yields NaT, not None, and
-            # NaT comparisons are always False — guard with pd.notna so an
-            # all-null first batch can't pin last_seen past later real
-            # timestamps (matches the oracle's null-ignoring max(ts))
-            batch_last = pdf["message_date"].max()
-            if pd.notna(batch_last) and (last is None or pd.isna(last)
-                                         or batch_last > last):
-                last = batch_last
-        if last is not None and pd.isna(last):
-            last = None
-        state.update((n, views, last))
-        yield pd.DataFrame([{"vendor": key[0], "n_posts": n,
-                             "total_views": views, "last_seen": last}])
-
-    return (messages
-            .select(F.col("repo"), F.col("views"), F.col("message_date"))
-            .groupBy("repo")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    outputMode="update", timeoutConf="NoTimeout"))
+    """Per-vendor running totals (n_posts, total_views, last_seen) across
+    micro-batches — the incremental twin of the scorecard's per-vendor
+    counters. A built-in streaming aggregation: count, sum and max are
+    algebraic, so Spark combines them map-side and keeps one small state row
+    per vendor (bounded). Run it in update mode
+    (:func:`run_stream_once_foreach`): each trigger emits the vendors it
+    touched. max ignores nulls, so a trigger whose timestamps are all null
+    leaves last_seen as it was."""
+    return (messages.groupBy(F.col("repo").alias("vendor"))
+            .agg(F.count(F.lit(1)).alias("n_posts"),
+                 F.sum(F.coalesce("views", F.lit(0))).alias("total_views"),
+                 F.max("message_date").alias("last_seen")))
 
 
 def run_stream_once_foreach(df: DataFrame, out_dir: str, checkpoint_dir: str):

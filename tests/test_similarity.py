@@ -206,3 +206,51 @@ def test_lsh_rerank_joins_past_the_broadcast_budget(spark, emb, monkeypatch):
     n_joins_past, got = run()
     assert (n_joins, n_joins_past) == (1, 3)
     assert got == want
+
+
+def test_lsh_rerank_shapes_agree_on_duplicate_ids(spark, monkeypatch):
+    """A corpus id held by two rows (with different vectors) is scored once
+    per row by both rerank shapes, as a join pairs them: the broadcast
+    lookup and the join give the same rows."""
+    import random
+
+    from amharic_ecommerce_data_extractor_spark.operators import similarity as sim
+
+    rnd = random.Random(5)
+    rows = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(20)]
+    rows.append((5, [rnd.uniform(-1.0, 1.0) for _ in range(8)]))
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = corpus.where(F.col("vec_id") < 3)
+
+    def run():
+        return sorted(tuple(r) for r in knn_lsh(
+            queries, corpus, k=20, dim=8, n_bands=1, bits_per_band=1).collect())
+
+    broadcast = run()
+    monkeypatch.setattr(sim, "_BROADCAST_BYTES", 0)
+    joined = run()
+    assert broadcast == joined
+    fives = [r for r in joined if r[1] == 5]
+    assert fives and len(fives) == 2 * len({r[0] for r in fives})
+
+
+@pytest.mark.parametrize("bad", [None, [0.5] * 7], ids=["null", "ragged"])
+def test_ivf_train_centroids_skips_degenerate_rows(spark, bad):
+    """Training decodes the sample as the assignment kernels do and trains
+    on the clean rows; a sample with no clean row raises a named error."""
+    import random
+
+    import numpy as np
+
+    rnd = random.Random(9)
+    clean = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(50)]
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(clean + [(50, bad)], schema)
+    cents = np.array(ivf_train_centroids(df, n_cells=4, dim=8,
+                                         sample_size=100, seed=1))
+    assert cents.shape == (4, 8) and np.isfinite(cents).all()
+    assert np.allclose(np.linalg.norm(cents, axis=1), 1.0)
+
+    only_bad = spark.createDataFrame([(50, bad), (51, bad)], schema)
+    with pytest.raises(ValueError, match="8-dim"):
+        ivf_train_centroids(only_bad, n_cells=2, dim=8, sample_size=100)

@@ -156,7 +156,8 @@ def test_zero_vector_no_runtime_warning(spark):
 def _degenerate_tables(spark):
     """(queries, corpus) of 8-dim vectors for the rerank tests: clean rows
     plus null vector, ragged lengths (two short ones score each other at
-    their own length), null element, NaN and zero-norm rows on both sides.
+    their own length), null element, NaN and zero-norm rows on both sides,
+    and two ids held by two rows each.
     The spec's ``cosine_expr`` scores a zero-norm pair null with ANSI off
     (see ``_fold_rows``); its ``_cell_sims`` raises DIVIDE_BY_ZERO on a
     zero-norm query under ANSI, where knn_ivf probes the last cells."""
@@ -174,8 +175,11 @@ def _degenerate_tables(spark):
         (900006, [float("nan")] * dim),
     ]
     zero_norm = [(900007, [0.0] * dim), (900008, [-0.0] * dim)]
-    return (spark.createDataFrame(clean[:8] + degenerate + zero_norm, _SCHEMA),
-            spark.createDataFrame(clean + degenerate + zero_norm, _SCHEMA))
+    # duplicated ids: a second copy of clean row 5, and a -0.0 row under
+    # the 0.0 row's id (the two score alike against every row)
+    dup = [clean[5], (900007, [-0.0] * dim)]
+    return (spark.createDataFrame(clean[:8] + degenerate + zero_norm + dup, _SCHEMA),
+            spark.createDataFrame(clean + degenerate + zero_norm + dup, _SCHEMA))
 
 
 def _fold_rows(spark, queries, corpus, finish):
@@ -253,11 +257,14 @@ def test_knn_ivf_rerank_matches_cosine_expr_on_degenerate_rows(spark, search, k)
 
 def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):
     """knn_lsh's two rerank shapes — broadcast lookup and join — score every
-    (query, neighbor) pair of the degenerate tables as the fold does."""
+    (query, neighbor) pair of the degenerate tables as the fold does, once
+    per row of a duplicated id."""
+    from collections import Counter
+
     queries, corpus = _degenerate_tables(spark)
-    want = _fold_rows(spark, queries, corpus, lambda pairs: {
-        (r["query_id"], r["neighbor_id"]): _nan_key(r["sim"])
-        for r in pairs.collect()})
+    want = _fold_rows(spark, queries, corpus, lambda pairs: Counter(
+        (r["query_id"], r["neighbor_id"], _nan_key(r["sim"]))
+        for r in pairs.collect()))
 
     def side(df, name):
         return df.select(F.col("vec_id").alias(name),
@@ -265,8 +272,9 @@ def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):
                          spec._norm(F.col("embedding")).alias(f"{name}_norm"))
 
     q, c = side(queries, "query_id"), side(corpus, "neighbor_id")
+    # distinct id pairs, as knn_lsh's candidates
     cand = (q.select("query_id").crossJoin(c.select("neighbor_id"))
-            .where(F.col("query_id") != F.col("neighbor_id")))
+            .where(F.col("query_id") != F.col("neighbor_id")).distinct())
     joined = cand.join(q, "query_id").join(c, "neighbor_id").select(
         "query_id", "neighbor_id", "query_id_vec", "neighbor_id_vec",
         "query_id_norm", "neighbor_id_norm")
@@ -275,6 +283,6 @@ def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):
         "broadcast": sim._cosine_rerank_broadcast(cand, q.collect(), c.collect()),
     }
     for name, df in shapes.items():
-        got = {(r["query_id"], r["neighbor_id"]): _nan_key(r["sim"])
-               for r in df.collect()}
+        got = Counter((r["query_id"], r["neighbor_id"], _nan_key(r["sim"]))
+                      for r in df.collect())
         assert got == want, name

@@ -129,3 +129,60 @@ def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
     n_distinct_contents = msgs.select("content").distinct().count()
     assert got.count() == n_distinct_contents
     assert got.select("content").distinct().count() == n_distinct_contents
+
+
+def test_stateful_vendor_totals_is_a_builtin_aggregate(spark, tmp_path):
+    """The running totals are a streaming aggregation in the JVM: no row
+    crosses to a Python state function."""
+    from amharic_ecommerce_data_extractor_spark.streaming.stream import (
+        stateful_vendor_totals,
+    )
+
+    src = str(tmp_path / "in")
+    generate_messages(spark, n_rows=40, n_vendors=3).write.parquet(src)
+    q = stateful_vendor_totals(read_message_stream(spark, src))
+    assert q.isStreaming
+    assert q.columns == ["vendor", "n_posts", "total_views", "last_seen"]
+    # a streaming frame has no standalone optimizedPlan(); explain's
+    # extended string plans it incrementally
+    explained = spark._jvm.PythonSQLUtils.explainString(
+        q._jdf.queryExecution(), "extended")
+    plan = explained.split("== Optimized Logical Plan ==")[1] \
+                    .split("== Physical Plan ==")[0]
+    assert "Aggregate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
+def test_stateful_vendor_totals_all_null_trigger_then_real_dates(spark, tmp_path):
+    """A vendor whose first trigger carries only null message_dates ends
+    with last_seen equal to the max of the real timestamps that follow."""
+    from amharic_ecommerce_data_extractor_spark.streaming.stream import (
+        run_stream_once_foreach,
+        stateful_vendor_totals,
+    )
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+    first = generate_messages(spark, n_rows=60, n_vendors=3)
+    vendor = first.select(F.min("repo")).collect()[0][0]
+    first.withColumn("message_date", F.when(F.col("repo") == vendor, None)
+                     .otherwise(F.col("message_date"))).write.parquet(src)
+    run_stream_once_foreach(
+        stateful_vendor_totals(read_message_stream(spark, src)), out, ck)
+    got1 = {r["vendor"]: r for r in spark.read.parquet(out).collect()}
+    assert got1[vendor]["last_seen"] is None
+
+    generate_messages(spark, n_rows=60, n_vendors=3).withColumn(
+        "message_id", F.col("message_id") + 5_000_000
+    ).write.mode("append").parquet(src)
+    run_stream_once_foreach(
+        stateful_vendor_totals(read_message_stream(spark, src)), out, ck)
+    final = {r["vendor"]: r["last_seen"] for r in spark.read.parquet(out)
+             .groupBy("vendor")
+             .agg(F.expr("max_by(last_seen, n_posts)").alias("last_seen"))
+             .collect()}
+    want = {r["repo"]: r["m"] for r in spark.read.parquet(src)
+            .groupBy("repo").agg(F.max("message_date").alias("m")).collect()}
+    assert final == want
+    assert final[vendor] is not None

@@ -2,19 +2,22 @@
 scorecard features as window aggregations over the canonical graph).
 
 Input: the canonicalized triple table (subj, pred, obj, message_id,
-confidence). Outputs one row per vendor with graph-shape features:
+confidence). Outputs one row per vendor with a ``sells`` edge:
 
 * catalog breadth   — distinct canonical products sold
 * geo presence      — distinct canonical locations
 * contactability    — distinct contact points
 * price positioning — median/avg of the vendor's products' canonical prices
+                      (each distinct product once, not weighted by mentions)
 * product_rank      — dense rank of vendors by catalog breadth (window)
 * share_of_market   — vendor's product mentions / all product mentions
-                      (window over the whole table — tiny: one row per vendor)
 
-All aggregations are algebraic or exact-percentile over per-vendor groups;
-the windows run over the vendor-level table (|vendors| rows), never over
-message-sized data.
+One shape: each partial aggregate is computed once and shared. The
+``sells`` edges are grouped once by (vendor, product) with a mention count;
+that table, joined to the per-product price, gives breadth, mentions and
+both price stats in one vendor groupBy. ``located_in`` and ``contact`` share
+one vendor groupBy. The two windows run over the vendor-level table only
+(|vendors| rows), never over message-sized data.
 """
 
 from __future__ import annotations
@@ -23,91 +26,33 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def vendor_graph_features(canon_triples: DataFrame,
-                          stats_mode: str = "window") -> DataFrame:
-    """stats_mode (same values either way, different physical plan):
-
-    * ``window`` (default, fused path) — product_rank and share_of_mentions
-      via unpartitioned windows over the vendor-level table (tiny today).
-    * ``broadcast`` (staged pipeline, checkpointed input) — no
-      single-partition window anywhere, survives vendor-cardinality blow-up:
-      share denominator is an agg + crossJoin(broadcast); product_rank is
-      decomposed into a PARTITIONED within-group row_number plus a
-      broadcast-joined cumulative offset from the (small, distinct-breadth)
-      histogram — rank(v) = #vendors in strictly-greater breadth groups
-      + row_number within v's group, which equals the window dense_rank
-      because (n_products, vendor) is a unique ordering key.
-    """
-    t = canon_triples
-    sells = t.where(F.col("pred") == "sells")
-    located = t.where(F.col("pred") == "located_in")
-    contact = t.where(F.col("pred") == "contact")
-    priced = t.where(F.col("pred") == "priced_at")
-
-    per_vendor = sells.groupBy(F.col("subj").alias("vendor")).agg(
-        F.countDistinct("obj").alias("n_products"),
-        F.count("*").alias("n_product_mentions"),
-    )
-    geo = located.groupBy(F.col("subj").alias("vendor")).agg(
-        F.countDistinct("obj").alias("n_locations"))
-    con = contact.groupBy(F.col("subj").alias("vendor")).agg(
-        F.countDistinct("obj").alias("n_contacts"))
-
-    # product → price stats, joined back through the vendor's sells edges
-    prod_price = priced.groupBy(F.col("subj").alias("product")).agg(
-        F.round(F.avg(F.col("obj").try_cast("double")), 6).alias("avg_product_price"))
-    vendor_price = (
-        sells.select(F.col("subj").alias("vendor"), F.col("obj").alias("product"))
-        .dropDuplicates(["vendor", "product"])
-        .join(prod_price, "product", "left")
-        .groupBy("vendor")
-        .agg(F.round(F.avg("avg_product_price"), 6).alias("avg_price"),
-             F.round(F.expr("percentile(avg_product_price, 0.5)"), 6).alias("median_price"))
-    )
-
-    feats = (per_vendor
-             .join(geo, "vendor", "left")
-             .join(con, "vendor", "left")
-             .join(vendor_price, "vendor", "left")
-             .na.fill({"n_locations": 0, "n_contacts": 0}))
-
-    out_cols = ["vendor", "n_products", "n_product_mentions", "n_locations",
-                "n_contacts", "avg_price", "median_price", "product_rank",
-                "share_of_mentions"]
-
-    if stats_mode == "broadcast":
-        feats = feats.localCheckpoint(eager=False)
-        # cumulative offset per breadth group: a broadcast theta-join over the
-        # distinct-breadth histogram (small by construction)
-        grp = feats.groupBy("n_products").agg(F.count("*").alias("_cnt"))
-        offs = (
-            grp.alias("a")
-            .join(F.broadcast(grp.select(F.col("n_products").alias("_np_b"),
-                                         F.col("_cnt").alias("_cnt_b"))),
-                  F.col("_np_b") > F.col("a.n_products"), "left")
-            .groupBy("a.n_products")
-            .agg(F.coalesce(F.sum("_cnt_b"), F.lit(0)).alias("_n_before")))
-        total = feats.agg(F.sum("n_product_mentions").alias("_total_mentions"))
-        w_in_grp = Window.partitionBy("n_products").orderBy(F.asc("vendor"))
-        return (feats
-                .join(F.broadcast(offs), "n_products")
-                .crossJoin(F.broadcast(total))
-                .withColumn("product_rank",
-                            (F.col("_n_before") + F.row_number().over(w_in_grp))
-                            .cast("int"))
-                .withColumn("share_of_mentions",
-                            F.round(F.col("n_product_mentions")
-                                    / F.col("_total_mentions"), 6))
-                .select(*out_cols))
-    if stats_mode != "window":
-        raise ValueError(f"stats_mode must be 'window' or 'broadcast', got {stats_mode!r}")
-
+def vendor_graph_features(canon_triples: DataFrame) -> DataFrame:
+    t, pred = canon_triples, F.col("pred")
+    prices = (t.where(pred == "priced_at")
+              .groupBy(F.col("subj").alias("product"))
+              .agg(F.round(F.avg(F.col("obj").try_cast("double")), 6).alias("_price")))
+    # a null product is a mention but not a product: count(product) skips it
+    catalog = (t.where(pred == "sells")
+               .groupBy(F.col("subj").alias("vendor"), F.col("obj").alias("product"))
+               .agg(F.count(F.lit(1)).alias("_mentions"))
+               .join(prices, "product", "left")
+               .groupBy("vendor")
+               .agg(F.count("product").alias("n_products"),
+                    F.sum("_mentions").alias("n_product_mentions"),
+                    F.round(F.avg("_price"), 6).alias("avg_price"),
+                    F.round(F.percentile("_price", 0.5), 6).alias("median_price")))
+    reach = (t.where(pred.isin("located_in", "contact"))
+             .groupBy(F.col("subj").alias("vendor"))
+             .agg(F.countDistinct(F.when(pred == "located_in", F.col("obj")))
+                  .alias("n_locations"),
+                  F.countDistinct(F.when(pred == "contact", F.col("obj")))
+                  .alias("n_contacts")))
     w_rank = Window.orderBy(F.desc("n_products"), F.asc("vendor"))
-    w_all = Window.partitionBy()
-    return feats.select(
-        "vendor", "n_products", "n_product_mentions", "n_locations", "n_contacts",
-        "avg_price", "median_price",
-        F.dense_rank().over(w_rank).alias("product_rank"),
-        F.round(F.col("n_product_mentions") / F.sum("n_product_mentions").over(w_all), 6)
-         .alias("share_of_mentions"),
-    )
+    return (catalog.join(reach, "vendor", "left")
+            .na.fill({"n_locations": 0, "n_contacts": 0})
+            .select("vendor", "n_products", "n_product_mentions", "n_locations",
+                    "n_contacts", "avg_price", "median_price",
+                    F.dense_rank().over(w_rank).alias("product_rank"),
+                    F.round(F.col("n_product_mentions")
+                            / F.sum("n_product_mentions").over(Window.partitionBy()), 6)
+                    .alias("share_of_mentions")))

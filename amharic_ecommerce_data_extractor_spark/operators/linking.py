@@ -473,7 +473,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     tracked job per materialized exchange stage, so job counts scale with
     rounds × plan-shuffle-stages, not rounds × 2)."""
     cur = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    cur = cur.localCheckpoint()
+    cur = cur.localCheckpoint(eager=False)  # materialized by the signature
     n_edges = _signature(cur)[0]
     if n_edges < local_threshold:
         if stats is not None:

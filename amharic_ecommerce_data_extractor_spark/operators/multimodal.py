@@ -160,29 +160,33 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, feature
 
 
-def extract_image_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """media table → per-image features via Arrow-batched mapInPandas.
-    Narrow plan (no shuffle); decode cost is batch-amortized; binary payloads
-    cross the Arrow boundary zero-copy."""
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)] + IMAGE_FEATURE_FIELDS)
+def _map_payloads(media: DataFrame, media_type: str, fields: list,
+                  rows_of) -> DataFrame:
+    """The shell of every media pass: the ``media_type`` rows' (media_id,
+    payload) cross the Arrow boundary through one mapInPandas (narrow plan,
+    batch-amortized decode); ``rows_of(payload bytes)`` yields the output
+    rows of one payload as tuples in ``fields`` order, each prefixed with
+    its media_id. A null payload decodes as ``b""``."""
+    schema = T.StructType([T.StructField("media_id", T.LongType(), False)] + fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                w, h, feat = _decode_image_stub(data)
-                recs.append({
-                    "media_id": int(mid), "width": w, "height": h,
-                    "n_bytes": len(data),
-                    "payload_sha256": hashlib.sha256(data).hexdigest(),
-                    "feature": feat,
-                })
-            yield pd.DataFrame(recs, columns=[f.name for f in out_schema.fields])
+            yield pd.DataFrame(
+                [(int(mid), *row) for mid, payload in zip(pdf["media_id"], pdf["payload"])
+                 for row in rows_of(bytes(payload) if payload is not None else b"")],
+                columns=schema.names)
 
-    img = media.where(F.col("media_type") == "image").select("media_id", "payload")
-    return img.mapInPandas(run, schema=out_schema)
+    return (media.where(F.col("media_type") == media_type)
+            .select("media_id", "payload").mapInPandas(run, schema=schema))
+
+
+def extract_image_features(media: DataFrame) -> DataFrame:
+    """media table → per-image features (one row per image)."""
+    def rows_of(data: bytes):
+        w, h, feat = _decode_image_stub(data)
+        yield w, h, len(data), hashlib.sha256(data).hexdigest(), feat
+
+    return _map_payloads(media, "image", IMAGE_FEATURE_FIELDS, rows_of)
 
 
 AUDIO_FEATURE_FIELDS = [
@@ -269,25 +273,13 @@ def _audio_features_stub(payload: bytes) -> dict:
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
-    """media table → per-clip audio features via Arrow-batched mapInPandas —
-    same narrow, batch-amortized shape as extract_image_features; only
-    (media_id, payload) cross the Arrow boundary."""
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)] + AUDIO_FEATURE_FIELDS)
+    """media table → per-clip audio features (one row per clip)."""
+    def rows_of(data: bytes):
+        feats = {**_audio_features_stub(data), "n_bytes": len(data),
+                 "payload_sha256": hashlib.sha256(data).hexdigest()}
+        yield tuple(feats[f.name] for f in AUDIO_FEATURE_FIELDS)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                rec = {"media_id": int(mid), "n_bytes": len(data),
-                       "payload_sha256": hashlib.sha256(data).hexdigest()}
-                rec.update(_audio_features_stub(data))
-                recs.append(rec)
-            yield pd.DataFrame(recs, columns=[f.name for f in out_schema.fields])
-
-    aud = media.where(F.col("media_type") == "audio").select("media_id", "payload")
-    return aud.mapInPandas(run, schema=out_schema)
+    return _map_payloads(media, "audio", AUDIO_FEATURE_FIELDS, rows_of)
 
 
 def sample_video_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
@@ -425,26 +417,10 @@ def _video_frames_stub(payload: bytes, every_n: int):
 
 def extract_video_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
     """media table → sampled decoded frames (media_id, frame_idx, width,
-    height, n_frames, feature) via Arrow-batched mapInPandas — the same
-    narrow, batch-amortized shape as the image/audio paths; only
-    (media_id, payload) cross the Arrow boundary, and the per-frame grid
-    features (not pixels) come back."""
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)] + VIDEO_FRAME_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                for idx, w, h, n, feat in _video_frames_stub(data, every_n):
-                    recs.append({"media_id": int(mid), "frame_idx": idx,
-                                 "width": w, "height": h, "n_frames": n,
-                                 "feature": feat})
-            yield pd.DataFrame(recs, columns=[f.name for f in out_schema.fields])
-
-    vid = media.where(F.col("media_type") == "video").select("media_id", "payload")
-    return vid.mapInPandas(run, schema=out_schema)
+    height, n_frames, feature): the per-frame grid features, not pixels,
+    come back."""
+    return _map_payloads(media, "video", VIDEO_FRAME_FIELDS,
+                         lambda data: _video_frames_stub(data, every_n))
 
 
 def media_profile(media: DataFrame) -> DataFrame:
@@ -477,29 +453,18 @@ def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> Data
     re-encode as binary PPM) for BMP/PGM/PPM payloads; deterministic
     sha-fake payload for undecodable bytes (pipeline-shape testing). Swap
     the fallback for PIL in production; schema/batching stay identical."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ])
+    fields = [T.StructField("width", T.IntegerType(), False),
+              T.StructField("height", T.IntegerType(), False),
+              T.StructField("payload", T.BinaryType(), True)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                if data[:4] == b"REAL":
-                    raise NotImplementedError(
-                        "this payload requires PIL/libvips on executors")
-                decoded = _decode_pixels(data)
-                if decoded is not None:
-                    out = _encode_ppm(_resize_nearest(decoded[2], width, height))
-                else:
-                    out = hashlib.sha256(data + f"{width}x{height}".encode()).digest()
-                recs.append({"media_id": int(mid), "width": width,
-                             "height": height, "payload": out})
-            yield pd.DataFrame(recs, columns=[f.name for f in out_schema.fields])
+    def rows_of(data: bytes):
+        if data[:4] == b"REAL":
+            raise NotImplementedError("this payload requires PIL/libvips on executors")
+        decoded = _decode_pixels(data)
+        if decoded is not None:
+            out = _encode_ppm(_resize_nearest(decoded[2], width, height))
+        else:
+            out = hashlib.sha256(data + f"{width}x{height}".encode()).digest()
+        yield width, height, out
 
-    img = media.where(F.col("media_type") == "image").select("media_id", "payload")
-    return img.mapInPandas(run, schema=out_schema)
+    return _map_payloads(media, "image", fields, rows_of)

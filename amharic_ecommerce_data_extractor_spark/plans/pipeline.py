@@ -1,12 +1,13 @@
 """End-to-end staged KG-construction pipeline (the rebuild of the reference's
 5-stage CLI ``scripts/run_pipeline.py:251-287`` as a checkpointed Spark DAG).
 
-Stages (each checkpointed with its lineage in the stage marker, resumable):
+Stages (each checkpointed with its lineage in the stage marker, resumable;
+a stage whose content breaks its content_sha256 is never committed):
 
   ingest     raw message corpus (synthetic generator here; any parquet/Iceberg
-             table of the graft shape in production) + sha256 verification
+             table of the graft shape in production)
   extract    fused preprocess→tokenize→BIO→entities (one Arrow stage),
-             chunked for intra-stage resume; sha256 re-verified after
+             chunked for intra-stage resume
   triples    (subj, pred, obj, message_id, confidence) emission
   link       MinHash-LSH blocking + connected components → canonical surfaces
   graph      canonical nodes + canonical triples (the materialized KG)
@@ -113,28 +114,21 @@ def run_pipeline(
 
     messages = timed("ingest", lambda: ckpt.run_stage(
         spark, workdir, "ingest", build_ingest, partition_by=[ckpt.CHUNK_COL]))
-    assert ckpt.verify_sha256_invariant(messages) == 0, "sha256 invariant broken at ingest"
 
     # Stage 1 + 1b: chunked extract (intra-stage resume; chunk filter prunes
     # ingest partitions), finalized as ONE message_id-bucketed table
     # (sources/bucketed.py layout at the checkpoint layer). The bucket
-    # shuffle is paid here once, per pipeline run ever (the stage resumes
-    # like any other); every downstream consumer that joins or groups on
-    # message_id — the predictions ⋈ metadata join of the reference
-    # scorecard path (vendor_scorecard.py:64-67, operators/rollup.py
-    # join_message_meta) — then plans with NO exchange off this table
-    # (tests/test_pipeline_bucketed.py pins the exchange-free plan). The
-    # expensive Python extraction keeps its per-chunk resume; this JVM-only
-    # rewrite is the cheap tail of the stage. On Iceberg the same layout is
-    # the bucket(n, message_id) partition transform.
+    # shuffle is paid here once; every downstream consumer that joins or
+    # groups on message_id (operators/rollup.py join_message_meta) then
+    # plans with NO exchange off this table (tests/test_pipeline_bucketed.py
+    # pins the plan). On Iceberg the same layout is the bucket(n, message_id)
+    # partition transform.
     #
     # The chunked stage runs INSIDE the finalize's build closure: once the
     # extract_bucketed marker exists, a resume never consults the chunk
-    # dirs, so a space-constrained deployment can reclaim the 2× extract
-    # storage with ckpt.gc_chunk_dirs(workdir, "extract",
-    # "extract_bucketed") — the chunk dirs are resume points only, never
-    # read again by later stages (tests/test_pipeline_bucketed.py pins the
-    # post-GC resume).
+    # dirs, so ckpt.gc_chunk_dirs(workdir, "extract", "extract_bucketed")
+    # can reclaim their 2× extract storage (tests/test_pipeline_bucketed.py
+    # pins that resume).
     extracted = timed("extract_bucketed", lambda: ckpt.run_stage(
         spark, workdir, "extract_bucketed",
         lambda: timed("extract", lambda: ckpt.chunked_stage(
@@ -142,7 +136,6 @@ def run_pipeline(
             lambda part: extract_entities(part).drop(ckpt.CHUNK_COL),
             n_chunks=n_chunks)),
         bucket_by=("message_id", n_buckets)))
-    assert ckpt.verify_sha256_invariant(extracted) == 0, "sha256 invariant broken at extract"
 
     # Stage 2: raw triples
     triples = timed("triples", lambda: ckpt.run_stage(
@@ -159,17 +152,16 @@ def run_pipeline(
     timed("graph_nodes", lambda: ckpt.run_stage(
         spark, workdir, "graph_nodes", lambda: graph_nodes(canon, canon_triples)))
 
-    # Stage 5: vendor scorecard + graph-derived vendor features.
-    # stats_mode='broadcast': both inputs are materialized checkpoints, so
-    # there is no diamond-recompute risk and the broadcast normalization
-    # avoids the single-partition window (a straggler at high vendor
-    # cardinality)
+    # Stage 5: vendor scorecard + graph-derived vendor features. The
+    # scorecard's stats_mode='broadcast' normalizes with agg +
+    # crossJoin(broadcast) instead of a single-partition window; its input
+    # is a materialized checkpoint, so there is no diamond recompute.
     timed("scorecard", lambda: ckpt.run_stage(
         spark, workdir, "scorecard",
         lambda: vendor_scorecard(extracted, stats_mode="broadcast")))
     timed("graph_features", lambda: ckpt.run_stage(
         spark, workdir, "graph_features",
-        lambda: vendor_graph_features(canon_triples, stats_mode="broadcast")))
+        lambda: vendor_graph_features(canon_triples)))
 
     def rows(stage: str) -> int:
         return ckpt.committed_rows(os.path.join(workdir, stage))

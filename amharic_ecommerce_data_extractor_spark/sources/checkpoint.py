@@ -7,10 +7,13 @@ then a ``_STAGE_DONE`` JSON marker written LAST (its presence is the
 commit). The marker holds stage name, ``rows``, format, wall time and the
 lineage: row count, an order-insensitive content signature (bit_xor of
 xxhash64 over all columns in read-back order), the ``content_sha256``
-invariant signature when that column exists, and the read-back schema as
-DDL (a fraction of the JSON form's size). The lineage is observed on the
-write itself (``DataFrame.observe``), and reads use the committed schema,
-so neither a run nor a resume pays a lineage or schema-inference job.
+invariant signature when that column exists, the mismatch count of that
+invariant (``sha256_mismatch``: rows whose ``content`` no longer hashes to
+it; non-zero fails the stage, unmarked) when ``content`` exists too, and
+the read-back schema as DDL (a fraction of the JSON form's size). The
+lineage is observed on the write itself (``DataFrame.observe``), and reads
+use the committed schema, so neither a run nor a resume pays a lineage,
+invariant or schema-inference job.
 Markers from before marker-held lineage (no ``lineage`` key) resume by
 inference and verify against their ``_lineage`` parquet dir.
 
@@ -39,6 +42,10 @@ from pyspark.sql import types as T
 
 MARKER = "_STAGE_DONE"
 CHUNK_COL = "_chunk"
+
+
+class Sha256InvariantError(ValueError):
+    """A stage's ``content`` no longer matches its ``content_sha256``."""
 
 
 def with_chunk_column(df: DataFrame, key_col: str = "message_id",
@@ -83,11 +90,16 @@ def _nullable(dt: T.DataType) -> T.DataType:
 
 def _lineage_aggs(cols: list[str]) -> list:
     """Row count + order-insensitive signature over ``cols`` (in that order),
-    plus the sha256 invariant signature when the column exists."""
+    plus the sha256 invariant signature when the column exists and the
+    invariant's mismatch count when ``content`` exists too."""
     aggs = [F.count(F.lit(1)).alias("n_rows"),
             F.bit_xor(F.xxhash64(*cols)).alias("content_sig")]
     if "content_sha256" in cols:
         aggs.append(F.bit_xor(F.xxhash64("content_sha256")).alias("sha256_sig"))
+        if "content" in cols:
+            aggs.append(F.count_if(
+                F.sha2(F.coalesce(F.col("content"), F.lit("")), 256)
+                != F.col("content_sha256")).alias("sha256_mismatch"))
     return aggs
 
 
@@ -184,6 +196,9 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
         w.format(fmt).save(data_path)
 
     lineage = obs.get
+    if lineage.get("sha256_mismatch"):
+        raise Sha256InvariantError(f"stage {stage!r} not committed: {lineage['sha256_mismatch']}"
+                                   " rows whose content does not hash to content_sha256")
     marker = {"stage": stage, "rows": lineage["n_rows"], "fmt": fmt,
               "seconds": round(time.perf_counter() - t0, 3),
               "lineage": {**lineage, "schema": ddl}}
@@ -389,7 +404,7 @@ def verify_stage_lineage(spark: SparkSession, stage_dir: str,
     bit_xor is associative and commutative, so the content signature of a
     fresh scan equals the one observed at write time however the data is
     partitioned on re-read. Compares row count + content signature (+ the
-    sha256 signature when present). Returns {'ok': bool, ...evidence}. A
+    sha256 keys when present). Returns {'ok': bool, ...evidence}. A
     marker written before marker-held lineage is checked against the
     XOR-fold of its per-partition ``_lineage`` parquet rows.
 
@@ -415,10 +430,3 @@ def verify_stage_lineage(spark: SparkSession, stage_dir: str,
     return {"ok": all(checks.values()), "checks": checks,
             "stored": stored, "fresh": {k: fresh.get(k) for k in checks}}
 
-
-def verify_sha256_invariant(df: DataFrame, text_col: str = "content") -> int:
-    """Rows whose content no longer matches their carried sha256 — must be 0
-    at every checkpoint (BASELINE.md row invariant)."""
-    return df.where(
-        F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256) != F.col("content_sha256")
-    ).count()

@@ -9,6 +9,8 @@ Pins:
   columns last, so the signature must hash in read-back order; checked for
   a ``partition_by`` and a ``bucket_by`` stage against a fresh inferred read;
 * empty frames commit ``rows == 0`` without blocking on the observation;
+* the sha256 invariant — the marker holds the mismatch count, and a stage
+  whose content was altered after hashing raises and is never committed;
 * markers written before marker-held lineage (no ``lineage`` key, a
   per-partition ``_lineage`` parquet dir) still resume and verify;
 * the job budget — committing a plain stage runs no more jobs than a bare
@@ -20,6 +22,7 @@ import os
 import shutil
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from amharic_ecommerce_data_extractor_spark.plans.pipeline import run_pipeline
@@ -95,6 +98,17 @@ def test_bucketed_stage_signature_matches_fresh_read(spark, tmp_path):
     assert lineage["content_sig"] == _fresh_sig(back) == _fresh_sig(out)
     res = ckpt.verify_stage_lineage(spark, d)
     assert res["ok"] and "sha256_sig" in res["checks"], res
+
+
+def test_sha256_mismatch_fails_the_stage_uncommitted(spark, tmp_path):
+    ckpt.run_stage(spark, str(tmp_path), "good", lambda: _frame(spark))
+    assert _lineage(str(tmp_path / "good"))["sha256_mismatch"] == 0
+    # one row's content altered after its content_sha256 was taken
+    altered = _frame(spark).withColumn("content", F.when(
+        F.col("message_id") == 7, F.lit("tampered")).otherwise(F.col("content")))
+    with pytest.raises(ckpt.Sha256InvariantError, match="1 rows"):
+        ckpt.run_stage(spark, str(tmp_path), "bad", lambda: altered)
+    assert not ckpt.stage_done(str(tmp_path / "bad"))
 
 
 def test_empty_frame_commits_zero_rows(spark, tmp_path):

@@ -98,23 +98,25 @@ def test_scorecard_broadcast_stats_no_window(spark):
     assert bc_df.collect() == win
 
 
-def test_graph_features_broadcast_stats_partitioned_windows_only(spark):
-    """graph-features stats_mode='broadcast': the only window left is the
-    within-breadth-group row_number (partitioned by n_products); rank and
-    share values match window mode exactly."""
+def test_graph_features_job_budget(spark):
+    """vendor_graph_features aggregates each predicate slice once: one
+    (vendor, product) and one vendor groupBy over sells, one over
+    located_in + contact, windows over the vendor table only. The earlier
+    per-predicate aggregations joined back ran 15 jobs here, and its
+    broadcast rank decomposition 21."""
     from amharic_ecommerce_data_extractor_spark.operators.graph_features import (
         vendor_graph_features,
     )
     from amharic_ecommerce_data_extractor_spark.operators.triples import emit_triples
+    from tests.test_checkpoint_lineage import _jobs_in_group
 
     msgs = generate_messages(spark, n_rows=200, n_vendors=8)
     triples = emit_triples(extract_entities(msgs)).localCheckpoint()
-    win = sorted(map(tuple, vendor_graph_features(triples).collect()))
-    bc_df = vendor_graph_features(triples, stats_mode="broadcast")
-    specs = [ln for ln in _optimized(bc_df).splitlines()
-             if "windowspecdefinition" in ln]
-    assert specs and all("n_products#" in ln for ln in specs), specs
-    assert sorted(map(tuple, bc_df.collect())) == win
+    out = []
+    n_jobs = _jobs_in_group(spark, "graph-features",
+                            lambda: out.extend(vendor_graph_features(triples).collect()))
+    assert len(out) >= 3
+    assert n_jobs <= 10, n_jobs
 
 
 def test_scan_partition_sizing(spark, sf_dir):

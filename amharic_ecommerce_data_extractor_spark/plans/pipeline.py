@@ -60,15 +60,22 @@ def entity_surfaces(extracted: DataFrame) -> DataFrame:
 
 
 def graph_nodes(canon: DataFrame, triples: DataFrame) -> DataFrame:
-    """Node table of the materialized graph: vendors + canonical entities."""
-    vendors = (triples.where(F.col("pred").isin("sells", "located_in", "contact"))
-               .select(F.col("subj").alias("surface")).distinct()
-               .withColumn("type", F.lit("VENDOR")))
-    contacts = (triples.where(F.col("pred") == "contact")
-                .select(F.col("obj").alias("surface")).distinct()
-                .withColumn("type", F.lit("CONTACT_INFO")))
-    ents = canon.select("type", F.col("canonical_surface").alias("surface")).distinct()
-    nodes = vendors.unionByName(contacts).unionByName(ents).dropDuplicates(["type", "surface"])
+    """Node table of the materialized graph: vendors + canonical entities.
+
+    One scan of the triples: each vendor-predicate row explodes into its
+    (VENDOR, subj) node and, for ``contact``, its (CONTACT_INFO, obj) node;
+    one dropDuplicates over those and the entity surfaces. A null subj or
+    obj is a node: only the struct a non-contact row leaves out is null."""
+    pred = F.col("pred")
+    emitted = F.array(
+        F.struct(F.lit("VENDOR").alias("type"), F.col("subj").alias("surface")),
+        F.when(pred == "contact",
+               F.struct(F.lit("CONTACT_INFO").alias("type"), F.col("obj").alias("surface"))))
+    from_triples = (triples.where(pred.isin("sells", "located_in", "contact"))
+                    .select(F.explode(emitted).alias("n")).where(F.col("n").isNotNull())
+                    .select("n.type", "n.surface"))
+    ents = canon.select("type", F.col("canonical_surface").alias("surface"))
+    nodes = from_triples.unionByName(ents).dropDuplicates(["type", "surface"])
     return nodes.select(F.xxhash64("type", "surface").alias("node_id"), "type", "surface")
 
 

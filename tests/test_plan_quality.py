@@ -119,6 +119,61 @@ def test_graph_features_job_budget(spark):
     assert n_jobs <= 10, n_jobs
 
 
+def _graph_nodes_reference(canon, triples):
+    """The node table as three distinct projections and a dropDuplicates
+    over their union (the shape graph_nodes replaced)."""
+    vendors = (triples.where(F.col("pred").isin("sells", "located_in", "contact"))
+               .select(F.col("subj").alias("surface")).distinct()
+               .withColumn("type", F.lit("VENDOR")))
+    contacts = (triples.where(F.col("pred") == "contact")
+                .select(F.col("obj").alias("surface")).distinct()
+                .withColumn("type", F.lit("CONTACT_INFO")))
+    ents = canon.select("type", F.col("canonical_surface").alias("surface")).distinct()
+    nodes = vendors.unionByName(contacts).unionByName(ents).dropDuplicates(["type", "surface"])
+    return nodes.select(F.xxhash64("type", "surface").alias("node_id"), "type", "surface")
+
+
+def _graph_node_inputs(spark):
+    triples = spark.createDataFrame([
+        ("v1", "sells", "phone"), ("v1", "sells", "phone"), ("v1", "located_in", "bole"),
+        ("v1", "contact", "0911"), ("v2", "contact", None), (None, "sells", "tv"),
+        (None, "contact", "0911"), ("v3", "price_of", "100"), ("phone", "sells", "x"),
+    ], "subj string, pred string, obj string")
+    canon = spark.createDataFrame([
+        ("PRODUCT", "phone"), ("PRODUCT", "phone"), ("LOC", "bole"), ("LOC", None),
+        ("VENDOR", "v1"),
+    ], "type string, canonical_surface string")
+    return canon, triples
+
+
+def test_graph_nodes_equals_reference(spark):
+    """Null subj and null contact obj are nodes; a non-vendor predicate
+    adds none; a surface shared across types is one node per type."""
+    from amharic_ecommerce_data_extractor_spark.plans.pipeline import graph_nodes
+
+    canon, triples = _graph_node_inputs(spark)
+    got = sorted(graph_nodes(canon, triples).collect(), key=str)
+    assert got == sorted(_graph_nodes_reference(canon, triples).collect(), key=str)
+    assert {(r["type"], r["surface"]) for r in got} == {
+        ("VENDOR", "v1"), ("VENDOR", "v2"), ("VENDOR", None), ("VENDOR", "phone"),
+        ("CONTACT_INFO", "0911"), ("CONTACT_INFO", None),
+        ("PRODUCT", "phone"), ("LOC", "bole"), ("LOC", None)}
+
+
+def test_graph_nodes_job_budget(spark):
+    """One scan of the triples and one of the entities feed a single
+    dropDuplicates: the three-distinct shape ran 5 jobs here."""
+    from amharic_ecommerce_data_extractor_spark.plans.pipeline import graph_nodes
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    canon, triples = (df.localCheckpoint() for df in _graph_node_inputs(spark))
+    out = []
+    n_jobs = _jobs_in_group(spark, "graph-nodes",
+                            lambda: out.extend(graph_nodes(canon, triples).collect()))
+    assert len(out) == 9
+    assert n_jobs <= 3, n_jobs
+
+
 def test_scan_partition_sizing(spark, sf_dir):
     # files.maxPartitionBytes default keeps small sf files in few partitions;
     # the session must still give the big sf real parallelism potential

@@ -156,8 +156,8 @@ def test_zero_vector_no_runtime_warning(spark):
 def _degenerate_tables(spark):
     """(queries, corpus) of 8-dim vectors for the rerank tests: clean rows
     plus null vector, ragged lengths (two short ones score each other at
-    their own length), null element, NaN and zero-norm rows on both sides,
-    and two ids held by two rows each.
+    their own length), null element, NaN, +inf, -inf and zero-norm rows on
+    both sides, and two ids held by two rows each.
     The spec's ``cosine_expr`` scores a zero-norm pair null with ANSI off
     (see ``_fold_rows``); its ``_cell_sims`` raises DIVIDE_BY_ZERO on a
     zero-norm query under ANSI, where knn_ivf probes the last cells."""
@@ -173,6 +173,8 @@ def _degenerate_tables(spark):
         (900004, [1.0] * (dim + 1)),
         (900005, [1.0] * 3 + [None] + [1.0] * (dim - 4)),
         (900006, [float("nan")] * dim),
+        (900014, [float("inf")] + [0.5] * (dim - 1)),
+        (900015, [0.5] * (dim - 1) + [float("-inf")]),
     ]
     zero_norm = [(900007, [0.0] * dim), (900008, [-0.0] * dim)]
     # duplicated ids: a second copy of clean row 5, and a -0.0 row under
@@ -253,6 +255,8 @@ def test_knn_ivf_rerank_matches_cosine_expr_on_degenerate_rows(spark, search, k)
         assert by_pair[(900003, 900013)] is not None
         assert by_pair[(0, 900001)] is None and by_pair[(0, 900007)] is None
         assert math.isnan(by_pair[(0, 900006)])
+        # an infinite element makes the fold's dot and norm infinite: NaN
+        assert math.isnan(by_pair[(0, 900014)]) and math.isnan(by_pair[(900015, 900014)])
 
 
 def test_both_rerank_shapes_match_cosine_expr_on_degenerate_rows(spark):

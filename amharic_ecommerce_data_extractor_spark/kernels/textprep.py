@@ -285,15 +285,3 @@ def preprocess_series(s: pd.Series, remove_stopwords: bool = False) -> pd.Series
             out = out.str.replace(rx, " ", regex=True)
         out = out.str.replace(_WS_RE, " ", regex=True).str.strip()
     return out
-
-
-def tokenize_series(s: pd.Series) -> pd.Series:
-    """Vectorized tokenizer over already-preprocessed text; returns a Series
-    of list[str]."""
-    out = _as_clean_str_series(s)
-    out = out.str.replace(_WS_RE, " ", regex=True).str.strip()
-    out = out.str.replace(_TOKEN_PUNCT_RE, r" \1 ", regex=True)
-    out = out.str.replace(_DIGIT_THEN_NON_RE, r"\1 \2", regex=True)
-    out = out.str.replace(_NON_THEN_DIGIT_RE, r"\1 \2", regex=True)
-    out = out.str.replace(_WS_RE, " ", regex=True).str.strip()
-    return out.map(lambda x: [t for t in x.split(" ") if t])

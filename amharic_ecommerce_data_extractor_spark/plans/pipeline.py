@@ -1,13 +1,15 @@
 """End-to-end staged KG-construction pipeline (the rebuild of the reference's
 5-stage CLI ``scripts/run_pipeline.py:251-287`` as a checkpointed Spark DAG).
 
-Stages (each checkpointed with its lineage in the stage marker, resumable;
-a stage whose content breaks its content_sha256 is never committed):
+Stages (each checkpointed once, with its lineage in the stage marker,
+resumable; a stage whose content breaks its content_sha256 is never
+committed):
 
   ingest     raw message corpus (synthetic generator here; any parquet/Iceberg
              table of the graft shape in production)
   extract    fused preprocess→tokenize→BIO→entities (one Arrow stage),
-             chunked for intra-stage resume
+             chunked for intra-stage resume; each chunk is committed with
+             its own marker, and the chunk dirs are the extract checkpoint
   triples    (subj, pred, obj, message_id, confidence) emission
   link       MinHash-LSH blocking + connected components → canonical surfaces
   graph      canonical nodes + canonical triples (the materialized KG)
@@ -87,7 +89,6 @@ def run_pipeline(
     n_chunks: int = 8,
     lsh_threshold: float = 0.6,
     verify_lineage: bool = False,
-    n_buckets: int = 16,
 ) -> dict:
     """Checkpoint format: parquet in this sandbox; set
     SPARK_GRAFT_CHECKPOINT_FORMAT=iceberg (with the runtime jar + catalog
@@ -122,27 +123,13 @@ def run_pipeline(
     messages = timed("ingest", lambda: ckpt.run_stage(
         spark, workdir, "ingest", build_ingest, partition_by=[ckpt.CHUNK_COL]))
 
-    # Stage 1 + 1b: chunked extract (intra-stage resume; chunk filter prunes
-    # ingest partitions), finalized as ONE message_id-bucketed table
-    # (sources/bucketed.py layout at the checkpoint layer). The bucket
-    # shuffle is paid here once; every downstream consumer that joins or
-    # groups on message_id (operators/rollup.py join_message_meta) then
-    # plans with NO exchange off this table (tests/test_pipeline_bucketed.py
-    # pins the plan). On Iceberg the same layout is the bucket(n, message_id)
-    # partition transform.
-    #
-    # The chunked stage runs INSIDE the finalize's build closure: once the
-    # extract_bucketed marker exists, a resume never consults the chunk
-    # dirs, so ckpt.gc_chunk_dirs(workdir, "extract", "extract_bucketed")
-    # can reclaim their 2× extract storage (tests/test_pipeline_bucketed.py
-    # pins that resume).
-    extracted = timed("extract_bucketed", lambda: ckpt.run_stage(
-        spark, workdir, "extract_bucketed",
-        lambda: timed("extract", lambda: ckpt.chunked_stage(
-            spark, workdir, "extract", messages,
-            lambda part: extract_entities(part).drop(ckpt.CHUNK_COL),
-            n_chunks=n_chunks)),
-        bucket_by=("message_id", n_buckets)))
+    # Stage 1: chunked extract (intra-stage resume; the chunk filter prunes
+    # ingest partitions). The committed chunk dirs are the extract
+    # checkpoint every later stage reads.
+    extracted = timed("extract", lambda: ckpt.chunked_stage(
+        spark, workdir, "extract", messages,
+        lambda part: extract_entities(part).drop(ckpt.CHUNK_COL),
+        n_chunks=n_chunks))
 
     # Stage 2: raw triples
     triples = timed("triples", lambda: ckpt.run_stage(
@@ -184,20 +171,13 @@ def run_pipeline(
     }
     if verify_lineage:
         results = {}
-        for stage in ("ingest", "extract_bucketed", "triples", "link",
-                      "graph_triples", "graph_nodes", "scorecard",
-                      "graph_features"):
+        for stage in ("ingest", "triples", "link", "graph_triples",
+                      "graph_nodes", "scorecard", "graph_features"):
             results[stage] = ckpt.verify_stage_lineage(
                 spark, os.path.join(workdir, stage))["ok"]
-        # chunk dirs are resume points; absent after gc_chunk_dirs (the
-        # bucketed finalize is then the only extract copy — verified above)
-        extract_dir = os.path.join(workdir, "extract")
-        chunk_dirs = sorted(
-            d for d in os.listdir(extract_dir)
-            if d.startswith("chunk=")) if os.path.isdir(extract_dir) else []
-        for chunk_dir in chunk_dirs:
-            results[f"extract/{chunk_dir}"] = ckpt.verify_stage_lineage(
-                spark, os.path.join(workdir, "extract", chunk_dir))["ok"]
+        for chunk in range(n_chunks):
+            results[f"extract/chunk={chunk}"] = ckpt.verify_stage_lineage(
+                spark, os.path.join(workdir, "extract", f"chunk={chunk}"))["ok"]
         assert all(results.values()), f"lineage verification failed: {results}"
         summary["lineage_verified"] = len(results)
     return summary
@@ -211,10 +191,6 @@ def main() -> None:
     ap.add_argument("--chunks", type=int, default=8)
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--verify-lineage", action="store_true")
-    ap.add_argument("--gc-chunks", action="store_true",
-                    help="after the run, reclaim the extract stage's "
-                         "per-chunk resume dirs (safe: refuses unless the "
-                         "bucketed finalize committed the same row count)")
     args = ap.parse_args()
 
     from ..session import get_spark
@@ -224,9 +200,6 @@ def main() -> None:
         summary = run_pipeline(spark, args.workdir, n_messages=args.messages,
                                input_path=args.input, n_chunks=args.chunks,
                                verify_lineage=args.verify_lineage)
-        if args.gc_chunks:
-            summary["gc_chunk_dirs"] = len(ckpt.gc_chunk_dirs(
-                args.workdir, "extract", "extract_bucketed"))
         print(json.dumps(summary))
     finally:
         spark.stop()

@@ -12,9 +12,10 @@ being loaded anew by every app. On a 4-core VM that cut the CPU of a
 session's start (perfbench ``setup_s``) from ~18.3 to ~12.5–13.0 s.
 
 * **Where.** ``${XDG_CACHE_HOME:-~/.cache}/amharic_ecommerce_kg/cds/<key>.jsa``.
-  The key hashes the Java runtime, Spark's jars (name, size, mtime) and
-  the driver heap: a heap of 32g or more turns off compressed oops, and
-  the JVM then refuses the archive. An archive is 150–180 MB; the app
+  The key hashes the Java runtime, Spark's jars (name, size, mtime), the
+  driver heap and ``PYSPARK_SUBMIT_ARGS`` when it is set: a heap of 32g or
+  more turns off compressed oops, and the JVM refuses an archive dumped
+  with another heap mode or classpath. An archive is 150–180 MB; the app
   that builds one for a new key deletes the older ones.
 * **The first app pays.** With no archive, the app that takes the cache's
   dump lock runs its JVM with ``-XX:ArchiveClassesAtExit``. At interpreter
@@ -139,6 +140,11 @@ def _cds_key(spark_home: str, driver_memory: str) -> str:
     jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
     jars = os.path.join(spark_home, "jars")
     h = hashlib.sha256(f"{jdk}\0{driver_memory}".encode())
+    # extra jars or options in the launch change the driver's classpath, and
+    # the JVM refuses an archive dumped with another one
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS")
+    if submit_args is not None:
+        h.update(f"\0{submit_args}".encode())
     for path in [os.path.join(jdk, "lib", "modules")] + sorted(
             os.path.join(jars, name) for name in os.listdir(jars)):
         st = os.stat(path)

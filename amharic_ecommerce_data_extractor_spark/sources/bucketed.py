@@ -1,11 +1,11 @@
-"""Bucketed checkpoint tables — co-located joins without per-query shuffles.
+"""Bucketed catalog tables — co-located joins without per-query shuffles.
 
-The KG pipeline's recurring join keys are ``message_id`` (predictions ⋈
-metadata, reference ``vendor_scorecard.py:64-67``) and the vendor key
-(scorecard aggregation). At 100 TB every such join/aggregation pays a full
-shuffle of both sides PER QUERY; bucketing pays that shuffle ONCE at
-checkpoint-write time and every downstream query joins bucket-to-bucket with
-zero exchange:
+The user is the incremental dedup index (``operators/incremental.py``
+``DedupIndex``): its three fingerprint tables are joined against every new
+batch on their keys. Unbucketed, every such join pays a full shuffle of
+both sides PER BATCH; bucketing pays the index side's shuffle ONCE at
+write time and every later batch joins against it with no exchange on
+that side:
 
 * both sides written with ``bucketBy(N, key)`` and the SAME N → Catalyst
   plans a SortMergeJoin whose children are bucketed scans, no

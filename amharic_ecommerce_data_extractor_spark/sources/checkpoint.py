@@ -19,8 +19,10 @@ inference and verify against their ``_lineage`` parquet dir.
 
 Resume = skip stages whose marker exists. ``chunked_stage`` hash-splits a
 long Python-heavy stage into N chunks committed independently — a mid-run
-restart recomputes only unfinished chunks. The reference has no counterpart
-(every stage re-reads CSV and recomputes, ``run_pipeline.py:89,217``).
+restart recomputes only unfinished chunks. Its chunk dirs are the stage's
+only copy of the rows: downstream stages read them back as one scan. The
+reference has no counterpart (every stage re-reads CSV and recomputes,
+``run_pipeline.py:89,217``).
 
 Formats: ``fmt`` / ``SPARK_GRAFT_CHECKPOINT_FORMAT`` dispatch the sink —
 'parquet' (the tested default) or 'iceberg' on a cluster with the
@@ -117,51 +119,12 @@ def _read(spark: SparkSession, fmt: str, path: str,
     return reader.load(path)
 
 
-def _bucket_table_name(stage_dir: str) -> str:
-    """Deterministic catalog identifier for a bucketed stage checkpoint —
-    derived from the absolute stage path so every session (including a
-    resume in a fresh JVM) computes the same name."""
-    import hashlib
-
-    digest = hashlib.md5(os.path.abspath(stage_dir).encode()).hexdigest()[:12]
-    return f"kg_ckpt_{digest}"
-
-
-def _register_bucketed_table(spark: SparkSession, stage_dir: str,
-                             bucket_by: tuple[str, int],
-                             schema: str | None) -> str:
-    """Ensure the catalog knows the bucketed stage table (a resume in a new
-    session loses the in-memory catalog entry but not the files): recreate
-    the EXTERNAL table over the existing bucketed parquet files. Spark
-    recovers each file's bucket id from its `_SSSSS` filename tag, so a
-    DDL-registered table reads exactly like the originally written one."""
-    table = _bucket_table_name(stage_dir)
-    if not spark.catalog.tableExists(table):
-        data_path = os.path.join(stage_dir, "data")
-        col, n = bucket_by
-        ddl = schema or spark.read.parquet(data_path)._jdf.schema().toDDL()
-        spark.sql(
-            f"CREATE TABLE {table} ({ddl}) USING parquet "
-            f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO {n} BUCKETS "
-            f"LOCATION '{data_path}'")
-    return table
-
-
 def write_stage(df: DataFrame, stage_dir: str, stage: str,
                 partition_by: list[str] | None = None,
-                fmt: str = "parquet",
-                bucket_by: tuple[str, int] | None = None) -> None:
+                fmt: str = "parquet") -> None:
     """Checkpoint one stage: one write, then the marker (formats and lineage:
-    see the module docstring).
-
-    bucket_by=(col, n_buckets): write the checkpoint as an EXTERNAL bucketed
-    catalog table whose files live at the stage's own data path — the
-    write-once-shuffle-never-again layout (sources/bucketed.py): the bucket
-    shuffle is paid here ONCE, and every downstream join/groupBy on the
-    bucket key off this checkpoint plans with no exchange. Parquet-only in
-    the sandbox (mutually exclusive with partition_by here); on Iceberg the
-    equivalent is the `bucket(n, col)` partition transform. The spec is
-    committed in the marker so a resume re-registers the table by DDL.
+    see the module docstring). partition_by lays the data out
+    hive-partitioned by those columns.
 
     The lineage is observed in the write's result stage (observe is the
     outermost operator), hashing the columns in read-back order: a
@@ -176,24 +139,10 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     ddl = spark.createDataFrame([], schema)._jdf.schema().toDDL()
     obs = Observation()
     observed = df.observe(obs, *_lineage_aggs(schema.names))
-    if bucket_by is not None:
-        if fmt != "parquet":
-            raise ValueError(
-                "bucket_by checkpoints are parquet-only in the sandbox; on "
-                "Iceberg use the bucket(n, col) partition transform instead")
-        if partition_by:
-            raise ValueError("bucket_by and partition_by are mutually "
-                             "exclusive for stage checkpoints")
-        col, n = bucket_by
-        table = _bucket_table_name(stage_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (observed.write.mode("overwrite").format(fmt).option("path", data_path)
-         .bucketBy(n, col).sortBy(col).saveAsTable(table))
-    else:
-        w = observed.write.mode("overwrite")
-        if part:
-            w = w.partitionBy(*part)
-        w.format(fmt).save(data_path)
+    w = observed.write.mode("overwrite")
+    if part:
+        w = w.partitionBy(*part)
+    w.format(fmt).save(data_path)
 
     lineage = obs.get
     if lineage.get("sha256_mismatch"):
@@ -202,8 +151,6 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     marker = {"stage": stage, "rows": lineage["n_rows"], "fmt": fmt,
               "seconds": round(time.perf_counter() - t0, 3),
               "lineage": {**lineage, "schema": ddl}}
-    if bucket_by is not None:
-        marker["bucket_by"] = list(bucket_by)
     with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
         json.dump(marker, f)
 
@@ -239,37 +186,21 @@ def _resolve_resume_format(stage_dir: str, fmt: str) -> str:
 
 def run_stage(spark: SparkSession, workdir: str, stage: str, build,
               partition_by: list[str] | None = None,
-              fmt: str | None = None,
-              bucket_by: tuple[str, int] | None = None) -> DataFrame:
+              fmt: str | None = None) -> DataFrame:
     """Compute-or-resume: if the stage marker exists, read the checkpoint;
     otherwise build(), checkpoint, and read back (truncating lineage).
     partition_by lays the checkpoint out hive-partitioned — downstream
     filters on those columns become partition pruning, not data scans.
-    bucket_by=(col, n) lays it out as a bucketed table — downstream
-    joins/groupBys on the key plan with no exchange (see write_stage); the
-    returned frame is the catalog-table read, which is what carries the
-    bucket spec (a bare path read silently drops it). The read uses the
-    marker's schema: a resumed stage runs no Spark job."""
+    The read uses the marker's schema: a resumed stage runs no Spark job."""
     fmt = fmt or checkpoint_format()
     stage_dir = os.path.join(workdir, stage)
-    data_path = os.path.join(stage_dir, "data")
     if not stage_done(stage_dir):
         os.makedirs(stage_dir, exist_ok=True)
-        write_stage(build(), stage_dir, stage, partition_by=partition_by,
-                    fmt=fmt, bucket_by=bucket_by)
+        write_stage(build(), stage_dir, stage, partition_by=partition_by, fmt=fmt)
     else:
         fmt = _resolve_resume_format(stage_dir, fmt)
-        committed_bucket = _marker(stage_dir).get("bucket_by")
-        if bucket_by is not None and list(bucket_by) != committed_bucket:
-            raise ValueError(
-                f"bucketed-checkpoint resume mismatch at {stage_dir}: "
-                f"committed bucket_by={committed_bucket} vs requested "
-                f"{list(bucket_by)}; delete the stage dir to rewrite it")
-        bucket_by = tuple(committed_bucket) if committed_bucket else None
-    schema = _committed_schema(stage_dir)
-    if bucket_by is not None:
-        return spark.table(_register_bucketed_table(spark, stage_dir, bucket_by, schema))
-    return _read(spark, fmt, data_path, schema)
+    return _read(spark, fmt, os.path.join(stage_dir, "data"),
+                 _committed_schema(stage_dir))
 
 
 def chunked_stage(
@@ -285,7 +216,9 @@ def chunked_stage(
     """Stage with intra-stage resume: the input is hash-split on key_col into
     n_chunks; each chunk is transformed and committed independently (its own
     data dir + marker). A restart skips finished chunks — finished partitions
-    are never recomputed. Output is the multi-chunk parquet scan.
+    are never recomputed. Output is the multi-chunk parquet scan; when every
+    chunk is committed, a resume checks the manifest and returns that scan
+    without running a Spark job.
 
     A stage-level manifest (chunking params) is committed BEFORE the first
     chunk: resuming with a different n_chunks/key_col would silently change
@@ -301,11 +234,11 @@ def chunked_stage(
     os.makedirs(stage_dir, exist_ok=True)
     fmt = fmt or checkpoint_format()
     if stage_done(stage_dir) and _marker(stage_dir).get("gc_chunks"):
+        # chunk dirs deleted by the pipeline's former --gc-chunks flag:
+        # the glob read below would find no rows
         raise ValueError(
             f"chunked_stage: chunk dirs at {stage_dir} were "
-            f"garbage-collected after finalization (gc_chunk_dirs) "
-            f"— read the finalized stage instead, or delete the "
-            f"stage dir to recompute from scratch")
+            f"garbage-collected; delete the stage dir to recompute it")
     manifest_path = os.path.join(stage_dir, "_CHUNK_MANIFEST")
     manifest = {"key_col": key_col, "n_chunks": n_chunks, "fmt": fmt}
     if os.path.exists(manifest_path):
@@ -321,80 +254,33 @@ def chunked_stage(
     else:
         with open(manifest_path, "w", encoding="utf-8") as f:
             json.dump(manifest, f)
-    if CHUNK_COL in source.columns:
-        # guard against a committed _chunk domain wider than this loop: a
-        # source bucketed 0..7 consumed with n_chunks=4 would silently drop
-        # buckets 4..7 (partition-column-only scan — cheap, values come from
-        # the hive directory names)
-        max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
-        if max_chunk is not None and max_chunk >= n_chunks:
-            raise ValueError(
-                f"chunked_stage: source carries {CHUNK_COL} up to {max_chunk} "
-                f"but n_chunks={n_chunks} would process only 0..{n_chunks - 1}; "
-                f"pass the n_chunks the source was bucketed with")
-        chunk_key = F.col(CHUNK_COL)
-    else:
-        chunk_key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_chunks))
-    for chunk in range(n_chunks):
-        cdir = os.path.join(stage_dir, f"chunk={chunk}")
-        if stage_done(cdir):
-            continue
-        os.makedirs(cdir, exist_ok=True)
-        part = source.where(chunk_key == chunk)
-        write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
+    pending = [c for c in range(n_chunks)
+               if not stage_done(os.path.join(stage_dir, f"chunk={c}"))]
+    if pending:
+        if CHUNK_COL in source.columns:
+            # guard against a committed _chunk domain wider than this loop:
+            # a source bucketed 0..7 consumed with n_chunks=4 would silently
+            # drop buckets 4..7 (partition-column-only scan — cheap, values
+            # come from the hive directory names)
+            max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
+            if max_chunk is not None and max_chunk >= n_chunks:
+                raise ValueError(
+                    f"chunked_stage: source carries {CHUNK_COL} up to "
+                    f"{max_chunk} but n_chunks={n_chunks} would process only "
+                    f"0..{n_chunks - 1}; pass the n_chunks the source was "
+                    f"bucketed with")
+            chunk_key = F.col(CHUNK_COL)
+        else:
+            chunk_key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_chunks))
+        for chunk in pending:
+            cdir = os.path.join(stage_dir, f"chunk={chunk}")
+            os.makedirs(cdir, exist_ok=True)
+            part = source.where(chunk_key == chunk)
+            write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
     with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
         json.dump({"stage": stage, "chunks": n_chunks}, f)
     return _read(spark, fmt, os.path.join(stage_dir, "chunk=*", "data"),
                  _committed_schema(os.path.join(stage_dir, "chunk=0")))
-
-
-def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
-    """Reclaim a chunked stage's per-chunk resume dirs once a finalize stage
-    over the same rows has committed (e.g. the pipeline's extract →
-    extract_bucketed rewrite: the chunk dirs are resume points only, never
-    read again once the finalize marker exists).
-
-    Refuses to delete anything unless (a) the finalize stage's marker
-    exists AND (b) the finalize marker's committed row count equals the sum
-    of the chunk markers' row counts — a finalize that silently dropped
-    rows must not destroy the only copy that still has them. Returns the
-    removed chunk-dir paths (empty when already collected). The chunked
-    stage's own marker and manifest are kept and annotated
-    (``gc_chunks: true``); a later ``chunked_stage`` call on the collected
-    dir fails loudly on that flag rather than silently recomputing."""
-    import shutil
-
-    stage_dir = os.path.join(workdir, stage)
-    fin_dir = os.path.join(workdir, finalized_stage)
-    if not stage_done(fin_dir):
-        raise ValueError(
-            f"gc_chunk_dirs: finalize stage {fin_dir} has no marker — the "
-            f"chunk dirs are still the only committed copy")
-    fin_rows = committed_rows(fin_dir)
-    chunk_dirs = sorted(
-        os.path.join(stage_dir, d) for d in os.listdir(stage_dir)
-        if d.startswith("chunk=")) if os.path.isdir(stage_dir) else []
-    if not chunk_dirs:
-        return []
-    chunk_rows = 0
-    for cdir in chunk_dirs:
-        if not stage_done(cdir):
-            raise ValueError(f"gc_chunk_dirs: incomplete chunk {cdir} — "
-                             f"the chunked stage never finished")
-        chunk_rows += committed_rows(cdir)
-    if chunk_rows != fin_rows:
-        raise ValueError(
-            f"gc_chunk_dirs: finalize stage {fin_dir} committed {fin_rows} "
-            f"rows but the chunk markers sum to {chunk_rows} — refusing to "
-            f"delete the copy that disagrees")
-    for cdir in chunk_dirs:
-        shutil.rmtree(cdir)
-    if stage_done(stage_dir):
-        marker = _marker(stage_dir)
-        marker["gc_chunks"] = True
-        with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-            json.dump(marker, f)
-    return chunk_dirs
 
 
 def verify_stage_lineage(spark: SparkSession, stage_dir: str,

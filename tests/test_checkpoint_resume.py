@@ -4,6 +4,7 @@ finished chunks."""
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -70,13 +71,11 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     s2 = run_pipeline(spark, wd, n_messages=400, n_chunks=4)
     assert s2["triples"] == s1["triples"]
     assert s2["nodes"] == s1["nodes"]
-    # on resume the chunked extract is not even READ: the bucketed finalize
-    # marker short-circuits the whole build closure (the stronger form of
-    # the old "pure read is 3x faster" assertion)
-    assert "extract" in s1["stage_seconds"]
-    assert "extract" not in s2["stage_seconds"]
-    assert (s2["stage_seconds"]["extract_bucketed"]
-            < s1["stage_seconds"]["extract_bucketed"])
+    # the chunk dirs are the one extract checkpoint: a resume reads them
+    # back instead of re-running the extraction
+    assert sorted(os.listdir(f"{wd}/extract")) == sorted(
+        [ckpt.MARKER, "_CHUNK_MANIFEST"] + [f"chunk={c}" for c in range(4)])
+    assert s2["stage_seconds"]["extract"] < s1["stage_seconds"]["extract"]
 
     # canonical triples keep the 4 predicates only
     preds = {r["pred"] for r in
@@ -85,6 +84,25 @@ def test_full_pipeline_and_resume(spark, tmp_path):
 
     marker = json.load(open(f"{wd}/scorecard/{ckpt.MARKER}"))
     assert marker["rows"] == s1["vendors"]
+
+
+def test_gc_collected_chunked_stage_raises(spark, tmp_path):
+    """A complete chunked stage whose chunk dirs were deleted and whose
+    marker says so (``gc_chunks: true``, what the pipeline's former
+    --gc-chunks left on disk) fails loudly instead of reading an empty
+    glob."""
+    src = spark.range(40).withColumnRenamed("id", "message_id")
+    wd = str(tmp_path)
+    ckpt.chunked_stage(spark, wd, "ex", src, lambda d: d, n_chunks=2)
+    for c in range(2):
+        shutil.rmtree(os.path.join(wd, "ex", f"chunk={c}"))
+    marker = os.path.join(wd, "ex", ckpt.MARKER)
+    with open(marker, encoding="utf-8") as f:
+        done = json.load(f)
+    with open(marker, "w", encoding="utf-8") as f:
+        json.dump({**done, "gc_chunks": True}, f)
+    with pytest.raises(ValueError, match="garbage-collected"):
+        ckpt.chunked_stage(spark, wd, "ex", src, lambda d: d, n_chunks=2)
 
 
 def test_write_stage_format_dispatch(spark, tmp_path):

@@ -5,6 +5,7 @@ the module launches four JVMs in all."""
 
 import fcntl
 import glob
+import hashlib
 import json
 import os
 import signal
@@ -172,3 +173,34 @@ def test_one_dump_at_a_time_and_old_keys_deleted(no_jvm):
     options, _, dump = session._cds_plan(HEAP_32G)
     os.close(dump[0])
     assert dump[2] != archive
+
+
+def test_key_covers_submit_args_only_when_set(monkeypatch, tmp_path):
+    """Extra jars in PYSPARK_SUBMIT_ARGS change the driver's classpath, so
+    the launch arguments are part of the key when set; unset, the key is
+    the one the archives already on disk were dumped under."""
+    jdk, spark_home = tmp_path / "jdk", tmp_path / "spark"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "lib").mkdir()
+    (spark_home / "jars").mkdir(parents=True)
+    (jdk / "bin" / "java").write_text("")
+    files = [(jdk / "lib" / "modules", 7), (spark_home / "jars" / "a.jar", 5),
+             (spark_home / "jars" / "b.jar", 3)]
+    for i, (path, size) in enumerate(files):
+        path.write_bytes(b"x" * size)
+        os.utime(path, ns=(0, (i + 1) * 10**9))
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+
+    unset = session._cds_key(str(spark_home), "16g")
+    want = hashlib.sha256(f"{os.path.realpath(jdk)}\0" "16g".encode())
+    for path, size in files:
+        want.update(f"\0{path.name}\0{size}\0{os.stat(path).st_mtime_ns}".encode())
+    assert unset == want.hexdigest()[:16]
+
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--jars /opt/extra.jar pyspark-shell")
+    with_jar = session._cds_key(str(spark_home), "16g")
+    assert with_jar != unset
+    assert session._cds_key(str(spark_home), "16g") == with_jar
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    assert session._cds_key(str(spark_home), "16g") not in (unset, with_jar)

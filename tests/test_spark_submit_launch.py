@@ -59,7 +59,7 @@ def test_spark_submit_pyfiles_pipeline(tmp_path):
     # asserted ok internally; the count lands in the summary
     assert summary.get("lineage_verified", 0) >= 8, summary
     # the stages landed as real checkpoints in the submitted workdir
-    assert (workdir / "extract_bucketed").exists()
+    assert (workdir / "extract").exists()
     assert (workdir / "triples").exists()
 
 

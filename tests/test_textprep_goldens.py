@@ -131,6 +131,3 @@ def test_series_matches_scalar(remove_stopwords):
     got = tp.preprocess_series(s, remove_stopwords=remove_stopwords).tolist()
     want = [tp.preprocess_text(t, remove_stopwords=remove_stopwords) for t in texts]
     assert got == want
-    got_tok = tp.tokenize_series(pd.Series(want, dtype=object)).tolist()
-    want_tok = [tp.tokenize_text(t) for t in want]
-    assert got_tok == want_tok

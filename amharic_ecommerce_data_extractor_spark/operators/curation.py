@@ -31,24 +31,19 @@ def curate(
     per_source_cap: int | None = None,
     source_col: str = "source",
     hash_fn: str = "xxhash64",
-    pair_mode: str = "star",
     dedup_method: str = "minhash",
     winnow_min_shared: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (curated_docs, audit). audit: one row per stage with rows
     surviving — the per-stage lineage a data steward reads.
     hash_fn='md5' makes the near-dup stage cross-engine reproducible
-    (see linking.minhash_signature). pair_mode='star' (default) keeps the
-    near-dup candidate-edge count linear in duplicate-cluster size — the
-    100 TB-safe setting for the CC consumer (see dedup.dedup); 'all' trades
-    O(bucket²) edges for full verification recall on similarity chains.
+    (see linking.minhash_signature). The near-dup stage is dedup.dedup:
+    its MinHash candidate edges grow linearly in duplicate-cluster size.
     dedup_method='winnowing' swaps the near-dup edge source from MinHash
     resemblance to MOSS fingerprint overlap (verbatim-run containment —
     catches boilerplate-level copying; see dedup.dedup). NOTE:
-    near_dup_threshold and pair_mode govern the MINHASH method only; the
-    winnowing method is tuned by winnow_min_shared (its edge bar) and
-    ignores both — passing them alongside dedup_method='winnowing' has no
-    effect."""
+    near_dup_threshold governs the MINHASH method only; the winnowing
+    method is tuned by winnow_min_shared (its edge bar) and ignores it."""
     # One action fills the whole audit: each stage's output frame carries an
     # unnamed Observation counting its rows, and every stage feeds the
     # curated frame, so its persist+count runs every observed node (a node
@@ -70,7 +65,7 @@ def curate(
     docs = observed("input", spread(docs, id_col))
     deduped = observed("dedup", dedup(
         docs, id_col=id_col, text_col=text_col, threshold=near_dup_threshold,
-        hash_fn=hash_fn, pair_mode=pair_mode, method=dedup_method,
+        hash_fn=hash_fn, method=dedup_method,
         winnow_min_shared=winnow_min_shared))
     scored = deduped.withColumn("quality", ts.quality_score(F.col(text_col))) \
                     .withColumn("n_tokens", ts.whitespace_token_count(F.col(text_col))) \

@@ -23,9 +23,15 @@ the only Python anywhere is zero.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
-from .linking import banded_candidate_pairs, connected_components, minhash_signature, spread
+from .linking import (
+    banded_candidate_pairs,
+    first_per,
+    label_components,
+    md5_prefix60,
+    minhash_rows,
+    spread,
+)
 
 
 def word_shingles(col, n: int = 3):
@@ -92,70 +98,35 @@ def minhash_duplicate_pairs(
     rows: int = 2,
     threshold: float = 0.7,
     hash_fn: str = "xxhash64",
-    pair_mode: str = "all",
 ) -> DataFrame:
-    """Verified near-duplicate pairs (src, dst, jaccard), src < dst.
-    Band self-join carries ids only (see linking.banded_candidate_pairs);
-    hash_fn='md5' is the cross-engine-verifiable variant. pair_mode='star'
-    emits a per-bucket spanning star instead of the full clique — O(bucket)
-    edges, the CC-consumer setting for corpora with huge duplicate clusters
-    (see banded_candidate_pairs).
+    """Verified near-duplicate pairs (src, dst, jaccard), src < dst: every
+    pair of documents whose word-shingle Jaccard is >= threshold among the
+    MinHash-LSH candidates. Band self-join carries ids only (see
+    linking.banded_candidate_pairs); hash_fn='md5' is the
+    cross-engine-verifiable variant.
 
-    pair_mode='all' runs GROUPED BY DISTINCT TEXT: identical text ⇒
-    identical shingle set ⇒ identical MinHash ⇒ identical band keys, so the
-    shingling/MinHash pass runs once per distinct text and the quadratic
-    band-bucket pair enumeration runs over text-group representatives; the
-    exact per-document pair list is reconstructed afterwards — cross-group
+    Runs GROUPED BY DISTINCT TEXT: identical text ⇒ identical shingle set ⇒
+    identical MinHash ⇒ identical band keys, so the shingling/MinHash pass
+    runs once per distinct text and the quadratic band-bucket pair
+    enumeration runs over text-group representatives; the exact
+    per-document pair list is reconstructed afterwards — cross-group
     candidates expand members_a × members_b with the group pair's verified
     Jaccard, and within-group pairs (always banded together, Jaccard exactly
     1.0 on identical sets) come from a pure array expansion, no join. On a
     corpus whose duplicate factor is f this divides candidate-pair work by
     ~f² (measured sf1.0 doubled-documents: 43.4M → 10.9M candidates) and is
-    the identity when every text is distinct. Star mode is left ungrouped:
-    its consumers (dedup/curate/incremental) run it after exact dedup, where
-    groups are singletons by construction."""
-    # spread BEFORE shingling: the repartition (a no-op on well-partitioned
-    # input) moves raw text, and the dense per-shingle hashing below then
-    # runs at full core count even when the scan was one split
-    if pair_mode != "all":
-        sh = spread(df, id_col).select(
-            F.col(id_col).alias("nid"),
-            word_shingles(F.col(text_col), shingle_words).alias("shingles"),
-        )
-        # barrier before banding: see linking.lsh_candidate_pairs — prevents
-        # the signature from being recomputed per band and per self-join side.
-        # The empty-shingle filter comes AFTER the barrier: a size() filter
-        # on the derived array before it is pushed below the projection and
-        # re-evaluates the whole shingle expression per filter site
-        # (measured 5.4 s -> 29.3 s on the sf1.0 grouped twin of this plan).
-        sig_df = sh.withColumn(
-            "minhash", minhash_signature(F.col("shingles"), bands * rows, hash_fn)
-        ).localCheckpoint().where(F.size("shingles") > 0)
-        return (banded_candidate_pairs(sig_df, bands, rows, hash_fn,
-                                       pair_mode=pair_mode)
-                .where(F.col("sim") >= threshold)
-                .withColumnRenamed("sim", "jaccard"))
-
-    # no spread here: the groupBy's own shuffle already redistributes the
-    # texts to spark.sql.shuffle.partitions, so the heavy shingling below
-    # runs at full width regardless of the scan's split count
+    the identity when every text is distinct."""
+    # linking.minhash_rows' spread is the identity here: the groupBy's own
+    # shuffle already redistributes the texts to spark.sql.shuffle.partitions
     groups = (df
               .select(F.col(id_col).alias("nid"), F.col(text_col).alias("_t"))
               .groupBy("_t")
               .agg(F.sort_array(F.collect_list("nid")).alias("members"))
               .select(F.element_at("members", 1).alias("nid"), "members", "_t"))
-    sh = groups.select(
-        "nid", "members",
-        word_shingles(F.col("_t"), shingle_words).alias("shingles"),
-    )
-    # empty-shingle filter AFTER the barrier (see the star branch above): a
-    # pre-barrier size() filter is pushed below the groupBy into both union
-    # branches and re-evaluates the shingle expression 3x over the raw rows
-    sig_df = sh.withColumn(
-        "minhash", minhash_signature(F.col("shingles"), bands * rows, hash_fn)
-    ).localCheckpoint().where(F.size("shingles") > 0)
-    gpairs = (banded_candidate_pairs(sig_df.select("nid", "shingles", "minhash"),
-                                     bands, rows, hash_fn, pair_mode="all")
+    sig_df = minhash_rows(groups, "nid", word_shingles(F.col("_t"), shingle_words),
+                          bands, rows, hash_fn, "members"
+                          ).where(F.size("shingles") > 0)
+    gpairs = (banded_candidate_pairs(sig_df, bands, rows, hash_fn)
               .where(F.col("sim") >= threshold))
     mem = sig_df.select(F.col("nid").alias("_g"), "members")
     cross = (gpairs
@@ -287,7 +258,7 @@ def embedding_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
 
 def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
           threshold: float = 0.7, hash_fn: str = "xxhash64",
-          pair_mode: str = "star", method: str = "minhash",
+          method: str = "minhash",
           winnow_k: int = 5, winnow_w: int = 8, winnow_min_shared: int = 8,
           winnow_max_df: int = 50) -> DataFrame:
     """End-to-end dedup: exact first (cheap hash shuffle), then near-dup
@@ -303,9 +274,9 @@ def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
       shared winnowed k-gram fingerprints). Containment-ish semantics: any
       verbatim run of winnow_w + winnow_k - 1 chars is guaranteed a shared
       fingerprint, so it catches boilerplate/quote-level copying MinHash
-      dilutes away on long documents. pair_mode does not apply here — the
-      winnow_max_df stop-fingerprint cap plays the bucket-bound role
-      (edges <= max_df² per fingerprint), and threshold is unused.
+      dilutes away on long documents. The winnow_max_df stop-fingerprint
+      cap plays the bucket-bound role (edges <= max_df² per fingerprint),
+      and threshold is unused.
       winnow_min_shared defaults HIGHER here (8) than in the pair-listing
       operator (3): connected components closes pairs transitively, so a
       low pair bar chain-merges everything sharing template boilerplate
@@ -314,26 +285,21 @@ def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
       mass that constitutes "duplicate" in YOUR corpus, and keep max_df
       tight — stop-fingerprints are where template text chains.
 
-    pair_mode defaults to 'star' here (unlike the pair-LISTING operators,
-    which default to 'all' because the exact pair set IS their answer): the
-    connected-components consumer only needs a spanning set of edges per LSH
-    bucket, and 'star' bounds the candidate-edge count LINEARLY in bucket
-    size — a pathological cluster of 1M near-identical documents emits 10⁶
-    candidate edges instead of the 5·10¹¹ a full per-bucket clique would.
-    Tradeoff (see banded_candidate_pairs): the Jaccard verify sees only star
-    edges, so a component can fragment when the bucket-min is sub-threshold
-    to a member that is supra-threshold to another member; pass
-    pair_mode='all' when that verification recall matters more than the
-    worst-case edge count."""
-    hashed = df.withColumn("_fp", F.sha2(F.col(text_col), 256))
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col))
-    exact_kept = (hashed.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") == 1).drop("_rn", "_fp"))
-
+    The minhash method bands the exact-deduped documents in
+    banded_candidate_pairs' 'star' mode: connected components only needs a
+    spanning set of edges per LSH bucket, and 'star' bounds the
+    candidate-edge count LINEARLY in bucket size — a pathological cluster
+    of 1M near-identical documents emits 10⁶ candidate edges instead of the
+    5·10¹¹ a full per-bucket clique would. Tradeoff (see
+    banded_candidate_pairs): the Jaccard verify sees only star edges, so a
+    component can fragment when the bucket-min is sub-threshold to a member
+    that is supra-threshold to another member."""
+    exact_kept = first_per(df, F.sha2(F.col(text_col), 256), id_col)
     if method == "minhash":
-        pairs = minhash_duplicate_pairs(exact_kept, id_col=id_col,
-                                        text_col=text_col, threshold=threshold,
-                                        hash_fn=hash_fn, pair_mode=pair_mode)
+        sig_df = minhash_rows(exact_kept, id_col, word_shingles(F.col(text_col)),
+                              8, 2, hash_fn).where(F.size("shingles") > 0)
+        pairs = (banded_candidate_pairs(sig_df, 8, 2, hash_fn, pair_mode="star")
+                 .where(F.col("sim") >= threshold))
     elif method == "winnowing":
         pairs = fingerprint_overlap_pairs(exact_kept, id_col=id_col,
                                           text_col=text_col, k=winnow_k,
@@ -343,13 +309,8 @@ def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                                           hash_fn=hash_fn)
     else:
         raise ValueError(f"method must be 'minhash' or 'winnowing', got {method!r}")
-    comp = connected_components(pairs.select("src", "dst"))
-    joined = exact_kept.join(comp, exact_kept[id_col] == comp.node, "left")
-    keep = F.coalesce(F.col("component"), F.col(id_col))
-    w2 = Window.partitionBy(keep).orderBy(F.col(id_col))
-    return (joined.withColumn("_rn", F.row_number().over(w2))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "node", "component"))
+    return first_per(label_components(exact_kept, id_col, pairs),
+                     "component", id_col).drop("component")
 
 
 # ---------------------------------------------------------------------------
@@ -376,7 +337,7 @@ def _kgram_hash(gram, hash_fn: str):
     variant (DuckDB: CAST('0x' || substr(md5(g),1,15) AS BIGINT) % mod);
     xxhash64 is the production path (one JVM hash per gram, no hex parse)."""
     if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long") % _WINNOW_MOD
+        return md5_prefix60(gram) % _WINNOW_MOD
     return F.pmod(F.xxhash64(gram), F.lit(_WINNOW_MOD))
 
 

@@ -52,15 +52,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql.window import Window
-
 from .dedup import word_shingles
 from .linking import (
     band_keys,
     banded_candidate_pairs,
-    connected_components,
-    minhash_signature,
-    spread,
+    first_per,
+    label_components,
+    minhash_rows,
 )
 
 
@@ -96,28 +94,22 @@ def _folded_band_keys(sig_col, bands: int, rows: int, hash_fn: str):
 def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
                       shingle_words: int, bands: int, rows: int,
                       hash_fn: str) -> DataFrame:
-    """ONE pass over the text — sha256 + word shingles + minhash in a single
-    projection (spread() first: a freshly curated batch's scan is often one
-    split, and the per-shingle hashing is the CPU-dense part), behind a
-    localCheckpoint barrier so no derived table re-inlines and recomputes
-    the signature (CollapseProject). Shingles ride along for the BATCH-local
-    exact-Jaccard verify only; they are dropped before anything reaches the
-    index."""
-    return spread(docs, id_col).select(
-        F.col(id_col).alias("id"),
-        # null text folds to a sentinel OUTSIDE sha256's hex alphabet so the
-        # cross-batch exact check (plain-equality semi join — null keys never
-        # match themselves) drops later null-text arrivals exactly like the
-        # intra-batch window (whose partitionBy DOES group nulls) and like
-        # whole-corpus dedup(); without this every batch would re-accept one
-        # null-text survivor forever
-        F.coalesce(F.sha2(F.col(text_col), 256), F.lit("null")).alias("fp"),
-        word_shingles(F.col(text_col), shingle_words).alias("shingles"),
-    ).withColumn(
-        "minhash",
-        F.when(F.size("shingles") > 0,
-               minhash_signature(F.col("shingles"), bands * rows, hash_fn)),
-    ).localCheckpoint()
+    """ONE pass over the text — (id, fp, shingles, minhash): sha256 rides
+    along linking.minhash_rows' single projection and barrier. Shingles
+    ride along for the BATCH-local exact-Jaccard verify only; they are
+    dropped before anything reaches the index. A row with no shingles
+    keeps its fp (exact dedup still applies) and a null minhash."""
+    # null text folds to a sentinel OUTSIDE sha256's hex alphabet so the
+    # cross-batch exact check (plain-equality semi join — null keys never
+    # match themselves) drops later null-text arrivals exactly like the
+    # intra-batch window (whose partitionBy DOES group nulls) and like
+    # whole-corpus dedup(); without this every batch would re-accept one
+    # null-text survivor forever
+    fp = F.coalesce(F.sha2(F.col(text_col), 256), F.lit("null")).alias("fp")
+    return minhash_rows(docs, id_col, word_shingles(F.col(text_col), shingle_words),
+                        bands, rows, hash_fn, fp).select(
+        F.col("nid").alias("id"), "fp", "shingles",
+        F.when(F.size("shingles") > 0, F.col("minhash")).alias("minhash"))
 
 
 def _to_index_rows(fpr: DataFrame, bands: int, rows: int,
@@ -172,7 +164,6 @@ def incremental_dedup(
     bands: int = 8,
     rows: int = 2,
     hash_fn: str = "xxhash64",
-    pair_mode: str = "star",
 ) -> tuple[DataFrame, IndexRows]:
     """Greedy online dedup of one arriving batch.
 
@@ -207,27 +198,22 @@ def incremental_dedup(
     # 1a. exact intra-batch: lowest id per sha256 (null text shares the
     # "null" sentinel fp, so it groups together — the dedup() convention —
     # intra-batch AND across batches)
-    w = Window.partitionBy("fp").orderBy(F.col("id"))
-    exact_kept = (fpr.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") == 1).drop("_rn"))
+    exact_kept = first_per(fpr, "fp", "id")
 
-    # 1b. near intra-batch: LSH candidates + exact-Jaccard verify on the
-    # in-hand shingles → CC → keep the lowest id per component
+    # 1b. near intra-batch: LSH candidates ('star' edges, as dedup.dedup)
+    # + exact-Jaccard verify on the in-hand shingles → CC → keep the lowest
+    # id per component
     sig_df = (exact_kept.where(F.col("minhash").isNotNull())
               .select(F.col("id").alias("nid"), "shingles", "minhash"))
     pairs = (banded_candidate_pairs(sig_df, bands, rows, hash_fn,
-                                    pair_mode=pair_mode)
+                                    pair_mode="star")
              .where(F.col("sim") >= threshold))
-    comp = connected_components(pairs.select("src", "dst"))
-    joined = exact_kept.join(comp, exact_kept["id"] == comp.node, "left")
-    keep = F.coalesce(F.col("component"), F.col("id"))
-    w2 = Window.partitionBy(keep).orderBy(F.col("id"))
     # materialize the representatives ONCE: they feed the index checks, the
     # additions, and the kept semi-join — left lazy, the LSH + CC DAG would
     # re-execute per consumer
-    rep_rows = (joined.withColumn("_rn", F.row_number().over(w2))
-                .where(F.col("_rn") == 1).drop("_rn", "node", "component")
-                .localCheckpoint())
+    rep_rows = (first_per(label_components(exact_kept, "id", pairs),
+                          "component", "id")
+                .drop("component").localCheckpoint())
 
     rows_rep = _to_index_rows(rep_rows.drop("shingles"), bands, rows, hash_fn)
     if index is None:

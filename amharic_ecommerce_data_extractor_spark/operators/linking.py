@@ -20,6 +20,9 @@ round regardless of input size.
 
 Canonical id = min node id of the component; canonical surface = the
 lexicographically smallest surface (deterministic under any partitioning).
+
+Batch and incremental dedup run the same operator on word shingles through
+``minhash_rows``, ``label_components`` and ``first_per``.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 
 # logical nodes whose presence means a shuffle already sets the frame's
@@ -176,6 +180,14 @@ def minhash_seed_constants(num_hashes: int) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
+def md5_prefix60(col):
+    """The first 15 hex digits of md5(col) as a non-negative long: the
+    cross-engine hash behind every md5 variant in this package, equal to
+    DuckDB's ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`` and to
+    ``int(hashlib.md5(x).hexdigest()[:15], 16)``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def minhash_signature(shingles_col, num_hashes: int = 16, hash_fn: str = "xxhash64"):
     """array<long>: per seed i, min over shingles of hash_i(shingle).
     All JVM, and ONE expression tree (a per-seed python loop of separate
@@ -215,10 +227,7 @@ def minhash_signature(shingles_col, num_hashes: int = 16, hash_fn: str = "xxhash
         F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
         for a, b in ab
     ])
-    h0s = F.transform(
-        shingles_col,
-        lambda sh: F.conv(F.substring(F.md5(sh), 1, 15), 16, 10).cast("long") % MINHASH_P,
-    )
+    h0s = F.transform(shingles_col, lambda sh: md5_prefix60(sh) % MINHASH_P)
     return F.aggregate(
         h0s,
         F.array_repeat(F.lit(MINHASH_P).cast("long"), num_hashes),
@@ -261,6 +270,26 @@ def jaccard(a, b):
     return inter / (F.size(a) + F.size(b) - inter)
 
 
+def minhash_rows(df: DataFrame, id_col: str, shingles, bands: int, rows: int,
+                 hash_fn: str, *cols) -> DataFrame:
+    """The one MinHash pass: ``spread`` the raw rows, then
+    (nid, shingles, *cols, minhash) with a bands × rows signature, behind a
+    localCheckpoint barrier. ``shingles`` is a column expression over df;
+    ``cols`` are names or columns of df carried along.
+
+    The barrier stops the optimizer re-inlining the signature subtree
+    (CollapseProject): without it the signature is recomputed once per band
+    AND once per self-join side. Callers drop empty-shingle rows AFTER it,
+    ``.where(F.size("shingles") > 0)``: a size() filter before the barrier
+    is pushed below the projection and re-evaluates the whole shingle
+    expression per filter site (measured 5.4 s -> 29.3 s at sf1.0)."""
+    sh = spread(df, id_col).select(F.col(id_col).alias("nid"),
+                                   shingles.alias("shingles"), *cols)
+    return sh.withColumn(
+        "minhash", minhash_signature(F.col("shingles"), bands * rows, hash_fn)
+    ).localCheckpoint()
+
+
 def banded_candidate_pairs(sig_df: DataFrame, bands: int, rows: int,
                            hash_fn: str = "xxhash64",
                            group_col: str | None = None,
@@ -281,9 +310,11 @@ def banded_candidate_pairs(sig_df: DataFrame, bands: int, rows: int,
 
     pair_mode:
     * ``all`` (default) — every colliding pair, O(bucket²) per LSH bucket:
-      the exact candidate set, right for pair-listing operators.
+      the exact candidate set, the one the pair-listing operators
+      (lsh_candidate_pairs, dedup.minhash_duplicate_pairs) return.
     * ``star`` — per bucket, edges (bucket-min ↔ member) only: O(bucket)
-      edges. For CONNECTED-COMPONENTS consumers (dedup) this spans every
+      edges, what the connected-components consumers (dedup.dedup,
+      incremental.incremental_dedup) use. For them this spans every
       bucket exactly like the full clique does; a pathological cluster of
       1M identical documents emits 10⁶ edges instead of 5·10¹¹. Tradeoff:
       the exact-similarity verify sees only star edges, so a component can
@@ -339,20 +370,9 @@ def lsh_candidate_pairs(
     """(node_id, surface) → verified similar pairs (src, dst, sim), src < dst.
     group_col (e.g. the entity type) scopes pairing: candidates never cross
     groups."""
-    cols = [F.col(id_col).alias("nid"),
-            char_shingles(F.col(text_col), shingle_n).alias("shingles")]
-    if group_col:
-        cols.append(F.col(group_col).alias(group_col))
-    sh = spread(surfaces, id_col).select(*cols)
-    # localCheckpoint = optimizer barrier: without it the MinHash signature
-    # subtree is re-inlined (CollapseProject) and recomputed once per band
-    # AND once per self-join side. The empty-shingle filter applies AFTER
-    # the barrier: pre-barrier it is pushed below the projection and
-    # re-evaluates the whole shingle expression per filter site (see
-    # dedup.minhash_duplicate_pairs, measured 5.4 s -> 29.3 s at sf1.0).
-    sig_df = sh.withColumn(
-        "minhash", minhash_signature(F.col("shingles"), bands * rows, hash_fn)
-    ).localCheckpoint().where(F.size("shingles") > 0)
+    extra = [group_col] if group_col else []
+    sig_df = minhash_rows(surfaces, id_col, char_shingles(F.col(text_col), shingle_n),
+                          bands, rows, hash_fn, *extra).where(F.size("shingles") > 0)
     return (banded_candidate_pairs(sig_df, bands, rows, hash_fn, group_col=group_col)
             .where(F.col("sim") >= threshold))
 
@@ -529,6 +549,24 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     return comp.union(roots).groupBy("node").agg(F.min("component").alias("component"))
 
 
+def label_components(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """df plus ``component``: the connected-components label (min node id)
+    of each row's id over the (src, dst) edges of ``pairs``, or the id
+    itself for a row no edge touches."""
+    comp = connected_components(pairs.select("src", "dst"))
+    return (df.join(comp, df[id_col] == comp.node, "left")
+            .withColumn("component", F.coalesce("component", id_col))
+            .drop("node"))
+
+
+def first_per(df: DataFrame, key, order_col: str) -> DataFrame:
+    """The row with the lowest ``order_col`` of each ``key`` group (null
+    keys form one group)."""
+    w = Window.partitionBy(key).orderBy(F.col(order_col))
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
 # ---------------------------------------------------------------------------
 # End-to-end canonicalization of entity surface forms
 # ---------------------------------------------------------------------------
@@ -549,9 +587,7 @@ def canonicalize_surfaces(
     with a similarly-spelled LOC surface. hash_fn='md5' makes node ids and
     MinHash cross-engine reproducible (see minhash_signature)."""
     if hash_fn == "md5":
-        node_id = F.conv(F.substring(
-            F.md5(F.concat(F.col(type_col), F.lit("\x1f"), F.col(text_col))), 1, 15,
-        ), 16, 10).cast("long")
+        node_id = md5_prefix60(F.concat(F.col(type_col), F.lit("\x1f"), F.col(text_col)))
     else:
         node_id = F.xxhash64(type_col, text_col)
     nodes = surfaces.select(
@@ -565,13 +601,8 @@ def canonicalize_surfaces(
         shingle_n=shingle_n, bands=bands, rows=rows, threshold=threshold,
         hash_fn=hash_fn, group_col="type",
     )
-    comp = connected_components(pairs.select("src", "dst"))
-
-    linked = (
-        nodes.join(comp, nodes.node_id == comp.node, "left")
-        .select("type", "surface", "node_id",
-                F.coalesce("component", "node_id").alias("canonical_id"))
-    )
+    linked = label_components(nodes, "node_id", pairs).select(
+        "type", "surface", "node_id", F.col("component").alias("canonical_id"))
     # deterministic representative: lexicographically smallest surface.
     # NO broadcast hint: reps has one row per component — DATA-sized, not a
     # dimension. The join is a plain hash-key equi join; AQE still picks

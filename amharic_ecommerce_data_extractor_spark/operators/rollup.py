@@ -1,14 +1,14 @@
-"""Entity rollup + metadata join — the reference's scorecard input path
-(SURVEY.md A1 + J1), for callers that start from a token-level predictions
-table rather than the fused extraction output.
+"""Entity rollup — the reference's scorecard input path (SURVEY.md A1), for
+callers that start from a token-level predictions table rather than the
+fused extraction output.
 
-* ``entities_per_message`` — reference ``vendor_scorecard.py:32-58``: group
-  token rows by message, per entity type collect the distinct entity tokens.
-  The reference substring-matches labels ('PRODUCT' in label catches both
-  B- and I-) and joins a *set* (nondeterministic order); here arrays are kept
-  and sorted — the deterministic twin documented in SURVEY §7 risk 2.
-* ``join_message_meta`` — reference ``vendor_scorecard.py:64-71``: left-join
-  the per-message entity records onto message metadata, null entities → [].
+``entities_per_message`` — reference ``vendor_scorecard.py:32-58``: group
+token rows by message, per entity type collect the distinct entity tokens.
+The reference substring-matches labels ('PRODUCT' in label catches both B-
+and I-) and joins a *set* (nondeterministic order); here arrays are kept and
+sorted — the deterministic twin documented in SURVEY §7 risk 2. The
+reference's metadata join (J1) has no counterpart: the fused extraction
+frame already carries each message's metadata and entities in one row.
 """
 
 from __future__ import annotations
@@ -31,13 +31,3 @@ def entities_per_message(predictions: DataFrame,
                 F.when(F.col(label_col).contains(tag), F.col("token"))
             ))).alias(name))
     return predictions.groupBy("message_id").agg(*aggs)
-
-
-def join_message_meta(meta: DataFrame, entities: DataFrame) -> DataFrame:
-    """meta(message_id, …) ⋈ entities — left equi join (J1), absent entity
-    records coalesced to empty arrays like the reference's fillna."""
-    joined = meta.join(entities, "message_id", "left")
-    for name, _ in _TYPES:
-        joined = joined.withColumn(
-            name, F.coalesce(F.col(name), F.array().cast("array<string>")))
-    return joined

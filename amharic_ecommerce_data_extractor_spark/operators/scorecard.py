@@ -31,26 +31,14 @@ upstream extraction twice).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
-_METRICS = ["avg_views_per_post", "posts_per_week", "avg_price_filled"]
 _WEIGHTS = {"avg_views_per_post": 0.4, "posts_per_week": 0.4, "avg_price_filled": 0.2}
 
 
-def vendor_scorecard(extracted: DataFrame, vendor_col: str = "repo",
-                     stats_mode: str = "window") -> DataFrame:
-    """stats_mode picks the physical shape of the global min/max used for
-    score normalization (same values either way):
-
-    * ``window`` (default) — single-partition window over the vendor-level
-      table. Right for the FUSED path (entry()/queries), where a stats
-      aggregate would create a diamond that recomputes the whole upstream —
-      including the Python extraction — twice.
-    * ``broadcast`` — the staged-pipeline setting (input already a
-      materialized checkpoint, so no diamond risk): the vendor-level frame is
-      localCheckpointed once, stats come from a tiny agg, and normalization
-      is a crossJoin(broadcast(stats)) — no single-partition sort even when
-      vendor cardinality explodes at 100×.
-    """
+def vendor_scorecard(extracted: DataFrame, vendor_col: str = "repo") -> DataFrame:
+    """One row per vendor with the metrics above, ordered by lending score
+    (descending), then vendor."""
     per_msg = extracted.select(
         F.col(vendor_col).alias("vendor"),
         "message_id",
@@ -94,40 +82,19 @@ def vendor_scorecard(extracted: DataFrame, vendor_col: str = "repo",
         F.try_element_at("top_post.price_values", F.lit(1)).alias("top_product_price"),
     ).withColumn("avg_price_filled", F.coalesce("avg_price_etb", F.lit(0.0)))
 
-    if stats_mode == "broadcast":
-        # staged-pipeline shape: materialize the (tiny) vendor-level frame
-        # once, aggregate min/max into one broadcast row — normalization is a
-        # map-side expression, no single-partition window
-        scorecard = scorecard.localCheckpoint(eager=False)
-        stats = scorecard.agg(*[
-            f(m).alias(f"_{m}_{tag}")
-            for m in _WEIGHTS for f, tag in ((F.min, "lo"), (F.max, "hi"))])
-        scored = scorecard.crossJoin(F.broadcast(stats))
-        score = F.lit(0.0)
-        for m, w in _WEIGHTS.items():
-            lo, hi = F.col(f"_{m}_lo"), F.col(f"_{m}_hi")
-            norm = F.when(hi == lo, F.lit(0.0)).otherwise((F.col(m) - lo) / (hi - lo))
-            score = score + norm * F.lit(w)
-    elif stats_mode == "window":
-        # global min/max over an unpartitioned window: the vendor table is
-        # tiny (|vendors| << |messages|), so one single-partition pass is
-        # cheap AND it avoids the diamond plan of a stats-aggregate cross
-        # join, which would recompute the whole upstream (including the
-        # Python extraction) twice
-        from pyspark.sql.window import Window
-
-        w_all = Window.partitionBy()
-        scored = scorecard
-        score = F.lit(0.0)
-        for m, w in _WEIGHTS.items():
-            lo, hi = F.min(m).over(w_all), F.max(m).over(w_all)
-            norm = F.when(hi == lo, F.lit(0.0)).otherwise((F.col(m) - lo) / (hi - lo))
-            score = score + norm * F.lit(w)
-    else:
-        raise ValueError(f"stats_mode must be 'window' or 'broadcast', got {stats_mode!r}")
+    # global min/max over an unpartitioned window: the vendor table is tiny
+    # (|vendors| << |messages|), so one single-partition pass is cheap, and
+    # unlike a stats aggregate joined back it does not recompute the
+    # upstream (on the fused path, the Python extraction) twice
+    w_all = Window.partitionBy()
+    score = F.lit(0.0)
+    for m, w in _WEIGHTS.items():
+        lo, hi = F.min(m).over(w_all), F.max(m).over(w_all)
+        norm = F.when(hi == lo, F.lit(0.0)).otherwise((F.col(m) - lo) / (hi - lo))
+        score = score + norm * F.lit(w)
 
     return (
-        scored.withColumn("lending_score_0_100", score * 100.0)
+        scorecard.withColumn("lending_score_0_100", score * 100.0)
         .select("vendor", "total_posts", "avg_views_per_post", "posts_per_week",
                 "avg_price_etb", "top_product", "top_product_price",
                 "lending_score_0_100")

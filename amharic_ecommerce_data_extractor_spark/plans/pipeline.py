@@ -146,13 +146,9 @@ def run_pipeline(
     timed("graph_nodes", lambda: ckpt.run_stage(
         spark, workdir, "graph_nodes", lambda: graph_nodes(canon, canon_triples)))
 
-    # Stage 5: vendor scorecard + graph-derived vendor features. The
-    # scorecard's stats_mode='broadcast' normalizes with agg +
-    # crossJoin(broadcast) instead of a single-partition window; its input
-    # is a materialized checkpoint, so there is no diamond recompute.
+    # Stage 5: vendor scorecard + graph-derived vendor features
     timed("scorecard", lambda: ckpt.run_stage(
-        spark, workdir, "scorecard",
-        lambda: vendor_scorecard(extracted, stats_mode="broadcast")))
+        spark, workdir, "scorecard", lambda: vendor_scorecard(extracted)))
     timed("graph_features", lambda: ckpt.run_stage(
         spark, workdir, "graph_features",
         lambda: vendor_graph_features(canon_triples)))

@@ -137,12 +137,7 @@ def run_kg(spark, n_messages: int, corpus_path: str | None = None) -> dict:
         emit_triples(extracted).write.parquet(tri_path)
         t_triples = time.perf_counter() - t1
         t2 = time.perf_counter()
-        # extracted is a materialized parquet checkpoint here — the staged
-        # setting where the broadcast normalization has no diamond-recompute
-        # risk and no single-partition window (same choice as plans/pipeline);
-        # the unpartitioned-window form would serialize the scorecard stage
-        # and depress the N->4N scaling ratio with a fixed-cost tail
-        _force(vendor_scorecard(extracted, stats_mode="broadcast"))
+        _force(vendor_scorecard(extracted))
         t_score = time.perf_counter() - t2
         t_agg = t_triples + t_score
         elapsed = t_extract + t_agg

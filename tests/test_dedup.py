@@ -82,17 +82,17 @@ def test_dedup_end_to_end(spark, docs):
     assert kept == [0, 3, 5]
 
 
-def test_star_pair_mode_same_dedup_result_with_linear_edges(spark):
-    """pair_mode='star' must produce the SAME dedup() survivors as the full
-    clique for duplicate clusters, while emitting O(cluster) candidate
-    edges instead of O(cluster^2)."""
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
-        dedup,
-        minhash_duplicate_pairs,
+def test_dedup_survivors_equal_cc_over_clique_pairs(spark):
+    """dedup() bands in 'star' mode (O(cluster) candidate edges); its
+    survivors must equal the component minima of connected components over
+    the full clique of verified pairs (minhash_duplicate_pairs) on the same
+    exact-deduped frame."""
+    from amharic_ecommerce_data_extractor_spark.operators.linking import (
+        connected_components,
     )
 
-    # 3 clusters of identical text (sizes 30, 20, 10) + 15 unique docs:
-    # near-dup pairs after exact dedup are none, so also test pre-exact pairs
+    # 3 near-dup clusters (sizes 30, 20, 10; 4 distinct texts each after
+    # exact dedup) + 15 unique docs
     rows = []
     i = 0
     for size, base in ((30, "alpha beta gamma delta epsilon"),
@@ -106,19 +106,31 @@ def test_star_pair_mode_same_dedup_result_with_linear_edges(spark):
         i += 1
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    all_pairs = minhash_duplicate_pairs(df, threshold=0.5)
-    star_pairs = minhash_duplicate_pairs(df, threshold=0.5, pair_mode="star")
-    n_all, n_star = all_pairs.count(), star_pairs.count()
-    assert n_star < n_all  # linear vs quadratic growth in cluster size
+    exact = (df.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+             .select("doc_id", "text"))
+    clique = dd.minhash_duplicate_pairs(exact, threshold=0.5)
+    assert clique.count() > 0
+    comp = {r["node"]: r["component"] for r in
+            connected_components(clique.select("src", "dst")).collect()}
+    want = sorted(r["doc_id"] for r in exact.collect()
+                  if comp.get(r["doc_id"], r["doc_id"]) == r["doc_id"])
+    got = sorted(r["doc_id"] for r in dd.dedup(df, threshold=0.5).collect())
+    assert got == want
+    assert len(got) == 3 + 15
 
-    kept_all = sorted(r["doc_id"] for r in
-                      dedup(df, threshold=0.5, pair_mode="all").collect())
-    kept_star = sorted(r["doc_id"] for r in
-                       dedup(df, threshold=0.5, pair_mode="star").collect())
-    assert kept_all == kept_star
-    # 'star' is the dedup() default (the CC consumer)
-    kept_default = sorted(r["doc_id"] for r in dedup(df, threshold=0.5).collect())
-    assert kept_default == kept_star
+
+def test_dedup_job_budget(spark, sf_dir):
+    """dedup() over the sf0.001 documents runs its exact window, one MinHash
+    barrier, the star banding + verify, connected components and the
+    keep-lowest-id window in at most 14 jobs, call and collect together."""
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    kept = []
+    n_jobs = _jobs_in_group(spark, "dedup-budget",
+                            lambda: kept.extend(dd.dedup(docs).collect()))
+    assert 0 < len(kept) <= docs.count()
+    assert n_jobs <= 14, n_jobs
 
 
 def test_star_candidate_edges_linear_in_cluster_size(spark):

@@ -244,3 +244,23 @@ def test_null_text_deduped_across_batches(spark):
         [(1, None), (2, _words("a")), (101, None), (102, _words("b")),
          (201, None)], schema)
     assert sorted(kept[0] + kept[1]) == _ids(dedup(whole))
+
+
+def test_incremental_dedup_job_budget(spark, sf_dir):
+    """The sf0.001 documents in two batches, the second checked against the
+    first's additions: both calls and their kept/band counts run in at most
+    65 jobs."""
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    mid = docs.agg(F.percentile_approx("doc_id", 0.5)).first()[0]
+    counts = []
+
+    def run():
+        kept1, adds1 = incremental_dedup(docs.where(F.col("doc_id") <= mid))
+        kept2, adds2 = incremental_dedup(docs.where(F.col("doc_id") > mid), adds1)
+        counts.extend([kept1.count(), kept2.count(), adds2.bands.count()])
+
+    n_jobs = _jobs_in_group(spark, "incremental-budget", run)
+    assert counts[0] > 0 and counts[2] == 8 * counts[1]
+    assert n_jobs <= 65, n_jobs

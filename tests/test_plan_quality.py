@@ -82,22 +82,6 @@ def test_scorecard_plan_shape(spark):
     assert plan.count("Exchange SinglePartition") == 1, plan
 
 
-def test_scorecard_broadcast_stats_no_window(spark):
-    """stats_mode='broadcast' (the staged-pipeline setting) must normalize
-    with agg + crossJoin(broadcast) — no window operator at all, so no
-    single-partition WindowExec straggler at high vendor cardinality — and
-    produce EXACTLY the window-mode values."""
-    from amharic_ecommerce_data_extractor_spark.operators.scorecard import vendor_scorecard
-
-    msgs = generate_messages(spark, n_rows=200, n_vendors=8)
-    ext = extract_entities(msgs).localCheckpoint()  # staged input, no diamond
-    win = vendor_scorecard(ext).collect()
-    bc_df = vendor_scorecard(ext, stats_mode="broadcast")
-    assert "Window" not in _plan(bc_df)
-    assert "BroadcastNestedLoopJoin" in _plan(bc_df) or "BroadcastExchange" in _plan(bc_df)
-    assert bc_df.collect() == win
-
-
 def test_graph_features_job_budget(spark):
     """vendor_graph_features aggregates each predicate slice once: one
     (vendor, product) and one vendor groupBy over sells, one over

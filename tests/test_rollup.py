@@ -1,16 +1,11 @@
-"""A1 rollup + J1 join path from token-level predictions."""
-
-from pyspark.sql import functions as F
+"""A1 rollup from token-level predictions, and vendor graph features."""
 
 from amharic_ecommerce_data_extractor_spark.data.synthetic import generate_messages
 from amharic_ecommerce_data_extractor_spark.operators.extract import (
     extract_entities,
     predictions_table,
 )
-from amharic_ecommerce_data_extractor_spark.operators.rollup import (
-    entities_per_message,
-    join_message_meta,
-)
+from amharic_ecommerce_data_extractor_spark.operators.rollup import entities_per_message
 
 
 def test_rollup_matches_extraction(spark):
@@ -28,20 +23,6 @@ def test_rollup_matches_extraction(spark):
                          ("contacts", "contacts")):
             want_tokens = sorted({t for phrase in want[src] for t in phrase.split(" ")})
             assert list(row[col]) == want_tokens, (row["message_id"], col)
-
-
-def test_join_meta_fills_empty(spark):
-    msgs = generate_messages(spark, n_rows=200, n_vendors=5)
-    ext = extract_entities(msgs)
-    preds = predictions_table(ext)
-    ents = entities_per_message(preds)
-    meta = msgs.select("message_id", "repo", "message_date", "views")
-    joined = join_message_meta(meta, ents)
-    assert joined.count() == 200
-    # messages whose rows are absent from the entity table get empty arrays
-    empties = joined.where(F.size("products") == 0).count()
-    nulls = joined.where(F.col("products").isNull()).count()
-    assert nulls == 0 and empties >= 0
 
 
 def test_vendor_graph_features(spark):

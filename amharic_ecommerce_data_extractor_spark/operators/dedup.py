@@ -124,8 +124,7 @@ def minhash_duplicate_pairs(
               .agg(F.sort_array(F.collect_list("nid")).alias("members"))
               .select(F.element_at("members", 1).alias("nid"), "members", "_t"))
     sig_df = minhash_rows(groups, "nid", word_shingles(F.col("_t"), shingle_words),
-                          bands, rows, hash_fn, "members"
-                          ).where(F.size("shingles") > 0)
+                          bands, rows, hash_fn, "members")
     gpairs = (banded_candidate_pairs(sig_df, bands, rows, hash_fn)
               .where(F.col("sim") >= threshold))
     mem = sig_df.select(F.col("nid").alias("_g"), "members")
@@ -297,7 +296,7 @@ def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     exact_kept = first_per(df, F.sha2(F.col(text_col), 256), id_col)
     if method == "minhash":
         sig_df = minhash_rows(exact_kept, id_col, word_shingles(F.col(text_col)),
-                              8, 2, hash_fn).where(F.size("shingles") > 0)
+                              8, 2, hash_fn)
         pairs = (banded_candidate_pairs(sig_df, 8, 2, hash_fn, pair_mode="star")
                  .where(F.col("sim") >= threshold))
     elif method == "winnowing":

@@ -97,8 +97,8 @@ def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
     """ONE pass over the text — (id, fp, shingles, minhash): sha256 rides
     along linking.minhash_rows' single projection and barrier. Shingles
     ride along for the BATCH-local exact-Jaccard verify only; they are
-    dropped before anything reaches the index. A row with no shingles
-    keeps its fp (exact dedup still applies) and a null minhash."""
+    dropped before anything reaches the index. Every row has a minhash:
+    null and blank texts share one (see linking.minhash_rows)."""
     # null text folds to a sentinel OUTSIDE sha256's hex alphabet so the
     # cross-batch exact check (plain-equality semi join — null keys never
     # match themselves) drops later null-text arrivals exactly like the
@@ -108,8 +108,7 @@ def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
     fp = F.coalesce(F.sha2(F.col(text_col), 256), F.lit("null")).alias("fp")
     return minhash_rows(docs, id_col, word_shingles(F.col(text_col), shingle_words),
                         bands, rows, hash_fn, fp).select(
-        F.col("nid").alias("id"), "fp", "shingles",
-        F.when(F.size("shingles") > 0, F.col("minhash")).alias("minhash"))
+        F.col("nid").alias("id"), "fp", "shingles", "minhash")
 
 
 def _to_index_rows(fpr: DataFrame, bands: int, rows: int,
@@ -119,8 +118,8 @@ def _to_index_rows(fpr: DataFrame, bands: int, rows: int,
     text re-hashing."""
     return IndexRows(
         exact=fpr.select("fp", "id"),
-        sigs=fpr.where(F.col("minhash").isNotNull()).select("id", "minhash"),
-        bands=fpr.where(F.col("minhash").isNotNull()).select(
+        sigs=fpr.select("id", "minhash"),
+        bands=fpr.select(
             F.explode(_folded_band_keys(F.col("minhash"), bands, rows, hash_fn)
                       ).alias("bkey"),
             F.col("id"),
@@ -203,8 +202,7 @@ def incremental_dedup(
     # 1b. near intra-batch: LSH candidates ('star' edges, as dedup.dedup)
     # + exact-Jaccard verify on the in-hand shingles → CC → keep the lowest
     # id per component
-    sig_df = (exact_kept.where(F.col("minhash").isNotNull())
-              .select(F.col("id").alias("nid"), "shingles", "minhash"))
+    sig_df = exact_kept.select(F.col("id").alias("nid"), "shingles", "minhash")
     pairs = (banded_candidate_pairs(sig_df, bands, rows, hash_fn,
                                     pair_mode="star")
              .where(F.col("sim") >= threshold))

@@ -7,7 +7,7 @@ What Spark already solves vs what needs explicit salting:
   PER MAP TASK, not per input row: no salting needed (the scorecard relies
   on this).
 * skewed JOINS — AQE skew-join splitting handles sort-merge joins at runtime
-  (enabled in session.py).
+  (enabled in session.py), so no salted join is provided.
 
 What still skews and what this module provides:
 * window functions over a hot key (rank/top-k): ALL rows of the key land in
@@ -15,9 +15,6 @@ What still skews and what this module provides:
   two-phase candidate reduction.
 * non-algebraic aggregations (collect_list/collect_set of big groups):
   ``salted_collect_set`` does two-phase set union.
-* shuffled equi joins where one side's hot keys dominate and AQE cannot help
-  (e.g. broadcast impossible): ``salted_join`` replicates the small side
-  across salt buckets.
 """
 
 from __future__ import annotations
@@ -55,32 +52,6 @@ def salted_collect_set(df: DataFrame, key: str, value: str,
     return (phase1.groupBy(key)
             .agg(F.array_sort(F.array_distinct(F.flatten(F.collect_list("_partial"))))
                  .alias(f"{value}_set")))
-
-
-_SALTED_JOIN_HOWS = {"inner", "left", "leftouter", "left_outer",
-                     "left_semi", "leftsemi", "semi",
-                     "left_anti", "leftanti", "anti"}
-
-
-def salted_join(big: DataFrame, small: DataFrame, key: str,
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
-    """Equi join with the big side's hot keys spread over n_salts buckets and
-    the small side replicated into every bucket. Result identical to
-    big.join(small, key, how) for the supported join types.
-
-    Only big-side-preserving joins are supported: replicating the small side
-    into every salt bucket would emit each UNMATCHED small-side row n_salts
-    times under right/full outer semantics."""
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in _SALTED_JOIN_HOWS}:
-        raise ValueError(
-            f"salted_join supports {sorted(_SALTED_JOIN_HOWS)} joins, not "
-            f"{how!r}: the replicated small side would duplicate unmatched "
-            f"rows under right/full outer semantics")
-    big_s = big.withColumn("_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                                           F.lit(n_salts)))
-    small_s = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    out = big_s.join(small_s, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
 
 
 def skew_profile(df: DataFrame, key: str, top_n: int = 5) -> DataFrame:

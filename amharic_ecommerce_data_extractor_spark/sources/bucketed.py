@@ -16,7 +16,8 @@ that side:
   pruning), the same serving trick as the IVF cell layout.
 
 Bucketing requires a catalog table (``saveAsTable``) — a bare
-``parquet(path)`` write silently drops the bucket spec; that is a Spark
+``parquet(path)`` write silently drops the bucket spec, and so does a path
+read: read the table back with ``spark.table``. That is a Spark
 limitation, not a choice. On a real deployment the same call lands on the
 Iceberg/Hive catalog (Iceberg: ``bucket(N, key)`` partition transform); in
 the sandbox it uses the session's local warehouse dir.
@@ -28,7 +29,7 @@ not yet join compatible multiples without a shuffle on one side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,
@@ -43,12 +44,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back WITH its bucket spec (spark.table; a
-    path-based read would lose the bucketing metadata)."""
-    return spark.table(table)
 
 
 def join_exchange_count(joined: DataFrame) -> int:

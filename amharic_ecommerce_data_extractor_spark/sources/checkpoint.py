@@ -13,15 +13,15 @@ it; non-zero fails the stage, unmarked) when ``content`` exists too, and
 the read-back schema as DDL (a fraction of the JSON form's size). The
 lineage is observed on the write itself (``DataFrame.observe``), and reads
 use the committed schema, so neither a run nor a resume pays a lineage,
-invariant or schema-inference job.
-Markers from before marker-held lineage (no ``lineage`` key) resume by
-inference and verify against their ``_lineage`` parquet dir.
+invariant or schema-inference job. ``verify_stage_lineage`` raises on a
+marker without lineage.
 
 Resume = skip stages whose marker exists. ``chunked_stage`` hash-splits a
 long Python-heavy stage into N chunks committed independently — a mid-run
-restart recomputes only unfinished chunks. Its chunk dirs are the stage's
-only copy of the rows: downstream stages read them back as one scan. The
-reference has no counterpart (every stage re-reads CSV and recomputes,
+restart recomputes only unfinished chunks, including chunks whose dirs
+were deleted. Its chunk dirs are the stage's only copy of the rows:
+downstream stages read them back as one scan. The reference has no
+counterpart (every stage re-reads CSV and recomputes,
 ``run_pipeline.py:89,217``).
 
 Formats: ``fmt`` / ``SPARK_GRAFT_CHECKPOINT_FORMAT`` dispatch the sink —
@@ -233,20 +233,12 @@ def chunked_stage(
     stage_dir = os.path.join(workdir, stage)
     os.makedirs(stage_dir, exist_ok=True)
     fmt = fmt or checkpoint_format()
-    if stage_done(stage_dir) and _marker(stage_dir).get("gc_chunks"):
-        # chunk dirs deleted by the pipeline's former --gc-chunks flag:
-        # the glob read below would find no rows
-        raise ValueError(
-            f"chunked_stage: chunk dirs at {stage_dir} were "
-            f"garbage-collected; delete the stage dir to recompute it")
     manifest_path = os.path.join(stage_dir, "_CHUNK_MANIFEST")
     manifest = {"key_col": key_col, "n_chunks": n_chunks, "fmt": fmt}
     if os.path.exists(manifest_path):
         with open(manifest_path, encoding="utf-8") as f:
             committed = json.load(f)
-        # a manifest written before format recording has no 'fmt' key —
-        # tolerate it (like committed_format's None), compare the rest
-        if {**committed, "fmt": committed.get("fmt", fmt)} != manifest:
+        if committed != manifest:
             raise ValueError(
                 f"chunked_stage resume mismatch at {stage_dir}: committed "
                 f"{committed} vs requested {manifest}; restart the stage "
@@ -291,8 +283,7 @@ def verify_stage_lineage(spark: SparkSession, stage_dir: str,
     fresh scan equals the one observed at write time however the data is
     partitioned on re-read. Compares row count + content signature (+ the
     sha256 keys when present). Returns {'ok': bool, ...evidence}. A
-    marker written before marker-held lineage is checked against the
-    XOR-fold of its per-partition ``_lineage`` parquet rows.
+    marker without lineage raises ValueError.
 
     The reader format is the one the marker committed, whatever the ambient
     env says; an EXPLICITLY passed fmt that contradicts it hard-fails, same
@@ -301,17 +292,12 @@ def verify_stage_lineage(spark: SparkSession, stage_dir: str,
         fmt = _resolve_resume_format(stage_dir, fmt)
     else:
         fmt = committed_format(stage_dir) or checkpoint_format()
-    data = _read(spark, fmt, os.path.join(stage_dir, "data"),
-                 _committed_schema(stage_dir))
-    fresh = data.agg(*_lineage_aggs(data.columns)).collect()[0].asDict()
     stored = dict(_marker(stage_dir).get("lineage") or {})
-    if stored:
-        stored.pop("schema")
-    else:
-        lin = spark.read.parquet(os.path.join(stage_dir, "_lineage"))
-        stored = lin.agg(F.sum("n_rows").alias("n_rows"), *[
-            F.bit_xor(k).alias(k) for k in ("content_sig", "sha256_sig")
-            if k in lin.columns]).collect()[0].asDict()
+    if not stored:
+        raise ValueError(f"no lineage in the marker at {stage_dir}")
+    schema = stored.pop("schema")
+    data = _read(spark, fmt, os.path.join(stage_dir, "data"), schema)
+    fresh = data.agg(*_lineage_aggs(data.columns)).collect()[0].asDict()
     checks = {k: (stored[k] or 0) == (fresh.get(k) or 0) for k in stored}
     return {"ok": all(checks.values()), "checks": checks,
             "stored": stored, "fresh": {k: fresh.get(k) for k in checks}}

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from amharic_ecommerce_data_extractor_spark.sources.bucketed import (
     is_shuffle_free_join,
-    read_table,
     write_bucketed,
 )
 
@@ -35,8 +34,8 @@ def test_bucketed_join_is_shuffle_free_and_value_equal(spark, no_broadcast):
     write_bucketed(ents, "t_ents_b", "message_id", 8,
                    sort_cols=["message_id"])
     try:
-        bj = read_table(spark, "t_meta_b").join(
-            read_table(spark, "t_ents_b"), "message_id")
+        bj = spark.table("t_meta_b").join(
+            spark.table("t_ents_b"), "message_id")
         assert is_shuffle_free_join(bj), \
             bj._jdf.queryExecution().executedPlan().toString()
         got = sorted((r.message_id, r.views, tuple(r.products))
@@ -67,7 +66,7 @@ def test_bucketed_groupby_skips_exchange(spark, no_broadcast):
         (F.col("id") % 97).alias("user_id"), F.col("id").alias("v"))
     write_bucketed(ev, "t_ev_b", "user_id", 8)
     try:
-        agg = read_table(spark, "t_ev_b").groupBy("user_id") \
+        agg = spark.table("t_ev_b").groupBy("user_id") \
             .agg(F.sum("v").alias("s"))
         plan = agg._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan, plan

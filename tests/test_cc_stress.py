@@ -1,8 +1,8 @@
 """Connected-components at adversarial scale: a PATH graph maximizes the
 large-star/small-star round count (diameter n, contracted ~geometrically per
 round — the worst case the algorithm is designed around), and 10⁶ edges
-exercises the non-'small' branch of connected_components (no repartition-8
-shortcut).
+exercise the distributed star iteration (the union-find fast path is
+switched off for this test).
 
 Pins, on one run:
 * correctness — every node lands in component 0 (the path's min id);
@@ -24,6 +24,7 @@ Pins, on one run:
 import pytest
 from pyspark.sql import functions as F
 
+from amharic_ecommerce_data_extractor_spark.operators import linking
 from amharic_ecommerce_data_extractor_spark.operators.linking import (
     connected_components,
 )
@@ -36,11 +37,11 @@ MAX_ITER = 30
 # structural headroom but stays below 2×: an eager-checkpoint regression
 # (two materializations of the round plan) doubles jobs/round and fails.
 JOBS_PER_ROUND_BOUND = 16
-SETUP_SLACK = 12  # initial eager checkpoint + small-branch probe + stats agg
+SETUP_SLACK = 12  # entry checkpoint + edge count + stats agg
 
 
 @pytest.mark.slow  # ~130 s on 4 cores; `pytest -m "not slow"` skips it
-def test_path_graph_million_edges_converges_one_action_per_round(spark):
+def test_path_graph_million_edges_converges_one_action_per_round(spark, monkeypatch):
     edges = spark.range(N_EDGES).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
 
@@ -50,11 +51,11 @@ def test_path_graph_million_edges_converges_one_action_per_round(spark):
     sc.setJobGroup(group, "cc path-graph stress")
     cc_stats: dict = {}
     try:
-        # local_threshold=0: this test exists to exercise the DISTRIBUTED
-        # star iteration at adversarial diameter; the default threshold would
-        # route a 10^6-edge set to the single-task union-find fast path
-        comp = connected_components(edges, max_iter=MAX_ITER, stats=cc_stats,
-                                    local_threshold=0)
+        # this test exists to exercise the DISTRIBUTED star iteration at
+        # adversarial diameter; the default threshold would route a
+        # 10^6-edge set to the single-task union-find fast path
+        monkeypatch.setattr(linking, "_UNIONFIND_MAX_EDGES", 0)
+        comp = connected_components(edges, max_iter=MAX_ITER, stats=cc_stats)
         stats = comp.agg(
             F.count("*").alias("n_nodes"),
             F.countDistinct("component").alias("n_components"),

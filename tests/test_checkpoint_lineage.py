@@ -11,8 +11,7 @@ Pins:
 * empty frames commit ``rows == 0`` without blocking on the observation;
 * the sha256 invariant — the marker holds the mismatch count, and a stage
   whose content was altered after hashing raises and is never committed;
-* markers written before marker-held lineage (no ``lineage`` key, a
-  per-partition ``_lineage`` parquet dir) still resume and verify;
+* a marker without a ``lineage`` key fails verification loudly;
 * the job budget — committing a plain stage runs no more jobs than a bare
   ``df.write`` of the frame, and a resume runs none; a pipeline build writes
   its extract rows once, and a full pipeline resume runs no job.
@@ -138,28 +137,15 @@ def test_empty_frame_commits_zero_rows(spark, tmp_path):
         assert ckpt.verify_stage_lineage(spark, d)["ok"]
 
 
-def test_legacy_lineage_dir_resumes_and_verifies(spark, tmp_path):
-    """A stage committed before marker-held lineage: a marker without a
-    ``lineage`` key and a per-partition ``_lineage`` parquet dir."""
-    df = _frame(spark, 300).drop(ckpt.CHUNK_COL)
+def test_verify_marker_without_lineage_raises(spark, tmp_path):
+    """A marker with no ``lineage`` key has nothing to verify against: the
+    check fails loudly, naming the stage dir."""
     d = str(tmp_path / "old")
-    df.write.parquet(os.path.join(d, "data"))
-    (df.withColumn("partition_id", F.spark_partition_id())
-     .groupBy("partition_id")
-     .agg(F.count("*").alias("n_rows"),
-          F.bit_xor(F.xxhash64(*df.columns)).alias("content_sig"),
-          F.bit_xor(F.xxhash64("content_sha256")).alias("sha256_sig"))
-     .write.parquet(os.path.join(d, "_lineage")))
+    os.makedirs(d)
     with open(os.path.join(d, ckpt.MARKER), "w", encoding="utf-8") as f:
-        json.dump({"stage": "old", "rows": 300, "fmt": "parquet"}, f)
-
-    out = ckpt.run_stage(spark, str(tmp_path), "old", lambda: None)
-    assert out.columns == df.columns and out.count() == 300
-    res = ckpt.verify_stage_lineage(spark, d)
-    assert res["ok"] and set(res["checks"]) == {"n_rows", "content_sig",
-                                                "sha256_sig"}, res
-    df.limit(1).write.mode("append").parquet(os.path.join(d, "data"))
-    assert not ckpt.verify_stage_lineage(spark, d)["ok"]
+        json.dump({"stage": "old", "rows": 30, "fmt": "parquet"}, f)
+    with pytest.raises(ValueError, match="no lineage.*old"):
+        ckpt.verify_stage_lineage(spark, d)
 
 
 def _jobs_in_group(spark, group: str, fn) -> int:

@@ -86,25 +86,6 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     assert marker["rows"] == s1["vendors"]
 
 
-def test_gc_collected_chunked_stage_raises(spark, tmp_path):
-    """A complete chunked stage whose chunk dirs were deleted and whose
-    marker says so (``gc_chunks: true``, what the pipeline's former
-    --gc-chunks left on disk) fails loudly instead of reading an empty
-    glob."""
-    src = spark.range(40).withColumnRenamed("id", "message_id")
-    wd = str(tmp_path)
-    ckpt.chunked_stage(spark, wd, "ex", src, lambda d: d, n_chunks=2)
-    for c in range(2):
-        shutil.rmtree(os.path.join(wd, "ex", f"chunk={c}"))
-    marker = os.path.join(wd, "ex", ckpt.MARKER)
-    with open(marker, encoding="utf-8") as f:
-        done = json.load(f)
-    with open(marker, "w", encoding="utf-8") as f:
-        json.dump({**done, "gc_chunks": True}, f)
-    with pytest.raises(ValueError, match="garbage-collected"):
-        ckpt.chunked_stage(spark, wd, "ex", src, lambda d: d, n_chunks=2)
-
-
 def test_write_stage_format_dispatch(spark, tmp_path):
     """fmt parameter flows through to the sink (Iceberg in production —
     parquet is the only format in this sandbox, so the dispatch itself is
@@ -158,7 +139,9 @@ def test_chunked_source_reads_prune_partitions(spark, tmp_path):
 def test_resume_format_mismatch_raises(spark, tmp_path):
     """A stage committed as parquet must never be re-read with a different
     format reader just because SPARK_GRAFT_CHECKPOINT_FORMAT changed between
-    runs — the committed format is recorded in the marker and enforced."""
+    runs — the committed format is recorded in the marker and enforced.
+    verify_stage_lineage honors an EXPLICIT fmt the run_stage way: a
+    contradiction with the committed marker raises."""
     from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
 
     src = spark.range(50).withColumnRenamed("id", "message_id")
@@ -177,41 +160,17 @@ def test_resume_format_mismatch_raises(spark, tmp_path):
         ckpt.chunked_stage(spark, str(tmp_path), "ch", src, lambda d: d,
                            n_chunks=2, fmt="orc")
 
-
-def test_legacy_manifest_without_fmt_still_resumes(spark, tmp_path):
-    """A _CHUNK_MANIFEST written before format recording (no 'fmt' key) must
-    resume cleanly with identical parameters — tolerated like legacy
-    _STAGE_DONE markers — while parameter mismatches still hard-fail.
-    verify_stage_lineage honors an EXPLICIT fmt the run_stage way: a
-    contradiction with the committed marker raises."""
-    import json as _json
-
-    from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
-
-    src = spark.range(80).withColumnRenamed("id", "message_id")
-    wd = str(tmp_path)
-    ckpt.chunked_stage(spark, wd, "st", src, lambda d: d, n_chunks=2)
-    # rewrite the manifest as the pre-upgrade code would have written it
-    mp = os.path.join(wd, "st", "_CHUNK_MANIFEST")
-    with open(mp, "w", encoding="utf-8") as f:
-        _json.dump({"key_col": "message_id", "n_chunks": 2}, f)
-    out = ckpt.chunked_stage(spark, wd, "st", src, lambda d: d, n_chunks=2)
-    assert out.count() == 80
-    with pytest.raises(ValueError, match="resume mismatch"):
-        ckpt.chunked_stage(spark, wd, "st", src, lambda d: d, n_chunks=4)
-
     with pytest.raises(ValueError, match="format mismatch"):
-        ckpt.verify_stage_lineage(spark, os.path.join(wd, "st", "chunk=0"),
+        ckpt.verify_stage_lineage(spark, str(tmp_path / "ch" / "chunk=0"),
                                   fmt="orc")
-    assert ckpt.verify_stage_lineage(
-        spark, os.path.join(wd, "st", "chunk=0"))["ok"]
+    assert ckpt.verify_stage_lineage(spark, str(tmp_path / "ch" / "chunk=0"))["ok"]
 
 
 def test_chunk_marker_chaos_recomputes_only_that_chunk(spark, tmp_path):
-    """File-level chaos: deleting ONE chunk's _STAGE_DONE marker makes the
-    restart recompute exactly that chunk (others untouched), and lineage
-    re-verifies per chunk afterwards; tampering with a chunk's data is
-    caught by verify_stage_lineage."""
+    """File-level chaos: deleting ONE chunk's _STAGE_DONE marker, or its
+    whole dir, makes the restart recompute exactly that chunk (others
+    untouched), and lineage re-verifies per chunk afterwards; tampering
+    with a chunk's data is caught by verify_stage_lineage."""
     from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
 
     src = spark.range(400).select(
@@ -240,6 +199,17 @@ def test_chunk_marker_chaos_recomputes_only_that_chunk(spark, tmp_path):
     for c in range(4):
         res = ckpt.verify_stage_lineage(spark, os.path.join(wd, "ex", f"chunk={c}"))
         assert res["ok"], (c, res)
+
+    # a whole chunk dir gone, under a complete stage marker
+    shutil.rmtree(os.path.join(wd, "ex", "chunk=1"))
+    out = ckpt.chunked_stage(spark, wd, "ex", src, transform, n_chunks=4)
+    assert calls["n"] == 6, "exactly the deleted chunk recomputes"
+    assert out.count() == 400
+    assert out.select(F.countDistinct("message_id")).collect()[0][0] == 400
+    for c in (0, 3):
+        m = os.path.getmtime(os.path.join(wd, "ex", f"chunk={c}", ckpt.MARKER))
+        assert m == mtimes[c], f"chunk {c} was recomputed"
+    assert ckpt.verify_stage_lineage(spark, os.path.join(wd, "ex", "chunk=1"))["ok"]
 
     # tamper one chunk's data behind the checkpoint's back → caught
     extra = src.limit(1)

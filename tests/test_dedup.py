@@ -82,6 +82,30 @@ def test_dedup_end_to_end(spark, docs):
     assert kept == [0, 3, 5]
 
 
+def test_degenerate_texts_shingle_and_dedup(spark):
+    """Null, empty and blank texts have a shingle, so they get a MinHash
+    signature like any other text: null and blank texts share one and band
+    together. Pins the shingle sizes and the dedup/pair results on them."""
+    from amharic_ecommerce_data_extractor_spark.operators.linking import (
+        char_shingles,
+    )
+
+    texts = ["", "   ", None, "\t\n", "red shoe sale today", "ሃሎ"]
+    df = spark.createDataFrame(list(enumerate(texts, start=1)),
+                               "doc_id long, text string")
+    with_a = df.unionByName(spark.createDataFrame([(7, "a")], df.schema))
+    sizes = with_a.select(F.size(char_shingles(F.col("text"))).alias("c"),
+                          F.size(dd.word_shingles(F.col("text"))).alias("w"))
+    assert all(r["c"] >= 1 and r["w"] >= 1 for r in sizes.collect())
+
+    for hash_fn in ("xxhash64", "md5"):
+        kept = sorted(r["doc_id"] for r in dd.dedup(df, hash_fn=hash_fn).collect())
+        assert kept == [1, 4, 5, 6], hash_fn
+    pairs = {(r["src"], r["dst"], r["jaccard"])
+             for r in dd.minhash_duplicate_pairs(df).collect()}
+    assert pairs == {(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)}
+
+
 def test_dedup_survivors_equal_cc_over_clique_pairs(spark):
     """dedup() bands in 'star' mode (O(cluster) candidate edges); its
     survivors must equal the component minima of connected components over

@@ -6,6 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from amharic_ecommerce_data_extractor_spark.operators import linking
 from amharic_ecommerce_data_extractor_spark.operators.linking import (
     canonicalize_surfaces,
     canonicalize_triples,
@@ -48,7 +49,7 @@ def test_connected_components_vs_union_find(spark, n, m, seed):
 
 
 @pytest.mark.parametrize("n,m,seed", [(60, 80, 7), (40, 20, 8)])
-def test_cc_fastpath_matches_distributed(spark, n, m, seed):
+def test_cc_fastpath_matches_distributed(spark, monkeypatch, n, m, seed):
     """The single-task union-find fast path (default for small edge sets)
     must reach exactly the star iteration's fixed point, and the threshold
     gate must route: small set → rounds=0 (fast path), forced distributed →
@@ -62,9 +63,9 @@ def test_cc_fastpath_matches_distributed(spark, n, m, seed):
     fast = {r["node"]: r["component"]
             for r in connected_components(df, stats=st_fast).collect()}
     st_dist: dict = {}
+    monkeypatch.setattr(linking, "_UNIONFIND_MAX_EDGES", 0)
     dist = {r["node"]: r["component"]
-            for r in connected_components(df, stats=st_dist,
-                                          local_threshold=0).collect()}
+            for r in connected_components(df, stats=st_dist).collect()}
     assert fast == dist
     assert st_fast["rounds"] == 0 and st_fast["converged"]
     assert st_dist["rounds"] > 0 and st_dist["converged"]
@@ -80,7 +81,7 @@ def test_connected_components_chain(spark):
     assert stats["converged"] and stats["rounds"] < 50
 
 
-def test_connected_components_warns_when_capped(spark):
+def test_connected_components_warns_when_capped(spark, monkeypatch):
     # max_iter too small for the diameter → loud RuntimeWarning instead of a
     # silently-non-minimal component mapping (the result may still be built,
     # but the caller is told it is not a certified fixed point)
@@ -90,9 +91,10 @@ def test_connected_components_warns_when_capped(spark):
     stats = {}
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        # local_threshold=0 forces the iterative path (the fast path always
-        # reaches the exact fixed point, so max_iter cannot cap it)
-        connected_components(df, max_iter=1, stats=stats, local_threshold=0)
+        # no union-find: the fast path always reaches the exact fixed
+        # point, so max_iter cannot cap it
+        monkeypatch.setattr(linking, "_UNIONFIND_MAX_EDGES", 0)
+        connected_components(df, max_iter=1, stats=stats)
     assert not stats["converged"] and stats["rounds"] == 1
     assert any("fixed point" in str(w.message) for w in caught
                if issubclass(w.category, RuntimeWarning))

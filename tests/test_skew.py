@@ -43,25 +43,3 @@ def test_salted_collect_set_equals_naive(spark, skewed):
     salted = {r["key"]: list(r["val_set"]) for r in
               skew.salted_collect_set(skewed, "key", "val").collect()}
     assert salted == naive
-
-
-def test_salted_join_equals_naive(spark, skewed):
-    dim = spark.createDataFrame(
-        [("mega", "MEGA"), ("k0", "K0"), ("k3", "K3")], "key string, label string")
-    naive = skewed.join(dim, "key").groupBy("key", "label").count()
-    salted = skew.salted_join(skewed, dim, "key").groupBy("key", "label").count()
-    assert {tuple(r) for r in naive.collect()} == {tuple(r) for r in salted.collect()}
-
-
-def test_salted_join_rejects_small_side_preserving_joins(spark):
-    from amharic_ecommerce_data_extractor_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, "a")], "k long, v string")
-    small = spark.createDataFrame([(1, "x"), (2, "y")], "k long, w string")
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(big, small, "k", how=how)
-    # left outer keeps working and matches the naive join
-    got = sorted(tuple(r) for r in salted_join(big, small, "k", how="left").collect())
-    want = sorted(tuple(r) for r in big.join(small, "k", "left").collect())
-    assert got == want

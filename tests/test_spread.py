@@ -85,28 +85,9 @@ def test_spread_streaming_passthrough(spark, small_scan, tmp_path):
     assert spread(sdf, "doc_id") is sdf
 
 
-def test_parse_byte_string_suffixes():
-    # suffixed maxPartitionBytes ('128m') must not be read as 128 BYTES —
-    # that inflates the split estimate ~10^6x and silently disables the gate
-    from amharic_ecommerce_data_extractor_spark.operators.linking import (
-        _parse_byte_string,
-    )
-
-    assert _parse_byte_string("134217728") == 128 << 20
-    assert _parse_byte_string("128m") == 128 << 20
-    assert _parse_byte_string("128MB") == 128 << 20
-    assert _parse_byte_string(" 1g ") == 1 << 30
-    assert _parse_byte_string("512k") == 512 << 10
-    assert _parse_byte_string("2t") == 2 << 40
-    assert _parse_byte_string("7b") == 7
-    # malformed / unknown-suffix values fall back to the 128 MB default
-    for bad in ("", "abc", "12.5m", "128x", None):
-        assert _parse_byte_string(bad) == 128 << 20
-
-
 def test_spread_fires_with_suffixed_max_partition_bytes(spark, small_scan):
-    # with the old digit-strip parse, '128m' -> 128 bytes -> thousands of
-    # estimated splits -> identity; the gate must still fire
+    # a suffixed maxPartitionBytes ('128m') must be read as 128 MiB, not
+    # 128 bytes (thousands of estimated splits -> identity); the gate fires
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
     try:

@@ -5,8 +5,8 @@ capabilities of the reference repo michaWorku/amharic-ecommerce-data-extractor.
 Layout
 ------
 kernels/    exact-semantics Python ports of the reference's text pipeline
-            (vectorized over pandas Series; used inside Arrow-batched pandas
-            UDFs AND as the pinned parity oracle for tests)
+            (run per distinct text inside the Arrow-batched extract UDF AND
+            as the pinned parity oracle for tests)
 functions/  pure Spark Column-expression fast paths (JVM / whole-stage codegen)
 operators/  extraction, triple emission, MinHash-LSH entity linking, connected
             components, vendor scorecard, dedup suite, similarity search, EDA

@@ -27,23 +27,29 @@ span lists.
 from __future__ import annotations
 
 
-def char_to_token_map(sentence: str, tokens: list[str]) -> dict[int, int]:
-    """Greedy sequential-find mapping of absolute char positions → token
-    index (reference :149-168 semantics, with absolute indexing)."""
-    mapping: dict[int, int] = {}
-    cursor = 0
-    for token_idx, token in enumerate(tokens):
-        start = sentence.find(token, cursor)
+def token_offsets(text: str, tokens: list[str]) -> list[tuple[int, int]]:
+    """Greedy sequential-find char offsets ``(start, end)`` of each token in
+    text (reference :149-168 semantics, with absolute indexing). A token not
+    found after the cursor is searched from position 0; one not found at all
+    gets ``(-1, -1)`` and leaves the cursor where it was."""
+    offs, cursor = [], 0
+    for tok in tokens:
+        start = text.find(tok, cursor)
         if start == -1:
-            start = sentence.find(token)
+            start = text.find(tok)
             if start == -1:
+                offs.append((-1, -1))
                 continue
-        for c in range(start, start + len(token)):
-            mapping[c] = token_idx
-        cursor = start + len(token)
-        if cursor < len(sentence) and sentence[cursor] == " ":
-            cursor += 1
-    return mapping
+        offs.append((start, start + len(tok)))
+        cursor = start + len(tok)
+    return offs
+
+
+def char_to_token_map(sentence: str, tokens: list[str]) -> dict[int, int]:
+    """Absolute char position → token index over :func:`token_offsets`; a
+    later token overwrites an earlier one on shared positions."""
+    return {c: i for i, (s, e) in enumerate(token_offsets(sentence, tokens))
+            for c in range(s, e)}
 
 
 def align_spans_to_tokens(

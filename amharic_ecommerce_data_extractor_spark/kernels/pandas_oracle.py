@@ -17,7 +17,7 @@ from . import textprep as tp
 
 def extract_frame(messages: pd.DataFrame, text_col: str = "content") -> pd.DataFrame:
     df = messages.copy()
-    clean = tp.preprocess_series(df[text_col])
+    clean = df[text_col].map(tp.preprocess_text)
     recs = [lb.extract_message(c) for c in clean]
     df["preprocessed_text"] = clean
     for f in ("tokens", "labels", "products", "prices", "locations", "contacts", "price_values"):

@@ -30,9 +30,7 @@ Backends (the record function the shell runs over the distinct texts):
 
 from __future__ import annotations
 
-from functools import partial
-
-import pandas as pd
+from functools import lru_cache, partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +38,7 @@ from pyspark.sql import types as T
 
 from ..kernels import labeler as lb
 from ..kernels import textprep as tp
+from ..kernels.align import align_spans_to_tokens, token_offsets
 
 ENTITY_FIELDS = [
     T.StructField("preprocessed_text", T.StringType(), True),
@@ -56,46 +55,12 @@ _HF_SINGLETON: dict = {}
 _NUMPY_SINGLETON: dict = {}
 
 # raw text → preprocessed text memo (per Python worker process, shared across
-# Arrow batches via spark.python.worker.reuse — same lifetime discipline as
-# kernels/labeler._RECORD_CACHE). The preprocessing chain is pure in the raw
-# text, and message corpora repeat heavily (25-50% duplicate mass on the
-# bench corpus, concentrated in a small hot head), but the vectorized
-# preprocess_series used to run over EVERY row of every batch regardless.
-# With the memo, repeated texts skip the 10-pass regex chain entirely; cache
-# misses still go through preprocess_series as one vectorized sub-batch.
-# Bounded by wholesale clear (no LRU bookkeeping in the hot path): the hot
-# head re-warms within a batch or two after a clear.
-_CLEAN_CACHE: dict[str, str] = {}
-_CLEAN_CACHE_MAX = 1 << 17
-
-
-def _preprocess_unique(uniques) -> list[str]:
-    """Preprocess an array of UNIQUE raw texts via the cross-batch memo;
-    misses run through the vectorized series kernel in one shot. Returns the
-    clean text per input position (output identical to
-    tp.preprocess_series element-wise — the chain is elementwise-pure)."""
-    cache = _CLEAN_CACHE
-    out: list = [None] * len(uniques)
-    miss_idx: list[int] = []
-    miss_vals: list = []
-    for i, t in enumerate(uniques):
-        if isinstance(t, str):
-            c = cache.get(t)
-            if c is not None:
-                out[i] = c
-                continue
-        miss_idx.append(i)
-        miss_vals.append(t)
-    if miss_idx:
-        cleaned = tp.preprocess_series(pd.Series(miss_vals, dtype=object)).tolist()
-        if len(cache) + len(miss_idx) > _CLEAN_CACHE_MAX:
-            cache.clear()
-        for i, c in zip(miss_idx, cleaned):
-            out[i] = c
-            t = uniques[i]
-            if isinstance(t, str):
-                cache[t] = c
-    return out
+# Arrow batches via spark.python.worker.reuse — the lifetime discipline of
+# kernels/labeler.extract_message_cached). The chain is pure in the raw text,
+# and message corpora repeat heavily (25-50% duplicate mass on the bench
+# corpus, concentrated in a small hot head), so repeated texts skip the
+# regex passes entirely.
+_preprocess_cached = lru_cache(maxsize=1 << 17)(tp.preprocess_text)
 
 
 def _extract_arrow_batch(texts, names: list[str], records):
@@ -118,7 +83,7 @@ def _extract_arrow_batch(texts, names: list[str], records):
         texts = texts.combine_chunks()
     enc = pc.dictionary_encode(texts, null_encoding="encode")
     codes = enc.indices
-    clean_u = _preprocess_unique(enc.dictionary.to_pylist())
+    clean_u = [_preprocess_cached(t) for t in enc.dictionary.to_pylist()]
     recs_u = records(clean_u)
     arrays = []
     for field in names:
@@ -131,10 +96,9 @@ def _extract_arrow_batch(texts, names: list[str], records):
     return pa.StructArray.from_arrays(arrays, names=names)
 
 
-def _extract_batch_rules(clean: list[str], with_contact_rule: bool = True) -> list[dict]:
+def _extract_batch_rules(clean: list[str]) -> list[dict]:
     """Rules backend: the memoized per-text kernel chain."""
-    return [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-            for c in clean]
+    return [lb.extract_message_cached(c) for c in clean]
 
 
 def _hf_pipeline(model_dir: str):
@@ -159,8 +123,6 @@ def _records_from_spans(texts: list[str], results: list[list[dict]]) -> list[dic
     (tokens, aligned BIO labels, per-type entity lists, parsed prices).
     Runs the corrected span→token alignment (N2) for every span source —
     HF pipeline output and the numpy checkpoint backend alike."""
-    from ..kernels.align import align_spans_to_tokens
-
     out = []
     for text, spans in zip(texts, results):
         ents: dict[str, list[str]] = {"PRODUCT": [], "PRICE": [], "LOC": [], "CONTACT_INFO": []}
@@ -207,22 +169,6 @@ def _numpy_model(model_path: str) -> dict:
     return _NUMPY_SINGLETON
 
 
-def _token_offsets(text: str, tokens: list[str]) -> list[tuple[int, int]]:
-    """Greedy sequential char offsets of tokens in text (same find
-    discipline as kernels.align.char_to_token_map)."""
-    offs, cursor = [], 0
-    for tok in tokens:
-        start = text.find(tok, cursor)
-        if start == -1:
-            start = text.find(tok)
-            if start == -1:
-                offs.append((-1, -1))
-                continue
-        offs.append((start, start + len(tok)))
-        cursor = start + len(tok)
-    return offs
-
-
 def _extract_batch_numpy(clean: list[str], model_path: str) -> list[dict]:
     """Numpy token-classification backend: REAL tensor inference (hashed
     char-trigram bag → embedding mean → linear → softmax → argmax BIO) from a
@@ -255,7 +201,7 @@ def _extract_batch_numpy(clean: list[str], model_path: str) -> list[dict]:
         probs = np.exp(logits - logits.max(axis=1, keepdims=True))
         probs /= probs.sum(axis=1, keepdims=True)
         pred = logits.argmax(axis=1)
-        offs = _token_offsets(text, tokens)
+        offs = token_offsets(text, tokens)
         # HF 'simple' aggregation: consecutive same-type non-O tokens merge;
         # a B- tag always opens a new span
         spans: list[dict] = []
@@ -292,7 +238,6 @@ def extract_entities(
     df: DataFrame,
     text_col: str = "content",
     backend: str = "rules",
-    with_contact_rule: bool = True,
     model_dir: str | None = None,
     target_partitions: int | None = None,
     include_tokens: bool = True,
@@ -318,7 +263,7 @@ def extract_entities(
     needed.
     """
     if backend == "rules":
-        records = partial(_extract_batch_rules, with_contact_rule=with_contact_rule)
+        records = _extract_batch_rules
     elif backend == "hf":
         records = partial(_extract_batch_hf, model_dir=model_dir or "")
     elif backend == "numpy":

@@ -80,20 +80,16 @@ class IndexRows:
         )
 
 
-def _folded_band_keys(sig_col, bands: int, rows: int, hash_fn: str):
+def _folded_band_keys(sig_col, bands: int, rows: int):
     """array<bkey>: the per-band LSH keys with the band index folded into
     the key itself (single join/bucket column; collisions across bands are
     harmless — candidates are verified by signature agreement anyway)."""
-    bk = band_keys(sig_col, bands, rows, hash_fn)
-    if hash_fn == "md5":
-        return F.transform(
-            bk, lambda s: F.md5(F.concat_ws(":", s["band"].cast("string"), s["sig"])))
-    return F.transform(bk, lambda s: F.xxhash64(s["band"], s["sig"]))
+    return F.transform(band_keys(sig_col, bands, rows),
+                       lambda s: F.xxhash64(s["band"], s["sig"]))
 
 
 def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
-                      shingle_words: int, bands: int, rows: int,
-                      hash_fn: str) -> DataFrame:
+                      shingle_words: int, bands: int, rows: int) -> DataFrame:
     """ONE pass over the text — (id, fp, shingles, minhash): sha256 rides
     along linking.minhash_rows' single projection and barrier. Shingles
     ride along for the BATCH-local exact-Jaccard verify only; they are
@@ -107,12 +103,11 @@ def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
     # null-text survivor forever
     fp = F.coalesce(F.sha2(F.col(text_col), 256), F.lit("null")).alias("fp")
     return minhash_rows(docs, id_col, word_shingles(F.col(text_col), shingle_words),
-                        bands, rows, hash_fn, fp).select(
+                        bands, rows, "xxhash64", fp).select(
         F.col("nid").alias("id"), "fp", "shingles", "minhash")
 
 
-def _to_index_rows(fpr: DataFrame, bands: int, rows: int,
-                   hash_fn: str) -> IndexRows:
+def _to_index_rows(fpr: DataFrame, bands: int, rows: int) -> IndexRows:
     """Project fingerprint rows (id, fp, shingles, minhash) down to the
     three index-table row sets — a column drop plus the band explode; no
     text re-hashing."""
@@ -120,23 +115,21 @@ def _to_index_rows(fpr: DataFrame, bands: int, rows: int,
         exact=fpr.select("fp", "id"),
         sigs=fpr.select("id", "minhash"),
         bands=fpr.select(
-            F.explode(_folded_band_keys(F.col("minhash"), bands, rows, hash_fn)
-                      ).alias("bkey"),
+            F.explode(_folded_band_keys(F.col("minhash"), bands, rows)).alias("bkey"),
             F.col("id"),
         ),
     )
 
 
 def index_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-               shingle_words: int = 3, bands: int = 8, rows: int = 2,
-               hash_fn: str = "xxhash64") -> IndexRows:
+               shingle_words: int = 3, bands: int = 8, rows: int = 2) -> IndexRows:
     """Compute the fingerprint-index rows for a set of ACCEPTED documents
     (bootstrap/backfill path; :func:`incremental_dedup` derives the same
     rows from its in-flight fingerprints without re-reading the text)."""
     return _to_index_rows(
-        _fingerprint_rows(docs, id_col, text_col, shingle_words, bands, rows,
-                          hash_fn).drop("shingles"),
-        bands, rows, hash_fn)
+        _fingerprint_rows(docs, id_col, text_col, shingle_words, bands,
+                          rows).drop("shingles"),
+        bands, rows)
 
 
 def sig_agreement(a, b):
@@ -162,7 +155,6 @@ def incremental_dedup(
     shingle_words: int = 3,
     bands: int = 8,
     rows: int = 2,
-    hash_fn: str = "xxhash64",
 ) -> tuple[DataFrame, IndexRows]:
     """Greedy online dedup of one arriving batch.
 
@@ -191,8 +183,7 @@ def incremental_dedup(
     table bucketed on exactly that key — only the batch side shuffles
     (pinned by tests/test_incremental_dedup.py via join_exchange_count).
     Candidate pairs carry ids only; signatures rejoin by id afterwards."""
-    fpr = _fingerprint_rows(batch, id_col, text_col, shingle_words, bands,
-                            rows, hash_fn)
+    fpr = _fingerprint_rows(batch, id_col, text_col, shingle_words, bands, rows)
 
     # 1a. exact intra-batch: lowest id per sha256 (null text shares the
     # "null" sentinel fp, so it groups together — the dedup() convention —
@@ -203,8 +194,7 @@ def incremental_dedup(
     # + exact-Jaccard verify on the in-hand shingles → CC → keep the lowest
     # id per component
     sig_df = exact_kept.select(F.col("id").alias("nid"), "shingles", "minhash")
-    pairs = (banded_candidate_pairs(sig_df, bands, rows, hash_fn,
-                                    pair_mode="star")
+    pairs = (banded_candidate_pairs(sig_df, bands, rows, pair_mode="star")
              .where(F.col("sim") >= threshold))
     # materialize the representatives ONCE: they feed the index checks, the
     # additions, and the kept semi-join — left lazy, the LSH + CC DAG would
@@ -213,7 +203,7 @@ def incremental_dedup(
                           "component", "id")
                 .drop("component").localCheckpoint())
 
-    rows_rep = _to_index_rows(rep_rows.drop("shingles"), bands, rows, hash_fn)
+    rows_rep = _to_index_rows(rep_rows.drop("shingles"), bands, rows)
     if index is None:
         kept = batch.join(rep_rows.select(F.col("id").alias(id_col)),
                           id_col, "semi")

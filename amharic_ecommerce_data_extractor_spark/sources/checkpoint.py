@@ -13,8 +13,8 @@ it; non-zero fails the stage, unmarked) when ``content`` exists too, and
 the read-back schema as DDL (a fraction of the JSON form's size). The
 lineage is observed on the write itself (``DataFrame.observe``), and reads
 use the committed schema, so neither a run nor a resume pays a lineage,
-invariant or schema-inference job. ``verify_stage_lineage`` raises on a
-marker without lineage.
+invariant or schema-inference job. A completed stage whose marker lacks
+``lineage`` or ``fmt`` raises ValueError on resume and on verification.
 
 Resume = skip stages whose marker exists. ``chunked_stage`` hash-splits a
 long Python-heavy stage into N chunks committed independently — a mid-run
@@ -73,6 +73,16 @@ def _marker(stage_dir: str) -> dict:
         return json.load(f)
 
 
+def _committed(stage_dir: str, key: str):
+    """One entry of a completed stage's marker; a marker without it raises
+    ValueError naming the stage dir (every marker ``write_stage`` commits
+    has ``fmt`` and ``lineage``)."""
+    value = _marker(stage_dir).get(key)
+    if not value:
+        raise ValueError(f"no {key} in the marker at {stage_dir}")
+    return value
+
+
 def committed_rows(stage_dir: str) -> int:
     """Row count a completed stage committed (from its marker; no scan)."""
     return _marker(stage_dir)["rows"]
@@ -105,16 +115,15 @@ def _lineage_aggs(cols: list[str]) -> list:
     return aggs
 
 
-def _committed_schema(stage_dir: str) -> str | None:
-    return (_marker(stage_dir).get("lineage") or {}).get("schema")
+def _committed_schema(stage_dir: str) -> str:
+    return _committed(stage_dir, "lineage")["schema"]
 
 
-def _read(spark: SparkSession, fmt: str, path: str,
-          schema: str | None) -> DataFrame:
+def _read(spark: SparkSession, fmt: str, path: str, schema: str) -> DataFrame:
     """Read a checkpoint; file formats take the committed schema DDL instead
     of inferring one with a job (table formats carry their own)."""
     reader = spark.read.format(fmt)
-    if schema is not None and fmt in ("parquet", "orc"):
+    if fmt in ("parquet", "orc"):
         reader = reader.schema(schema)
     return reader.load(path)
 
@@ -163,9 +172,9 @@ def checkpoint_format() -> str:
 
 def committed_format(stage_dir: str) -> str | None:
     """The format a completed stage was actually written with (from its
-    _STAGE_DONE marker); None if the stage is incomplete or the marker
-    predates format recording."""
-    return _marker(stage_dir).get("fmt") if stage_done(stage_dir) else None
+    _STAGE_DONE marker); None if the stage is incomplete. A marker without
+    ``fmt`` raises ValueError."""
+    return _committed(stage_dir, "fmt") if stage_done(stage_dir) else None
 
 
 def _resolve_resume_format(stage_dir: str, fmt: str) -> str:
@@ -283,18 +292,14 @@ def verify_stage_lineage(spark: SparkSession, stage_dir: str,
     fresh scan equals the one observed at write time however the data is
     partitioned on re-read. Compares row count + content signature (+ the
     sha256 keys when present). Returns {'ok': bool, ...evidence}. A
-    marker without lineage raises ValueError.
+    marker without lineage or fmt raises ValueError.
 
     The reader format is the one the marker committed, whatever the ambient
     env says; an EXPLICITLY passed fmt that contradicts it hard-fails, same
     contract as run_stage."""
-    if fmt is not None:
-        fmt = _resolve_resume_format(stage_dir, fmt)
-    else:
-        fmt = committed_format(stage_dir) or checkpoint_format()
-    stored = dict(_marker(stage_dir).get("lineage") or {})
-    if not stored:
-        raise ValueError(f"no lineage in the marker at {stage_dir}")
+    fmt = (_committed(stage_dir, "fmt") if fmt is None
+           else _resolve_resume_format(stage_dir, fmt))
+    stored = dict(_committed(stage_dir, "lineage"))
     schema = stored.pop("schema")
     data = _read(spark, fmt, os.path.join(stage_dir, "data"), schema)
     fresh = data.agg(*_lineage_aggs(data.columns)).collect()[0].asDict()

@@ -145,8 +145,7 @@ def ingest_dedup_batch(batch: DataFrame, batch_id: int, store, out_dir: str,
         kept_back = spark.read.parquet(batch_dir)
         adds = index_rows(kept_back, id_col=id_col, text_col=text_col,
                           **{k: v for k, v in dedup_kw.items()
-                             if k in ("shingle_words", "bands", "rows",
-                                      "hash_fn")})
+                             if k in ("shingle_words", "bands", "rows")})
     else:
         idx = store.load() if store.exists() else None
         kept, adds = incremental_dedup(batch, idx, id_col=id_col,

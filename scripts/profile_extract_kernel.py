@@ -54,7 +54,7 @@ def main() -> None:
         return [ex._extract_arrow_batch(b, names, ex._extract_batch_rules)
                 for b in batches]
 
-    ex._CLEAN_CACHE.clear()
+    ex._preprocess_cached.cache_clear()
     lb.extract_message_cached.cache_clear()
     _, dt_cold = t("shell (cold memos)", run)
     _, dt_warm = t("shell (warm memos)", run)

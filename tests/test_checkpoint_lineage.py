@@ -11,7 +11,9 @@ Pins:
 * empty frames commit ``rows == 0`` without blocking on the observation;
 * the sha256 invariant — the marker holds the mismatch count, and a stage
   whose content was altered after hashing raises and is never committed;
-* a marker without a ``lineage`` key fails verification loudly;
+* a marker without a ``lineage`` key fails verification loudly, and a
+  completed stage whose marker lost ``lineage`` or ``fmt`` fails its
+  resume the same way;
 * the job budget — committing a plain stage runs no more jobs than a bare
   ``df.write`` of the frame, and a resume runs none; a pipeline build writes
   its extract rows once, and a full pipeline resume runs no job.
@@ -146,6 +148,24 @@ def test_verify_marker_without_lineage_raises(spark, tmp_path):
         json.dump({"stage": "old", "rows": 30, "fmt": "parquet"}, f)
     with pytest.raises(ValueError, match="no lineage.*old"):
         ckpt.verify_stage_lineage(spark, d)
+
+
+@pytest.mark.parametrize("key", ["lineage", "fmt"])
+def test_resume_marker_without_key_raises(spark, tmp_path, key):
+    """A completed stage resumes from its marker's schema and format; a
+    marker missing either fails the resume, naming the stage dir, instead of
+    reading by schema inference or with the ambient format."""
+    def build():
+        return spark.range(10)
+
+    ckpt.run_stage(spark, str(tmp_path), "st", build)
+    marker = tmp_path / "st" / ckpt.MARKER
+    m = json.loads(marker.read_text())
+    del m[key]
+    marker.write_text(json.dumps(m))
+    with pytest.raises(ValueError, match=f"no {key} in the marker at .*st"):
+        ckpt.run_stage(spark, str(tmp_path), "st", build)
+    assert ckpt.committed_format(str(tmp_path / "absent")) is None
 
 
 def _jobs_in_group(spark, group: str, fn) -> int:

@@ -3,9 +3,9 @@ with the rules record function, on both shapes the Arrow runtime can hand
 it: a contiguous ``pa.Array`` and a multi-chunk ``pa.ChunkedArray`` (whose
 ``dictionary_encode`` result has no single ``indices`` array). Both must
 give the same StructArray, equal per row to the per-text kernel chain.
-Also: ``extract_entities`` rejects an unknown backend on the driver."""
+Also: the preprocess memo serves a repeated batch, and ``extract_entities``
+rejects an unknown backend on the driver."""
 
-import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -14,6 +14,7 @@ from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp
 from amharic_ecommerce_data_extractor_spark.operators.extract import (
     ENTITY_FIELDS,
     _extract_arrow_batch,
+    _preprocess_cached,
     _extract_batch_rules,
     extract_entities,
 )
@@ -44,11 +45,22 @@ def test_chunked_input_matches_contiguous(names):
     assert chunked.to_pylist() == flat.to_pylist()
 
     for text, row in zip(TEXTS, flat.to_pylist()):
-        clean = tp.preprocess_series(pd.Series([text], dtype=object))[0]
-        rec = lb.extract_message(clean, with_contact_rule=True)
+        clean = tp.preprocess_text(text)
+        rec = lb.extract_message(clean)
         for name in names:
             want = clean if name == "preprocessed_text" else rec[name]
             assert row[name] == want, (text, name)
+
+
+def test_preprocess_memo_spans_batches():
+    """The raw→clean memo outlives one Arrow batch: a second batch of the
+    same texts is served from it, with the same result."""
+    texts = pa.array(TEXTS, type=pa.string())
+    first = _extract_arrow_batch(texts, NAMES, _extract_batch_rules)
+    hits = _preprocess_cached.cache_info().hits
+    second = _extract_arrow_batch(texts, NAMES, _extract_batch_rules)
+    assert _preprocess_cached.cache_info().hits - hits == len(set(TEXTS))
+    assert second.to_pylist() == first.to_pylist()
 
 
 @pytest.mark.parametrize("backend", ["rules_jvm", "spacy", ""])

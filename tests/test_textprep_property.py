@@ -1,13 +1,14 @@
-"""Property-based tests (hypothesis): the scalar chain, the vectorized
-series chain and the JVM expression chain agree on arbitrary unicode input;
-structural invariants of the tokenizer hold."""
+"""Property-based tests (hypothesis): the fused chain the package runs and
+the sequential spec chain (tests/textprep_spec.py) agree on arbitrary
+unicode input; structural invariants of the cleaned text and the labeler
+hold."""
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from amharic_ecommerce_data_extractor_spark.kernels import labeler as lb
 from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp
+from tests import textprep_spec as spec
 
 # text alphabet mixing Ethiopic, ASCII, Geez numerals, punctuation and junk
 _ALPHABET = st.sampled_from(
@@ -19,8 +20,8 @@ _TEXT = st.text(alphabet=_ALPHABET, max_size=120)
 
 @given(_TEXT)
 @settings(max_examples=300, deadline=None)
-def test_series_equals_scalar(text):
-    assert tp.preprocess_series(pd.Series([text], dtype=object))[0] == tp.preprocess_text(text)
+def test_fused_equals_spec(text):
+    assert tp.preprocess_text(text) == spec.preprocess_text(text)
 
 
 @given(_TEXT)

@@ -292,45 +292,45 @@ def parse_price(phrase: str) -> float | None:
         return None
 
 
-# label string → (etype-or-None, starts_new_run, is_bio) — labels come from
-# a tiny closed vocabulary in the hot path (the 9 BIO labels + 'O'), but
-# file-sourced sequences can carry arbitrary corrupted labels, so the cache
-# is a bounded LRU.
+# label → (known entity type or None, starts_new_run). Labels come from a
+# tiny closed vocabulary in the hot path (the 9 BIO labels + 'O'), but
+# file-sourced sequences can carry arbitrary corrupted labels or nulls, so
+# the cache is a bounded LRU.
 _KNOWN_TYPES = ("PRODUCT", "PRICE", "LOC", "CONTACT_INFO")
 
 
 @lru_cache(maxsize=4096)
-def _label_info(label: str) -> tuple:
-    if label.startswith(("B-", "I-")):
-        etype = label[2:]
-        return (etype if etype in _KNOWN_TYPES else None, label[0] == "B", True)
-    return (None, False, False)
+def _label_info(label: str | None) -> tuple:
+    if isinstance(label, str) and label.startswith(("B-", "I-")) \
+            and label[2:] in _KNOWN_TYPES:
+        return label[2:], label[0] == "B"
+    return None, False
 
 
-def group_entities(labeled: list[tuple[str, str]]) -> dict[str, list[str]]:
-    """Collapse a BIO sequence into per-type entity phrases (space-joined
-    contiguous runs). A run starts at B-X or at an I-X that does not continue
-    a run of the same type; unknown/corrupted labels count as O (SURVEY.md
-    Appendix A, corrupted ``I-LOCገ`` handling)."""
-    out: dict[str, list[str]] = {"PRODUCT": [], "PRICE": [], "LOC": [], "CONTACT_INFO": []}
-    cur_type: str | None = None
-    cur_tokens: list[str] = []
+def bio_spans(labels: list[str | None]) -> list[tuple[str, int, int]]:
+    """BIO labels → [(type, start, end_exclusive)] under seqeval's run rules:
+    a run starts at B-X or at an I-X that does not continue an X run; None
+    and unknown/corrupted labels count as O (SURVEY.md Appendix A, corrupted
+    ``I-LOCገ`` handling)."""
+    spans = []
+    cur_type, start = None, 0
+    for i, label in enumerate(labels):
+        etype, is_b = _label_info(label)
+        if is_b or etype != cur_type:
+            if cur_type is not None:
+                spans.append((cur_type, start, i))
+            cur_type, start = etype, i
+    if cur_type is not None:
+        spans.append((cur_type, start, len(labels)))
+    return spans
 
-    for tok, label in labeled:
-        etype, is_b, is_bio = _label_info(label)
-        if is_bio and etype is not None:
-            if is_b or etype != cur_type:
-                if cur_type is not None and cur_tokens:
-                    out[cur_type].append(" ".join(cur_tokens))
-                cur_type, cur_tokens = etype, []
-            cur_tokens.append(tok)
-        else:
-            # 'O' and unknown/corrupted labels both terminate the run
-            if cur_type is not None and cur_tokens:
-                out[cur_type].append(" ".join(cur_tokens))
-            cur_type, cur_tokens = None, []
-    if cur_type is not None and cur_tokens:
-        out[cur_type].append(" ".join(cur_tokens))
+
+def group_entities(tokens: list[str], labels: list[str]) -> dict[str, list[str]]:
+    """Collapse a BIO-labeled token sequence into per-type entity phrases:
+    the tokens of each ``bio_spans`` run, space-joined."""
+    out: dict[str, list[str]] = {t: [] for t in _KNOWN_TYPES}
+    for etype, s, e in bio_spans(labels):
+        out[etype].append(" ".join(tokens[s:e]))
     return out
 
 
@@ -363,11 +363,13 @@ def extract_message(text: str, with_contact_rule: bool = True) -> dict[str, list
     """
     tokens = tokenize_message(text) if text else []
     labeled = label_tokens(tokens, with_contact_rule=with_contact_rule)
-    ents = group_entities(labeled)
+    tokens = [t for t, _ in labeled]
+    labels = [l for _, l in labeled]
+    ents = group_entities(tokens, labels)
     price_values = [v for v in (parse_price(p) for p in ents["PRICE"]) if v is not None]
     return {
-        "tokens": [t for t, _ in labeled],
-        "labels": [l for _, l in labeled],
+        "tokens": tokens,
+        "labels": labels,
         "products": ents["PRODUCT"],
         "prices": ents["PRICE"],
         "locations": ents["LOC"],

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..kernels.labeler import bio_spans
+
 _SPAN_SCHEMA = T.StructType([
     T.StructField("sid", T.LongType(), False),
     T.StructField("etype", T.StringType(), False),
@@ -24,37 +26,12 @@ _SPAN_SCHEMA = T.StructType([
 ])
 
 
-KNOWN_TYPES = frozenset({"PRODUCT", "PRICE", "LOC", "CONTACT_INFO"})
-
-
-def _bio_spans(labels: list[str]) -> list[tuple[str, int, int]]:
-    """BIO array → [(type, start, end_exclusive)]; labels outside the known
-    type set (e.g. the corpus's corrupted ``I-LOCገ``) count as O; I- continues
-    only a same-type run (seqeval start-of-span rules)."""
-    spans = []
-    cur_type, cur_start = None, -1
-    for i, lab in enumerate(labels or []):
-        if isinstance(lab, str) and lab.startswith(("B-", "I-")) and lab[2:] in KNOWN_TYPES:
-            etype = lab[2:]
-            if lab.startswith("B-") or etype != cur_type:
-                if cur_type is not None:
-                    spans.append((cur_type, cur_start, i))
-                cur_type, cur_start = etype, i
-        else:
-            if cur_type is not None:
-                spans.append((cur_type, cur_start, i))
-            cur_type = None
-    if cur_type is not None:
-        spans.append((cur_type, cur_start, len(labels)))
-    return spans
-
-
 def spans_table(df: DataFrame, id_col: str, labels_col: str) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for sid, labels in zip(pdf[id_col], pdf[labels_col]):
-                for etype, s, e in _bio_spans(list(labels) if labels is not None else []):
+                for etype, s, e in bio_spans(list(labels) if labels is not None else []):
                     rows.append((int(sid), etype, s, e))
             yield pd.DataFrame(rows, columns=["sid", "etype", "start", "end"])
 

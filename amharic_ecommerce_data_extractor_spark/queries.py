@@ -15,6 +15,7 @@ value-hash, with columns sorted by name):
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -534,22 +535,30 @@ def q26(spark, sf_dir):
 # the non-SQL-expressible hash structures
 # ---------------------------------------------------------------------------
 
-@_q("q27_dedup_union_exact", """
-WITH unioned AS (
+_POOL_SQL = """pool AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-),
+  SELECT doc_id + 1000000, text FROM documents)"""
+
+
+def _doubled_docs(spark, sf_dir):
+    """``_POOL_SQL``'s corpus: every document twice, the copy's doc_id
+    offset by 1,000,000."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
+
+
+@_q("q27_dedup_union_exact", f"""
+WITH {_POOL_SQL},
 ranked AS (
   SELECT doc_id, text,
          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-  FROM unioned)
+  FROM pool)
 SELECT count(*) AS n_kept, CAST(sum(length(text)) AS BIGINT) AS total_chars
 FROM ranked WHERE rn = 1
 """)
 def q27(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
+    u = _doubled_docs(spark, sf_dir)
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     kept = u.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
     return kept.agg(F.count("*").alias("n_kept"),
@@ -591,11 +600,13 @@ def q28(spark, sf_dir):
                                  F.count("*").alias("n")))
 
 
-@_q("q29_simhash_bucket_profile", """
-WITH words AS (
+def _simhash_sql(source: str) -> str:
+    """md5 SimHash (dedup.simhash64_md5) of every doc in ``source``: the
+    ``words``/``hashed``/``votes``/``sim`` CTEs, 64-char bit string ``simhash``."""
+    return f"""words AS (
   SELECT doc_id,
          unnest(list_distinct(string_split_regex(trim(lower(text)), '\\s+'))) AS w
-  FROM documents),
+  FROM {source}),
 hashed AS (SELECT doc_id, md5(w) AS hx FROM words),
 votes AS (
   SELECT doc_id, b,
@@ -608,28 +619,33 @@ votes AS (
 sim AS (
   SELECT doc_id,
          string_agg(CASE WHEN vote > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS simhash
-  FROM votes GROUP BY doc_id)
+  FROM votes GROUP BY doc_id)"""
+
+
+@_q("q29_simhash_bucket_profile", f"""
+WITH {_simhash_sql("documents")}
 SELECT substr(simhash, 1, 8) AS bucket, count(*) AS n
 FROM sim GROUP BY bucket ORDER BY n DESC, bucket ASC LIMIT 20
 """)
-def q29(spark, sf_dir):
-    # md5-derived SimHash (dedup.simhash64_md5) so the bit-exact DuckDB twin
-    # above can recompute it; the xxhash64 variant (dedup.simhash64) is the
-    # production default and is pinned by unit tests instead
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import simhash64_md5
+def q29(spark, sf_dir, hash_fn="md5"):
+    # md5 (dedup.simhash64_md5) so the DuckDB twin above can recompute the
+    # SimHash bit-exactly; q29p runs the production xxhash64 (dedup.simhash64)
+    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
+        simhash64,
+        simhash64_md5,
+    )
     from amharic_ecommerce_data_extractor_spark.operators.linking import spread
 
+    sh = simhash64_md5 if hash_fn == "md5" else simhash64
     d = spread(_t(spark, sf_dir, "documents"), "doc_id")
-    return (d.select(F.substring(simhash64_md5(F.col("text")), 1, 8).alias("bucket"))
+    return (d.select(F.substring(sh(F.col("text")), 1, 8).alias("bucket"))
             .groupBy("bucket").agg(F.count("*").alias("n"))
             .orderBy(F.desc("n"), F.asc("bucket")).limit(20))
 
 
-@_q("q30_knn_lsh_recall", """
--- full twin of the SimHash-LSH KNN recall probe: the Rademacher(md5) plane
--- family (similarity._planes plane_fn='rademacher_md5') is recomputed here,
--- so exact AND approximate sides are both independently derived.
-WITH planes AS (
+# 64 Rademacher(md5) planes (similarity._planes plane_fn='rademacher_md5')
+# and every embedding's 8 band signatures of 8 bits
+_PLANES_SQL = """planes AS (
   SELECT p, list_transform(range(64), d ->
            CASE WHEN CAST('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)
                      AS UBIGINT) % 2 = 1
@@ -639,7 +655,14 @@ sigs AS (
   SELECT vec_id, CAST(p // 8 AS INT) AS band,
          string_agg(CASE WHEN list_dot_product(embedding, pv) >= 0
                          THEN '1' ELSE '0' END, '' ORDER BY p) AS sig
-  FROM embeddings CROSS JOIN planes GROUP BY vec_id, band),
+  FROM embeddings CROSS JOIN planes GROUP BY vec_id, band)"""
+
+
+@_q("q30_knn_lsh_recall", f"""
+-- full twin of the SimHash-LSH KNN recall probe: the plane family is
+-- recomputed here, so exact AND approximate sides are both independently
+-- derived.
+WITH {_PLANES_SQL},
 q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 100 = 0),
 exact AS (
   SELECT query_id, neighbor_id FROM (
@@ -695,18 +718,17 @@ def q30(spark, sf_dir):
             .orderBy("query_id"))
 
 
-@_q("q31_minhash_near_dup_pairs", """
-WITH pool AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents),
-tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS words FROM pool),
+def _minhash_sql(n: int, source: str) -> str:
+    """md5 MinHash-LSH (linking.minhash_signature hash_fn='md5') of every doc
+    in ``source``: word ``n``-gram ``shingled`` sets, 16 ``minhash`` values
+    and 8 ``banded`` keys per doc (the ``tok`` ... ``banded`` CTEs)."""
+    return f"""tok AS (
+  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS words FROM {source}),
 shingled AS (
   SELECT doc_id,
          list_distinct(list_transform(
-           range(greatest(len(words) - 3, 0) + 1),
-           i -> array_to_string(words[(i + 1):(i + 3)], ' '))) AS shingles
+           range(greatest(len(words) - {n}, 0) + 1),
+           i -> array_to_string(words[(i + 1):(i + {n})], ' '))) AS shingles
   FROM tok),
 seeds AS (  -- universal-hash constants: re-derivable in any engine
   SELECT seed,
@@ -726,7 +748,15 @@ banded AS (  -- 8 bands x 2 rows; band key = md5 of the csv of the band's rows
   SELECT doc_id, band,
          md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed)) AS sig
   FROM (SELECT doc_id, seed, mh, CAST(seed // 2 AS INT) AS band FROM minhash)
-  GROUP BY doc_id, band),
+  GROUP BY doc_id, band)"""
+
+
+def _minhash_pairs_sql(n: int, threshold: float) -> str:
+    """q31/q42: verified near-dup pairs of the doubled corpus under word
+    ``n``-gram MinHash-LSH at Jaccard >= ``threshold``."""
+    return f"""
+WITH {_POOL_SQL},
+{_minhash_sql(n, "pool")},
 cand AS (
   SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
   FROM banded a JOIN banded b ON a.band = b.band AND a.sig = b.sig
@@ -740,19 +770,20 @@ verified AS (
   JOIN shingled sa ON sa.doc_id = src
   JOIN shingled sb ON sb.doc_id = dst)
 SELECT count(*) AS n_pairs, round(avg(jaccard), 6) AS avg_jaccard
-FROM verified WHERE jaccard >= 0.9
-""")
-def q31(spark, sf_dir):
-    # hash_fn='md5': the shared 60-bit md5-derived hash lets the DuckDB twin
-    # recompute identical signatures/bands (xxhash64 default stays the
-    # production path, pinned by unit tests)
+FROM verified WHERE jaccard >= {threshold}
+"""
+
+
+@_q("q31_minhash_near_dup_pairs", _minhash_pairs_sql(3, 0.9))
+def q31(spark, sf_dir, hash_fn="md5"):
+    # md5: the shared 60-bit md5-derived hash lets the DuckDB twin recompute
+    # identical signatures/bands; q31p runs the production xxhash64
     from amharic_ecommerce_data_extractor_spark.operators.dedup import (
         minhash_duplicate_pairs,
     )
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    pairs = minhash_duplicate_pairs(u, threshold=0.9, hash_fn="md5")
+    pairs = minhash_duplicate_pairs(_doubled_docs(spark, sf_dir), threshold=0.9,
+                                    hash_fn=hash_fn)
     return pairs.agg(F.count("*").alias("n_pairs"),
                      F.round(F.avg("jaccard"), 6).alias("avg_jaccard"))
 
@@ -1003,7 +1034,8 @@ def q38(spark, sf_dir):
     return token_budget_report(d, text_col="text", by="source")
 
 
-_IVF_CENT_SQL = """
+_IVF_KNN_SQL = """
+WITH
 cent AS (  -- deterministic coarse quantizer: unit-normalized embeddings of
            -- the first 16 vectors, cell = rank by vec_id (matches the Spark
            -- side; fixed cell count at every scale factor)
@@ -1029,13 +1061,21 @@ probes AS (  -- nprobe=4 nearest cells per query vector
     FROM embeddings e CROSS JOIN cent c
     WHERE e.vec_id % 100 = 0)
   WHERE rn <= 4)
+SELECT query_id, neighbor_id, rnk FROM (
+  SELECT p.query_id, a.vec_id AS neighbor_id,
+         row_number() OVER (PARTITION BY p.query_id
+                            ORDER BY list_cosine_similarity(p.q_vec, a.embedding) DESC,
+                                     a.vec_id ASC) AS rnk
+  FROM probes p JOIN assigned a ON p.cell = a.cell
+  WHERE p.query_id <> a.vec_id)
+WHERE rnk <= 5
 """
 
 
 def _ivf_centroids(emb):
     """q39/q46 centroids: embeddings 0-15, unit-normalized with
     sequential-sum arithmetic (the order of the DuckDB twin's
-    list_dot_product), so they are bit-identical to ``_IVF_CENT_SQL``'s."""
+    list_dot_product), so they are bit-identical to ``_IVF_KNN_SQL``'s."""
     import math
 
     cents = []
@@ -1047,17 +1087,7 @@ def _ivf_centroids(emb):
     return cents
 
 
-@_q("q39_knn_ivf", f"""
-WITH {_IVF_CENT_SQL}
-SELECT query_id, neighbor_id, rnk FROM (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         row_number() OVER (PARTITION BY p.query_id
-                            ORDER BY list_cosine_similarity(p.q_vec, a.embedding) DESC,
-                                     a.vec_id ASC) AS rnk
-  FROM probes p JOIN assigned a ON p.cell = a.cell
-  WHERE p.query_id <> a.vec_id)
-WHERE rnk <= 5
-""")
+@_q("q39_knn_ivf", _IVF_KNN_SQL)
 def q39(spark, sf_dir):
     from amharic_ecommerce_data_extractor_spark.operators.similarity import (
         ivf_assign,
@@ -1071,17 +1101,7 @@ def q39(spark, sf_dir):
         .select("query_id", "neighbor_id", "rnk")
 
 
-@_q("q46_knn_ivf_indexed", f"""
-WITH {_IVF_CENT_SQL}
-SELECT query_id, neighbor_id, rnk FROM (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         row_number() OVER (PARTITION BY p.query_id
-                            ORDER BY list_cosine_similarity(p.q_vec, a.embedding) DESC,
-                                     a.vec_id ASC) AS rnk
-  FROM probes p JOIN assigned a ON p.cell = a.cell
-  WHERE p.query_id <> a.vec_id)
-WHERE rnk <= 5
-""")
+@_q("q46_knn_ivf_indexed", _IVF_KNN_SQL)
 def q46(spark, sf_dir):
     # q39 through the MATERIALIZED index: the corpus is written
     # hive-partitioned by cell, read back as knn_ivf's cells, and the
@@ -1111,18 +1131,8 @@ def q46(spark, sf_dir):
         shutil.rmtree(idx, ignore_errors=True)
 
 
-@_q("q40_embedding_near_dup_pairs", """
-WITH planes AS (
-  SELECT p, list_transform(range(64), d ->
-           CASE WHEN CAST('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)
-                     AS UBIGINT) % 2 = 1
-                THEN 1.0 ELSE -1.0 END) AS pv
-  FROM (SELECT unnest(range(64)) AS p)),
-sigs AS (
-  SELECT vec_id, CAST(p // 8 AS INT) AS band,
-         string_agg(CASE WHEN list_dot_product(embedding, pv) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p) AS sig
-  FROM embeddings CROSS JOIN planes GROUP BY vec_id, band),
+@_q("q40_embedding_near_dup_pairs", f"""
+WITH {_PLANES_SQL},
 cand AS (
   SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
   FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -1138,38 +1148,20 @@ ranked AS (
 SELECT count(*) AS n_pairs, round(avg(sim), 6) AS avg_sim
 FROM ranked WHERE rnk <= 5 AND sim >= 0.9 AND query_id < neighbor_id
 """)
-def q40(spark, sf_dir):
+def q40(spark, sf_dir, plane_fn="rademacher_md5"):
     from amharic_ecommerce_data_extractor_spark.operators.dedup import (
         embedding_duplicate_pairs,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_duplicate_pairs(emb, threshold=0.9, plane_fn="rademacher_md5")
+    pairs = embedding_duplicate_pairs(emb, threshold=0.9, plane_fn=plane_fn)
     return pairs.agg(F.count("*").alias("n_pairs"),
                      F.round(F.avg("sim"), 6).alias("avg_sim"))
 
 
-@_q("q41_simhash_duplicate_groups", """
-WITH pool AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-words AS (
-  SELECT doc_id,
-         unnest(list_distinct(string_split_regex(trim(lower(text)), '\\s+'))) AS w
-  FROM pool),
-hashed AS (SELECT doc_id, md5(w) AS hx FROM words),
-votes AS (
-  SELECT doc_id, b,
-         sum(CASE WHEN CAST(floor(
-                    CAST(CAST('0x' || substr(hx, CAST(b // 4 AS INT) + 1, 1) AS UBIGINT) AS DOUBLE)
-                    / pow(2, 3 - (b % 4))) AS BIGINT) % 2 = 1
-                  THEN 1 ELSE -1 END) AS vote
-  FROM hashed CROSS JOIN (SELECT unnest(range(64)) AS b)
-  GROUP BY doc_id, b),
-sim AS (
-  SELECT doc_id,
-         string_agg(CASE WHEN vote > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS simhash
-  FROM votes GROUP BY doc_id),
+@_q("q41_simhash_duplicate_groups", f"""
+WITH {_POOL_SQL},
+{_simhash_sql("pool")},
 groups AS (
   SELECT simhash, count(*) AS n_docs FROM sim GROUP BY simhash HAVING count(*) > 1)
 SELECT count(*) AS n_groups,
@@ -1177,68 +1169,21 @@ SELECT count(*) AS n_groups,
        max(n_docs) AS max_group
 FROM groups
 """)
-def q41(spark, sf_dir):
+def q41(spark, sf_dir, hash_fn="md5"):
     from amharic_ecommerce_data_extractor_spark.operators.dedup import simhash_duplicates
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    groups = simhash_duplicates(u, hash_fn="md5")
+    groups = simhash_duplicates(_doubled_docs(spark, sf_dir), hash_fn=hash_fn)
     return groups.agg(F.count("*").alias("n_groups"),
                       F.sum("n_docs").alias("total_docs"),
                       F.max("n_docs").alias("max_group"))
 
 
-@_q("q42_ngram_jaccard_pairs", """
-WITH pool AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS words FROM pool),
-shingled AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(greatest(len(words) - 2, 0) + 1),
-           i -> array_to_string(words[(i + 1):(i + 2)], ' '))) AS shingles
-  FROM tok),
-seeds AS (  -- universal-hash constants: re-derivable in any engine
-  SELECT seed,
-         CAST('0x' || substr(md5('a' || CAST(seed AS VARCHAR)), 1, 7) AS BIGINT)
-           % 1073741788 + 1 AS a,
-         CAST('0x' || substr(md5('b' || CAST(seed AS VARCHAR)), 1, 7) AS BIGINT)
-           % 1073741789 AS b
-  FROM (SELECT unnest(range(16)) AS seed)),
-minhash AS (  -- h_i(sh) = (a_i*h0 + b_i) mod P, h0 = md5-prefix mod P: md5 ONCE per shingle
-  SELECT doc_id, seed, min((a * h0 + b) % 1073741789) AS mh
-  FROM (SELECT doc_id,
-               CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % 1073741789 AS h0
-        FROM (SELECT doc_id, unnest(shingles) AS sh FROM shingled))
-  CROSS JOIN seeds
-  GROUP BY doc_id, seed),
-banded AS (  -- 8 bands x 2 rows
-  SELECT doc_id, band,
-         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed)) AS sig
-  FROM (SELECT doc_id, seed, mh, CAST(seed // 2 AS INT) AS band FROM minhash)
-  GROUP BY doc_id, band),
-cand AS (
-  SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-  FROM banded a JOIN banded b ON a.band = b.band AND a.sig = b.sig
-  WHERE a.doc_id < b.doc_id),
-verified AS (
-  SELECT src, dst,
-         len(list_intersect(sa.shingles, sb.shingles))
-           / (len(sa.shingles) + len(sb.shingles)
-              - len(list_intersect(sa.shingles, sb.shingles))) AS j
-  FROM cand JOIN shingled sa ON sa.doc_id = src
-            JOIN shingled sb ON sb.doc_id = dst)
-SELECT count(*) AS n_pairs, round(avg(j), 6) AS avg_jaccard
-FROM verified WHERE j >= 0.5
-""")
-def q42(spark, sf_dir):
+@_q("q42_ngram_jaccard_pairs", _minhash_pairs_sql(2, 0.5))
+def q42(spark, sf_dir, hash_fn="md5"):
     from amharic_ecommerce_data_extractor_spark.operators.dedup import ngram_jaccard_pairs
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    pairs = ngram_jaccard_pairs(u, n=2, threshold=0.5, hash_fn="md5")
+    pairs = ngram_jaccard_pairs(_doubled_docs(spark, sf_dir), n=2, threshold=0.5,
+                                hash_fn=hash_fn)
     return pairs.agg(F.count("*").alias("n_pairs"),
                      F.round(F.avg("ngram_jaccard"), 6).alias("avg_jaccard"))
 
@@ -1374,33 +1319,7 @@ exact_kept AS (
     SELECT doc_id, text, source,
            row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
     FROM documents) WHERE rn = 1),
-tok AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS words
-        FROM exact_kept),
-shingled AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(greatest(len(words) - 3, 0) + 1),
-           i -> array_to_string(words[(i + 1):(i + 3)], ' '))) AS shingles
-  FROM tok),
-seeds AS (  -- universal-hash constants: re-derivable in any engine
-  SELECT seed,
-         CAST('0x' || substr(md5('a' || CAST(seed AS VARCHAR)), 1, 7) AS BIGINT)
-           % 1073741788 + 1 AS a,
-         CAST('0x' || substr(md5('b' || CAST(seed AS VARCHAR)), 1, 7) AS BIGINT)
-           % 1073741789 AS b
-  FROM (SELECT unnest(range(16)) AS seed)),
-minhash AS (  -- h_i(sh) = (a_i*h0 + b_i) mod P, h0 = md5-prefix mod P: md5 ONCE per shingle
-  SELECT doc_id, seed, min((a * h0 + b) % 1073741789) AS mh
-  FROM (SELECT doc_id,
-               CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % 1073741789 AS h0
-        FROM (SELECT doc_id, unnest(shingles) AS sh FROM shingled))
-  CROSS JOIN seeds
-  GROUP BY doc_id, seed),
-banded AS (
-  SELECT doc_id, band,
-         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed)) AS sig
-  FROM (SELECT doc_id, seed, mh, CAST(seed // 2 AS INT) AS band FROM minhash)
-  GROUP BY doc_id, band),
+{_minhash_sql(3, "exact_kept")},
 cand AS (
   -- star mode (the CC-consuming dedup default): per (band, sig) bucket the
   -- candidate edges run bucket-min -> member only — linear in bucket size,
@@ -1448,12 +1367,12 @@ UNION ALL SELECT 1, 'dedup', (SELECT count(*) FROM dedup_kept)
 UNION ALL SELECT 2, 'quality_and_length', (SELECT count(*) FROM filtered)
 UNION ALL SELECT 3, 'per_source_cap', (SELECT count(*) FROM capped)
 """)
-def q37(spark, sf_dir):
+def q37(spark, sf_dir, hash_fn="md5"):
     from amharic_ecommerce_data_extractor_spark.operators.curation import curate
 
     docs = _t(spark, sf_dir, "documents")
     curated, audit = curate(docs, min_quality=0.3, min_tokens=5,
-                            per_source_cap=100, hash_fn="md5")
+                            per_source_cap=100, hash_fn=hash_fn)
     # audit is already driver-local; release the curated cache rather than
     # holding two corpora of blocks across the rest of the bench session
     curated.unpersist()
@@ -1468,11 +1387,8 @@ def q37(spark, sf_dir):
 # trick is recomputed verbatim by the DuckDB twin.
 # ---------------------------------------------------------------------------
 
-@_q("q48_winnowing_overlap_pairs", """
-WITH pool AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents),
+@_q("q48_winnowing_overlap_pairs", f"""
+WITH {_POOL_SQL},
 g AS (  -- one row per character 5-gram position; npos = n_kgrams
   SELECT doc_id, length(text) - 4 AS npos,
          unnest(range(1, length(text) - 3)) AS pos, text
@@ -1503,18 +1419,16 @@ pairs AS (
   HAVING count(*) >= 3)
 SELECT src, dst, n_shared FROM pairs
 """)
-def q48(spark, sf_dir):
-    # hash_fn='md5' so DuckDB recomputes identical fingerprints; the packed
-    # min / window-start selection / df-cap / overlap join shapes are the
+def q48(spark, sf_dir, hash_fn="md5"):
+    # md5 so DuckDB recomputes identical fingerprints; the packed min /
+    # window-start selection / df-cap / overlap join shapes are the
     # production ones (only the k-gram hash family differs — see q48p)
     from amharic_ecommerce_data_extractor_spark.operators.dedup import (
         fingerprint_overlap_pairs,
     )
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    return fingerprint_overlap_pairs(u, k=5, w=8, min_shared=3, max_df=50,
-                                     hash_fn="md5")
+    return fingerprint_overlap_pairs(_doubled_docs(spark, sf_dir), k=5, w=8,
+                                     min_shared=3, max_df=50, hash_fn=hash_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -1629,12 +1543,11 @@ def q50(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Production-hash twins (rows-only, no oracle): the md5 variants above exist
 # because DuckDB can recompute them; a production user runs xxhash64 / Gauss
-# planes (pure JVM arithmetic, no hex-string parsing). These twins make the
-# bench record what that user actually pays — same operators, same inputs,
-# production hash family — so BENCH_rN.json shows both costs side by side.
-# Not SQL-oracle-backed by design (xxhash64 is not reproducible in DuckDB);
-# each prod path's VALUES are pinned by unit tests instead
-# (tests/test_dedup.py, tests/test_similarity.py).
+# planes (pure JVM arithmetic, no hex-string parsing). Each twin is its
+# oracle-backed body with the production hash family — same operators, same
+# inputs — so BENCH_rN.json shows both costs side by side. Not
+# SQL-oracle-backed by design (xxhash64 is not reproducible in DuckDB); their
+# VALUES are pinned by tests/test_prod_twins_values.py instead.
 #
 # REGISTRATION ORDER MATTERS: these register LAST so every oracle-backed
 # query precedes them — the driver's correctness gate checks the registry in
@@ -1642,85 +1555,19 @@ def q50(spark, sf_dir):
 # query out of the checked window (the round-3 coverage gap; VERDICT r3 §1).
 # ---------------------------------------------------------------------------
 
-@_q("q29p_simhash_bucket_profile_prod")
-def q29p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import simhash64
-    from amharic_ecommerce_data_extractor_spark.operators.linking import spread
-
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
-    return (d.select(F.substring(simhash64(F.col("text")), 1, 8).alias("bucket"))
-            .groupBy("bucket").agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), F.asc("bucket")).limit(20))
-
-
-@_q("q31p_minhash_near_dup_pairs_prod")
-def q31p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
-        minhash_duplicate_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    pairs = minhash_duplicate_pairs(u, threshold=0.9)  # hash_fn default: xxhash64
-    return pairs.agg(F.count("*").alias("n_pairs"),
-                     F.round(F.avg("jaccard"), 6).alias("avg_jaccard"))
-
-
-@_q("q37p_curation_audit_prod")
-def q37p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.curation import curate
-
-    docs = _t(spark, sf_dir, "documents")
-    curated, audit = curate(docs, min_quality=0.3, min_tokens=5,
-                            per_source_cap=100)
-    curated.unpersist()  # same cache-release as q37
-    return audit
-
-
-@_q("q40p_embedding_near_dup_pairs_prod")
-def q40p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
-        embedding_duplicate_pairs,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_duplicate_pairs(emb, threshold=0.9)  # plane_fn default: gauss
-    return pairs.agg(F.count("*").alias("n_pairs"),
-                     F.round(F.avg("sim"), 6).alias("avg_sim"))
-
-
-@_q("q41p_simhash_duplicate_groups_prod")
-def q41p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import simhash_duplicates
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    groups = simhash_duplicates(u)  # hash_fn default: xxhash64
-    return groups.agg(F.count("*").alias("n_groups"),
-                      F.sum("n_docs").alias("total_docs"),
-                      F.max("n_docs").alias("max_group"))
-
-
-@_q("q42p_ngram_jaccard_pairs_prod")
-def q42p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    pairs = ngram_jaccard_pairs(u, n=2, threshold=0.5)  # hash_fn default: xxhash64
-    return pairs.agg(F.count("*").alias("n_pairs"),
-                     F.round(F.avg("ngram_jaccard"), 6).alias("avg_jaccard"))
+SPARK_QUERIES.update({
+    "q29p_simhash_bucket_profile_prod": partial(q29, hash_fn="xxhash64"),
+    "q31p_minhash_near_dup_pairs_prod": partial(q31, hash_fn="xxhash64"),
+    "q37p_curation_audit_prod": partial(q37, hash_fn="xxhash64"),
+    "q40p_embedding_near_dup_pairs_prod": partial(q40, plane_fn="gauss"),
+    "q41p_simhash_duplicate_groups_prod": partial(q41, hash_fn="xxhash64"),
+    "q42p_ngram_jaccard_pairs_prod": partial(q42, hash_fn="xxhash64"),
+})
 
 
 @_q("q48p_winnowing_overlap_pairs_prod")
 def q48p(spark, sf_dir):
-    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
-        fingerprint_overlap_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    u = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    pairs = fingerprint_overlap_pairs(u, k=5, w=8, min_shared=3, max_df=50)
+    pairs = q48(spark, sf_dir, hash_fn="xxhash64")
     return pairs.agg(F.count("*").alias("n_pairs"),
                      F.round(F.avg("n_shared"), 6).alias("avg_shared"))
 

@@ -4,7 +4,8 @@ operator G5).
 Every stage is committed by ONE write of its data to ``<workdir>/<stage>/
 data`` (the checkpoint — the cache between stages and the resume point),
 then a ``_STAGE_DONE`` JSON marker written LAST (its presence is the
-commit). The marker holds stage name, ``rows``, format, wall time and the
+commit; it is written to a temp file and renamed into place, so it is whole
+or absent). The marker holds stage name, ``rows``, format, wall time and the
 lineage: row count, an order-insensitive content signature (bit_xor of
 xxhash64 over all columns in read-back order), the ``content_sha256``
 invariant signature when that column exists, the mismatch count of that
@@ -62,6 +63,16 @@ def with_chunk_column(df: DataFrame, key_col: str = "message_id",
 
 def _marker_path(stage_dir: str) -> str:
     return os.path.join(stage_dir, MARKER)
+
+
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically: a sibling ``.tmp`` file
+    renamed over it, so a kill mid-write never leaves a partial marker
+    (whose presence alone would commit the stage)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def stage_done(stage_dir: str) -> bool:
@@ -160,8 +171,7 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     marker = {"stage": stage, "rows": lineage["n_rows"], "fmt": fmt,
               "seconds": round(time.perf_counter() - t0, 3),
               "lineage": {**lineage, "schema": ddl}}
-    with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-        json.dump(marker, f)
+    _write_json(_marker_path(stage_dir), marker)
 
 
 def checkpoint_format() -> str:
@@ -253,8 +263,7 @@ def chunked_stage(
                 f"{committed} vs requested {manifest}; restart the stage "
                 f"(delete the dir) or resume with the committed parameters")
     else:
-        with open(manifest_path, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
+        _write_json(manifest_path, manifest)
     pending = [c for c in range(n_chunks)
                if not stage_done(os.path.join(stage_dir, f"chunk={c}"))]
     if pending:
@@ -278,8 +287,7 @@ def chunked_stage(
             os.makedirs(cdir, exist_ok=True)
             part = source.where(chunk_key == chunk)
             write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
-    with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-        json.dump({"stage": stage, "chunks": n_chunks}, f)
+    _write_json(_marker_path(stage_dir), {"stage": stage, "chunks": n_chunks})
     return _read(spark, fmt, os.path.join(stage_dir, "chunk=*", "data"),
                  _committed_schema(os.path.join(stage_dir, "chunk=0")))
 

@@ -8,14 +8,17 @@ Usage: python scripts/profile_extract_kernel.py [n_rows]
 
 The synthetic corpus is cut into ``pa.array`` batches of
 ``session.ARROW_BATCH_ROWS`` (the session's ``arrow.maxRecordsPerBatch``) and
-run through the shell twice:
+run through the shell in 5 cold/warm pairs:
   cold — the preprocess and record memos cleared first (a fresh worker)
   warm — the same batches again, memos full (a reused worker)
+One pass swings by a third from run to run on a shared 4-core machine, so
+the script prints the median and the min–max of the 5 passes of each kind.
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -29,6 +32,8 @@ from amharic_ecommerce_data_extractor_spark.data.synthetic import (  # noqa: E40
 from amharic_ecommerce_data_extractor_spark.kernels import labeler as lb  # noqa: E402
 from amharic_ecommerce_data_extractor_spark.operators import extract as ex  # noqa: E402
 from amharic_ecommerce_data_extractor_spark.session import ARROW_BATCH_ROWS  # noqa: E402
+
+PAIRS = 5
 
 
 def t(label, fn, *a, **k):
@@ -54,15 +59,20 @@ def main() -> None:
         return [ex._extract_arrow_batch(b, names, ex._extract_batch_rules)
                 for b in batches]
 
-    ex._preprocess_cached.cache_clear()
-    lb.extract_message_cached.cache_clear()
-    _, dt_cold = t("shell (cold memos)", run)
-    _, dt_warm = t("shell (warm memos)", run)
+    passes = {"cold": [], "warm": []}
+    for _ in range(PAIRS):
+        ex._preprocess_cached.cache_clear()
+        lb.extract_message_cached.cache_clear()
+        passes["cold"].append(t("shell (cold memos)", run)[1])
+        passes["warm"].append(t("shell (warm memos)", run)[1])
 
-    for lbl, d in [("cold", dt_cold), ("warm", dt_warm)]:
-        print(f"  {lbl}: {1e6 * d / n:7.1f} us/row  "
-              f"{1e6 * d / n_distinct:7.1f} us/distinct text  "
-              f"{n / d:9.0f} rows/s/core")
+    for lbl, dts in passes.items():
+        us = [1e6 * d / n_distinct for d in dts]
+        med = statistics.median(dts)
+        print(f"  {lbl}: {1e6 * med / n:7.1f} us/row  "
+              f"{1e6 * med / n_distinct:7.1f} us/distinct text "
+              f"(min {min(us):.1f}, max {max(us):.1f})  "
+              f"{n / med:9.0f} rows/s/core  [median of {PAIRS}]")
 
 
 if __name__ == "__main__":

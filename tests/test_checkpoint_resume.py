@@ -32,6 +32,34 @@ def test_run_stage_resumes(spark, tmp_path):
     assert not (tmp_path / "s1" / "_lineage").exists()
 
 
+def test_torn_marker_write_commits_nothing(spark, tmp_path, monkeypatch):
+    """A process killed while the marker's JSON is being written must leave
+    the stage uncommitted (the marker's presence IS the commit): the next
+    run recomputes the stage instead of resuming from an unparseable
+    marker."""
+    class Killed(Exception):
+        pass
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"stage": "s1", "ro')
+        raise Killed
+
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return spark.range(10)
+
+    with monkeypatch.context() as m:
+        m.setattr(ckpt.json, "dump", torn_dump)
+        with pytest.raises(Killed):
+            ckpt.run_stage(spark, str(tmp_path), "s1", build)
+    assert not ckpt.stage_done(str(tmp_path / "s1"))
+    assert ckpt.run_stage(spark, str(tmp_path), "s1", build).count() == 10
+    assert calls["n"] == 2
+    assert ckpt.committed_rows(str(tmp_path / "s1")) == 10
+
+
 def test_chunked_stage_mid_run_restart(spark, tmp_path):
     msgs = generate_messages(spark, n_rows=300, n_vendors=5)
     boom = {"arm": True}

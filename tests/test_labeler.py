@@ -64,7 +64,7 @@ def test_parse_price_charclass():
 
 
 def test_corrupted_label_is_O():
-    got = lb.group_entities([("ቦሌ", "I-LOCገ"), ("x", "O")])
+    got = lb.group_entities(["ቦሌ", "x"], ["I-LOCገ", "O"])
     assert got == {"PRODUCT": [], "PRICE": [], "LOC": [], "CONTACT_INFO": []}
 
 

@@ -6,6 +6,7 @@ import zipfile
 import pytest
 from pyspark.sql import functions as F
 
+from amharic_ecommerce_data_extractor_spark.kernels.labeler import bio_spans
 from amharic_ecommerce_data_extractor_spark.operators import metrics as mx
 from amharic_ecommerce_data_extractor_spark.operators.multimodal import (
     extract_image_features,
@@ -77,10 +78,12 @@ def test_read_any_dispatch(spark, tmp_path, sf_dir):
 
 
 def test_bio_spans():
-    assert mx._bio_spans(["B-LOC", "I-LOC", "O", "B-PRICE"]) == [("LOC", 0, 2), ("PRICE", 3, 4)]
+    assert bio_spans(["B-LOC", "I-LOC", "O", "B-PRICE"]) == [("LOC", 0, 2), ("PRICE", 3, 4)]
     # I- after different type starts a new span; corrupted labels are O
-    assert mx._bio_spans(["I-LOC", "I-PRICE", "I-LOCገ"]) == [("LOC", 0, 1), ("PRICE", 1, 2)]
-    assert mx._bio_spans([]) == []
+    assert bio_spans(["I-LOC", "I-PRICE", "I-LOCገ"]) == [("LOC", 0, 1), ("PRICE", 1, 2)]
+    # a null array element (spans_table input) ends a run like O
+    assert bio_spans(["B-LOC", None, "I-LOC"]) == [("LOC", 0, 1), ("LOC", 2, 3)]
+    assert bio_spans([]) == []
 
 
 def test_span_prf_and_confusion(spark):

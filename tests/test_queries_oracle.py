@@ -144,6 +144,49 @@ def test_oracle_backed_queries_register_first():
         "50-entry correctness window — later ones would never get a verdict")
 
 
+# The registry's names in registration order: the oracle-backed block
+# first, then the rows-only entries (production-hash twins, video,
+# incremental dedup).
+_ORACLE_BACKED = [
+    "q01_pricing_summary", "q02_revenue_by_segment",
+    "q03_top_brands_by_revenue", "q04_supplier_nation_rollup",
+    "q05_event_scorecard", "q06_user_lending_score", "q07_daily_event_counts",
+    "q08_dow_histogram", "q09_distinct_users_by_type", "q10_docs_by_source",
+    "q11_text_stats", "q12_vocab_size", "q13_top20_words",
+    "q14_corr_qty_price", "q15_clean_text", "q16_langid_heuristic",
+    "q17_exact_dedup_profile", "q18_json_props", "q19_running_value",
+    "q20_union_profile", "q21_knn_bruteforce", "q22_top3_events_per_user",
+    "q23_customers_without_orders", "q24_customers_with_orders",
+    "q25_sessionize", "q26_value_percentiles", "q27_dedup_union_exact",
+    "q28_doc_quality_scores", "q29_simhash_bucket_profile",
+    "q30_knn_lsh_recall", "q31_minhash_near_dup_pairs",
+    "q32_kg_triples_profile", "q47_streaming_triples_profile",
+    "q33_kg_vendor_scorecard", "q34_kg_entity_linking",
+    "q35_multimodal_features", "q36_curation_core", "q38_token_budget",
+    "q39_knn_ivf", "q46_knn_ivf_indexed", "q40_embedding_near_dup_pairs",
+    "q41_simhash_duplicate_groups", "q42_ngram_jaccard_pairs",
+    "q43_salted_topk", "q44_salted_collect_set", "q45_span_prf",
+    "q37_curation_audit", "q48_winnowing_overlap_pairs",
+    "q49_streaming_stateful_totals", "q50_streaming_windowed_activity",
+]
+_ROWS_ONLY = [
+    "q29p_simhash_bucket_profile_prod", "q31p_minhash_near_dup_pairs_prod",
+    "q37p_curation_audit_prod", "q40p_embedding_near_dup_pairs_prod",
+    "q41p_simhash_duplicate_groups_prod", "q42p_ngram_jaccard_pairs_prod",
+    "q48p_winnowing_overlap_pairs_prod", "q51_video_frame_features",
+    "q52_incremental_dedup",
+]
+
+
+def test_registry_names_and_order():
+    """A dropped, renamed or reordered entry changes which queries an
+    in-order correctness gate checks; the ordering invariant above cannot
+    see that."""
+    assert list(ORACLE_SQL) == _ORACLE_BACKED
+    assert list(SPARK_QUERIES) == _ORACLE_BACKED + _ROWS_ONLY
+    assert (len(_ORACLE_BACKED), len(_ROWS_ONLY)) == (50, 9)
+
+
 @pytest.mark.parametrize("name", sorted(n for n in SPARK_QUERIES
                                         if n.endswith("_prod")))
 def test_prod_hash_twin_runs(spark, sf_dir, name):

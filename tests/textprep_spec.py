@@ -12,7 +12,7 @@ import unicodedata
 import pandas as pd
 
 from amharic_ecommerce_data_extractor_spark.kernels.textprep import (
-    _CHAR_TABLE, _GEEZ_MAP, _GEEZ_RE, _NON_AM_ASCII_RE, _PUNCT_PAIR_RE, _PUNCT_TABLE,
+    _CHAR_VARIANT_PAIRS, _GEEZ_MAP, _GEEZ_RE, _NON_AM_ASCII_RE, _PUNCT_PAIR_RE, _PUNCT_TABLE,
     _URL_RE, _WS_RE)
 
 # Stopword list mirrors text_preprocessor.py:44-53 (a data table). Removal is
@@ -51,8 +51,14 @@ def nfc_normalize(text: str | None) -> str:
 
 
 def fold_char_variants(text: str | None) -> str:
-    """Canonicalize Amharic glyph variants (reference :70-80)."""
-    return "" if text is None else text.translate(_CHAR_TABLE)
+    """Canonicalize Amharic glyph variants (reference :70-80): one
+    whole-text replace pass per pair, in order. The package folds with the
+    single table ``_effective_char_map`` collapses these passes into."""
+    if text is None:
+        return ""
+    for variant, canonical in _CHAR_VARIANT_PAIRS:
+        text = text.replace(variant, canonical)
+    return text
 
 
 def geez_digits_to_arabic(text: str | None) -> str:

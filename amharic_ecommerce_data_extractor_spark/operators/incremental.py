@@ -13,7 +13,7 @@ arrives later; it is what production training-data pipelines do.)
 
 Index tables (all written BUCKETED so the per-batch joins shuffle only the
 small batch side — the 10^12-row index side is pre-partitioned on disk and
-never moves; see sources/bucketed.py):
+never moves; see :class:`DedupIndex`):
 
 * ``exact``  (fp, id)        bucketed by fp   — sha256 membership checks
 * ``sigs``   (id, minhash)   bucketed by id   — MinHash signature lookup
@@ -251,12 +251,17 @@ def incremental_dedup(
 class DedupIndex:
     """Persistent bucketed storage for the fingerprint index.
 
-    Three catalog tables (``{name}_exact/_sigs/_bands``), each bucketed on
-    its single join key — the write pays the partitioning shuffle once,
-    every subsequent batch joins against an unshuffled index side. On a
-    real deployment the same layout is Iceberg's ``bucket(N, key)``
-    partition transform (see sources/bucketed.py docstring); appends are
-    plain bucketed appends, no rewrite of existing files.
+    Three catalog tables (``{name}_exact/_sigs/_bands``), each written with
+    ``bucketBy(n_buckets, key).sortBy(key)`` on its single join key. The
+    write pays the partitioning shuffle once; every later batch joins
+    against the index with no exchange on the index side, and the sort
+    lets the SortMergeJoin read the bucketed scan without sorting it.
+    Appends are plain bucketed appends, no rewrite of existing files.
+
+    Bucketing requires a catalog table: a bare ``parquet(path)`` write
+    drops the bucket spec, and so does a path read, so the tables are
+    written with ``saveAsTable`` and read back with ``spark.table``. Two
+    bucketed sides join without a shuffle only when both use the same N.
 
     n_buckets sizing: index rows are tens of bytes, so buckets ≈
     total_docs × ~200 B ÷ (128–512 MB target file size); the default 8
@@ -277,14 +282,12 @@ class DedupIndex:
         return all(self.spark.catalog.tableExists(t) for _, t, _ in self._tables())
 
     def append(self, additions: IndexRows) -> None:
-        """Create-or-append the three tables (bucketed; append preserves
-        the bucket spec)."""
-        from ..sources.bucketed import write_bucketed
-
+        """Create-or-append the three tables (bucketed and sorted on each
+        table's key; append preserves the bucket spec)."""
         mode = "append" if self.exists() else "overwrite"
         for attr, table, key in self._tables():
-            write_bucketed(getattr(additions, attr), table, key,
-                           self.n_buckets, sort_cols=[key], mode=mode)
+            (getattr(additions, attr).write.mode(mode)
+             .bucketBy(self.n_buckets, key).sortBy(key).saveAsTable(table))
         self._refresh()
 
     def _refresh(self) -> None:

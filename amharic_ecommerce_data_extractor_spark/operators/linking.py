@@ -11,12 +11,16 @@ near-duplicate density.
 Stage 2 — exact verify: candidate pairs are confirmed with exact Jaccard over
 shingle sets (array_intersect/array_union) ≥ threshold.
 
-Stage 3 — connected components (G3): alternating large-star/small-star
-iterative joins (Kiveris et al., "Connected Components in MapReduce and
-Beyond") — O(log n) rounds, each a groupBy + join; ``localCheckpoint``
-truncates lineage every round, convergence detected via an edge-set
-signature (count + hash-sum), so the driver loop does constant work per
-round regardless of input size.
+Stage 3 — connected components (G3): the edge set is deduplicated behind
+one lazy ``localCheckpoint`` and counted by its edge-set signature (count +
+bit_xor hash). Below ``_UNIONFIND_MAX_EDGES`` edges (5M; every benchmark
+workload's graph is far below it) one task runs an exact union-find over
+the whole edge set, with no iteration. Larger edge sets (and tests that
+set the bound to 0) take alternating large-star/small-star iterative joins
+(Kiveris et al., "Connected Components in MapReduce and Beyond") —
+O(log n) rounds, each a groupBy + join; a ``localCheckpoint`` truncates
+lineage every round, and convergence is detected via the same signature,
+so the driver loop does constant work per round regardless of input size.
 
 Canonical id = min node id of the component; canonical surface = the
 lexicographically smallest surface (deterministic under any partitioning).

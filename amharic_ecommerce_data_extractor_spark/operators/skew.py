@@ -52,11 +52,3 @@ def salted_collect_set(df: DataFrame, key: str, value: str,
     return (phase1.groupBy(key)
             .agg(F.array_sort(F.array_distinct(F.flatten(F.collect_list("_partial"))))
                  .alias(f"{value}_set")))
-
-
-def skew_profile(df: DataFrame, key: str, top_n: int = 5) -> DataFrame:
-    """Diagnostic: per-key share of rows for the heaviest keys."""
-    total = df.count()
-    return (df.groupBy(key).agg(F.count("*").alias("n"))
-            .withColumn("share", F.round(F.col("n") / F.lit(float(total)), 4))
-            .orderBy(F.desc("n")).limit(top_n))

@@ -5,8 +5,8 @@ Stages (each checkpointed once, with its lineage in the stage marker,
 resumable; a stage whose content breaks its content_sha256 is never
 committed):
 
-  ingest     raw message corpus (synthetic generator here; any parquet/Iceberg
-             table of the graft shape in production)
+  ingest     raw message corpus (synthetic generator, or any parquet
+             dataset of the graft shape via --input)
   extract    fused preprocess→tokenize→BIO→entities (one Arrow stage),
              chunked for intra-stage resume; each chunk is committed with
              its own marker, and the chunk dirs are the extract checkpoint
@@ -90,10 +90,9 @@ def run_pipeline(
     lsh_threshold: float = 0.6,
     verify_lineage: bool = False,
 ) -> dict:
-    """Checkpoint format: parquet in this sandbox; set
-    SPARK_GRAFT_CHECKPOINT_FORMAT=iceberg (with the runtime jar + catalog
-    configured on the cluster) to write every stage as Iceberg tables — the
-    sinks are format-dispatched (sources/checkpoint.py write_stage).
+    """Build (or resume) the staged KG under ``workdir``, one parquet
+    checkpoint per stage (sources/checkpoint.py).
+
     verify_lineage=True re-verifies every completed stage checkpoint against
     the lineage committed in its marker (partition-invariant signature fold)
     at the end — one extra scan per stage, the paranoid/audit mode. The

@@ -535,17 +535,25 @@ def q26(spark, sf_dir):
 # the non-SQL-expressible hash structures
 # ---------------------------------------------------------------------------
 
-_POOL_SQL = """pool AS (
-  SELECT doc_id, text FROM documents
+def _pool_sql(*extra: str) -> str:
+    """The doubled corpus as the CTE ``pool(doc_id, text, *extra)``: every
+    document twice, the copy's doc_id offset by 1,000,000."""
+    cols = ", ".join(("text",) + extra)
+    return f"""pool AS (
+  SELECT doc_id, {cols} FROM documents
   UNION ALL
-  SELECT doc_id + 1000000, text FROM documents)"""
+  SELECT doc_id + 1000000, {cols} FROM documents)"""
 
 
-def _doubled_docs(spark, sf_dir):
-    """``_POOL_SQL``'s corpus: every document twice, the copy's doc_id
-    offset by 1,000,000."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
+_POOL_SQL = _pool_sql()
+
+
+def _doubled_docs(spark, sf_dir, *extra: str):
+    """``_pool_sql(*extra)``'s corpus: every document twice, the copy's
+    doc_id offset by 1,000,000."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text", *extra)
+    return d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
+                                  "text", *extra))
 
 
 @_q("q27_dedup_union_exact", f"""
@@ -967,11 +975,7 @@ def q35(spark, sf_dir):
 
 
 @_q("q36_curation_core", f"""
-WITH pool AS (
-  SELECT doc_id, text, lang, source FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, lang, source FROM documents
-),
+WITH {_pool_sql("lang", "source")},
 deduped AS (
   SELECT * FROM (
     SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -993,9 +997,7 @@ def q36(spark, sf_dir):
 
     from amharic_ecommerce_data_extractor_spark.functions import textstats as ts
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-    pool = d.unionByName(d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                                  "text", "lang", "source"))
+    pool = _doubled_docs(spark, sf_dir, "lang", "source")
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = pool.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
     scored = deduped.select(

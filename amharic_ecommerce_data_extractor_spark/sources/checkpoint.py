@@ -5,33 +5,26 @@ Every stage is committed by ONE write of its data to ``<workdir>/<stage>/
 data`` (the checkpoint — the cache between stages and the resume point),
 then a ``_STAGE_DONE`` JSON marker written LAST (its presence is the
 commit; it is written to a temp file and renamed into place, so it is whole
-or absent). The marker holds stage name, ``rows``, format, wall time and the
-lineage: row count, an order-insensitive content signature (bit_xor of
-xxhash64 over all columns in read-back order), the ``content_sha256``
-invariant signature when that column exists, the mismatch count of that
-invariant (``sha256_mismatch``: rows whose ``content`` no longer hashes to
-it; non-zero fails the stage, unmarked) when ``content`` exists too, and
-the read-back schema as DDL (a fraction of the JSON form's size). The
-lineage is observed on the write itself (``DataFrame.observe``), and reads
-use the committed schema, so neither a run nor a resume pays a lineage,
-invariant or schema-inference job. A completed stage whose marker lacks
-``lineage`` or ``fmt`` raises ValueError on resume and on verification.
+or absent). Checkpoints are parquet. The marker holds stage name, ``rows``,
+wall time and the lineage: row count, an order-insensitive content
+signature (bit_xor of xxhash64 over all columns in read-back order), the
+``content_sha256`` invariant signature when that column exists, the
+mismatch count of that invariant (``sha256_mismatch``: rows whose
+``content`` no longer hashes to it; non-zero fails the stage, unmarked)
+when ``content`` exists too, and the read-back schema as DDL (a fraction of
+the JSON form's size). The lineage is observed on the write itself
+(``DataFrame.observe``), and reads use the committed schema, so neither a
+run nor a resume pays a lineage, invariant or schema-inference job. A
+completed stage whose marker lacks ``lineage`` raises ValueError on resume
+and on verification.
 
-Resume = skip stages whose marker exists. ``chunked_stage`` hash-splits a
-long Python-heavy stage into N chunks committed independently — a mid-run
-restart recomputes only unfinished chunks, including chunks whose dirs
-were deleted. Its chunk dirs are the stage's only copy of the rows:
-downstream stages read them back as one scan. The reference has no
-counterpart (every stage re-reads CSV and recomputes,
-``run_pipeline.py:89,217``).
-
-Formats: ``fmt`` / ``SPARK_GRAFT_CHECKPOINT_FORMAT`` dispatch the sink —
-'parquet' (the tested default) or 'iceberg' on a cluster with the
-``iceberg-spark-runtime`` jar and an Iceberg catalog configured;
-``partition_by`` becomes an identity partition field, and the marker stays
-the resume signal. The written format is committed in the marker (and in
-``_CHUNK_MANIFEST``); resume hard-fails on a mismatch, so flipping the env
-var mid-run never reads parquet with the Iceberg reader or vice versa.
+Resume = skip stages whose marker exists. ``chunked_stage`` splits a long
+Python-heavy stage along its source's ``_chunk`` column into N chunks
+committed independently — a mid-run restart recomputes only unfinished
+chunks, including chunks whose dirs were deleted. Its chunk dirs are the
+stage's only copy of the rows: downstream stages read them back as one
+scan. The reference has no counterpart (every stage re-reads CSV and
+recomputes, ``run_pipeline.py:89,217``).
 """
 
 from __future__ import annotations
@@ -84,14 +77,14 @@ def _marker(stage_dir: str) -> dict:
         return json.load(f)
 
 
-def _committed(stage_dir: str, key: str):
-    """One entry of a completed stage's marker; a marker without it raises
+def _committed_lineage(stage_dir: str) -> dict:
+    """A completed stage's marker lineage; a marker without it raises
     ValueError naming the stage dir (every marker ``write_stage`` commits
-    has ``fmt`` and ``lineage``)."""
-    value = _marker(stage_dir).get(key)
-    if not value:
-        raise ValueError(f"no {key} in the marker at {stage_dir}")
-    return value
+    has one)."""
+    lineage = _marker(stage_dir).get("lineage")
+    if not lineage:
+        raise ValueError(f"no lineage in the marker at {stage_dir}")
+    return lineage
 
 
 def committed_rows(stage_dir: str) -> int:
@@ -126,24 +119,16 @@ def _lineage_aggs(cols: list[str]) -> list:
     return aggs
 
 
-def _committed_schema(stage_dir: str) -> str:
-    return _committed(stage_dir, "lineage")["schema"]
-
-
-def _read(spark: SparkSession, fmt: str, path: str, schema: str) -> DataFrame:
-    """Read a checkpoint; file formats take the committed schema DDL instead
-    of inferring one with a job (table formats carry their own)."""
-    reader = spark.read.format(fmt)
-    if fmt in ("parquet", "orc"):
-        reader = reader.schema(schema)
-    return reader.load(path)
+def _read(spark: SparkSession, stage_dir: str, path: str) -> DataFrame:
+    """Read a checkpoint with the schema DDL committed in ``stage_dir``'s
+    marker instead of inferring one with a job."""
+    return spark.read.schema(_committed_lineage(stage_dir)["schema"]).parquet(path)
 
 
 def write_stage(df: DataFrame, stage_dir: str, stage: str,
-                partition_by: list[str] | None = None,
-                fmt: str = "parquet") -> None:
-    """Checkpoint one stage: one write, then the marker (formats and lineage:
-    see the module docstring). partition_by lays the data out
+                partition_by: list[str] | None = None) -> None:
+    """Checkpoint one stage: one parquet write, then the marker (lineage: see
+    the module docstring). partition_by lays the data out
     hive-partitioned by those columns.
 
     The lineage is observed in the write's result stage (observe is the
@@ -162,64 +147,30 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     w = observed.write.mode("overwrite")
     if part:
         w = w.partitionBy(*part)
-    w.format(fmt).save(data_path)
+    w.parquet(data_path)
 
     lineage = obs.get
     if lineage.get("sha256_mismatch"):
         raise Sha256InvariantError(f"stage {stage!r} not committed: {lineage['sha256_mismatch']}"
                                    " rows whose content does not hash to content_sha256")
-    marker = {"stage": stage, "rows": lineage["n_rows"], "fmt": fmt,
+    marker = {"stage": stage, "rows": lineage["n_rows"],
               "seconds": round(time.perf_counter() - t0, 3),
               "lineage": {**lineage, "schema": ddl}}
     _write_json(_marker_path(stage_dir), marker)
 
 
-def checkpoint_format() -> str:
-    """Stage-sink format: 'parquet' (sandbox default) or e.g. 'iceberg' via
-    SPARK_GRAFT_CHECKPOINT_FORMAT (cluster with the runtime jar + catalog)."""
-    return os.environ.get("SPARK_GRAFT_CHECKPOINT_FORMAT", "parquet")
-
-
-def committed_format(stage_dir: str) -> str | None:
-    """The format a completed stage was actually written with (from its
-    _STAGE_DONE marker); None if the stage is incomplete. A marker without
-    ``fmt`` raises ValueError."""
-    return _committed(stage_dir, "fmt") if stage_done(stage_dir) else None
-
-
-def _resolve_resume_format(stage_dir: str, fmt: str) -> str:
-    """Resume-format guard: a checkpoint written as parquet must never be
-    read with the Iceberg reader (or vice versa) just because
-    SPARK_GRAFT_CHECKPOINT_FORMAT changed between runs — that is a silent
-    wrong-reader read. Hard-fails on mismatch, like the n_chunks guard."""
-    committed = committed_format(stage_dir)
-    if committed is not None and committed != fmt:
-        raise ValueError(
-            f"checkpoint format mismatch at {stage_dir}: stage was committed "
-            f"with fmt={committed!r} but fmt={fmt!r} was requested (is "
-            f"SPARK_GRAFT_CHECKPOINT_FORMAT different from the writing "
-            f"run's?); resume with the committed format or delete the stage "
-            f"dir to rewrite it")
-    return committed or fmt
-
-
 def run_stage(spark: SparkSession, workdir: str, stage: str, build,
-              partition_by: list[str] | None = None,
-              fmt: str | None = None) -> DataFrame:
+              partition_by: list[str] | None = None) -> DataFrame:
     """Compute-or-resume: if the stage marker exists, read the checkpoint;
     otherwise build(), checkpoint, and read back (truncating lineage).
     partition_by lays the checkpoint out hive-partitioned — downstream
     filters on those columns become partition pruning, not data scans.
     The read uses the marker's schema: a resumed stage runs no Spark job."""
-    fmt = fmt or checkpoint_format()
     stage_dir = os.path.join(workdir, stage)
     if not stage_done(stage_dir):
         os.makedirs(stage_dir, exist_ok=True)
-        write_stage(build(), stage_dir, stage, partition_by=partition_by, fmt=fmt)
-    else:
-        fmt = _resolve_resume_format(stage_dir, fmt)
-    return _read(spark, fmt, os.path.join(stage_dir, "data"),
-                 _committed_schema(stage_dir))
+        write_stage(build(), stage_dir, stage, partition_by=partition_by)
+    return _read(spark, stage_dir, os.path.join(stage_dir, "data"))
 
 
 def chunked_stage(
@@ -228,90 +179,77 @@ def chunked_stage(
     stage: str,
     source: DataFrame,
     transform,
-    key_col: str = "message_id",
     n_chunks: int = 8,
-    fmt: str | None = None,
 ) -> DataFrame:
-    """Stage with intra-stage resume: the input is hash-split on key_col into
-    n_chunks; each chunk is transformed and committed independently (its own
-    data dir + marker). A restart skips finished chunks — finished partitions
-    are never recomputed. Output is the multi-chunk parquet scan; when every
-    chunk is committed, a resume checks the manifest and returns that scan
-    without running a Spark job.
+    """Stage with intra-stage resume: the source is split on its ``_chunk``
+    column into n_chunks; each chunk is transformed and committed
+    independently (its own data dir + marker). A restart skips finished
+    chunks — finished partitions are never recomputed. Output is the
+    multi-chunk parquet scan; when every chunk is committed, a resume checks
+    the manifest and returns that scan without running a Spark job.
 
-    A stage-level manifest (chunking params) is committed BEFORE the first
-    chunk: resuming with a different n_chunks/key_col would silently change
-    the pmod memberships (duplicated + missing rows), so it hard-fails.
+    The source must carry ``_chunk`` (``with_chunk_column``); checkpointed
+    partitioned by it (``run_stage(partition_by=[CHUNK_COL])``), each
+    chunk's filter is a partition-pruning predicate, so the chunks together
+    read the input once. A source without the column raises ValueError
+    before any Spark job.
 
-    Scan amplification: with a plain source, every chunk's filter re-scans
-    the full input (n_chunks× read amplification — fatal at 100 TB). When
-    the source carries a ``_chunk`` column AND was checkpointed partitioned
-    by it (see ``with_chunk_column`` + ``run_stage(partition_by=...)``),
-    the per-chunk filter is a PARTITION-PRUNING predicate: each chunk reads
-    only its own files, total read = one pass over the input."""
+    A stage-level manifest (``n_chunks``) is committed BEFORE the first
+    chunk: resuming with a different n_chunks would silently change the
+    chunk memberships (duplicated + missing rows), so it hard-fails."""
+    if CHUNK_COL not in source.columns:
+        raise ValueError(
+            f"chunked_stage: source of {stage!r} has no {CHUNK_COL} column; "
+            f"add it with with_chunk_column")
     stage_dir = os.path.join(workdir, stage)
     os.makedirs(stage_dir, exist_ok=True)
-    fmt = fmt or checkpoint_format()
     manifest_path = os.path.join(stage_dir, "_CHUNK_MANIFEST")
-    manifest = {"key_col": key_col, "n_chunks": n_chunks, "fmt": fmt}
     if os.path.exists(manifest_path):
         with open(manifest_path, encoding="utf-8") as f:
-            committed = json.load(f)
-        if committed != manifest:
+            committed = json.load(f)["n_chunks"]
+        if committed != n_chunks:
             raise ValueError(
                 f"chunked_stage resume mismatch at {stage_dir}: committed "
-                f"{committed} vs requested {manifest}; restart the stage "
-                f"(delete the dir) or resume with the committed parameters")
+                f"n_chunks={committed} vs requested {n_chunks}; restart the "
+                f"stage (delete the dir) or resume with the committed n_chunks")
     else:
-        _write_json(manifest_path, manifest)
+        _write_json(manifest_path, {"n_chunks": n_chunks})
     pending = [c for c in range(n_chunks)
                if not stage_done(os.path.join(stage_dir, f"chunk={c}"))]
     if pending:
-        if CHUNK_COL in source.columns:
-            # guard against a committed _chunk domain wider than this loop:
-            # a source bucketed 0..7 consumed with n_chunks=4 would silently
-            # drop buckets 4..7 (partition-column-only scan — cheap, values
-            # come from the hive directory names)
-            max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
-            if max_chunk is not None and max_chunk >= n_chunks:
-                raise ValueError(
-                    f"chunked_stage: source carries {CHUNK_COL} up to "
-                    f"{max_chunk} but n_chunks={n_chunks} would process only "
-                    f"0..{n_chunks - 1}; pass the n_chunks the source was "
-                    f"bucketed with")
-            chunk_key = F.col(CHUNK_COL)
-        else:
-            chunk_key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_chunks))
+        # guard against a committed _chunk domain wider than this loop:
+        # a source bucketed 0..7 consumed with n_chunks=4 would silently
+        # drop buckets 4..7 (partition-column-only scan — cheap, values
+        # come from the hive directory names)
+        max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
+        if max_chunk is not None and max_chunk >= n_chunks:
+            raise ValueError(
+                f"chunked_stage: source carries {CHUNK_COL} up to "
+                f"{max_chunk} but n_chunks={n_chunks} would process only "
+                f"0..{n_chunks - 1}; pass the n_chunks the source was "
+                f"bucketed with")
         for chunk in pending:
             cdir = os.path.join(stage_dir, f"chunk={chunk}")
             os.makedirs(cdir, exist_ok=True)
-            part = source.where(chunk_key == chunk)
-            write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
+            part = source.where(F.col(CHUNK_COL) == chunk)
+            write_stage(transform(part), cdir, f"{stage}/chunk={chunk}")
     _write_json(_marker_path(stage_dir), {"stage": stage, "chunks": n_chunks})
-    return _read(spark, fmt, os.path.join(stage_dir, "chunk=*", "data"),
-                 _committed_schema(os.path.join(stage_dir, "chunk=0")))
+    return _read(spark, os.path.join(stage_dir, "chunk=0"),
+                 os.path.join(stage_dir, "chunk=*", "data"))
 
 
-def verify_stage_lineage(spark: SparkSession, stage_dir: str,
-                         fmt: str | None = None) -> dict:
+def verify_stage_lineage(spark: SparkSession, stage_dir: str) -> dict:
     """Re-verify a checkpointed stage against the lineage in its marker.
 
     bit_xor is associative and commutative, so the content signature of a
     fresh scan equals the one observed at write time however the data is
     partitioned on re-read. Compares row count + content signature (+ the
     sha256 keys when present). Returns {'ok': bool, ...evidence}. A
-    marker without lineage or fmt raises ValueError.
-
-    The reader format is the one the marker committed, whatever the ambient
-    env says; an EXPLICITLY passed fmt that contradicts it hard-fails, same
-    contract as run_stage."""
-    fmt = (_committed(stage_dir, "fmt") if fmt is None
-           else _resolve_resume_format(stage_dir, fmt))
-    stored = dict(_committed(stage_dir, "lineage"))
-    schema = stored.pop("schema")
-    data = _read(spark, fmt, os.path.join(stage_dir, "data"), schema)
+    marker without lineage raises ValueError."""
+    stored = dict(_committed_lineage(stage_dir))
+    stored.pop("schema")
+    data = _read(spark, stage_dir, os.path.join(stage_dir, "data"))
     fresh = data.agg(*_lineage_aggs(data.columns)).collect()[0].asDict()
     checks = {k: (stored[k] or 0) == (fresh.get(k) or 0) for k in stored}
     return {"ok": all(checks.values()), "checks": checks,
             "stored": stored, "fresh": {k: fresh.get(k) for k in checks}}
-

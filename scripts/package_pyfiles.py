@@ -8,7 +8,7 @@ shipping to executors:
     spark-submit --py-files dist/engine.zip \\
         --conf spark.sql.adaptive.enabled=true \\
         scripts/run_pipeline_cluster.py --workdir s3://bucket/kg \\
-        --input <iceberg/parquet>
+        --input <parquet>
 
 (the module entry ``python -m amharic_ecommerce_data_extractor_spark.plans.
 pipeline`` is the local/driver-side equivalent).

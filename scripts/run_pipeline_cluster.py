@@ -8,7 +8,6 @@ thin driver is the submittable entry point:
     python scripts/package_pyfiles.py dist/engine.zip
     spark-submit \
         --py-files dist/engine.zip \
-        [--packages/--conf for Iceberg, see README] \
         scripts/run_pipeline_cluster.py --workdir <dir> [--input <parquet>] \
         [--messages N] [--chunks N] [--verify-lineage]
 

@@ -1,49 +1,10 @@
-"""Bucketed catalog tables — co-located joins without per-query shuffles.
-
-The user is the incremental dedup index (``operators/incremental.py``
-``DedupIndex``): its three fingerprint tables are joined against every new
-batch on their keys. Unbucketed, every such join pays a full shuffle of
-both sides PER BATCH; bucketing pays the index side's shuffle ONCE at
-write time and every later batch joins against it with no exchange on
-that side:
-
-* both sides written with ``bucketBy(N, key)`` and the SAME N → Catalyst
-  plans a SortMergeJoin whose children are bucketed scans, no
-  ShuffleExchange on either side (pinned by tests/test_bucketed.py);
-* ``groupBy(key)`` on a bucketed table likewise skips its exchange
-  (bucketing IS hash partitioning, persisted);
-* point lookups on the bucket key prune to 1/N of the files (bucket
-  pruning), the same serving trick as the IVF cell layout.
-
-Bucketing requires a catalog table (``saveAsTable``) — a bare
-``parquet(path)`` write silently drops the bucket spec, and so does a path
-read: read the table back with ``spark.table``. That is a Spark
-limitation, not a choice. On a real deployment the same call lands on the
-Iceberg/Hive catalog (Iceberg: ``bucket(N, key)`` partition transform); in
-the sandbox it uses the session's local warehouse dir.
-
-Sizing rule: N_buckets ≈ table_size / target_file_size (128–512 MB per
-bucket file per partition); both join sides MUST use the same N (Spark does
-not yet join compatible multiples without a shuffle on one side).
-"""
+"""Plan and data probes that only tests call: the shuffle-join exchange
+count of a physical plan (the bucketed-table co-location checks) and a
+per-key row-share profile (the skew fixtures)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int, sort_cols: list[str] | None = None,
-                   fmt: str = "parquet", mode: str = "overwrite") -> None:
-    """Write df as a bucketed catalog table (one shuffle now, none later).
-
-    sort_cols: optional ``sortBy`` within buckets — lets the downstream
-    SortMergeJoin skip its sort too (scan → merge directly), and keeps
-    min/max file statistics tight for the bucket key."""
-    w = df.write.format(fmt).mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
+from pyspark.sql import DataFrame, functions as F
 
 
 def join_exchange_count(joined: DataFrame) -> int:
@@ -95,3 +56,11 @@ def is_shuffle_free_join(joined: DataFrame) -> bool:
     exchanges visible in the final plan string when they exist, so absence
     is meaningful."""
     return join_exchange_count(joined) == 0
+
+
+def skew_profile(df: DataFrame, key: str, top_n: int = 5) -> DataFrame:
+    """Diagnostic: per-key share of rows for the heaviest keys."""
+    total = df.count()
+    return (df.groupBy(key).agg(F.count("*").alias("n"))
+            .withColumn("share", F.round(F.col("n") / F.lit(float(total)), 4))
+            .orderBy(F.desc("n")).limit(top_n))

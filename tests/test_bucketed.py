@@ -1,15 +1,13 @@
-"""Bucketed co-located joins: the write-once-shuffle-never-again checkpoint
-layout (sources/bucketed.py). Pins the property that justifies the feature:
-a join of two same-N bucketed tables plans WITHOUT a shuffle exchange, and
-values equal the plain-join answer."""
+"""Bucketed co-located joins: the write-once-shuffle-never-again table
+layout (the ``DedupIndex`` tables' ``bucketBy(N, key).sortBy(key)``
+catalog writes). Pins the property that justifies the layout: a join of two
+same-N bucketed tables plans WITHOUT a shuffle exchange, and values equal
+the plain-join answer."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from amharic_ecommerce_data_extractor_spark.sources.bucketed import (
-    is_shuffle_free_join,
-    write_bucketed,
-)
+from tests.plan_probes import is_shuffle_free_join
 
 
 @pytest.fixture()
@@ -29,10 +27,10 @@ def test_bucketed_join_is_shuffle_free_and_value_equal(spark, no_broadcast):
     ents = spark.range(0, 2000, 2).select(
         F.col("id").alias("message_id"),
         F.array(F.concat(F.lit("p"), F.col("id") % 5)).alias("products"))
-    write_bucketed(meta, "t_meta_b", "message_id", 8,
-                   sort_cols=["message_id"])
-    write_bucketed(ents, "t_ents_b", "message_id", 8,
-                   sort_cols=["message_id"])
+    meta.write.mode("overwrite").bucketBy(8, "message_id") \
+        .sortBy("message_id").saveAsTable("t_meta_b")
+    ents.write.mode("overwrite").bucketBy(8, "message_id") \
+        .sortBy("message_id").saveAsTable("t_ents_b")
     try:
         bj = spark.table("t_meta_b").join(
             spark.table("t_ents_b"), "message_id")
@@ -64,7 +62,7 @@ def test_bucketed_join_is_shuffle_free_and_value_equal(spark, no_broadcast):
 def test_bucketed_groupby_skips_exchange(spark, no_broadcast):
     ev = spark.range(5000).select(
         (F.col("id") % 97).alias("user_id"), F.col("id").alias("v"))
-    write_bucketed(ev, "t_ev_b", "user_id", 8)
+    ev.write.mode("overwrite").bucketBy(8, "user_id").saveAsTable("t_ev_b")
     try:
         agg = spark.table("t_ev_b").groupBy("user_id") \
             .agg(F.sum("v").alias("s"))

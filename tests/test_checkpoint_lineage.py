@@ -12,8 +12,9 @@ Pins:
 * the sha256 invariant — the marker holds the mismatch count, and a stage
   whose content was altered after hashing raises and is never committed;
 * a marker without a ``lineage`` key fails verification loudly, and a
-  completed stage whose marker lost ``lineage`` or ``fmt`` fails its
-  resume the same way;
+  completed stage whose marker lost ``lineage`` fails its resume the same
+  way; markers and chunk manifests that still carry the older ``fmt`` and
+  ``key_col`` keys resume without a job;
 * the job budget — committing a plain stage runs no more jobs than a bare
   ``df.write`` of the frame, and a resume runs none; a pipeline build writes
   its extract rows once, and a full pipeline resume runs no job.
@@ -150,11 +151,11 @@ def test_verify_marker_without_lineage_raises(spark, tmp_path):
         ckpt.verify_stage_lineage(spark, d)
 
 
-@pytest.mark.parametrize("key", ["lineage", "fmt"])
+@pytest.mark.parametrize("key", ["lineage"])
 def test_resume_marker_without_key_raises(spark, tmp_path, key):
-    """A completed stage resumes from its marker's schema and format; a
-    marker missing either fails the resume, naming the stage dir, instead of
-    reading by schema inference or with the ambient format."""
+    """A completed stage resumes from its marker's schema; a marker missing
+    it fails the resume, naming the stage dir, instead of reading by schema
+    inference."""
     def build():
         return spark.range(10)
 
@@ -165,7 +166,6 @@ def test_resume_marker_without_key_raises(spark, tmp_path, key):
     marker.write_text(json.dumps(m))
     with pytest.raises(ValueError, match=f"no {key} in the marker at .*st"):
         ckpt.run_stage(spark, str(tmp_path), "st", build)
-    assert ckpt.committed_format(str(tmp_path / "absent")) is None
 
 
 def _jobs_in_group(spark, group: str, fn) -> int:
@@ -208,3 +208,33 @@ def test_pipeline_writes_extract_once_and_resumes_without_jobs(spark, tmp_path):
     resumed = _jobs_in_group(spark, "kg-resume", lambda: run_pipeline(
         spark, wd, n_messages=300, n_chunks=2))
     assert resumed == 0
+
+
+def test_markers_with_format_keys_resume_without_jobs(spark, tmp_path):
+    """Stage markers that carry ``fmt`` and a chunk manifest that carries
+    ``fmt`` and ``key_col`` (the layout written before checkpoints were
+    parquet-only) resume with no Spark job and the committed rows."""
+    wd = str(tmp_path)
+    src = ckpt.with_chunk_column(
+        spark.range(200).withColumnRenamed("id", "message_id"), n_chunks=2)
+    ckpt.run_stage(spark, wd, "st", lambda: src, partition_by=[ckpt.CHUNK_COL])
+    ckpt.chunked_stage(spark, wd, "ch", src, lambda d: d, n_chunks=2)
+
+    for marker in ("st", "ch/chunk=0", "ch/chunk=1"):
+        path = tmp_path / marker / ckpt.MARKER
+        path.write_text(json.dumps({**json.loads(path.read_text()),
+                                    "fmt": "parquet"}))
+    (tmp_path / "ch" / "_CHUNK_MANIFEST").write_text(json.dumps(
+        {"key_col": "message_id", "n_chunks": 2, "fmt": "parquet"}))
+
+    resumed = {}
+
+    def resume():
+        resumed["st"] = ckpt.run_stage(spark, wd, "st", lambda: None,
+                                       partition_by=[ckpt.CHUNK_COL])
+        resumed["ch"] = ckpt.chunked_stage(spark, wd, "ch", src, lambda d: d,
+                                           n_chunks=2)
+
+    assert _jobs_in_group(spark, "ckpt-format-keys", resume) == 0
+    assert resumed["st"].count() == resumed["ch"].count() == 200
+    assert ckpt.verify_stage_lineage(spark, str(tmp_path / "ch" / "chunk=1"))["ok"]

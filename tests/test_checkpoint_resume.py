@@ -65,15 +65,15 @@ def test_chunked_stage_mid_run_restart(spark, tmp_path):
     boom = {"arm": True}
 
     def transform(df):
-        return extract_entities(df)
+        return extract_entities(df).drop(ckpt.CHUNK_COL)
 
     # first run: manually complete only chunks 0-2, then "crash"
-    src = msgs
-    key = F.pmod(F.xxhash64(F.col("message_id")), F.lit(6))
+    src = ckpt.with_chunk_column(msgs, n_chunks=6)
     for chunk in range(3):
         cdir = os.path.join(str(tmp_path), "extract", f"chunk={chunk}")
         os.makedirs(cdir, exist_ok=True)
-        ckpt.write_stage(transform(src.where(key == chunk)), cdir, f"extract/chunk={chunk}")
+        ckpt.write_stage(transform(src.where(F.col(ckpt.CHUNK_COL) == chunk)),
+                         cdir, f"extract/chunk={chunk}")
     done_mtimes = {
         c: os.path.getmtime(os.path.join(str(tmp_path), "extract", f"chunk={c}", ckpt.MARKER))
         for c in range(3)
@@ -114,22 +114,11 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     assert marker["rows"] == s1["vendors"]
 
 
-def test_write_stage_format_dispatch(spark, tmp_path):
-    """fmt parameter flows through to the sink (Iceberg in production —
-    parquet is the only format in this sandbox, so the dispatch itself is
-    what's under test)."""
-    from amharic_ecommerce_data_extractor_spark.sources.checkpoint import write_stage
-
-    df = spark.range(10).withColumnRenamed("id", "message_id")
-    d = str(tmp_path / "fmt_stage")
-    write_stage(df, d, "s", fmt="parquet")
-    assert spark.read.parquet(d + "/data").count() == 10
-
-
 def test_chunked_stage_nchunks_mismatch_raises(spark, tmp_path):
     from amharic_ecommerce_data_extractor_spark.sources.checkpoint import chunked_stage
 
-    src = spark.range(100).withColumnRenamed("id", "message_id")
+    src = ckpt.with_chunk_column(
+        spark.range(100).withColumnRenamed("id", "message_id"), n_chunks=4)
     wd = str(tmp_path / "wd")
     chunked_stage(spark, wd, "st", src, lambda d: d, n_chunks=4)
     with pytest.raises(ValueError, match="resume mismatch"):
@@ -137,6 +126,23 @@ def test_chunked_stage_nchunks_mismatch_raises(spark, tmp_path):
     # resuming with the committed parameters still works
     out = chunked_stage(spark, wd, "st", src, lambda d: d, n_chunks=4)
     assert out.count() == 100
+
+
+def test_chunked_stage_source_without_chunk_column_raises(spark, tmp_path):
+    """A source without ``_chunk`` has no chunk layout to split on: the
+    stage fails before any Spark job and before its dir is created,
+    naming the helper that adds the column."""
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    src = spark.range(100).withColumnRenamed("id", "message_id")
+
+    def run():
+        with pytest.raises(ValueError, match="with_chunk_column"):
+            ckpt.chunked_stage(spark, str(tmp_path), "st", src, lambda d: d,
+                               n_chunks=4)
+
+    assert _jobs_in_group(spark, "ckpt-no-chunk-col", run) == 0
+    assert not (tmp_path / "st").exists()
 
 
 def test_chunked_source_reads_prune_partitions(spark, tmp_path):
@@ -164,36 +170,6 @@ def test_chunked_source_reads_prune_partitions(spark, tmp_path):
     assert out.select(F.countDistinct("message_id")).collect()[0][0] == 1000
 
 
-def test_resume_format_mismatch_raises(spark, tmp_path):
-    """A stage committed as parquet must never be re-read with a different
-    format reader just because SPARK_GRAFT_CHECKPOINT_FORMAT changed between
-    runs — the committed format is recorded in the marker and enforced.
-    verify_stage_lineage honors an EXPLICIT fmt the run_stage way: a
-    contradiction with the committed marker raises."""
-    from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
-
-    src = spark.range(50).withColumnRenamed("id", "message_id")
-    ckpt.run_stage(spark, str(tmp_path), "st", lambda: src, fmt="parquet")
-    assert ckpt.committed_format(str(tmp_path / "st")) == "parquet"
-    with pytest.raises(ValueError, match="format mismatch"):
-        ckpt.run_stage(spark, str(tmp_path), "st", lambda: src, fmt="orc")
-    # resuming with the committed format still works
-    assert ckpt.run_stage(spark, str(tmp_path), "st", lambda: src,
-                          fmt="parquet").count() == 50
-
-    # chunked stages record fmt in the manifest and guard the same way
-    ckpt.chunked_stage(spark, str(tmp_path), "ch", src, lambda d: d,
-                       n_chunks=2, fmt="parquet")
-    with pytest.raises(ValueError, match="resume mismatch"):
-        ckpt.chunked_stage(spark, str(tmp_path), "ch", src, lambda d: d,
-                           n_chunks=2, fmt="orc")
-
-    with pytest.raises(ValueError, match="format mismatch"):
-        ckpt.verify_stage_lineage(spark, str(tmp_path / "ch" / "chunk=0"),
-                                  fmt="orc")
-    assert ckpt.verify_stage_lineage(spark, str(tmp_path / "ch" / "chunk=0"))["ok"]
-
-
 def test_chunk_marker_chaos_recomputes_only_that_chunk(spark, tmp_path):
     """File-level chaos: deleting ONE chunk's _STAGE_DONE marker, or its
     whole dir, makes the restart recompute exactly that chunk (others
@@ -201,10 +177,11 @@ def test_chunk_marker_chaos_recomputes_only_that_chunk(spark, tmp_path):
     with a chunk's data is caught by verify_stage_lineage."""
     from amharic_ecommerce_data_extractor_spark.sources import checkpoint as ckpt
 
-    src = spark.range(400).select(
+    src = ckpt.with_chunk_column(spark.range(400).select(
         F.col("id").alias("message_id"),
         F.concat(F.lit("m"), F.col("id")).alias("content"),
-        F.sha2(F.concat(F.lit("m"), F.col("id")), 256).alias("content_sha256"))
+        F.sha2(F.concat(F.lit("m"), F.col("id")), 256).alias("content_sha256")),
+        n_chunks=4)
     calls = {"n": 0}
 
     def transform(df):

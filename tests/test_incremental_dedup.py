@@ -120,9 +120,7 @@ def no_broadcast(spark):
 
 
 def test_bucketed_index_round_trip_and_one_sided_shuffle(spark, no_broadcast, tmp_path):
-    from amharic_ecommerce_data_extractor_spark.sources.bucketed import (
-        join_exchange_count,
-    )
+    from tests.plan_probes import join_exchange_count
 
     b1 = _docs(spark, [(1, _words("a")), (2, _words("b"))])
     b2 = _docs(spark, [(101, _words("b")), (102, _words("g"))])

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from amharic_ecommerce_data_extractor_spark.operators import skew
+from tests.plan_probes import skew_profile
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +24,7 @@ def skewed(spark):
 
 
 def test_skew_profile(spark, skewed):
-    prof = skew.skew_profile(skewed, "key", top_n=1).collect()[0]
+    prof = skew_profile(skewed, "key", top_n=1).collect()[0]
     assert prof["key"] == "mega" and prof["share"] >= 0.75
 
 

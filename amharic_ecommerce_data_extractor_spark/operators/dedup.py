@@ -12,23 +12,27 @@ the operations a 100TB training-data pipeline needs).
 * ngram_jaccard_pairs    — exact word-n-gram Jaccard on LSH candidates.
 * embedding_duplicate_pairs — cosine ≥ τ pairs via SimHash(LSH) bucketing of
                            the embedding space (from operators.similarity).
+* winnowing_fingerprints / fingerprint_overlap_pairs — MOSS substring
+                           fingerprints (one Arrow kernel per batch,
+                           kernels/hashing.py) and their overlap join.
 * dedup                  — end-to-end: drop exact dupes, then one doc per
                            near-dup component (connected components over the
                            verified pair graph).
 
 All group keys are hashes → uniformly distributed, no skew by construction;
-the only Python anywhere is zero.
+the only Python is the winnowing kernel, which receives texts only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
+from ..kernels.hashing import POS_W, winnow_batch
 from .linking import (
     banded_candidate_pairs,
     first_per,
     label_components,
-    md5_prefix60,
     minhash_rows,
     spread,
 )
@@ -43,7 +47,7 @@ def word_shingles(col, n: int = 3):
     positions exist for every full gram, and for the short-text single
     gram the past-the-end lookups are null, which concat_ws skips exactly
     like the truncated slice — without allocating an n-element array per
-    gram position (same de-allocation as the winnowing window min).
+    gram position.
 
     The words array is LET-BOUND through a single-element outer transform
     (Catalyst has no CSE inside interpreted lambda bodies, so referencing
@@ -321,161 +325,66 @@ def dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 # density is ~2/(w+1) of all k-grams.
 # ---------------------------------------------------------------------------
 
-_WINNOW_MOD = 2147483647      # hash modulus (2^31 - 1)
-# position packing width. 2^32 makes overflow/underflow IMPOSSIBLE rather
-# than merely unlikely: a Spark string holds < 2^31 chars, so every position
-# fits (pw-1-pos stays non-negative), and the packed maximum
-# (2^31-1)*2^32 + 2^32-1 = 2^63-1 is exactly the signed-64 ceiling — no
-# wraparound for any representable document. (A narrower width silently
-# decoded fp as hash-1 with a wrapped pos once positions crossed it.)
-_WINNOW_POS_W = 1 << 32
-
-
-def _kgram_hash(gram, hash_fn: str):
-    """Non-negative k-gram hash < 2^31. 'md5' is the cross-engine-verifiable
-    variant (DuckDB: CAST('0x' || substr(md5(g),1,15) AS BIGINT) % mod);
-    xxhash64 is the production path (one JVM hash per gram, no hex parse)."""
-    if hash_fn == "md5":
-        return md5_prefix60(gram) % _WINNOW_MOD
-    return F.pmod(F.xxhash64(gram), F.lit(_WINNOW_MOD))
-
-
 def winnowing_fingerprints(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text", k: int = 5, w: int = 8,
-                           hash_fn: str = "xxhash64",
-                           max_chars: int | None = 8192,
-                           _cross_chunk_dedup: bool = True) -> DataFrame:
+                           hash_fn: str = "xxhash64") -> DataFrame:
     """(id, pos, fp) — the winnowed fingerprint set of every document: hash
     each character k-gram, slide a window over w consecutive k-gram hashes,
     select each window's minimum hash taking the RIGHTMOST position on ties,
     emit distinct (position, hash) selections.
 
-    Scale shape: winnowing is LOCAL per document, so the whole selection runs
-    as array expressions inside one narrow projection — no k-gram explode, no
-    per-doc window shuffle, nothing leaves the scan partition until the
-    (already winnowed, ~2/(w+1)-density) selections are exploded. The
-    rightmost-min-on-ties rule is packed into a single BIGINT — hash * 2^32 +
-    (2^32 - 1 - pos) — so each window is a plain numeric array_min over a
-    w-slice, not a struct comparator or a UDF.
-
-    max_chars (DEFAULT ON, 8192) bounds BOTH the giant-document straggler
-    AND the per-gram substring cost: Spark's UTF8String substring seeks from
-    the start of the string, so unchunked extraction of all k-grams is O(L²)
-    byte scans per document — fine at typical document lengths (300 chars →
-    ~10⁵ byte touches), quadratic-blowup at book length. Measured
-    (scripts/time_winnowing_chunking.py, 4 docs/length, selection SETS
-    certified identical by xxhash set-hash): doc length 16k/64k/256k chars
-    → unchunked 1.2/11.2/170.7 s vs chunked 2.3/2.1/6.5 s — ~15× more time
-    per 4× length unchunked (the chunked fixed overhead only pays for
-    itself past ~30k chars; below that both are sub-second per doc and the
-    bound is moot). It is the default because the
-    footgun is silent and the chunked result is selection-for-selection
-    identical (test_winnowing_chunked_equals_unchunked); pass max_chars=None
-    only when documents are known-bounded and you want the absolutely
-    minimal single-projection zero-shuffle plan (the chunked path adds one
-    distinct shuffle to collapse cross-chunk duplicate selections —
-    _cross_chunk_dedup=False skips it when a downstream distinct subsumes
-    it, as fingerprint_overlap_pairs does). Documents are split into
-    max_chars-sized chunks overlapping by w + k - 2 characters (per-gram
-    seek ≤ max_chars → O(L · max_chars) total), positions stay GLOBAL (the
-    pack uses off - 1 + local pos). Why exact: a window at global
-    start s spans chars s .. s+w+k-2, and with that overlap every full
-    window fits wholly inside exactly one chunk's emitted start range
-    (chunk at offset o emits starts o .. o+max_chars-k-w+1; the next chunk
-    begins at o+max_chars-k-w+2 — contiguous, no gap). A non-head chunk
-    whose tail would truncate a window emits nothing for it (those windows
-    belong to the previous chunk); the single-truncated-window rule for
-    docs with < w k-grams applies only to the head chunk, which in that
-    case IS the whole document.
+    Shape: winnowing is local per document, so it runs as one Arrow kernel
+    in a narrow projection (kernels/hashing.winnow_batch) — no k-gram
+    explode, no per-doc window shuffle. Only the text crosses the Python
+    boundary; ids stay in the JVM and keep their type. Per Arrow batch the
+    kernel hashes each distinct k-gram once ('md5': the first 60 bits of
+    md5 % (2^31 - 1), the cross-engine variant DuckDB recomputes as
+    ``CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % mod``; 'xxhash64':
+    pmod(Spark's xxhash64, 2^31 - 1)), packs the rightmost-min-on-ties rule
+    into one BIGINT — hash * 2^32 + (2^32 - 1 - pos) — takes each window's
+    minimum in numpy and returns the distinct packed selections, which are
+    exploded and decoded here. The work is O(L) per document of L chars.
 
     Parity: reference has no substring fingerprinting (closest is the
     whole-text dedup key, text_preprocessor.py drop_duplicates); this is
     graft-new 100TB-pipeline capability alongside MinHash/SimHash. The
     DuckDB twin (q48) recomputes the same selections via an independent
-    formulation (row-exploded window SQL), and tests/test_dedup.py pins the
-    per-string eager reference.
+    formulation (row-exploded window SQL); tests/test_dedup.py pins the
+    per-string eager reference and tests/test_hash_kernel.py the
+    Spark-expression spec (tests/hash_spec.py).
     """
-    pw = _WINNOW_POS_W
-    src = (df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-           .where(F.length("_t") >= k))
-    if max_chars is None:
-        chunks = src.select("id", F.lit(1).alias("off"), F.col("_t").alias("_c"))
-        cross_chunk_dedup = False
-    else:
-        overlap = w + k - 2
-        step = max_chars - overlap
-        if step < 1:
-            raise ValueError(f"max_chars must exceed w + k - 2 = {overlap}")
-        chunks = (src.select(
-                      "id",
-                      F.explode(F.sequence(F.lit(1), F.length("_t"), F.lit(step)))
-                      .alias("off"),
-                      "_t")
-                  .select("id", "off",
-                          F.col("_t").substr(F.col("off"), F.lit(max_chars)).alias("_c"))
-                  .where(F.length("_c") >= k))
-        cross_chunk_dedup = _cross_chunk_dedup
-    # per-chunk gram count, and the last emitted window start: head chunks
-    # keep the short-doc truncated window (greatest(1, ...)); non-head
-    # chunks emit full windows only — a sub-w tail is the previous chunk's
-    # coverage, and emitting its truncated window would fabricate a window
-    # the unchunked algorithm never forms
-    chunks = chunks.withColumn("npos", F.length("_c") - (k - 1)).withColumn(
-        "last",
-        F.when(F.col("off") == 1,
-               F.greatest(F.lit(1), F.col("npos") - (w - 1)))
-        .otherwise(F.col("npos") - (w - 1)))
-    # packed[i] (0-based i, GLOBAL position off-1+i+1): h * 2^32 + (2^32-1-pos)
-    packed = F.transform(
-        F.sequence(F.lit(1), F.col("npos")),
-        lambda p: _kgram_hash(F.col("_c").substr(p, F.lit(k)), hash_fn) * pw
-        + (F.lit(pw - 1) - (F.col("off") - 1 + p)))
-    # window minimum as an unrolled least() over w element lookups: same
-    # value as array_min(slice(_packed, s, w)) — packed entries are never
-    # null, try_element_at past the end (only the short-doc truncated
-    # window) yields nulls that least() skips, exactly like the truncated
-    # slice — but with no per-window array allocation
-    def _win_min(s):
-        if w == 1:
-            return F.try_element_at(F.col("_packed"), s)
-        return F.least(*[F.try_element_at(F.col("_packed"), s + j)
-                         for j in range(w)])
+    pw = POS_W
 
-    sels = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.col("last")), _win_min))
-    out = (chunks.where(F.col("last") >= 1)
-           .withColumn("_packed", packed)
-           .select("id", F.explode(sels).alias("m"))
-           .select("id",
-                   (F.lit(pw - 1) - F.col("m") % pw).alias("pos"),
-                   F.expr(f"m DIV {pw}").alias("fp")))
-    # two chunks can select the same (pos, fp) through different windows
-    # near a boundary (within one chunk array_distinct already dedups)
-    return out.distinct() if cross_chunk_dedup else out
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def winnow_udf(texts):
+        return winnow_batch(texts, k, w, hash_fn)
+
+    return (df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+            .where(F.length("_t") >= k)
+            .select("id", F.explode(winnow_udf(F.col("_t"))).alias("m"))
+            .select("id",
+                    (F.lit(pw - 1) - F.col("m") % pw).alias("pos"),
+                    F.expr(f"m DIV {pw}").alias("fp")))
 
 
 def fingerprint_overlap_pairs(df: DataFrame, id_col: str = "doc_id",
                               text_col: str = "text", k: int = 5, w: int = 8,
                               min_shared: int = 3, max_df: int = 50,
-                              hash_fn: str = "xxhash64",
-                              max_chars: int | None = 8192) -> DataFrame:
+                              hash_fn: str = "xxhash64") -> DataFrame:
     """(src, dst, n_shared) — document pairs sharing >= min_shared winnowed
     fingerprints (the MOSS similarity join).
 
-    Scale discipline mirrors banded_candidate_pairs: the self-join carries
-    (fp, id) only — never text — and 'stop fingerprints' appearing in more
-    than max_df documents are dropped FIRST, so a boilerplate phrase shared
-    by 10^6 documents cannot detonate an n² bucket (same role as a df-cap in
-    an inverted index). Remaining fan-out is <= max_df² per hash."""
-    # barrier before the df-cap/self-join diamond (same discipline as
-    # minhash_duplicate_pairs): fps feeds three consumers (keep + both join
-    # sides) — without it the whole winnowing subtree is instantiated per
-    # consumer and the per-k-gram hashing can run more than once per action
-    # _cross_chunk_dedup=False: the (id, fp) distinct below subsumes the
-    # chunked path's cross-chunk (id, pos, fp) dedup — one shuffle, not two
-    fps = (winnowing_fingerprints(spread(df, id_col), id_col=id_col,
-                                  text_col=text_col, k=k, w=w, hash_fn=hash_fn,
-                                  max_chars=max_chars, _cross_chunk_dedup=False)
+    The fingerprints come from winnowing_fingerprints' Arrow kernel; the
+    rest is Spark. The (id, fp) distinct is lazily checkpointed, because it
+    feeds three consumers (the df-cap and both join sides) and would
+    otherwise run the kernel once per consumer. Scale discipline mirrors
+    banded_candidate_pairs: the self-join carries (fp, id) only — never
+    text — and 'stop fingerprints' appearing in more than max_df documents
+    are dropped FIRST, so a boilerplate phrase shared by 10^6 documents
+    cannot detonate an n² bucket (same role as a df-cap in an inverted
+    index). Remaining fan-out is <= max_df² per hash."""
+    fps = (winnowing_fingerprints(df, id_col=id_col, text_col=text_col, k=k,
+                                  w=w, hash_fn=hash_fn)
            .select("id", "fp").distinct().localCheckpoint(eager=False))
     keep = (fps.groupBy("fp").agg(F.count("*").alias("_df"))
             .where(F.col("_df") <= max_df).select("fp"))

@@ -50,11 +50,10 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     an under-split scan.
 
     Why: a small-but-compute-dense input (one parquet file of 10k documents
-    feeding per-k-gram hashing) arrives as 1-2 scan splits, so the expensive
+    feeding per-shingle hashing) arrives as 1-2 scan splits, so the expensive
     projection runs on 1-2 of N cores while the rest idle. Measured on the
     sf0.1 doubled-documents minhash stage at local[32]: 7-8 s unspread vs
-    3.6 s spread (the residual is the checkpoint write); the winnowing
-    overlap query drops 11.9 s -> 2.5 s.
+    3.6 s spread (the residual is the checkpoint write).
 
     Why gated, and gated STATICALLY: at 100 TB the scan already arrives with
     thousands of splits — an unconditional repartition there is a pure-loss

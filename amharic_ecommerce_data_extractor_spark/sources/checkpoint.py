@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -119,10 +120,26 @@ def _lineage_aggs(cols: list[str]) -> list:
     return aggs
 
 
-def _read(spark: SparkSession, stage_dir: str, path: str) -> DataFrame:
-    """Read a checkpoint with the schema DDL committed in ``stage_dir``'s
-    marker instead of inferring one with a job."""
-    return spark.read.schema(_committed_lineage(stage_dir)["schema"]).parquet(path)
+def _read(spark: SparkSession, stage_dir: str, *paths: str) -> DataFrame:
+    """Read checkpoint data dirs with the schema DDL committed in
+    ``stage_dir``'s marker instead of inferring one with a job."""
+    return spark.read.schema(_committed_lineage(stage_dir)["schema"]).parquet(*paths)
+
+
+@contextmanager
+def _stage_tag(spark: SparkSession, stage: str):
+    """Tag every Spark job started inside the block with ``stage:<stage>``
+    (``spark.job.tags`` on the job-start event), so an event-log reader can
+    attribute jobs to stages. A tag already set by the caller stays set."""
+    sc = spark.sparkContext
+    tag = f"stage:{stage}"
+    had = tag in sc.getJobTags()
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        if not had:
+            sc.removeJobTag(tag)
 
 
 def write_stage(df: DataFrame, stage_dir: str, stage: str,
@@ -165,11 +182,13 @@ def run_stage(spark: SparkSession, workdir: str, stage: str, build,
     otherwise build(), checkpoint, and read back (truncating lineage).
     partition_by lays the checkpoint out hive-partitioned — downstream
     filters on those columns become partition pruning, not data scans.
-    The read uses the marker's schema: a resumed stage runs no Spark job."""
+    The read uses the marker's schema: a resumed stage runs no Spark job.
+    Jobs started here carry the ``stage:<stage>`` job tag."""
     stage_dir = os.path.join(workdir, stage)
     if not stage_done(stage_dir):
         os.makedirs(stage_dir, exist_ok=True)
-        write_stage(build(), stage_dir, stage, partition_by=partition_by)
+        with _stage_tag(spark, stage):
+            write_stage(build(), stage_dir, stage, partition_by=partition_by)
     return _read(spark, stage_dir, os.path.join(stage_dir, "data"))
 
 
@@ -192,7 +211,10 @@ def chunked_stage(
     partitioned by it (``run_stage(partition_by=[CHUNK_COL])``), each
     chunk's filter is a partition-pruning predicate, so the chunks together
     read the input once. A source without the column raises ValueError
-    before any Spark job.
+    before any Spark job. The chunk data dirs are read back as a path list
+    (a glob path would first be probed as a literal streaming-sink
+    metadata dir, logging a FileNotFoundException per read). Jobs started
+    here carry the ``stage:<stage>`` job tag.
 
     A stage-level manifest (``n_chunks``) is committed BEFORE the first
     chunk: resuming with a different n_chunks would silently change the
@@ -217,25 +239,27 @@ def chunked_stage(
     pending = [c for c in range(n_chunks)
                if not stage_done(os.path.join(stage_dir, f"chunk={c}"))]
     if pending:
-        # guard against a committed _chunk domain wider than this loop:
-        # a source bucketed 0..7 consumed with n_chunks=4 would silently
-        # drop buckets 4..7 (partition-column-only scan — cheap, values
-        # come from the hive directory names)
-        max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
-        if max_chunk is not None and max_chunk >= n_chunks:
-            raise ValueError(
-                f"chunked_stage: source carries {CHUNK_COL} up to "
-                f"{max_chunk} but n_chunks={n_chunks} would process only "
-                f"0..{n_chunks - 1}; pass the n_chunks the source was "
-                f"bucketed with")
-        for chunk in pending:
-            cdir = os.path.join(stage_dir, f"chunk={chunk}")
-            os.makedirs(cdir, exist_ok=True)
-            part = source.where(F.col(CHUNK_COL) == chunk)
-            write_stage(transform(part), cdir, f"{stage}/chunk={chunk}")
+        with _stage_tag(spark, stage):
+            # guard against a committed _chunk domain wider than this loop:
+            # a source bucketed 0..7 consumed with n_chunks=4 would silently
+            # drop buckets 4..7 (partition-column-only scan — cheap, values
+            # come from the hive directory names)
+            max_chunk = source.agg(F.max(CHUNK_COL)).collect()[0][0]
+            if max_chunk is not None and max_chunk >= n_chunks:
+                raise ValueError(
+                    f"chunked_stage: source carries {CHUNK_COL} up to "
+                    f"{max_chunk} but n_chunks={n_chunks} would process only "
+                    f"0..{n_chunks - 1}; pass the n_chunks the source was "
+                    f"bucketed with")
+            for chunk in pending:
+                cdir = os.path.join(stage_dir, f"chunk={chunk}")
+                os.makedirs(cdir, exist_ok=True)
+                part = source.where(F.col(CHUNK_COL) == chunk)
+                write_stage(transform(part), cdir, f"{stage}/chunk={chunk}")
     _write_json(_marker_path(stage_dir), {"stage": stage, "chunks": n_chunks})
     return _read(spark, os.path.join(stage_dir, "chunk=0"),
-                 os.path.join(stage_dir, "chunk=*", "data"))
+                 *[os.path.join(stage_dir, f"chunk={c}", "data")
+                   for c in range(n_chunks)])
 
 
 def verify_stage_lineage(spark: SparkSession, stage_dir: str) -> dict:

@@ -209,8 +209,7 @@ def q42p_expected(docs) -> tuple:
 
 # ---------------------------------------------------------------------------
 # Winnowing fingerprints (operators/dedup.py winnowing_fingerprints,
-# xxhash64 branch) — unchunked formulation (chunked == unchunked is pinned
-# by test_winnowing_chunked_equals_unchunked).
+# xxhash64 branch).
 # ---------------------------------------------------------------------------
 
 _WINNOW_MOD = 2147483647

@@ -180,6 +180,45 @@ def _jobs_in_group(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
+def _job_tags_in_group(spark, group: str, fn) -> list[set[str]]:
+    """The job tags of every job ``fn`` starts, as the status store records
+    them from each job-start event's ``spark.job.tags`` property."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return [set(store.job(j).jobTags().mkString(",").split(","))
+            for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+
+def test_stage_jobs_carry_the_stage_tag(spark, tmp_path):
+    """Every job a run_stage or chunked_stage call starts carries the
+    ``stage:<name>`` job tag; the tag is gone after the call, and a tag the
+    caller set beforehand stays set."""
+    wd = str(tmp_path)
+    src = ckpt.with_chunk_column(
+        spark.range(200).withColumnRenamed("id", "message_id"), n_chunks=2)
+    tags = _job_tags_in_group(spark, "tag-run", lambda: ckpt.run_stage(
+        spark, wd, "st", lambda: src, partition_by=[ckpt.CHUNK_COL]))
+    assert tags and all("stage:st" in t for t in tags), tags
+    tags = _job_tags_in_group(spark, "tag-chunked", lambda: ckpt.chunked_stage(
+        spark, wd, "ch", src, lambda d: d, n_chunks=2))
+    assert len(tags) >= 3 and all("stage:ch" in t for t in tags), tags
+
+    sc = spark.sparkContext
+    assert not {"stage:st", "stage:ch"} & set(sc.getJobTags())
+    sc.addJobTag("stage:outer")
+    try:
+        ckpt.run_stage(spark, wd, "outer", lambda: spark.range(3))
+        assert "stage:outer" in sc.getJobTags()
+    finally:
+        sc.removeJobTag("stage:outer")
+
+
 def test_stage_commit_job_budget(spark, tmp_path):
     df = spark.range(5000).select(
         F.col("id").alias("message_id"),

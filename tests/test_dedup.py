@@ -288,16 +288,21 @@ def test_winnowing_prod_hash_same_positions_structure(spark):
         assert len(sels) <= max(1, n - 7)
 
 
-def test_winnowing_randomized_batch_parity(spark):
-    # 60 seeded random docs (ASCII + Ethiopic + punctuation mix, lengths
-    # 0..120) through ONE Spark job, each compared exactly to the eager
-    # reference — the fuzz complement to the fixed edge cases above
+def random_winnow_docs():
+    """60 seeded random docs: ASCII + Ethiopic + punctuation mix, lengths
+    0..120."""
     import random
 
     rng = random.Random(42)
     alphabet = "ab cde ፩፪፻ ብርዋጋ .!?,;:# @xyz0123"
-    docs = [(i, "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 121))))
+    return [(i, "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 121))))
             for i in range(60)]
+
+
+def test_winnowing_randomized_batch_parity(spark):
+    # the random docs through ONE Spark job, each compared exactly to the
+    # eager reference — the fuzz complement to the fixed edge cases above
+    docs = random_winnow_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {}
     for r in dd.winnowing_fingerprints(df, hash_fn="md5").collect():
@@ -306,53 +311,18 @@ def test_winnowing_randomized_batch_parity(spark):
         assert got.get(i, set()) == _ref_winnow(t), f"doc {i}: {t!r}"
 
 
-def test_winnowing_chunked_equals_unchunked(spark):
-    # the giant-doc path: max_chars chunking with w+k-2 overlap must be
-    # selection-for-selection identical to the unchunked run — including
-    # global positions, tie runs spanning chunk boundaries, and docs whose
-    # final chunk is shorter than k or shorter than w k-grams
-    import random
-
-    rng = random.Random(7)
-    alphabet = "abcde ፩፪ብር .!x"
-    docs = [(i, "".join(rng.choice(alphabet) for _ in range(n)))
-            for i, n in enumerate([0, 3, 5, 11, 12, 59, 60, 61, 62, 119, 120,
-                                   121, 180, 300, 301])]
-    docs.append((900, "a" * 200))        # ties across every boundary
-    docs.append((901, "ab" * 150))       # period-2 ties
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    def collect(fps):
-        out = {}
-        for r in fps.collect():
-            out.setdefault(r["id"], set()).add((r["pos"], r["fp"]))
-        return out
-
-    plain = collect(dd.winnowing_fingerprints(df, hash_fn="md5"))
-    for mc in (12, 13, 60, 64):  # 12 = minimum legal (w + k - 1)
-        chunked = collect(dd.winnowing_fingerprints(df, hash_fn="md5",
-                                                    max_chars=mc))
-        assert chunked == plain, f"max_chars={mc}"
-    with pytest.raises(ValueError):
-        dd.winnowing_fingerprints(df, max_chars=11)
-
-
 def test_winnowing_positions_beyond_2_20_exact(spark):
     # regression: with a 2^20 packing width, positions past 1,048,575
     # underflowed the pack (fp decoded as hash-1, pos wrapped). The 2^32
     # width makes every representable document exact — pin it with a
     # 1.06M-char doc compared selection-for-selection to the eager reference.
-    # max_chars REQUIRED here: it is both the straggler bound and the cost
-    # bound (unchunked per-gram substr re-seeks from the string start —
-    # O(L²) byte scans on a megabyte doc; see winnowing_fingerprints).
     import random
 
     rng = random.Random(99)
     text = "".join(rng.choice("abcdefgh ij") for _ in range(1_060_000))
     df = spark.createDataFrame([(0, text)], "doc_id long, text string")
     got = {(r["pos"], r["fp"])
-           for r in dd.winnowing_fingerprints(df, hash_fn="md5",
-                                              max_chars=4096).collect()}
+           for r in dd.winnowing_fingerprints(df, hash_fn="md5").collect()}
     exp = _ref_winnow(text)
     assert got == exp
     assert max(p for p, _ in got) > (1 << 20)  # the test actually crosses it

@@ -270,3 +270,22 @@ def test_winnowing_overlap_join_carries_no_text(spark):
     assert all("text" not in ln for ln in join_lines), join_lines
     agg_lines = [ln for ln in plan.splitlines() if "Aggregate" in ln]
     assert all("text" not in ln for ln in agg_lines), agg_lines
+
+
+def test_winnowing_overlap_plan_has_no_lambda(spark, monkeypatch):
+    """The k-gram hashing and window minima of fingerprint_overlap_pairs run
+    in one Arrow kernel, not as interpreted higher-order-function folds.
+    The lazy localCheckpoint hides its subtree from the optimized plan, so
+    it is made the identity here to expose the winnowing stage."""
+    from amharic_ecommerce_data_extractor_spark.operators.dedup import (
+        fingerprint_overlap_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"document number {i} with some shared filler text body") for i in range(20)],
+        "doc_id long, text string")
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda self, eager=True: self)
+    for hash_fn in ("md5", "xxhash64"):
+        plan = _optimized(fingerprint_overlap_pairs(df, min_shared=1, hash_fn=hash_fn))
+        assert "ArrowEvalPython" in plan, plan
+        assert "lambdafunction" not in plan, plan

@@ -4,7 +4,7 @@ The batch operators in :mod:`.dedup` answer "dedup THIS corpus"; at
 10^12-file scale the corpus is never re-processed — new batches arrive and
 must be deduplicated against everything already accepted WITHOUT touching
 the accepted documents' text again. This module holds the state needed for
-that as a compact three-table fingerprint index (tens of bytes per document
+that as a compact two-table fingerprint index (tens of bytes per document
 — the text itself never enters the index) and implements the standard
 greedy online policy: first arrival wins, later near/exact copies are
 dropped. (Greedy is the only causally consistent policy — an already
@@ -15,12 +15,15 @@ Index tables (all written BUCKETED so the per-batch joins shuffle only the
 small batch side — the 10^12-row index side is pre-partitioned on disk and
 never moves; see :class:`DedupIndex`):
 
-* ``exact``  (fp, id)        bucketed by fp   — sha256 membership checks
 * ``sigs``   (id, minhash)   bucketed by id   — MinHash signature lookup
 * ``bands``  (bkey, id)      bucketed by bkey — LSH candidate generation;
   bkey = hash(band index, band slice) folded into ONE column so every
   index-side join is single-key (bucket co-location requires the join key
   to equal the bucket key).
+
+Exact copies need no table of their own: identical text has identical
+shingles, hence an identical signature, so every band key collides with
+the indexed copy and the signature agreement is 1.0 ≥ threshold.
 
 Cross-batch near-duplicate decisions use the MinHash signature AGREEMENT
 estimator (fraction of equal signature positions; E[agreement] = Jaccard)
@@ -64,17 +67,14 @@ from .linking import (
 
 @dataclass
 class IndexRows:
-    """The three index-table row sets for one accepted batch (or a whole
-    loaded index). ``exact``: (fp, id); ``sigs``: (id, minhash);
-    ``bands``: (bkey, id)."""
+    """The two index-table row sets for one accepted batch (or a whole
+    loaded index). ``sigs``: (id, minhash); ``bands``: (bkey, id)."""
 
-    exact: DataFrame
     sigs: DataFrame
     bands: DataFrame
 
     def union(self, other: "IndexRows") -> "IndexRows":
         return IndexRows(
-            exact=self.exact.unionByName(other.exact),
             sigs=self.sigs.unionByName(other.sigs),
             bands=self.bands.unionByName(other.bands),
         )
@@ -94,25 +94,19 @@ def _fingerprint_rows(docs: DataFrame, id_col: str, text_col: str,
     along linking.minhash_rows' single projection and barrier. Shingles
     ride along for the BATCH-local exact-Jaccard verify only; they are
     dropped before anything reaches the index. Every row has a minhash:
-    null and blank texts share one (see linking.minhash_rows)."""
-    # null text folds to a sentinel OUTSIDE sha256's hex alphabet so the
-    # cross-batch exact check (plain-equality semi join — null keys never
-    # match themselves) drops later null-text arrivals exactly like the
-    # intra-batch window (whose partitionBy DOES group nulls) and like
-    # whole-corpus dedup(); without this every batch would re-accept one
-    # null-text survivor forever
-    fp = F.coalesce(F.sha2(F.col(text_col), 256), F.lit("null")).alias("fp")
+    null and blank texts share one (see linking.minhash_rows), so a later
+    null or blank arrival is caught by the index like any exact copy."""
+    fp = F.sha2(F.col(text_col), 256).alias("fp")
     return minhash_rows(docs, id_col, word_shingles(F.col(text_col), shingle_words),
                         bands, rows, "xxhash64", fp).select(
         F.col("nid").alias("id"), "fp", "shingles", "minhash")
 
 
 def _to_index_rows(fpr: DataFrame, bands: int, rows: int) -> IndexRows:
-    """Project fingerprint rows (id, fp, shingles, minhash) down to the
-    three index-table row sets — a column drop plus the band explode; no
-    text re-hashing."""
+    """Project fingerprint rows (id, minhash, ...) down to the two
+    index-table row sets — a column drop plus the band explode; no text
+    re-hashing."""
     return IndexRows(
-        exact=fpr.select("fp", "id"),
         sigs=fpr.select("id", "minhash"),
         bands=fpr.select(
             F.explode(_folded_band_keys(F.col("minhash"), bands, rows)).alias("bkey"),
@@ -127,8 +121,7 @@ def index_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     (bootstrap/backfill path; :func:`incremental_dedup` derives the same
     rows from its in-flight fingerprints without re-reading the text)."""
     return _to_index_rows(
-        _fingerprint_rows(docs, id_col, text_col, shingle_words, bands,
-                          rows).drop("shingles"),
+        _fingerprint_rows(docs, id_col, text_col, shingle_words, bands, rows),
         bands, rows)
 
 
@@ -162,32 +155,36 @@ def incremental_dedup(
     schema) and their :class:`IndexRows`, which the caller appends to the
     persistent index (:meth:`DedupIndex.append`) — or unions with the
     in-memory index when folding in one job. ``index=None`` bootstraps
-    from the first batch.
+    from the first batch. One ``(shingle_words, bands, rows)`` setting
+    holds for a whole index: signatures and band keys computed under
+    another are not comparable, and the index does not record it.
 
     Order of operations (see module docstring for why):
       1. full intra-batch dedup — same semantics as :func:`dedup.dedup`
          (exact sha256 keep-min-id, then MinHash-LSH candidates verified by
          EXACT Jaccard on the in-hand shingles, connected components, one
          representative per component);
-      2. drop survivors whose sha256 is already indexed (anti join on fp);
-      3. drop survivors whose signature agreement with ANY banded index
-         candidate is ≥ threshold;
-      4. the remainder is kept; its index rows are the additions.
+      2. drop survivors whose signature agreement with ANY banded index
+         candidate is ≥ threshold — exact copies of indexed documents
+         included, at agreement 1.0;
+      3. the remainder is kept; its index rows are the additions.
 
     The text is fingerprinted EXACTLY ONCE: one projection computes
     sha256 + shingles + minhash behind a checkpoint barrier; the intra-batch
-    dedup, the index checks, and the additions are all id/array joins over
+    dedup, the index check, and the additions are all id/array joins over
     those fingerprints (shingles never leave the batch scope).
 
     Scale shape: every index-side join is a single-key equi join against a
     table bucketed on exactly that key — only the batch side shuffles
     (pinned by tests/test_incremental_dedup.py via join_exchange_count).
     Candidate pairs carry ids only; signatures rejoin by id afterwards."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
     fpr = _fingerprint_rows(batch, id_col, text_col, shingle_words, bands, rows)
 
-    # 1a. exact intra-batch: lowest id per sha256 (null text shares the
-    # "null" sentinel fp, so it groups together — the dedup() convention —
-    # intra-batch AND across batches)
+    # 1a. exact intra-batch: lowest id per sha256 ('star' banding below can
+    # fragment a cluster, so this window is what merges identical texts;
+    # null texts share the null fp group — the dedup() convention)
     exact_kept = first_per(fpr, "fp", "id")
 
     # 1b. near intra-batch: LSH candidates ('star' edges, as dedup.dedup)
@@ -196,30 +193,26 @@ def incremental_dedup(
     sig_df = exact_kept.select(F.col("id").alias("nid"), "shingles", "minhash")
     pairs = (banded_candidate_pairs(sig_df, bands, rows, pair_mode="star")
              .where(F.col("sim") >= threshold))
-    # materialize the representatives ONCE: they feed the index checks, the
+    # materialize the representatives ONCE: they feed the index check, the
     # additions, and the kept semi-join — left lazy, the LSH + CC DAG would
     # re-execute per consumer
     rep_rows = (first_per(label_components(exact_kept, "id", pairs),
                           "component", "id")
                 .drop("component").localCheckpoint())
 
-    rows_rep = _to_index_rows(rep_rows.drop("shingles"), bands, rows)
+    rows_rep = _to_index_rows(rep_rows, bands, rows)
     if index is None:
         kept = batch.join(rep_rows.select(F.col("id").alias(id_col)),
                           id_col, "semi")
         return kept, rows_rep
 
-    # 2. exact membership: ids whose fingerprint is already in the index
-    exact_hit = (rows_rep.exact.join(index.exact.select("fp"), "fp", "semi")
-                 .select("id"))
-
-    # 3. near membership: banded candidates (ids only) → signature rejoin →
+    # 2. membership: banded candidates (ids only) → signature rejoin →
     #    agreement estimate. dropDuplicates BEFORE the sig join: a pair
     #    colliding in several bands is estimated once.
     cand = (rows_rep.bands.withColumnRenamed("id", "bid")
             .join(index.bands.withColumnRenamed("id", "iid"), "bkey")
             .select("bid", "iid").dropDuplicates(["bid", "iid"]))
-    near_hit = (
+    hit = (
         cand.join(rows_rep.sigs.select(F.col("id").alias("bid"),
                                        F.col("minhash").alias("sig_b")), "bid")
         .join(index.sigs.select(F.col("id").alias("iid"),
@@ -228,20 +221,17 @@ def incremental_dedup(
         .select(F.col("bid").alias("id")).distinct()
     )
 
-    # materialize the dropped-id set: (a) the index probes (exact semi join
-    # + banded candidates + signature agreement) run ONCE, not once per
-    # consumer below; (b) CRITICALLY, it severs the additions' lineage from
-    # the live index tables — when `index` came from DedupIndex.load(), a
-    # lazy `dropped` would be RE-EVALUATED during DedupIndex.append() after
-    # the exact table has already been appended, see the batch's own
-    # fingerprints in the index, classify every kept doc as dropped, and
-    # write EMPTY sigs/bands additions (silent near-dup memory loss;
-    # regression-pinned by tests asserting sigs/bands after append)
-    dropped = exact_hit.unionByName(near_hit).distinct().localCheckpoint()
+    # materialize the dropped-id set: (a) the index probe runs ONCE, not
+    # once per consumer below; (b) CRITICALLY, it severs `kept` and the
+    # additions from the live index tables — when `index` came from
+    # DedupIndex.load(), a lazy `dropped` re-evaluated AFTER
+    # DedupIndex.append() finds the batch's own rows there, every kept doc
+    # agrees 1.0 with itself, and kept and additions come out EMPTY (silent
+    # loss; regression-pinned by tests reading both after append)
+    dropped = hit.localCheckpoint()
     kept_ids = rep_rows.select("id").join(dropped, "id", "anti")
     kept = batch.join(kept_ids.withColumnRenamed("id", id_col), id_col, "semi")
     additions = IndexRows(
-        exact=rows_rep.exact.join(dropped, "id", "anti"),
         sigs=rows_rep.sigs.join(dropped, "id", "anti"),
         bands=rows_rep.bands.join(dropped, "id", "anti"),
     )
@@ -251,7 +241,7 @@ def incremental_dedup(
 class DedupIndex:
     """Persistent bucketed storage for the fingerprint index.
 
-    Three catalog tables (``{name}_exact/_sigs/_bands``), each written with
+    Two catalog tables (``{name}_sigs/_bands``), each written with
     ``bucketBy(n_buckets, key).sortBy(key)`` on its single join key. The
     write pays the partitioning shuffle once; every later batch joins
     against the index with no exchange on the index side, and the sort
@@ -274,15 +264,14 @@ class DedupIndex:
         self.n_buckets = n_buckets
 
     def _tables(self) -> list[tuple[str, str, str]]:
-        return [("exact", f"{self.name}_exact", "fp"),
-                ("sigs", f"{self.name}_sigs", "id"),
+        return [("sigs", f"{self.name}_sigs", "id"),
                 ("bands", f"{self.name}_bands", "bkey")]
 
     def exists(self) -> bool:
         return all(self.spark.catalog.tableExists(t) for _, t, _ in self._tables())
 
     def append(self, additions: IndexRows) -> None:
-        """Create-or-append the three tables (bucketed and sorted on each
+        """Create-or-append the two tables (bucketed and sorted on each
         table's key; append preserves the bucket spec)."""
         mode = "append" if self.exists() else "overwrite"
         for attr, table, key in self._tables():

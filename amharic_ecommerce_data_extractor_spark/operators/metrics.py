@@ -11,8 +11,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -27,15 +25,19 @@ _SPAN_SCHEMA = T.StructType([
 
 
 def spans_table(df: DataFrame, id_col: str, labels_col: str) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, labels in zip(pdf[id_col], pdf[labels_col]):
-                for etype, s, e in bio_spans(list(labels) if labels is not None else []):
-                    rows.append((int(sid), etype, s, e))
-            yield pd.DataFrame(rows, columns=["sid", "etype", "start", "end"])
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return df.select(F.col(id_col), F.col(labels_col)).mapInPandas(run, schema=_SPAN_SCHEMA)
+    row_type = pa.struct(to_arrow_schema(_SPAN_SCHEMA))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield pa.RecordBatch.from_struct_array(pa.array(
+                [(int(sid), etype, s, e)
+                 for sid, labels in zip(b.column(0).to_pylist(), b.column(1).to_pylist())
+                 for etype, s, e in bio_spans(labels or [])], row_type))
+
+    return df.select(F.col(id_col), F.col(labels_col)).mapInArrow(run, _SPAN_SCHEMA)
 
 
 def token_confusion(pred: DataFrame, gold: DataFrame,

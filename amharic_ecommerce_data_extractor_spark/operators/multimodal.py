@@ -30,8 +30,6 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -163,21 +161,25 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, list[float]]:
 def _map_payloads(media: DataFrame, media_type: str, fields: list,
                   rows_of) -> DataFrame:
     """The shell of every media pass: the ``media_type`` rows' (media_id,
-    payload) cross the Arrow boundary through one mapInPandas (narrow plan,
+    payload) cross the Arrow boundary through one mapInArrow (narrow plan,
     batch-amortized decode); ``rows_of(payload bytes)`` yields the output
     rows of one payload as tuples in ``fields`` order, each prefixed with
     its media_id. A null payload decodes as ``b""``."""
-    schema = T.StructType([T.StructField("media_id", T.LongType(), False)] + fields)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(int(mid), *row) for mid, payload in zip(pdf["media_id"], pdf["payload"])
-                 for row in rows_of(bytes(payload) if payload is not None else b"")],
-                columns=schema.names)
+    schema = T.StructType([T.StructField("media_id", T.LongType(), False)] + fields)
+    row_type = pa.struct(to_arrow_schema(schema))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield pa.RecordBatch.from_struct_array(pa.array(
+                [(mid, *row) for mid, payload in zip(b.column(0).to_pylist(),
+                                                     b.column(1).to_pylist())
+                 for row in rows_of(payload or b"")], row_type))
 
     return (media.where(F.col("media_type") == media_type)
-            .select("media_id", "payload").mapInPandas(run, schema=schema))
+            .select("media_id", "payload").mapInArrow(run, schema))
 
 
 def extract_image_features(media: DataFrame) -> DataFrame:

@@ -861,7 +861,6 @@ def q47(spark, sf_dir):
     # oracle — this makes the streaming path a fully oracle-backed registry
     # entry, not a pytest-only capability.
     import shutil
-    import tempfile
 
     from amharic_ecommerce_data_extractor_spark.streaming.stream import (
         read_message_stream,
@@ -1223,7 +1222,7 @@ def q44(spark, sf_dir):
 # Deterministic synthetic BIO labels over the documents tokens: the label of
 # (doc_id, pos) is a pure function of md5, so Spark and DuckDB derive the
 # SAME corpus and the span P/R/F1 oracle recomputes seqeval-style span
-# extraction independently (window functions vs the mapInPandas kernel of
+# extraction independently (window functions vs the mapInArrow kernel of
 # operators.metrics.spans_table).
 _Q45_LABEL_SQL = """
 CASE WHEN {d} <= 1 THEN 'B-PRODUCT' WHEN {d} = 2 THEN 'I-PRODUCT'
@@ -1469,7 +1468,6 @@ def q49(spark, sf_dir):
     # streaming-aggregate vendor totals (update mode), drained AvailableNow:
     # the final emission per vendor must equal the batch aggregate exactly
     import shutil
-    import tempfile
 
     from amharic_ecommerce_data_extractor_spark.streaming.stream import (
         run_stream_once_foreach,
@@ -1511,7 +1509,6 @@ def q50(spark, sf_dir):
     # event times (dropped by any watermarked aggregation). Production sizing
     # guidance lives in streaming.stream.windowed_vendor_activity.
     import shutil
-    import tempfile
 
     from amharic_ecommerce_data_extractor_spark.streaming.stream import (
         run_stream_once_foreach,
@@ -1645,8 +1642,8 @@ def q52(spark, sf_dir):
         # own barrier — a checkpoint here stored every full-width batch row
         # (text included) to count them. The adds tables keep theirs: each
         # feeds the next batch's index joins AND the audit count.
-        adds = IndexRows(*(getattr(adds, a).localCheckpoint()
-                           for a in ("exact", "sigs", "bands")))
+        adds = IndexRows(adds.sigs.localCheckpoint(),
+                         adds.bands.localCheckpoint())
         out.append((i, b.count(), kept.count(), adds.bands.count()))
         idx = adds if idx is None else idx.union(adds)
     return spark.createDataFrame(out, "batch int, n_in long, n_kept long, n_band_rows long")

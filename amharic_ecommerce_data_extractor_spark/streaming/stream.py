@@ -171,7 +171,7 @@ def streaming_incremental_dedup(messages: DataFrame, store, out_dir: str,
 
     Per micro-batch (foreachBatch, driver-side orchestration):
       1. ``incremental_dedup(batch, store.load())`` — intra-batch dedup,
-         then exact/near checks against the index;
+         then the band + signature-agreement check against the index;
       2. survivors land in ``out_dir/ingest_batch=<id>/`` (overwrite —
          idempotent for that batch id);
       3. their fingerprints append to the index;
@@ -185,14 +185,14 @@ def streaming_incremental_dedup(messages: DataFrame, store, out_dir: str,
         already on disk (the marker is written only after the parquet
         commit); they are read back, their fingerprints recomputed and
         (re-)appended. A crash mid-append can thus duplicate index ROWS,
-        never output rows — duplicates are benign by construction: every
-        index consumer is a semi join (exact), or a candidate join that
-        dropDuplicates (bid, iid) before the signature check (near);
+        never output rows — duplicates are benign by construction: the
+        one index consumer is a candidate join that dropDuplicates
+        (bid, iid) before the signature check;
       * neither → the full step 1–4 sequence. The critical ordering is
         output-before-append: recomputing ``kept`` AFTER a completed
         append would find every row already indexed and emit nothing,
         losing the batch.
-    On Iceberg the three appends + marker collapse into one atomic
+    On Iceberg the two appends + marker collapse into one atomic
     multi-table commit and the at-least-once caveat disappears; the marker
     files mirror sources/checkpoint.py's manifest convention meanwhile.
     """

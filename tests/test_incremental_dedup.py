@@ -39,8 +39,8 @@ def _fold(spark, batches, **kw):
     for b in batches:
         kept, adds = incremental_dedup(b, idx, **kw)
         kept = kept.localCheckpoint()
-        adds = IndexRows(*(getattr(adds, a).localCheckpoint()
-                           for a in ("exact", "sigs", "bands")))
+        adds = IndexRows(adds.sigs.localCheckpoint(),
+                         adds.bands.localCheckpoint())
         kept_per_batch.append(_ids(kept))
         idx = adds if idx is None else idx.union(adds)
     return kept_per_batch, idx
@@ -96,15 +96,13 @@ def test_reprocessing_same_batch_drops_everything(spark):
     kept2, adds2 = incremental_dedup(b1, adds)
     assert _ids(kept1) == [1, 2]
     assert kept2.count() == 0
-    for a in ("exact", "sigs", "bands"):
-        assert getattr(adds2, a).count() == 0
+    assert adds2.sigs.count() == 0 and adds2.bands.count() == 0
 
 
 def test_additions_cover_exactly_the_kept_docs(spark):
     b1 = _docs(spark, [(1, _words("a")), (2, _words("b")), (3, _words("a"))])
     kept, adds = incremental_dedup(b1, None)
     assert _ids(kept) == [1, 2]
-    assert _ids(adds.exact, "id") == [1, 2]
     assert _ids(adds.sigs, "id") == [1, 2]
     assert set(r.id for r in adds.bands.collect()) == {1, 2}
     # 8 bands per doc, band keys folded to one column
@@ -140,13 +138,15 @@ def test_bucketed_index_round_trip_and_one_sided_shuffle(spark, no_broadcast, tm
         assert _ids(kept2_mem) == [102]
 
         # append the second batch and confirm the cumulative index state in
-        # ALL THREE tables — sigs/bands specifically: append() mutates the
-        # tables one by one, and additions left lazy against the loaded
-        # index would re-evaluate mid-append against the already-updated
-        # exact table and write EMPTY sigs/bands (the severed-lineage bug)
+        # BOTH tables, then read the batch's result again: kept ids and
+        # additions left lazy against the loaded index would re-evaluate
+        # against the tables that now hold the batch's own signatures and
+        # band keys, agree 1.0 with themselves and come out EMPTY (the
+        # severed-lineage bug)
         store.append(adds2)
+        assert _ids(kept2) == [102]
+        assert _ids(adds2.sigs, "id") == [102]
         cumulative = store.load()
-        assert _ids(cumulative.exact, "id") == [1, 2, 102]
         assert _ids(cumulative.sigs, "id") == [1, 2, 102]
         assert sorted(set(r.id for r in cumulative.bands.collect())) == [1, 2, 102]
 
@@ -220,34 +220,45 @@ def test_greedy_exact_policy_any_split_order(spark, data):
 
 
 def test_null_text_deduped_across_batches(spark):
-    # null text folds to the sentinel fp, so exactly ONE null-text doc
-    # survives the whole fold (the fix for the plain-equality semi join,
-    # where fp=NULL never matched itself and every batch re-accepted one
-    # null survivor and grew the index forever)
+    # null and blank texts share one signature, so exactly ONE of them
+    # survives the whole fold: the index check drops every later arrival
+    # (without it every batch would re-accept one null or blank survivor and
+    # grow the index forever)
     from pyspark.sql import types as T
 
     schema = T.StructType([T.StructField("doc_id", T.LongType(), False),
                            T.StructField("text", T.StringType(), True)])
-    b1 = spark.createDataFrame([(1, None), (2, _words("a"))], schema)
-    b2 = spark.createDataFrame([(101, None), (102, _words("b"))], schema)
-    b3 = spark.createDataFrame([(201, None)], schema)
-    kept, idx = _fold(spark, [b1, b2, b3])
+    rows = [[(1, "   "), (2, _words("a")), (3, None)],
+            [(101, None), (102, _words("b")), (103, "")],
+            [(201, None), (202, "   ")]]
+    kept, idx = _fold(spark, [spark.createDataFrame(r, schema) for r in rows])
     assert kept == [[1, 2], [102], []]
-    # the sentinel fp is indexed once, and is not a hex sha256
-    fps = [r[0] for r in idx.exact.select("fp").collect()]
-    assert fps.count("null") == 1
-    # null text also matches whole-corpus dedup()
+    assert _ids(idx.sigs, "id") == [1, 2, 102]
+    # and matches whole-corpus dedup()
     from amharic_ecommerce_data_extractor_spark.operators.dedup import dedup
-    whole = spark.createDataFrame(
-        [(1, None), (2, _words("a")), (101, None), (102, _words("b")),
-         (201, None)], schema)
+    whole = spark.createDataFrame([r for b in rows for r in b], schema)
     assert sorted(kept[0] + kept[1]) == _ids(dedup(whole))
+
+
+@pytest.mark.parametrize("threshold", [0, -0.5, 1.5, float("nan")])
+def test_threshold_outside_unit_interval_raises_before_any_job(spark, threshold):
+    # the index drops exact copies only because their agreement (1.0)
+    # reaches the threshold, so a threshold above 1 would re-admit them
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    b = _docs(spark, [(1, _words("a"))])
+
+    def run():
+        with pytest.raises(ValueError, match=repr(threshold)):
+            incremental_dedup(b, None, threshold=threshold)
+
+    assert _jobs_in_group(spark, "incremental-threshold", run) == 0
 
 
 def test_incremental_dedup_job_budget(spark, sf_dir):
     """The sf0.001 documents in two batches, the second checked against the
     first's additions: both calls and their kept/band counts run in at most
-    65 jobs."""
+    61 jobs."""
     from tests.test_checkpoint_lineage import _jobs_in_group
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -261,4 +272,4 @@ def test_incremental_dedup_job_budget(spark, sf_dir):
 
     n_jobs = _jobs_in_group(spark, "incremental-budget", run)
     assert counts[0] > 0 and counts[2] == 8 * counts[1]
-    assert n_jobs <= 65, n_jobs
+    assert n_jobs <= 61, n_jobs

@@ -27,3 +27,14 @@ def test_q52_golden_counts(spark, sf):
     # band rows = 8 bands per kept doc with non-null signature
     for _, _, n_kept, n_band in got:
         assert n_band == 8 * n_kept
+
+
+def test_q52_job_budget(spark, sf_dir):
+    """q52 (two incremental_dedup calls, the index checkpoints and the
+    counts) runs in a pinned number of Spark jobs."""
+    from tests.test_checkpoint_lineage import _jobs_in_group
+
+    n_jobs = _jobs_in_group(
+        spark, "q52-budget",
+        lambda: SPARK_QUERIES["q52_incremental_dedup"](spark, sf_dir).collect())
+    assert n_jobs <= 78, n_jobs

@@ -74,12 +74,12 @@ def test_ingest_batch_replay_matrix(spark, tmp_path):
     try:
         b0 = _msgs(spark, [(1, _words("a")), (2, _words("b"))])
         ingest_dedup_batch(b0, 0, store, out, ck)
-        n_exact = store.load().exact.count()
-        assert _kept_ids(spark, out) == [1, 2] and n_exact == 2
+        n_sigs = store.load().sigs.count()
+        assert _kept_ids(spark, out) == [1, 2] and n_sigs == 2
 
         # committed batch replays are full no-ops
         ingest_dedup_batch(b0, 0, store, out, ck)
-        assert store.load().exact.count() == n_exact
+        assert store.load().sigs.count() == n_sigs
         assert _kept_ids(spark, out) == [1, 2]
 
         # crash between index append and idx marker: output must not change
@@ -87,7 +87,7 @@ def test_ingest_batch_replay_matrix(spark, tmp_path):
         os.remove(os.path.join(ck, "idx_0"))
         ingest_dedup_batch(b0, 0, store, out, ck)
         assert _kept_ids(spark, out) == [1, 2]
-        assert store.load().exact.count() == 2 * n_exact
+        assert store.load().sigs.count() == 2 * n_sigs
 
         # duplicate index rows are benign: a later batch still drops its
         # duplicate exactly once and keeps fresh content
@@ -99,9 +99,9 @@ def test_ingest_batch_replay_matrix(spark, tmp_path):
         # idx absent): replay reads the survivors back and appends their
         # fingerprints without recomputing the dedup
         os.remove(os.path.join(ck, "idx_1"))
-        before = store.load().exact.count()
+        before = store.load().sigs.count()
         ingest_dedup_batch(b1, 1, store, out, ck)
         assert _kept_ids(spark, out) == [1, 2, 4]
-        assert store.load().exact.count() == before + 1  # doc 4 re-appended
+        assert store.load().sigs.count() == before + 1  # doc 4 re-appended
     finally:
         store.drop()
